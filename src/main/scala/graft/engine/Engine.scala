@@ -1,9 +1,12 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import com.fasterxml.jackson.core.io.JsonStringEncoder
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import graft.operators.{Clock, DqResult, Quality, SystemClock, Transform, VerifyResult}
 import graft.plan._
-import graft.sinks.{CsvSink, JdbcSink}
+import graft.sinks.{CsvSink, JdbcSink, ParquetSink, Staged}
 import graft.sources.Sources
 
 /** Alert sink (reference tools.py:267-271 — a Slack-webhook placeholder
@@ -17,6 +20,14 @@ object LogAlerter extends Alerter {
   }
 }
 
+/** The one JSON string escaper for the engine's hand-built JSON (the
+  * webhook body, [[RunResult.toJson]]): Jackson's, so control characters
+  * in a message (Spark's multi-line error text) stay valid JSON. */
+private[engine] object Json {
+  def quote(s: String): String =
+    "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
+}
+
 /** Webhook alerter (the reference stubs a Slack webhook,
   * tools.py:267-271 + plan schema `alerts.webhook_url`,
   * templates.py:8): POSTs `{channel, text}` JSON to the configured URL
@@ -26,8 +37,8 @@ class WebhookAlerter(webhookUrl: String,
     timeoutSeconds: Long = 10) extends Alerter {
   def send(channel: String, message: String): String =
     try {
-      def j(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      val body = s"""{"channel": ${j(channel)}, "text": ${j(message)}}"""
+      val body =
+        s"""{"channel": ${Json.quote(channel)}, "text": ${Json.quote(message)}}"""
       val client = java.net.http.HttpClient.newBuilder()
         .connectTimeout(java.time.Duration.ofSeconds(timeoutSeconds)).build()
       val req = java.net.http.HttpRequest
@@ -57,12 +68,7 @@ final case class RunResult(
       case null => "null"
       case None => "null"
       case Some(x) => j(x)
-      case s: String => "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case '\r' => "\\r"; case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
+      case s: String => Json.quote(s)
       case b: Boolean => b.toString
       case n: Long => n.toString
       case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
@@ -88,8 +94,14 @@ final case class RunResult(
 
 /** The pipeline driver (reference `run_from_plan`, templates.py:51-170):
   * extract → transform → DQ gate → load → verify → result, with the same
-  * short-circuit semantics (DQ fail ⇒ alert + failed; verify fail ⇒ alert +
-  * failed).
+  * short-circuit semantics (DQ fail ⇒ alert + failed, nothing at the
+  * target; verify fail ⇒ alert + failed).
+  *
+  * File loads (csv, parquet) run the transform once: the sink writes it to
+  * a staging path beside the target while `Dataset.observe` computes the
+  * DQ metrics in the same pass. A passing gate publishes the staged output
+  * onto the target; a failing one discards it. JDBC loads gate first, on
+  * their own metrics pass, then write.
   *
   * All source branches work uniformly (the reference's exec namespace left
   * json/db/api/postgres branches undefined — SURVEY.md §2A reachability
@@ -101,6 +113,10 @@ class Engine(
     clock: Clock = SystemClock) {
 
   graft.functions.Dialect.registerAll(spark)
+
+  /** How long a finished write may take to deliver its observed DQ
+    * metrics (the listener bus is asynchronous). */
+  private val ObservationWait = 2.minutes
 
   def run(planYaml: String): RunResult =
     try run(PlanParser.parse(planYaml))
@@ -137,46 +153,46 @@ class Engine(
           "Provide transform.steps[...].sql (preferred) or transform.sql.")
       }
 
-    // 3) DQ gate (reference templates.py:123-133)
-    val dq =
-      if (plan.checks.disabled)
-        DqResult(rows = -1, nonnullOk = true, freshOk = true, status = true)
-      else Quality.dqCheck(transformed, plan.checks.minRows,
-        plan.checks.nonnullCols, plan.checks.freshnessMinutes,
-        plan.checks.timestampCol, clock)
-    if (!dq.status) {
-      val ch = plan.alerts.onDqFail.orElse(plan.alerts.onFail)
-      ch.foreach(c => alerterFor(plan).send(c, s"DQ failed: rows=${dq.rows} " +
-        s"nonnull_ok=${dq.nonnullOk} fresh_ok=${dq.freshOk}"))
-      return RunResult("failed", dq = Some(dq))
-    }
-
+    // 3) DQ gate (reference templates.py:123-133) and
     // 4) Load (reference templates.py:135-140)
     val load = plan.load.getOrElse(
       throw new IllegalArgumentException("plan requires a 'load' section"))
-    val msg = load.to match {
-      case "csv" =>
-        val path = load.filePath.getOrElse(
-          throw new IllegalArgumentException("csv load requires file_path"))
-        // partition_by opts out of the reference's exact-single-file
-        // contract into the scale path: a partition-parallel directory
-        // write (the coalesce(1) single-file sink is single-threaded by
-        // design and only fits the reference's ≤1 GiB envelope)
-        if (load.partitionBy.nonEmpty)
-          CsvSink.writeDirectory(transformed, path, load.includeHeader,
-            load.partitionBy)
-        else CsvSink.writeSingleFile(transformed, path, load.includeHeader)
-      case "parquet" =>
-        val path = load.filePath.getOrElse(
-          throw new IllegalArgumentException("parquet load requires file_path"))
-        graft.sinks.ParquetSink.write(transformed, path, load.partitionBy)
+    val ck = plan.checks
+    def gate(metrics: => Row): DqResult =
+      if (ck.disabled)
+        DqResult(rows = -1, nonnullOk = true, freshOk = true, status = true)
+      else Quality.dqGate(metrics, ck.minRows, ck.nonnullCols,
+        ck.freshnessMinutes, ck.timestampCol, clock)
+    def gateFailed(dq: DqResult): RunResult = {
+      val ch = plan.alerts.onDqFail.orElse(plan.alerts.onFail)
+      ch.foreach(c => alerterFor(plan).send(c, s"DQ failed: rows=${dq.rows} " +
+        s"nonnull_ok=${dq.nonnullOk} fresh_ok=${dq.freshOk}"))
+      RunResult("failed", dq = Some(dq))
+    }
+    val (dq, msg) = load.to match {
+      case "csv" | "parquet" =>
+        // one pass: the staged write carries the DQ aggregates
+        val obs = Observation()
+        val staged = stage(load,
+          if (ck.disabled) transformed
+          else {
+            val aggs = Quality.dqAggs(transformed, ck.nonnullCols, ck.timestampCol)
+            transformed.observe(obs, aggs.head, aggs.tail: _*)
+          })
+        val dq = try gate(Await.result(obs.future, ObservationWait))
+          catch { case e: Exception => staged.discard(); throw e }
+        if (!dq.status) { staged.discard(); return gateFailed(dq) }
+        (dq, staged.publish())
       case _ =>
-        JdbcSink.write(transformed,
+        val dq = gate(Quality.dqMetricsDf(transformed, ck.nonnullCols,
+          ck.timestampCol).collect()(0))
+        if (!dq.status) return gateFailed(dq)
+        (dq, JdbcSink.write(transformed,
           load.connStr.getOrElse(throw new IllegalArgumentException(
             "postgres load requires conn_str")),
           load.table.getOrElse(throw new IllegalArgumentException(
             "postgres load requires table")),
-          load.mode, load.keyCols)
+          load.mode, load.keyCols))
     }
 
     // 5) Verify (reference templates.py:142-166)
@@ -205,6 +221,20 @@ class Engine(
     }
 
     RunResult("ok", dq = Some(dq), message = Some(msg), verify = Some(ver))
+  }
+
+  /** A file load's write, staged beside its target. */
+  private def stage(load: Load, df: DataFrame): Staged = {
+    val path = load.filePath.getOrElse(throw new IllegalArgumentException(
+      s"${load.to} load requires file_path"))
+    // partition_by opts out of the reference's exact-single-file contract
+    // into the scale path: a partition-parallel directory write (the
+    // coalesce(1) single-file sink is single-threaded by design and only
+    // fits the reference's ≤1 GiB envelope)
+    if (load.to == "parquet") ParquetSink.stage(df, path, load.partitionBy)
+    else if (load.partitionBy.nonEmpty)
+      CsvSink.stageDirectory(df, path, load.includeHeader, load.partitionBy)
+    else CsvSink.stageSingleFile(df, path, load.includeHeader)
   }
 
   /** Extract stage: registers views per source kind and returns the frame

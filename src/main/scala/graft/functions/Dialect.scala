@@ -10,10 +10,11 @@ import org.apache.spark.sql.functions._
   * `try_strptime(str, fmt)` with C-strptime patterns (reference
   * prompt.txt:24-30, 36-41). Spark's native equivalent is
   * `try_to_timestamp(str, fmt)` with java.time patterns, so the shim is a
-  * strptime→DateTimeFormatter pattern translation plus a session-registered
-  * SQL function. The DataFrame-API form delegates to the built-in (codegen'd)
-  * `try_to_timestamp`; the SQL registration uses a UDF only as dialect glue
-  * for plan-authored SQL (not a hot analytical path).
+  * strptime→DateTimeFormatter pattern translation done once, at analysis,
+  * over a literal format. Both the DataFrame-API form ([[tryStrptime]]) and
+  * the SQL function build the same codegen'd `try_to_timestamp` expression:
+  * the flagship plan parses every input date through it, so it is the
+  * plan's hottest expression and must stay a native one.
   */
 object Dialect {
 
@@ -60,7 +61,8 @@ object Dialect {
   def tryStrptime(c: Column, strptimeFmt: String): Column =
     try_to_timestamp(c, lit(strptimeToJava(strptimeFmt)))
 
-  import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+  import org.apache.spark.sql.catalyst.expressions.{Expression, Literal,
+    TryToTimestampExpressionBuilder}
 
   private def litInt(e: Expression, what: String): Int = e match {
     case Literal(v: Number, _) => v.intValue()
@@ -85,6 +87,13 @@ object Dialect {
     * ([[registerAll]]) and the config-driven [[GraftExtensions]] path. */
   private[functions] val nativeBuilders
       : Seq[(String, Seq[Expression] => Expression)] = Seq(
+    // the pattern is translated once, here, not per row
+    "try_strptime" ->
+      ((es: Seq[Expression]) => {
+        require(es.size == 2, s"try_strptime takes (str, fmt), got ${es.size} arguments")
+        TryToTimestampExpressionBuilder.build("try_strptime",
+          Seq(es.head, Literal(strptimeToJava(litStr(es(1), "try_strptime fmt")))))
+      }),
     "token_shingles" ->
       ((es: Seq[Expression]) =>
         TokenShingles(es.head, litInt(es(1), "token_shingles n"))),
@@ -147,32 +156,11 @@ object Dialect {
     * plan-authored SQL (`transform.sql` steps) can use them directly:
     * `try_strptime` (DuckDB compat) plus the engine's native expressions
     * (`token_shingles`, `minhash_sig`, `simhash64`, `dot_product`,
-    * `cosine_sim`, `rolling_min_hash`). */
+    * `cosine_sim`, `rolling_min_hash`, the media codecs). */
   def registerAll(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     nativeBuilders.foreach { case (name, builder) =>
       reg.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
-    val parse = (s: String, fmt: String) => {
-      if (s == null || fmt == null) null
-      else {
-        try {
-          val jf = strptimeToJava(fmt)
-          val dtf = new java.time.format.DateTimeFormatterBuilder()
-            .parseCaseInsensitive().appendPattern(jf)
-            .toFormatter(java.util.Locale.US)
-          val ta = dtf.parseBest(s,
-            java.time.LocalDateTime.from(_), java.time.LocalDate.from(_))
-          ta match {
-            case dt: java.time.LocalDateTime =>
-              java.sql.Timestamp.valueOf(dt)
-            case d: java.time.LocalDate =>
-              java.sql.Timestamp.valueOf(d.atStartOfDay())
-            case _ => null
-          }
-        } catch { case _: Exception => null }
-      }
-    }
-    spark.udf.register("try_strptime", parse)
   }
 }

@@ -11,12 +11,11 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * spark-submit --conf spark.sql.extensions=graft.functions.GraftExtensions ...
   * }}}
   *
-  * injects the engine's native SQL functions (`token_shingles`,
-  * `minhash_sig`, `simhash64`, `dot_product`, `cosine_sim`,
-  * `rolling_min_hash`) into every session built on the cluster, so plan
-  * SQL and ad-hoc queries can call them with no `registerAll` invocation.
-  * (`try_strptime` needs a live session's UDF registry and stays on the
-  * [[Dialect.registerAll]] path.)
+  * injects the engine's native SQL functions (`try_strptime`,
+  * `token_shingles`, `minhash_sig`, `simhash64`, `dot_product`,
+  * `cosine_sim`, `rolling_min_hash`, the media codecs) into every session
+  * built on the cluster, so plan SQL and ad-hoc queries can call them with
+  * no `registerAll` invocation.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, TimestampType}
 
@@ -35,34 +35,51 @@ final case class VerifyResult(
   */
 object Quality {
 
-  /** Pre-load DQ gate (reference tools.py:106-118, ops.py:34-47):
-    * `rows >= minRows`, all `nonnullCols` fully non-null, optional
-    * freshness `now − max(ts) <= freshnessMinutes`. */
-  /** The single-pass DQ metrics frame (one row): `n_rows`, per-column
-    * `nulls_<c>`, optional `max_ts`. Exposed so the metrics themselves are
-    * a queryable operator (oracle-checkable); [[dqCheck]] evaluates the
-    * gates on its collected row. */
-  def dqMetricsDf(df: DataFrame, nonnullCols: Seq[String] = Nil,
-      timestampCol: Option[String] = None): DataFrame = {
+  /** The single-pass DQ aggregates over `df`: `n_rows`, per-column
+    * `nulls_<c>`, optional `max_ts`. Shared by the collected gate
+    * ([[dqCheck]]) and a gate observed on a write (`Dataset.observe`). */
+  def dqAggs(df: DataFrame, nonnullCols: Seq[String] = Nil,
+      timestampCol: Option[String] = None): Seq[Column] = {
     val nullAggs = nonnullCols.map(c =>
       sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"))
     val tsAgg = timestampCol.map(c => max(toTs(df, c)).as("max_ts")).toSeq
-    val aggs = (count(lit(1)).as("n_rows") +: nullAggs) ++ tsAgg
+    (count(lit(1)).as("n_rows") +: nullAggs) ++ tsAgg
+  }
+
+  /** The DQ metrics frame (one row) of [[dqAggs]]. Exposed so the metrics
+    * themselves are a queryable operator (oracle-checkable). */
+  def dqMetricsDf(df: DataFrame, nonnullCols: Seq[String] = Nil,
+      timestampCol: Option[String] = None): DataFrame = {
+    val aggs = dqAggs(df, nonnullCols, timestampCol)
     df.agg(aggs.head, aggs.tail: _*)
   }
 
+  /** Pre-load DQ gate (reference tools.py:106-118, ops.py:34-47):
+    * `rows >= minRows`, all `nonnullCols` fully non-null, optional
+    * freshness `now − max(ts) <= freshnessMinutes`. */
   def dqCheck(df: DataFrame, minRows: Long = 1,
       nonnullCols: Seq[String] = Nil,
       freshnessMinutes: Option[Long] = None,
       timestampCol: Option[String] = None,
-      clock: Clock = SystemClock): DqResult = {
-    val row = dqMetricsDf(df, nonnullCols, timestampCol).collect()(0)
+      clock: Clock = SystemClock): DqResult =
+    dqGate(dqMetricsDf(df, nonnullCols, timestampCol).collect()(0), minRows,
+      nonnullCols, freshnessMinutes, timestampCol, clock)
 
-    val rows = row.getAs[Long]("n_rows")
+  /** The gate's evaluation of one [[dqAggs]] metrics row: a collected one
+    * or an `Observation`'s. */
+  def dqGate(metrics: Row, minRows: Long = 1,
+      nonnullCols: Seq[String] = Nil,
+      freshnessMinutes: Option[Long] = None,
+      timestampCol: Option[String] = None,
+      clock: Clock = SystemClock): DqResult = {
+    val rows = metrics.getAs[Long]("n_rows")
+    // a sum over zero rows is null
     val nullCounts = nonnullCols.map(c =>
-      c -> Option(row.getAs[Any](s"nulls_$c")).map(_.asInstanceOf[Long]).getOrElse(0L)).toMap
+      c -> Option(metrics.getAs[Any](s"nulls_$c")).map(_.asInstanceOf[Long]).getOrElse(0L)).toMap
     val nonnullOk = nullCounts.values.forall(_ == 0L)
-    val lag = lagMinutes(row, "max_ts", timestampCol.isDefined, clock)
+    val lag = timestampCol.flatMap(_ =>
+      Option(metrics.getAs[java.sql.Timestamp]("max_ts")))
+      .map(ts => (clock.nowEpochMillis - ts.getTime) / 60000.0)
     val freshOk = freshnessMinutes match {
       case None => true
       case Some(limit) => lag.exists(_ <= limit.toDouble)
@@ -179,10 +196,4 @@ object Quality {
       case TimestampType | DateType => col(c).cast(TimestampType)
       case _ => try_to_timestamp(col(c))
     }
-
-  private def lagMinutes(row: Row, field: String, defined: Boolean,
-      clock: Clock): Option[Double] =
-    if (!defined) None
-    else Option(row.getAs[java.sql.Timestamp](field))
-      .map(ts => (clock.nowEpochMillis - ts.getTime) / 60000.0)
 }

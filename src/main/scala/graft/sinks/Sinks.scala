@@ -1,8 +1,61 @@
 package graft.sinks
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import graft.sources.Jdbc
+
+/** A file sink's output, written beside its target but not yet at it.
+  * Every file sink writes this way: a failed or rejected write never
+  * touches the target. [[publish]] moves the output onto the target;
+  * [[discard]] deletes it. Either way the staging directory is removed. */
+final class Staged private[sinks] (stageDir: Path, output: Path, target: Path) {
+
+  def publish(): String =
+    try {
+      if (Files.isDirectory(target)) {
+        // a directory cannot be replaced in one move: set the old one
+        // aside, move the new one in, and put the old one back on failure
+        val old = stageDir.resolve("old")
+        Files.move(target, old)
+        try Files.move(output, target)
+        catch { case e: Exception => Files.move(old, target); throw e }
+      } else Files.move(output, target, StandardCopyOption.REPLACE_EXISTING)
+      s"wrote $target"
+    } finally discard()
+
+  def discard(): Unit = Staged.delete(stageDir)
+}
+
+private[sinks] object Staged {
+  /** Runs `write` into a fresh hidden sibling directory of `target`
+    * (`.<format>_stage_*`); `write` returns the output to publish. */
+  def apply(target: String, format: String)(write: Path => Path): Staged = {
+    val t = Paths.get(target).toAbsolutePath
+    val parent = Option(t.getParent).getOrElse(Paths.get("."))
+    Files.createDirectories(parent)
+    val dir = Files.createTempDirectory(parent, s".${format}_stage_")
+    try new Staged(dir, write(dir.resolve("data")), t)
+    catch { case e: Throwable => delete(dir); throw e }
+  }
+
+  /** A partition-parallel directory write in `format`. */
+  def directory(df: DataFrame, dir: String, format: String,
+      partitionBy: Seq[String], options: Map[String, String] = Map.empty): Staged =
+    Staged(dir, format) { data =>
+      val w = df.write.format(format).options(options)
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+        .save(data.toString)
+      data
+    }
+
+  private def delete(dir: Path): Unit =
+    if (Files.exists(dir)) {
+      val paths = Files.walk(dir)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    }
+}
 
 /** Load stage (SURVEY.md §2A #9-10). */
 object CsvSink {
@@ -22,27 +75,23 @@ object CsvSink {
     * back). */
   def writeSingleFile(df: DataFrame, path: String,
       includeHeader: Boolean = true,
-      options: Map[String, String] = Map.empty): String = {
-    val target = Paths.get(path).toAbsolutePath
-    Option(target.getParent).foreach(Files.createDirectories(_))
-    val tmp = Files.createTempDirectory(
-      Option(target.getParent).getOrElse(Paths.get(".")), ".csv_stage_")
-    try {
+      options: Map[String, String] = Map.empty): String =
+    stageSingleFile(df, path, includeHeader, options).publish()
+
+  def stageSingleFile(df: DataFrame, path: String,
+      includeHeader: Boolean = true,
+      options: Map[String, String] = Map.empty): Staged =
+    Staged(path, "csv") { data =>
       df.coalesce(1).write
         .option("header", includeHeader.toString)
         .options(options)
-        .mode(SaveMode.Overwrite)
-        .csv(tmp.toString)
-      val part = Files.list(tmp).filter(p =>
-        p.getFileName.toString.startsWith("part-")).findFirst()
+        .csv(data.toString)
+      val parts = Files.list(data)
+      try parts.filter(p => p.getFileName.toString.startsWith("part-"))
+        .findFirst()
         .orElseThrow(() => new IllegalStateException("no part file written"))
-      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-      s"wrote ${target.toString}"
-    } finally {
-      Files.walk(tmp).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => Files.deleteIfExists(p))
+      finally parts.close()
     }
-  }
 
   /** The scale path: partition-parallel directory output (one file per
     * task, never a coalesce). Optional hive-style `partitionBy` columns
@@ -50,13 +99,14 @@ object CsvSink {
     * `load.partition_by` plan routes through, whatever the format. */
   def writeDirectory(df: DataFrame, dir: String,
       includeHeader: Boolean = true,
-      partitionBy: Seq[String] = Nil): String = {
-    val w = df.write.option("header", includeHeader.toString)
-      .mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .csv(dir)
-    s"wrote $dir"
-  }
+      partitionBy: Seq[String] = Nil): String =
+    stageDirectory(df, dir, includeHeader, partitionBy).publish()
+
+  def stageDirectory(df: DataFrame, dir: String,
+      includeHeader: Boolean = true,
+      partitionBy: Seq[String] = Nil): Staged =
+    Staged.directory(df, dir, "csv", partitionBy,
+      Map("header" -> includeHeader.toString))
 }
 
 /** Parquet directory sink — an engine extension beyond the reference's
@@ -66,12 +116,12 @@ object CsvSink {
   * downstream readers. */
 object ParquetSink {
   def write(df: DataFrame, dir: String,
-      partitionBy: Seq[String] = Nil): String = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(dir)
-    s"wrote $dir"
-  }
+      partitionBy: Seq[String] = Nil): String =
+    stage(df, dir, partitionBy).publish()
+
+  def stage(df: DataFrame, dir: String,
+      partitionBy: Seq[String] = Nil): Staged =
+    Staged.directory(df, dir, "parquet", partitionBy)
 }
 
 /** JDBC sink with the reference's three modes (tools.py:74-97):

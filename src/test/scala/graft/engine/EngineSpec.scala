@@ -245,4 +245,147 @@ class EngineSpec extends SparkSpec {
     assert(j.contains("\"status\": \"ok\"") && j.contains("\"rows\": 5") &&
       j.contains("\"lag_minutes\": 1.5"))
   }
+
+  /** Every file under `p` (or `p` itself), relative path → bytes. */
+  private def snapshot(p: java.nio.file.Path): Map[String, Seq[Byte]] = {
+    val files = Files.walk(p)
+    try files.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(Files.isRegularFile(_))
+      .map(f => p.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+    finally files.close()
+  }
+
+  private def stagingLeftovers(dir: java.nio.file.Path): Seq[String] = {
+    val names = Files.list(dir)
+    try names.toArray.toSeq.map(_.toString).filter(_.contains("_stage_"))
+    finally names.close()
+  }
+
+  /** A single-csv-source plan over `region,sku,price` rows. */
+  private def regionPlan(in: java.nio.file.Path, out: String, load: String,
+      minRows: Int = 1, sql: String = "SELECT region, CAST(sku AS BIGINT) AS sku, " +
+        "CAST(price AS DOUBLE) AS price FROM input_df",
+      checks: String = ""): String =
+    s"""source:
+       |  kind: csv
+       |  csv: {path: $in}
+       |transform:
+       |  sql: $sql
+       |checks: {min_rows: $minRows$checks}
+       |load: {$load, file_path: $out}
+       |alerts: {on_fail: slack://#data-alerts}
+       |""".stripMargin
+
+  private def regionInput(dir: java.nio.file.Path): java.nio.file.Path = {
+    val p = dir.resolve("in.csv")
+    Files.writeString(p,
+      "region,sku,price\neast,1,9.5\nwest,2,3.25\neast,3,70.0\n")
+    p
+  }
+
+  private val fileLoads = Seq(
+    "csv single file" -> "to: csv",
+    "csv partition_by" -> "to: csv, partition_by: [region]",
+    "parquet" -> "to: parquet")
+
+  test("a passing csv run executes the transform's plan once") {
+    import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
+    import org.apache.spark.sql.execution.QueryExecution
+    val dir = tmpDir("once")
+    val (s, f, st) = writeTriplet(dir, Seq(
+      "1,1,01/10/2011,100.5,FALSE", "2,1,01/10/2011,300.0,FALSE"))
+    val out = dir.resolve("weekly.csv").toString
+    val marker = "graft_listener_marker"
+    val runs = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.exists {
+          case a: SubqueryAlias => a.alias == "cleaned"; case _ => false
+        }) runs.incrementAndGet()
+        else if (qe.analyzed.treeString.contains(marker)) markerSeen.countDown()
+      def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val engine = new Engine(spark, new RecordingAlerter)
+    spark.listenerManager.register(listener)
+    try {
+      val res = engine.run(flagshipPlan(s, f, st, out))
+      assert(res.status == "ok", res.toJson)
+      // the listener bus delivers in order: once the marker query is seen,
+      // every execution of the run has been counted
+      spark.sql(s"SELECT '$marker'").collect()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(runs.get == 1)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  fileLoads.foreach { case (what, load) =>
+    test(s"a rejected run keeps the previous target and no staging ($what)") {
+      val dir = tmpDir("reject")
+      val in = regionInput(dir)
+      val out = dir.resolve("out")
+      val engine = new Engine(spark, new RecordingAlerter)
+      assert(engine.run(regionPlan(in, out.toString, load)).status == "ok")
+      val before = snapshot(out)
+      assert(before.nonEmpty)
+      val alerter = new RecordingAlerter
+      val res = new Engine(spark, alerter).run(
+        regionPlan(in, out.toString, load, minRows = 99))
+      assert(res.status == "failed" && res.dq.get.rows == 3, res.toJson)
+      assert(alerter.sent.size == 1 && alerter.sent.head._2.startsWith("DQ failed"))
+      assert(snapshot(out) == before)
+      assert(stagingLeftovers(dir).isEmpty)
+    }
+  }
+
+  test("a transform with zero rows fails the gate with rows=0") {
+    val dir = tmpDir("empty")
+    val in = regionInput(dir)
+    val out = dir.resolve("o.csv")
+    val alerter = new RecordingAlerter
+    val res = new Engine(spark, alerter).run(regionPlan(in, out.toString,
+      "to: csv", sql = "SELECT region, sku FROM input_df WHERE price < 0"))
+    assert(res.status == "failed" && res.dq.get.rows == 0, res.toJson)
+    assert(alerter.sent.size == 1)
+    assert(!Files.exists(out) && stagingLeftovers(dir).isEmpty)
+  }
+
+  fileLoads.filter(_._1 != "csv single file").foreach { case (what, load) =>
+    test(s"a failed write keeps the previous target ($what)") {
+      val dir = tmpDir("failwrite")
+      val in = regionInput(dir)
+      val out = dir.resolve("out")
+      val engine = new Engine(spark, new RecordingAlerter)
+      assert(engine.run(regionPlan(in, out.toString, load)).status == "ok")
+      val before = snapshot(out)
+      val alerter = new RecordingAlerter
+      val res = new Engine(spark, alerter).run(regionPlan(in, out.toString, load,
+        sql = "SELECT region, CAST(IF(sku = '3', raise_error('injected'), sku) " +
+          "AS BIGINT) AS sku FROM input_df",
+        checks = ", disabled: true"))
+      assert(res.status == "failed", res.toJson)
+      assert(alerter.sent.size == 1)
+      assert(snapshot(out) == before)
+      assert(stagingLeftovers(dir).isEmpty)
+    }
+  }
+
+  test("webhook body stays valid JSON for control characters") {
+    import com.sun.net.httpserver.HttpServer
+    val received = new java.util.concurrent.atomic.AtomicReference[String]
+    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/hook", ex => {
+      received.set(new String(ex.getRequestBody.readAllBytes(), "UTF-8"))
+      ex.sendResponseHeaders(200, -1); ex.close()
+    })
+    server.start()
+    try {
+      val msg = "Pipeline failed: [TABLE_OR_VIEW_NOT_FOUND]\n\tline 1 \"q\" \\ \u0001"
+      val url = s"http://127.0.0.1:${server.getAddress.getPort}/hook"
+      assert(new WebhookAlerter(url).send("#data-alerts", msg) == "sent")
+      val body = new com.fasterxml.jackson.databind.ObjectMapper().readTree(received.get)
+      assert(body.get("channel").asText == "#data-alerts")
+      assert(body.get("text").asText == msg)
+    } finally server.stop(0)
+  }
 }

@@ -39,6 +39,51 @@ class DialectSpec extends SparkSpec {
     assert(got == "2010-05-02") // May 2 — month-first, the declared format
   }
 
+  test("SQL try_strptime equals Dialect.tryStrptime") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    Dialect.registerAll(spark)
+    val cases = Seq(
+      "05/02/2010" -> "%m/%d/%Y",
+      "02/30/2010" -> "%m/%d/%Y", // no Feb 30: NULL, never clamped to 28th
+      "2010" -> "%Y",             // DuckDB: 2010-01-01
+      "2010-05-02 13:45:10" -> "%Y-%m-%d %H:%M:%S",
+      "18/11/2011" -> "%m/%d/%Y",
+      "garbage" -> "%Y-%m-%d")
+    cases.foreach { case (s, f) =>
+      val sqlTs = spark.sql(s"SELECT try_strptime('$s', '$f')").collect()(0).get(0)
+      val apiTs = Seq(s).toDF("s").select(Dialect.tryStrptime(col("s"), f))
+        .collect()(0).get(0)
+      assert(sqlTs == apiTs, s"try_strptime('$s', '$f')")
+    }
+    def sqlTs(s: String, f: String) = spark.sql(
+      s"SELECT CAST(try_strptime('$s', '$f') AS STRING)").collect()(0).getString(0)
+    assert(sqlTs("02/30/2010", "%m/%d/%Y") == null)
+    assert(sqlTs("2010", "%Y") == "2010-01-01 00:00:00")
+  }
+
+  test("SQL try_strptime parses in the session time zone, not the JVM's") {
+    Dialect.registerAll(spark)
+    val jvmZone = java.util.TimeZone.getDefault
+    try {
+      java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("Asia/Tokyo"))
+      assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+      val got = spark.sql(
+        "SELECT CAST(CAST(try_strptime('05/02/2010', '%m/%d/%Y') AS DATE) AS STRING)")
+        .collect()(0).getString(0)
+      assert(got == "2010-05-02")
+    } finally java.util.TimeZone.setDefault(jvmZone)
+  }
+
+  test("SQL try_strptime needs a literal format") {
+    Dialect.registerAll(spark)
+    val e = intercept[Exception] {
+      spark.sql("SELECT try_strptime(d, f) FROM VALUES ('2010', '%Y') AS t(d, f)")
+    }
+    assert(e.getMessage.contains("try_strptime fmt must be a string literal"),
+      e.getMessage)
+  }
+
   test("GraftExtensions injects working native-function builders") {
     // `spark.sql.extensions` is a static conf read when the SparkContext's
     // first session is built — unreachable from this shared-JVM suite — so
@@ -52,9 +97,12 @@ class DialectSpec extends SparkSpec {
       ext, s2.sessionState.functionRegistry)
     val r = s2.sql(
       "SELECT rolling_min_hash('hello world', 4) AS h, " +
-        "simhash64(array('a','b')) AS sh").collect()(0)
+        "simhash64(array('a','b')) AS sh, " +
+        "CAST(CAST(try_strptime('05/02/2010', '%m/%d/%Y') AS DATE) AS STRING) AS d")
+      .collect()(0)
     assert(r.getLong(0) == RollingMinHash.compute("hello world", 4))
     assert(r.getLong(1) != 0L)
+    assert(r.getString(2) == "2010-05-02")
     // and the plain session (no registration) must NOT see them
     intercept[org.apache.spark.sql.AnalysisException] {
       spark.newSession().sql("SELECT rolling_min_hash('x', 4)").collect()
