@@ -3,20 +3,8 @@ import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same single-file scan-split knob as Verify (round-12 sf1 lesson)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Session.sfDir
+    val spark = Session.create()
     // Warm the session once (codegen compiler, parquet footers, FS cache,
     // shuffle + sort machinery) so the first measured query isn't charged
     // for JVM/session startup.
@@ -82,41 +70,17 @@ object Bench {
     // A failed query reports the sentinel -1.0, never its elapsed time: a
     // query that throws instantly must read as "broken", not as the
     // suite's fastest entry. Failures are excluded from the total and
-    // listed in the "errors" field of both JSON lines.
-    //
-    // Same watchdog discipline as Verify (round-11 hardening): a query
-    // that hangs reads as -1.0 after `hangCapSec` instead of rc=124'ing
-    // the whole bench — r10's BENCH artifact died whole because one query
-    // (q163) ran >12 min. The pass runs on a daemon thread under its own
-    // job group (job groups are thread-local) so the timed-out jobs are
-    // cancelled, not left squeezing later queries' executors. 180 s ≈ 12×
-    // the suite's slowest sf0.1 entry — pure hang insurance, never a
-    // measurement path.
-    val hangCapSec = Watchdog.parseTimeoutSec(
-      sys.env.get("SPARK_GRAFT_QUERY_TIMEOUT_SEC"), default = 180L,
-      who = "bench")
+    // listed in the "errors" field of both JSON lines. A query that hangs
+    // past the watchdog cap reads as -1.0 too, with its jobs cancelled and
+    // its streams stopped so it doesn't squeeze later queries' executors.
+    val hangCapSec = Watchdog.capSec("bench")
     var benchSeq = 0
     def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       benchSeq += 1
-      val group = s"bench-$benchSeq"
-      @volatile var res = -1.0
       val t0 = System.nanoTime()
-      val t = new Thread(() => {
-        try {
-          spark.sparkContext.setJobGroup(group, group, interruptOnCancel = true)
-          fn(spark, sfDir).count()
-          res = (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => res = -1.0 }
-        finally spark.sparkContext.clearJobGroup()
-      }, group)
-      t.setDaemon(true)
-      t.start()
-      t.join(hangCapSec * 1000)
-      if (t.isAlive) {
-        spark.sparkContext.cancelJobGroup(group)
-        t.join(30000)
-        -1.0
-      } else res
+      Watchdog.run(spark, s"bench-$benchSeq", hangCapSec) {
+        fn(spark, sfDir).count()
+      }.fold((System.nanoTime() - t0) / 1e9)(_ => -1.0)
     }
     // Between queries: drop the state earlier queries leave in the shared
     // JVM — cached plans, and the memory-sink temp views every streaming
@@ -165,15 +129,15 @@ object Bench {
     }
     // Outlier re-measurement pass: this box is co-tenant — r8's graded run
     // recorded s2 at 1.681 s and m1 at 2.734 s while the IDENTICAL code
-    // re-measured at 0.342/0.191 s the next session (and 0.53/0.245 s in
-    // DbgIso isolation), with zero CodeCache warnings: pure environmental
-    // noise in the graded window, swinging individual queries 4–14×. A
-    // min-of-two can't absorb a glitch that spans both passes, so any
-    // query measuring > 2.5× its last COMMITTED number (bench_full_latest
-    // .json, written by the previous full run and committed with the
-    // round) gets up to two more timed passes, min kept — still a true
-    // measurement, just one that refuses to let a co-tenant spike stand as
-    // the round's number. Bounded: ≤ 40 extra passes per suite.
+    // re-measured at 0.342/0.191 s the next session, with zero CodeCache
+    // warnings: pure environmental noise in the graded window, swinging
+    // individual queries 4–14×. A min-of-two can't absorb a glitch that
+    // spans both passes, so any query measuring > 2.5× its last COMMITTED
+    // number (bench_full_latest.json, written by the previous full run and
+    // committed with the round) gets up to two more timed passes, min kept
+    // — still a true measurement, just one that refuses to let a co-tenant
+    // spike stand as the round's number. Bounded: ≤ 40 extra passes per
+    // suite.
     val priorMap: Map[String, Double] = {
       val f = java.nio.file.Paths.get("bench_full_latest.json")
       if (java.nio.file.Files.isReadable(f)) {

@@ -1,38 +1,14 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = run(args)
 
-  /** Reads back the flat string→string JSON object this file's own `q`
-    * escaper writes (errors.json) — resume seeding only, not a general
-    * JSON parser. */
-  private[graft] def parseFlatJson(s: String): Seq[(String, String)] = {
-    val pair = "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
-    def unesc(x: String): String = {
-      val sb = new StringBuilder
-      var i = 0
-      while (i < x.length) {
-        val c = x.charAt(i)
-        if (c == '\\' && i + 1 < x.length) {
-          x.charAt(i + 1) match {
-            case 'n' => sb += '\n'; i += 2
-            case 'r' => sb += '\r'; i += 2
-            case 't' => sb += '\t'; i += 2
-            case 'u' if i + 6 <= x.length =>
-              sb += Integer.parseInt(x.substring(i + 2, i + 6), 16).toChar
-              i += 6
-            case o => sb += o; i += 2
-          }
-        } else { sb += c; i += 1 }
-      }
-      sb.result()
-    }
-    pair.findAllMatchIn(s).map(m => unesc(m.group(1)) -> unesc(m.group(2)))
-      .toSeq
-  }
+  private val json = new ObjectMapper().registerModule(DefaultScalaModule)
 
   /** Test-visible body: `extraQueries` lets a spec inject a pathological
     * entry (e.g. a deliberate sleeper pinning the watchdog contract) and
@@ -40,47 +16,16 @@ object Verify {
   private[graft] def run(args: Array[String],
       extraQueries: Map[String, (SparkSession, String) => DataFrame] = Map.empty,
       stopSession: Boolean = true): Unit = {
+    require(args.length >= 2,
+      "usage: graft.Verify <sfDir> <outDir> [queryNameRegex]")
     // optional 3rd arg: regex over query names (dev iteration — run one
     // family through the gate without paying for the whole suite)
     val Array(sfDir, outDir) = args.take(2)
     val nameFilter = args.lift(2).map(_.r)
     def selected(name: String): Boolean =
       nameFilter.forall(_.findFirstIn(name).isDefined)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Per-query watchdog (round-11 hardening): r10's graded artifacts died
-    // whole — one pathological query (q163, ~180 scale-independent Spark
-    // jobs) ran >12 min and the harness rc=124'd the ENTIRE dump, so
-    // CORRECTNESS_r10 was literally `{}`. A query that exceeds the budget
-    // now degrades to ONE red row (synthetic `err` parquet + errors.json
-    // entry) exactly like a throwing query, and the other 435 results
-    // still reach the driver. sys.prop first so specs can tighten it
-    // in-JVM; 120 s default ≈ 8× the suite's slowest sf0.1 entry.
-    // Validated (round-12, per advisor): "0" would make Thread.join(0) wait
-    // forever — silently disabling the watchdog and reinstating the exact
-    // r10 whole-dump hang this exists to prevent — and a non-numeric value
-    // would throw before any query ran. Both degrade to the default, loudly.
-    val timeoutSec = Watchdog.parseTimeoutSec(
-      sys.props.get("graft.verify.timeoutSec")
-        .orElse(sys.env.get("SPARK_GRAFT_QUERY_TIMEOUT_SEC")),
-      default = 120L, who = "verify")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Scan-split knob for oversized single files (round-12 sf1
-      // lesson): a one-file table under the default 128 MB split means
-      // ONE task per scan, serializing CPU-heavy per-row operators.
-      // Real deployments have many files; for single-file test dirs set
-      // this to ~total_bytes/cores.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark rejects by
-      // default; read as LongType nanos and convert explicitly (Tables).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val timeoutSec = Watchdog.capSec("verify")
+    val spark = Session.create()
     new java.io.File(outDir).mkdirs()
     // A query that throws (analysis or execution) or hangs must stay
     // VISIBLE in the graded artifact: write a one-row {err} parquet in its
@@ -89,11 +34,8 @@ object Verify {
     // failure mode, where 17 broken queries made the correctness file read
     // as 100% green) or timing out the whole dump (the r10 failure mode).
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Runs one query dump on a daemon thread under its own job group
-    // (job groups are thread-local, so the group must be set by the
-    // thread that fires the jobs); on timeout the group is cancelled with
-    // interruptOnCancel so running tasks die quickly. Returns the error
-    // message, or None on success.
+    // Runs one query dump under Watchdog.run. Returns the error message,
+    // or None on success.
     // Round-12 hardening (per advisor): the worker writes to a TEMP slot
     // and the MAIN thread renames it into place on success — a timed-out
     // worker stuck in uninterruptible I/O (or a UDF swallowing
@@ -104,46 +46,17 @@ object Verify {
     // touch the temp slot, never the graded one.
     def runOne(name: String,
         fn: (SparkSession, String) => DataFrame): Option[String] = {
-      val err = new java.util.concurrent.atomic.AtomicReference[String](null)
-      val group = s"verify-$name"
       val tmpSlot = s"$outDir/.tmp-$name"
-      val streamsBefore = spark.streams.active.map(_.id).toSet
-      val t = new Thread(() => {
-        try {
-          spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
-          // repartition(1), NOT coalesce(1): coalesce propagates the
-          // single-partition constraint UP the plan, so the whole query
-          // recomputes in one task — measured at sf1: t5's 6 s parallel
-          // compute became a 311 s single-task dump and blew the
-          // watchdog. The shuffle barrier keeps compute parallel; the
-          // single output file (driver contract) only pays the write.
-          fn(spark, sfDir).repartition(1).write.mode("overwrite")
-            .parquet(tmpSlot)
-        } catch { case e: Throwable =>
-          err.set(s"${e.getClass.getSimpleName}: ${e.getMessage}")
-        } finally spark.sparkContext.clearJobGroup()
-      }, group)
-      t.setDaemon(true)
-      t.start()
-      t.join(timeoutSec * 1000)
-      val outcome = if (t.isAlive) {
-        spark.sparkContext.cancelJobGroup(group)
-        // Streaming entries (e-family) run microbatches on StreamExecution
-        // threads with their OWN job group, so cancelJobGroup alone leaves
-        // a hung StreamingQuery squeezing executor slots for the rest of
-        // the dump — stop any query this entry started, then interrupt the
-        // worker (it may be blocked in processAllAvailable/awaitTermination
-        // rather than in a Spark task).
-        spark.streams.active.filterNot(q => streamsBefore(q.id))
-          .foreach(q => scala.util.Try(q.stop()))
-        t.interrupt()
-        t.join(30000) // grace for task interruption to unwind
-        if (t.isAlive)
-          System.err.println(s"[verify] $name: worker thread still alive " +
-            "after cancel+interrupt+30s grace (uninterruptible I/O?); its " +
-            "late writes can only reach the temp slot, not the artifact")
-        Some(s"timeout: exceeded ${timeoutSec}s, job group cancelled")
-      } else Option(err.get)
+      val outcome = Watchdog.run(spark, s"verify-$name", timeoutSec) {
+        // repartition(1), NOT coalesce(1): coalesce propagates the
+        // single-partition constraint UP the plan, so the whole query
+        // recomputes in one task — measured at sf1: t5's 6 s parallel
+        // compute became a 311 s single-task dump and blew the
+        // watchdog. The shuffle barrier keeps compute parallel; the
+        // single output file (oracle_check contract) only pays the write.
+        fn(spark, sfDir).repartition(1).write.mode("overwrite")
+          .parquet(tmpSlot)
+      }
       if (outcome.isEmpty) {
         // success: promote temp → graded slot (main thread owns the slot)
         val src = Paths.get(tmpSlot)
@@ -173,9 +86,9 @@ object Verify {
     if (resume) {
       val ef = Paths.get(s"$outDir/errors.json")
       if (Files.exists(ef))
-        parseFlatJson(Files.readString(ef)).foreach {
-          case (k, v) => errors(k) = v
-        }
+        json.readValue(ef.toFile,
+            classOf[java.util.LinkedHashMap[String, String]])
+          .forEach((k, v) => errors(k) = v)
     }
     // Open-fd diagnostic: log the process's descriptor count every 25
     // queries, so a leak that ends in EMFILE-shaped "Mkdirs failed"
@@ -218,26 +131,13 @@ object Verify {
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Jackson escapes backslash, quote and every control char: a tab or CR
+    // in oracle SQL would otherwise make oracle_check.py's json.load fail
+    // and silently zero the correctness check.
+    json.writeValue(Paths.get(s"$outDir/oracle_sql.json").toFile,
+      SparkEntry.oracleSql.filter { case (k, _) => selected(k) })
     // human/driver-readable failure summary (empty object = all constructed)
-    val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    json.writeValue(Paths.get(s"$outDir/errors.json").toFile, errors)
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries FAILED: " +
         errors.keys.mkString(", "))

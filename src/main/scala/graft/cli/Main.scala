@@ -1,6 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
 import graft.engine.Engine
 
 /** Console entry point (reference cli.py:21-52 behaviors): `-p` takes plan
@@ -31,20 +30,7 @@ object Main {
     }
     System.err.println("graft: running plan")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // parity with Bench/Verify: old-generation timestamp[ns] parquet
-      // arrives as LongType nanos so Tables.tsMicros' LongType branch works
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.create()
     try {
       // optional run ledger (reference memory.py role): enabled by env
       val ledger = sys.env.get("GRAFT_LEDGER_DIR")

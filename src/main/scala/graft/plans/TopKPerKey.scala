@@ -42,8 +42,8 @@ import scala.collection.mutable
   * CHILD's codegen'd stage through one virtual iterator boundary (the
   * same boundary a codegen'd stage pays at any exchange), the key
   * projection is a generated `UnsafeProjection`, and the per-row cost is
-  * heap-bounded at O(log k). MEASURED (r9, tools/TopKMicro.scala at
-  * sf0.1, 600k-row lineitem, 20k keys, k=2, min of 3): scan-only
+  * heap-bounded at O(log k). MEASURED (r9, SCALE.md's TopKPerKeyExec
+  * entry: sf0.1, 600k-row lineitem, 20k keys, k=2, min of 3): scan-only
   * 0.135 s, custom operator 0.497 s, window+filter 0.951 s, custom with
   * the child's whole-stage codegen disabled 0.560 s. Reading: the
   * operator's own cost above the scan (0.36 s) is the absolute ceiling

@@ -18,14 +18,14 @@ class VerifyWatchdogSpec extends SparkSpec {
   test("a hanging query becomes one err row, not an empty artifact") {
     val out = tmpDir("verify_watchdog").toString
     spark // force the shared session so Verify's getOrCreate reuses it
-    sys.props("graft.verify.timeoutSec") = "3"
+    sys.props("graft.query.timeoutSec") = "3"
     try {
       // zz_sleeper: would run 10 min/task; q1_agg rides along to prove
       // healthy queries still dump after a timeout fires
       Verify.run(Array(sf, out, "zz_sleeper|q1_agg"),
         extraQueries = Map("zz_sleeper" -> sleeper),
         stopSession = false)
-    } finally sys.props.remove("graft.verify.timeoutSec")
+    } finally sys.props.remove("graft.query.timeoutSec")
 
     val errs = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$out/errors.json"))
@@ -55,5 +55,20 @@ class VerifyWatchdogSpec extends SparkSpec {
     val errRow = spark.read.parquet(s"$out/zz_boom").collect()
     assert(errRow.length === 1)
     assert(errRow.head.getAs[String]("err").nonEmpty)
+  }
+
+  test("errors.json carries a hostile error message back exactly") {
+    val out = tmpDir("verify_json").toString
+    spark
+    val msg = "quote \" backslash \\ newline \n tab \t ctrl \u0001 end"
+    val hostile: (SparkSession, String) => DataFrame =
+      (_, _) => throw new RuntimeException(msg)
+    Verify.run(Array(sf, out, "zz_hostile"),
+      extraQueries = Map("zz_hostile" -> hostile), stopSession = false)
+    val errs = new com.fasterxml.jackson.databind.ObjectMapper().readValue(
+      new java.io.File(s"$out/errors.json"),
+      classOf[java.util.Map[String, String]])
+    assert(errs.size === 1)
+    assert(errs.get("zz_hostile") === s"RuntimeException: $msg")
   }
 }
