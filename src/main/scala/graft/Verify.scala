@@ -1,14 +1,10 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.module.scala.DefaultScalaModule
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = run(args)
-
-  private val json = new ObjectMapper().registerModule(DefaultScalaModule)
 
   /** Test-visible body: `extraQueries` lets a spec inject a pathological
     * entry (e.g. a deliberate sleeper pinning the watchdog contract) and
@@ -86,9 +82,7 @@ object Verify {
     if (resume) {
       val ef = Paths.get(s"$outDir/errors.json")
       if (Files.exists(ef))
-        json.readValue(ef.toFile,
-            classOf[java.util.LinkedHashMap[String, String]])
-          .forEach((k, v) => errors(k) = v)
+        Json.readTree(ef).properties.forEach(e => errors(e.getKey) = e.getValue.asText)
     }
     // Open-fd diagnostic: log the process's descriptor count every 25
     // queries, so a leak that ends in EMFILE-shaped "Mkdirs failed"
@@ -134,10 +128,10 @@ object Verify {
     // Jackson escapes backslash, quote and every control char: a tab or CR
     // in oracle SQL would otherwise make oracle_check.py's json.load fail
     // and silently zero the correctness check.
-    json.writeValue(Paths.get(s"$outDir/oracle_sql.json").toFile,
+    Json.write(Paths.get(s"$outDir/oracle_sql.json"),
       SparkEntry.oracleSql.filter { case (k, _) => selected(k) })
     // human/driver-readable failure summary (empty object = all constructed)
-    json.writeValue(Paths.get(s"$outDir/errors.json").toFile, errors)
+    Json.write(Paths.get(s"$outDir/errors.json"), errors)
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries FAILED: " +
         errors.keys.mkString(", "))

@@ -37,15 +37,7 @@ object Main {
         .map(dir => new graft.engine.Ledger(spark, dir))
       val runId = ledger.map(_.startRun(planText, planText))
       val result = new Engine(spark).run(planText)
-      ledger.zip(runId).foreach { case (l, id) =>
-        l.finishRun(id, result.status,
-          rowsWritten = result.verify.map(_.rows),
-          dqJson = result.dq.map(d =>
-            graft.engine.RunResult("", dq = Some(d)).toJson),
-          verifyJson = result.verify.map(v =>
-            graft.engine.RunResult("", verify = Some(v)).toJson),
-          error = result.error)
-      }
+      ledger.zip(runId).foreach { case (l, id) => l.finishRun(id, result) }
       println(result.toJson)
       if (result.status != "ok") sys.exit(1)
     } finally spark.stop()

@@ -2,7 +2,8 @@ package graft.engine
 
 import scala.concurrent.Await
 import scala.concurrent.duration._
-import com.fasterxml.jackson.core.io.JsonStringEncoder
+import scala.collection.immutable.ListMap
+import com.fasterxml.jackson.annotation.JsonInclude
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import graft.operators.{Clock, DqResult, Quality, SystemClock, Transform, VerifyResult}
 import graft.plan._
@@ -20,14 +21,6 @@ object LogAlerter extends Alerter {
   }
 }
 
-/** The one JSON string escaper for the engine's hand-built JSON (the
-  * webhook body, [[RunResult.toJson]]): Jackson's, so control characters
-  * in a message (Spark's multi-line error text) stay valid JSON. */
-private[engine] object Json {
-  def quote(s: String): String =
-    "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
-}
-
 /** Webhook alerter (the reference stubs a Slack webhook,
   * tools.py:267-271 + plan schema `alerts.webhook_url`,
   * templates.py:8): POSTs `{channel, text}` JSON to the configured URL
@@ -37,8 +30,7 @@ class WebhookAlerter(webhookUrl: String,
     timeoutSeconds: Long = 10) extends Alerter {
   def send(channel: String, message: String): String =
     try {
-      val body =
-        s"""{"channel": ${Json.quote(channel)}, "text": ${Json.quote(message)}}"""
+      val body = graft.Json.spaced(ListMap("channel" -> channel, "text" -> message))
       val client = java.net.http.HttpClient.newBuilder()
         .connectTimeout(java.time.Duration.ofSeconds(timeoutSeconds)).build()
       val req = java.net.http.HttpRequest
@@ -55,7 +47,9 @@ class WebhookAlerter(webhookUrl: String,
 }
 
 /** Terminal result contract (reference templates.py:130-170):
-  * `{status, dq?, message?, verify?}`. */
+  * `{status, dq?, message?, verify?}`. An absent top-level field is omitted
+  * from the JSON; an absent field of `dq`/`verify` is written as `null`. */
+@JsonInclude(JsonInclude.Include.NON_ABSENT)
 final case class RunResult(
     status: String,
     dq: Option[DqResult] = None,
@@ -63,33 +57,7 @@ final case class RunResult(
     verify: Option[VerifyResult] = None,
     error: Option[String] = None) {
 
-  def toJson: String = {
-    def j(v: Any): String = v match {
-      case null => "null"
-      case None => "null"
-      case Some(x) => j(x)
-      case s: String => Json.quote(s)
-      case b: Boolean => b.toString
-      case n: Long => n.toString
-      case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
-      case n: Int => n.toString
-      case m: Map[_, _] =>
-        m.map { case (k, v2) => j(String.valueOf(k)) + ": " + j(v2) }
-          .mkString("{", ", ", "}")
-      case dq: DqResult => j(Map(
-        "rows" -> dq.rows, "nonnull_ok" -> dq.nonnullOk,
-        "fresh_ok" -> dq.freshOk, "status" -> dq.status,
-        "null_counts" -> dq.nullCounts, "lag_minutes" -> dq.lagMinutes))
-      case vr: VerifyResult => j(Map(
-        "rows" -> vr.rows, "nonnull_ok" -> vr.nonnullOk,
-        "fresh_ok" -> vr.freshOk, "lag_minutes" -> vr.lagMinutes,
-        "status" -> vr.status, "error" -> vr.error))
-      case other => j(String.valueOf(other))
-    }
-    j(Map("status" -> status, "dq" -> dq, "message" -> message,
-      "verify" -> verify, "error" -> error)
-      .filter { case (_, v) => v != None })
-  }
+  def toJson: String = graft.Json.spaced(this)
 }
 
 /** The pipeline driver (reference `run_from_plan`, templates.py:51-170):

@@ -29,19 +29,22 @@ class Ledger(spark: SparkSession, dir: String, clock: Clock = SystemClock) {
     runId
   }
 
-  def finishRun(runId: String, status: String,
-      rowsWritten: Option[Long] = None, dqJson: Option[String] = None,
-      verifyJson: Option[String] = None, error: Option[String] = None): Unit =
+  /** Records a finished run: its status and error, the verified row count,
+    * and its DQ and verify objects as JSON, in the result's own format. */
+  def finishRun(runId: String, result: RunResult): Unit =
     Seq((runId, null.asInstanceOf[java.sql.Timestamp],
         new java.sql.Timestamp(clock.nowEpochMillis),
-        null.asInstanceOf[String], null.asInstanceOf[String], status,
-        rowsWritten.map(Long.box).orNull, dqJson.orNull, verifyJson.orNull,
-        error.orNull))
+        null.asInstanceOf[String], null.asInstanceOf[String], result.status,
+        result.verify.map(v => Long.box(v.rows)).orNull,
+        result.dq.map(graft.Json.spaced).orNull,
+        result.verify.map(graft.Json.spaced).orNull, result.error.orNull))
       .toDF("run_id", "started_at", "ended_at", "prompt_hash", "plan_yaml",
         "status", "rows_written", "dq_json", "verify_json", "error")
       .write.mode(SaveMode.Append).parquet(runsPath)
 
-  /** One row per run: the append log folded to latest values. */
+  /** One row per run: the append log folded to latest values. The status
+    * is the latest finish row's, else the start row's "running" (the scan
+    * reads files largest first, so file order says nothing about time). */
   def runs(): DataFrame =
     spark.read.parquet(runsPath)
       .groupBy(col("run_id"))
@@ -49,7 +52,8 @@ class Ledger(spark: SparkSession, dir: String, clock: Clock = SystemClock) {
         min(col("started_at")).as("started_at"),
         max(col("ended_at")).as("ended_at"),
         max(col("prompt_hash")).as("prompt_hash"),
-        last(col("status"), ignoreNulls = true).as("status"),
+        coalesce(max_by(col("status"), col("ended_at")), max(col("status")))
+          .as("status"),
         max(col("rows_written")).as("rows_written"),
         max(col("dq_json")).as("dq_json"),
         max(col("verify_json")).as("verify_json"),

@@ -34,14 +34,13 @@ object Incremental {
     val mx = Option(stats.getAs[java.sql.Timestamp]("mx"))
     if (n > 0) {
       process(fresh)
-      mx.foreach(m => ledger.setState(key, s"""{"watermark": "${m.toString}"}"""))
+      mx.foreach(m => ledger.setState(key, graft.Json.spaced(Map("watermark" -> m.toString))))
     }
     Result(n, mx.orElse(prior))
   }
 
   def currentWatermark(ledger: Ledger, key: String): Option[java.sql.Timestamp] =
-    ledger.getState(key).flatMap { json =>
-      """"watermark": "([^"]+)"""".r.findFirstMatchIn(json)
-        .map(m => java.sql.Timestamp.valueOf(m.group(1)))
-    }
+    ledger.getState(key).flatMap(json =>
+      Option(graft.Json.readTree(json).get("watermark"))
+        .map(w => java.sql.Timestamp.valueOf(w.asText)))
 }

@@ -103,8 +103,12 @@ object Quality {
         return VerifyResult(0, nonnullOk = false, freshOk = false, None,
           status = false, error = Some(s"missing or empty: $path"))
 
+      // read back the way CsvSink wrote it: the writer quotes a value
+      // holding a newline, so a record may span lines, and it escapes
+      // embedded quotes with its default `\`
       val df = graft.sources.Sources.loadCsv(spark, path,
-        maxBytes = Long.MaxValue, delimiter = delimiter, encoding = encoding)
+        maxBytes = Long.MaxValue, delimiter = delimiter, encoding = encoding,
+        options = Map("multiLine" -> "true"))
       val dq = dqCheck(df, minRows, nonnullCols,
         freshnessMinutes = Some(maxLagMinutes),
         timestampCol = timestampCol, clock = clock)

@@ -27,7 +27,7 @@ import graft.functions.JaroWinklerSim
   * 10^-scale; a further 1e-9 guards the float evaluation of the bound
   * itself. Matches both Filter conditions and Inner/Cross join
   * conditions (where Catalyst lands a pushed blocked-ER predicate —
-  * the d41 shape). Registered per-session via [[JwPrefilter.install]];
+  * the d41 shape). Installed per session through [[Rules.install]];
   * a TreeNodeTag keeps the rewrite idempotent across optimizer runs.
   */
 object JwPrefilterRule extends Rule[LogicalPlan] {
@@ -82,12 +82,4 @@ object JwPrefilterRule extends Rule[LogicalPlan] {
     GreaterThanOrEqual(Least(Seq(la, lb)),
       Multiply(Greatest(Seq(la, lb)), Literal(c, DoubleType)))
   }
-}
-
-object JwPrefilter {
-  /** Register the rule on this session (idempotent). */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(JwPrefilterRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ JwPrefilterRule
 }

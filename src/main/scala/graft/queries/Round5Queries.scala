@@ -229,7 +229,7 @@ object Round5Queries {
       scratch("p19_manifest"), "manifest.json")
     val out = fs.create(manifestPath, true)
     out.write(manifest.toSeq.sortBy(_._1).map { case (v, fl) =>
-      s"""{"version":$v,"files":[${fl.map("\"" + _ + "\"").mkString(",")}]}"""
+      graft.Json.compact(scala.collection.immutable.VectorMap("version" -> v, "files" -> fl))
     }.mkString("\n").getBytes("UTF-8"))
     out.close()
     def asOf(v: Int): DataFrame =

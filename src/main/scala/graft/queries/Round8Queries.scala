@@ -293,8 +293,9 @@ object Round8Queries {
     val out = graft.Scratch.dir("p21_quoted.csv")
     graft.sinks.CsvSink.writeSingleFile(sample, out,
       options = Map("escape" -> "\""))
+    // quoted fields spanning lines, with the writer's doubled-quote escape
     graft.sources.Sources.loadCsv(s, out, maxBytes = Long.MaxValue,
-        multiline = true)
+        options = Map("multiLine" -> "true", "escape" -> "\""))
       .agg(count(lit(1)).as("n"),
         sum(length(col("tricky"))).cast(LongType).as("total_len"),
         dsum(col("c_acctbal")).as("sum_bal"))

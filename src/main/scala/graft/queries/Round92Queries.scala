@@ -104,7 +104,7 @@ object Round92Queries {
     * the record-level join shape this rule-proof needs). */
   def d44_jw_pruned(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.JaroWinklerSim
-    graft.plans.JwPrefilter.install(s)
+    graft.plans.Rules.install(s, optimizations = Seq(graft.plans.JwPrefilterRule))
     val p = t(s, dir, "part")
       .filter(col("p_partkey") < 2000)
       .select(col("p_partkey"), col("p_name"), col("p_brand"))

@@ -18,10 +18,11 @@ object Sources {
     * fixture's sentinel — FIXTURES.md §A1). Pre-flight size guard mirrors
     * the reference's `max_bytes` check (ops.py:22-24); at cluster scale
     * replace with quota enforcement at the catalog layer, not per-file
-    * stat. */
+    * stat. `options` pass through to the Spark CSV reader last. */
   def loadCsv(spark: SparkSession, path: String,
       maxBytes: Long = 1073741824L, delimiter: String = ",",
-      encoding: String = "", multiline: Boolean = false): DataFrame = {
+      encoding: String = "",
+      options: Map[String, String] = Map.empty): DataFrame = {
     val p = Paths.get(path)
     if (!Files.exists(p)) throw new java.io.FileNotFoundException(path)
     val size = Files.size(p)
@@ -32,13 +33,8 @@ object Sources {
       .option("inferSchema", "true")
       .option("nullValue", "NA")
       .option("sep", delimiter)
-    // RFC-4180 quoted fields spanning physical lines (pandas reads these
-    // by default; Spark's splittable line reader needs the opt-in). The
-    // escape option pairs with the writer's: doubled quotes, not
-    // backslashes.
-    if (multiline) r = r.option("multiLine", "true").option("escape", "\"")
     if (encoding.nonEmpty) r = r.option("encoding", encoding)
-    r.csv(path)
+    r.options(options).csv(path)
   }
 
   /** The flagship CSV triplet (reference templates.py:59-82): combined size

@@ -244,6 +244,76 @@ class EngineSpec extends SparkSpec {
     val j = r.toJson
     assert(j.contains("\"status\": \"ok\"") && j.contains("\"rows\": 5") &&
       j.contains("\"lag_minutes\": 1.5"))
+
+    // parsed back: absent top-level fields omitted, nested None as null,
+    // hostile strings exact
+    import scala.jdk.CollectionConverters._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def keys(n: com.fasterxml.jackson.databind.JsonNode): Set[String] =
+      n.fieldNames().asScala.toSet
+    val hostile = "a \"q\" \\ b\n\tc \u0001 d"
+    val ok = mapper.readTree(RunResult("ok",
+      dq = Some(graft.operators.DqResult(5, true, true, true,
+        nullCounts = Map("sku" -> 0L, "price" -> 2L))),
+      message = Some(hostile),
+      verify = Some(graft.operators.VerifyResult(5, true, true, None, true)))
+      .toJson)
+    assert(keys(ok) == Set("status", "dq", "message", "verify"))
+    assert(ok.get("message").asText == hostile)
+    val dq = ok.get("dq")
+    assert(keys(dq) == Set("rows", "nonnull_ok", "fresh_ok", "status",
+      "null_counts", "lag_minutes"))
+    assert(dq.get("lag_minutes").isNull && dq.get("null_counts").isObject)
+    assert(dq.get("null_counts").get("price").asLong == 2L)
+    val ver = ok.get("verify")
+    assert(keys(ver) == Set("rows", "nonnull_ok", "fresh_ok", "lag_minutes",
+      "status", "error"))
+    assert(ver.get("lag_minutes").isNull && ver.get("error").isNull)
+
+    val failed = mapper.readTree(RunResult("failed",
+      verify = Some(graft.operators.VerifyResult(0, false, false, Some(2.5),
+        false, error = Some(hostile))),
+      error = Some(hostile)).toJson)
+    assert(keys(failed) == Set("status", "verify", "error"))
+    assert(failed.get("error").asText == hostile)
+    assert(failed.get("verify").get("error").asText == hostile)
+    assert(failed.get("verify").get("lag_minutes").asDouble == 2.5)
+  }
+
+  test("result JSON is one line in declaration order") {
+    val r = RunResult("failed",
+      dq = Some(graft.operators.DqResult(0, false, true, false,
+        nullCounts = Map("sku" -> 0L))),
+      error = Some("boom"))
+    assert(r.toJson == """{"status": "failed", "dq": {"rows": 0, """ +
+      """"nonnull_ok": false, "fresh_ok": true, "status": false, """ +
+      """"null_counts": {"sku": 0}, "lag_minutes": null}, "error": "boom"}""")
+  }
+
+  test("csv verify reads back values with newlines, quotes and commas") {
+    val dir = tmpDir("multiline")
+    val in = dir.resolve("in.csv")
+    Files.writeString(in, "id,name\n1,alpha\n2,beta\n")
+    val out = dir.resolve("o.csv").toString
+    val alerter = new RecordingAlerter
+    val res = new Engine(spark, alerter).run(
+      s"""source:
+         |  kind: csv
+         |  csv: {path: $in}
+         |transform:
+         |  sql: |
+         |    SELECT CAST(id AS BIGINT) AS id,
+         |           concat(name, chr(10), 'tail') AS multi,
+         |           concat(name, ' "q", x') AS quoted
+         |    FROM input_df
+         |checks: {min_rows: 2, nonnull_cols: [id, multi, quoted]}
+         |load: {to: csv, file_path: $out}
+         |verify: {min_rows: 2, nonnull_cols: [id, multi, quoted]}
+         |alerts: {on_fail: slack://#data-alerts}
+         |""".stripMargin)
+    assert(res.status == "ok", res.toJson)
+    assert(res.dq.get.rows == 2 && res.verify.get.rows == 2, res.toJson)
+    assert(res.verify.get.nonnullOk && alerter.sent.isEmpty)
   }
 
   /** Every file under `p` (or `p` itself), relative path → bytes. */

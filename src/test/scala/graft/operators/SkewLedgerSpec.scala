@@ -33,8 +33,8 @@ class SkewLedgerSpec extends SparkSpec {
     val clock = new Clock { def nowEpochMillis: Long = { now += 1000; now } }
     val ledger = new graft.engine.Ledger(spark, dir, clock)
     val id = ledger.startRun("prompt text", "source:\n  kind: csv")
-    ledger.finishRun(id, "ok", rowsWritten = Some(42),
-      dqJson = Some("""{"status": true}"""))
+    ledger.finishRun(id, graft.engine.RunResult("ok",
+      verify = Some(VerifyResult(42, true, true, None, true))))
     val runs = ledger.runs().collect()
     assert(runs.length == 1)
     val r = runs(0)
@@ -47,6 +47,26 @@ class SkewLedgerSpec extends SparkSpec {
     ledger.setState("watermark", """{"v": 2}""")
     assert(ledger.getState("watermark").contains("""{"v": 2}"""))
     assert(ledger.getState("missing").isEmpty)
+  }
+
+  test("ledger stores a run's DQ and verify objects as JSON") {
+    val dir = tmpDir("ledger_json").toString
+    val ledger = new graft.engine.Ledger(spark, dir)
+    val id = ledger.startRun("p", "plan")
+    val nl = "two\nlines \"q\""
+    ledger.finishRun(id, graft.engine.RunResult("failed",
+      dq = Some(DqResult(7, true, true, true, nullCounts = Map("a" -> 1L))),
+      verify = Some(VerifyResult(6, false, true, Some(1.5), false,
+        error = Some(nl)))))
+    val r = ledger.runs().collect()(0)
+    assert(r.getAs[String]("status") == "failed")
+    assert(r.getAs[Long]("rows_written") == 6)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val dq = mapper.readTree(r.getAs[String]("dq_json"))
+    assert(dq.isObject && dq.get("rows").asLong == 7 && dq.get("status").asBoolean)
+    assert(dq.get("null_counts").get("a").asLong == 1)
+    val ver = mapper.readTree(r.getAs[String]("verify_json"))
+    assert(ver.get("rows").asLong == 6 && ver.get("error").asText == nl)
   }
 
   test("incremental processing advances the watermark and is idempotent") {
