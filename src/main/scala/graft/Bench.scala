@@ -4,6 +4,13 @@ import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
+    val out = utf8Printer(new java.io.FileOutputStream(java.io.FileDescriptor.out))
+    // Optional subset filter (round-13 drift bisect), checked before the
+    // session starts — lets a clean JVM re-run exactly a prior round's
+    // suite to separate "the new queries slow the shared session" from "a
+    // commit slowed the old queries".
+    val nameFilter: Option[Set[String]] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(benchOnly(_, SparkEntry.queries.keySet))
     val sfDir = Session.sfDir
     val spark = Session.create()
     // Warm the session once (codegen compiler, parquet footers, FS cache,
@@ -99,21 +106,9 @@ object Bench {
       sinceGc += 1
       if (sinceGc >= 25) { sinceGc = 0; System.gc() }
     }
-    // Optional subset filter (round-13 drift bisect): a comma-separated
-    // name list or a path to a bench-detail JSON whose query keys define
-    // the subset — lets a clean JVM re-run exactly a prior round's suite
-    // to separate "the new queries slow the shared session" from "a
-    // commit slowed the old queries".
-    val nameFilter: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map { v =>
-        val f = java.nio.file.Paths.get(v)
-        if (java.nio.file.Files.isReadable(f))
-          recorded(f).fold(Set.empty[String])(_._2.keySet)
-        else v.split(",").map(_.trim).filter(_.nonEmpty).toSet
-      }
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => nameFilter.forall(_.contains(n)) }
-    nameFilter.foreach(f => println(
+    nameFilter.foreach(f => out.println(
       s"bench: SPARK_GRAFT_BENCH_ONLY active — ${selected.size} of " +
         s"${SparkEntry.queries.size} queries selected"))
     val results = selected.map { case (name, fn) =>
@@ -170,7 +165,7 @@ object Bench {
     // Full per-query detail first (for humans reading the log)...
     val detail = detailLine(mode, artifactBuildSec, jvmDiag(),
       outlierReruns.toSeq, regressions, results2, sfDir)
-    println(detail)
+    out.println(detail)
     // ...and ALSO persisted to a stable file: the harness that wraps sbt
     // keeps only the final ~2KB of stdout, so the graded BENCH_rN artifact
     // preserved just ~70 of 313 per-query timings in r8 — exactly what made
@@ -185,8 +180,33 @@ object Bench {
     // The compact headline line goes LAST: the tail window is what the
     // harness parses, so the line it must parse has to stay well under
     // ~1500 chars (sbt appends its own "[success] ..." line after us).
-    println(headlineLine(mode, results2, detailFile.toAbsolutePath.toString, sfDir))
+    out.println(headlineLine(mode, results2, detailFile.toAbsolutePath.toString, sfDir))
     spark.stop()
+  }
+
+  /** Bench's lines go out as UTF-8 whatever the JVM's default charset,
+    * which is ASCII under a POSIX locale: there a non-ASCII `sf` or the
+    * notice's em dash would print as `?`. */
+  private[graft] def utf8Printer(os: java.io.OutputStream): java.io.PrintStream =
+    new java.io.PrintStream(os, true, java.nio.charset.StandardCharsets.UTF_8)
+
+  /** The query names a `SPARK_GRAFT_BENCH_ONLY` value selects: a readable
+    * bench detail file's recorded queries, else a comma-separated name
+    * list. Names the suite no longer has are kept, so an old record
+    * still bisects; a readable file that is not a detail record (such as
+    * a harness record, whose headline is nested) or a value that selects
+    * none of `suite` fails, naming the value. */
+  private[graft] def benchOnly(v: String, suite: Set[String]): Set[String] = {
+    val f = java.nio.file.Paths.get(v)
+    val names =
+      if (java.nio.file.Files.isReadable(f))
+        recorded(f).map(_._2.keySet).getOrElse(throw new IllegalArgumentException(
+          s"SPARK_GRAFT_BENCH_ONLY=$v is not a bench detail file " +
+            "(no top-level \"queries\" object)"))
+      else v.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    require(names.exists(suite),
+      s"SPARK_GRAFT_BENCH_ONLY=$v selects none of the ${suite.size} queries")
+    names
   }
 
   /** A recorded bench file's `sf` and `queries`; None when it is missing,

@@ -1,32 +1,48 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Minimal graph operators for dedup pipelines: near-dup *pairs* (Dedup.*)
   * become near-dup *clusters* by connected components, and each cluster
   * keeps one representative (the min id) — the step that turns pairwise
   * similarity into an actual drop-list at corpus scale.
+  *
+  * Every EXACT-INTEGER iterative operator here (connectedComponents, bfs,
+  * multiSourceBfs, hits, sssp, onionLayers, labelPropagation, widestPath)
+  * switches on [[DriverPath]]: below its edge cap the rounds run in one
+  * driver loop over the collected edge array — semantically identical
+  * synchronous updates, zero per-round scheduling — and above it the
+  * distributed join/aggregate rounds (`private[graft]`, over the prepared
+  * edges) run. The float-typed operators (pageRank and friends) keep
+  * their distributed DECIMAL-rounding pipeline at every size because
+  * their per-iteration rounding is part of the declared semantics.
   */
 object Graph {
 
-  /** Round 14: the same size-based strategy switch
-    * [[connectedComponents]] has always had, generalized to every
-    * EXACT-INTEGER iterative operator here (bfs, sssp, widestPath,
-    * onionLayers, labelPropagation, hits): below this edge count the
-    * rounds run in one driver loop over the collected edge array —
-    * semantically identical synchronous updates, zero per-round
-    * scheduling — and above it the distributed join/aggregate rounds
-    * run unchanged. Value matches connectedComponents' driverThreshold;
-    * the float-typed operators (pageRank and friends) keep their
-    * distributed DECIMAL-rounding pipeline at every size because their
-    * per-iteration rounding is part of the declared semantics. */
-  private val DriverGraphThreshold = 1L << 20
+  /** Both directions of every edge, as distinct (`u`, `v`) longs. */
+  private[graft] def undirected(edges: DataFrame, aCol: String,
+      bCol: String): DataFrame =
+    edges.select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
+      .union(edges.select(col(bCol).cast("long").as("u"),
+        col(aCol).cast("long").as("v")))
+      .distinct()
+
+  /** Distinct directed (`u`, `v`) longs. */
+  private[graft] def directed(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("u"),
+      col(dstCol).cast("long").as("v")).distinct()
+
+  /** Weighted edges (`src`, `dst`, `w`) as longs. */
+  private[graft] def weighted(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
 
   /** Connected components. Small edge sets (the common case once pairs
     * came from a good candidate generator) resolve in one driver-side
     * union-find — the same size-based strategy switch as a broadcast
-    * join. Above `driverThreshold` the distributed path runs
+    * join. Above [[DriverPath.MaxEdges]] the distributed path runs
     * large-star/small-star contraction (Kiveris et al. 2014, "Connected
     * Components in MapReduce and Beyond"): each round is two grouped
     * shuffles, and the round count is O(log² n) in the component size —
@@ -39,41 +55,41 @@ object Graph {
     * cluster label is the component's minimum id (deterministic across
     * any partitioning). */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
-      maxRounds: Int = 50, driverThreshold: Long = 1L << 20): DataFrame = {
-    val und = edges.select(col(aCol).cast("long").as("a"),
-        col(bCol).cast("long").as("b"))
-      .union(edges.select(col(bCol).cast("long").as("a"),
-        col(aCol).cast("long").as("b")))
-      .distinct()
-      .cache()
-    if (und.count() <= driverThreshold) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val es = und.as[(Long, Long)].collect()
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val nx = parent.getOrElse(c, c); parent(c) = r; c = nx
-        }
-        r
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        // union by min so the representative is the component minimum
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      val nodes = es.iterator.map(_._1).toSeq.distinct
-      und.unpersist()
-      return nodes.map(n => (n, find(n))).toDF("n", "l")
+      maxRounds: Int = 50): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val und = undirected(edges, aCol, bCol).cache()
+    val result = DriverPath.rows(und.as[(Long, Long)]) match {
+      case None => starContraction(und, maxRounds)
+      case Some(es) =>
+        val lab = unionFind(es)
+        es.iterator.map(_._1).toSeq.distinct.map(n => (n, lab(n))).toDF("n", "l")
     }
-    val result = starContraction(und, maxRounds)
     und.unpersist()
     result
+  }
+
+  /** The component-minimum label of every endpoint of `es`, by driver-side
+    * union-find with path compression. */
+  private[graft] def unionFind(es: Array[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) {
+        val nx = parent.getOrElse(c, c); parent(c) = r; c = nx
+      }
+      r
+    }
+    es.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      // union by min so the representative is the component minimum
+      if (ra != rb) {
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    es.iterator.flatMap(e => Iterator(e._1, e._2)).map(n => n -> find(n)).toMap
   }
 
   /** Exact triangle count by node-ordered wedge join (Suri & Vassilvitskii
@@ -106,31 +122,34 @@ object Graph {
     * textbook Pregel iteration expressed as DataFrame joins. Returns
     * (`n`, `d`) for every node within `maxDepth` hops (src included, d=0). */
   def bfs(edges: DataFrame, aCol: String, bCol: String, src: Long,
-      maxDepth: Int,
-      driverThreshold: Long = DriverGraphThreshold): DataFrame = {
+      maxDepth: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val und = edges.select(col(aCol).cast("long").as("u"),
-        col(bCol).cast("long").as("v"))
-      .union(edges.select(col(bCol).cast("long").as("u"),
-        col(aCol).cast("long").as("v")))
-      .distinct()
-      .localCheckpoint(true)
-    if (und.count() <= driverThreshold) {
-      val adj = und.as[(Long, Long)].collect().groupBy(_._1)
-        .map { case (u, vs) => u -> vs.map(_._2) }
-      val vis = scala.collection.mutable.LinkedHashMap(src -> 0)
-      var front = Seq(src)
-      var depth = 0
-      while (depth < maxDepth && front.nonEmpty) {
-        depth += 1
-        val nxt = front.flatMap(n => adj.getOrElse(n, Array.empty[Long]))
-          .distinct.filterNot(vis.contains)
-        nxt.foreach(n => vis(n) = depth)
-        front = nxt
-      }
-      return vis.toSeq.toDF("n", "d")
+    val und = undirected(edges, aCol, bCol).localCheckpoint(true)
+    DriverPath.rows(und.as[(Long, Long)]) match {
+      case None => bfsRounds(und, src, maxDepth)
+      case Some(es) =>
+        val adj = es.groupBy(_._1)
+          .map { case (u, vs) => u -> vs.map(_._2) }
+        val vis = scala.collection.mutable.LinkedHashMap(src -> 0)
+        var front = Seq(src)
+        var depth = 0
+        while (depth < maxDepth && front.nonEmpty) {
+          depth += 1
+          val nxt = front.flatMap(n => adj.getOrElse(n, Array.empty[Long]))
+            .distinct.filterNot(vis.contains)
+          nxt.foreach(n => vis(n) = depth)
+          front = nxt
+        }
+        vis.toSeq.toDF("n", "d")
     }
+  }
+
+  /** [[bfs]]'s distributed frontier rounds over [[undirected]] edges. */
+  private[graft] def bfsRounds(und: DataFrame, src: Long,
+      maxDepth: Int): DataFrame = {
+    val spark = und.sparkSession
+    import spark.implicits._
     var visited = Seq((src, 0)).toDF("n", "d").localCheckpoint(true)
     var frontier = visited.select(col("n"))
     var depth = 0
@@ -156,36 +175,42 @@ object Graph {
     * to every node it reaches, self included (d = 0). Returns
     * (`src`, `n`, `d`). The all-25-sources-at-once frontier iteration
     * q153 runs over the nation trade graph, lifted here so it gets the
-    * same size-based strategy switch as [[bfs]]: below `driverThreshold`
-    * edges the closure runs in one driver loop (zero per-round
-    * scheduling), above it the distributed frontier join/anti-join
-    * rounds run unchanged. Synchronous-update semantics are identical —
+    * same size-based strategy switch as [[bfs]]: below
+    * [[DriverPath.MaxEdges]] edges the closure runs in one driver loop
+    * (zero per-round scheduling), above it the distributed frontier
+    * join/anti-join rounds run. Synchronous-update semantics are identical —
     * a node's distance is the first round that reaches it. */
-  def multiSourceBfs(und: DataFrame,
-      driverThreshold: Long = DriverGraphThreshold): DataFrame = {
+  def multiSourceBfs(und: DataFrame): DataFrame = {
     val spark = und.sparkSession
     import spark.implicits._
     val e = und.select(col("u").cast("long").as("u"),
       col("v").cast("long").as("v")).localCheckpoint(true)
-    if (e.count() <= driverThreshold) {
-      val adj = e.as[(Long, Long)].collect().groupBy(_._1)
-        .map { case (u, vs) => u -> vs.map(_._2) }
-      val out = Seq.newBuilder[(Long, Long, Long)]
-      adj.keys.toSeq.sorted.foreach { src =>
-        val vis = scala.collection.mutable.LinkedHashMap(src -> 0L)
-        var front = Seq(src)
-        var depth = 0L
-        while (front.nonEmpty) {
-          depth += 1L
-          val nxt = front.flatMap(n => adj.getOrElse(n, Array.empty[Long]))
-            .distinct.filterNot(vis.contains)
-          nxt.foreach(n => vis(n) = depth)
-          front = nxt
+    DriverPath.rows(e.as[(Long, Long)]) match {
+      case None => multiSourceBfsRounds(e)
+      case Some(es) =>
+        val adj = es.groupBy(_._1)
+          .map { case (u, vs) => u -> vs.map(_._2) }
+        val out = Seq.newBuilder[(Long, Long, Long)]
+        adj.keys.toSeq.sorted.foreach { src =>
+          val vis = scala.collection.mutable.LinkedHashMap(src -> 0L)
+          var front = Seq(src)
+          var depth = 0L
+          while (front.nonEmpty) {
+            depth += 1L
+            val nxt = front.flatMap(n => adj.getOrElse(n, Array.empty[Long]))
+              .distinct.filterNot(vis.contains)
+            nxt.foreach(n => vis(n) = depth)
+            front = nxt
+          }
+          vis.foreach { case (n, d) => out += ((src, n, d)) }
         }
-        vis.foreach { case (n, d) => out += ((src, n, d)) }
-      }
-      return out.result().toDF("src", "n", "d")
+        out.result().toDF("src", "n", "d")
     }
+  }
+
+  /** [[multiSourceBfs]]'s distributed frontier rounds over long (`u`, `v`)
+    * edges. */
+  private[graft] def multiSourceBfsRounds(e: DataFrame): DataFrame = {
     var dist = e.select(col("u").as("src"), col("u").as("n")).distinct()
       .withColumn("d", lit(0L)).localCheckpoint(true)
     var frontier = dist
@@ -219,12 +244,7 @@ object Graph {
   def pageRank(edges: DataFrame, aCol: String, bCol: String,
       iters: Int = 3, damping: Double = 0.85): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val und = edges.select(col(aCol).cast("long").as("u"),
-        col(bCol).cast("long").as("v"))
-      .union(edges.select(col(bCol).cast("long").as("u"),
-        col(aCol).cast("long").as("v")))
-      .distinct()
-      .localCheckpoint(true)
+    val und = undirected(edges, aCol, bCol).localCheckpoint(true)
     val deg = und.groupBy(col("u")).agg(count(lit(1)).as("deg"))
       .localCheckpoint(true)
     val n = deg.count()
@@ -269,10 +289,7 @@ object Graph {
   def pageRankDirected(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3, damping: Double = 0.85): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val e = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .distinct()
-      .localCheckpoint(true)
+    val e = directed(edges, srcCol, dstCol).localCheckpoint(true)
     val nodes = e.select(col("u").as("node"))
       .union(e.select(col("v").as("node")))
       .distinct()
@@ -350,10 +367,11 @@ object Graph {
     * Checkpoint blocks are executor-local and not fault-tolerant; a
     * long-lived cluster deployment would checkpoint to reliable storage
     * instead (same code, `checkpoint(true)` + a checkpoint dir). */
-  private def starContraction(und: DataFrame, maxRounds: Int): DataFrame = {
-    var e = und.filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("u"),
-        least(col("a"), col("b")).as("v"))
+  private[graft] def starContraction(und: DataFrame,
+      maxRounds: Int): DataFrame = {
+    var e = und.filter(col("u") =!= col("v"))
+      .select(greatest(col("u"), col("v")).as("u"),
+        least(col("u"), col("v")).as("v"))
       .distinct().localCheckpoint(true)
     var round = 0
     var done = false
@@ -374,7 +392,7 @@ object Graph {
     }
     // at the fixpoint every edge is (member, componentMin); isolated or
     // root nodes label themselves
-    und.select(col("a").as("n")).distinct()
+    und.select(col("u").as("n")).distinct()
       .join(e.select(col("u").as("n"), col("v").as("l")), Seq("n"), "left")
       .select(col("n"), coalesce(col("l"), col("n")).as("l"))
       .localCheckpoint(true)
@@ -393,39 +411,40 @@ object Graph {
     *
     * Returns (node, hub, authority) for every node in `edges`. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 2,
-      driverThreshold: Long = DriverGraphThreshold): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .distinct()
-      .localCheckpoint(true)
+      iters: Int = 2): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val e = directed(edges, srcCol, dstCol).localCheckpoint(true)
+    DriverPath.rows(e.as[(Long, Long)]) match {
+      case None => hitsRounds(e, iters)
+      case Some(earr) =>
+        val ns = (earr.map(_._1) ++ earr.map(_._2)).distinct
+        var hm: Map[Long, Long] = ns.map(_ -> 1L).toMap
+        var am: Map[Long, Long] = Map.empty
+        for (_ <- 1 to iters) {
+          val a2 = scala.collection.mutable.Map[Long, Long]()
+          earr.foreach { case (u, v) =>
+            hm.get(u).foreach(hu => a2(v) = a2.getOrElse(v, 0L) + hu)
+          }
+          am = a2.toMap
+          val h2 = scala.collection.mutable.Map[Long, Long]()
+          earr.foreach { case (u, v) =>
+            am.get(v).foreach(av => h2(u) = h2.getOrElse(u, 0L) + av)
+          }
+          hm = h2.toMap
+        }
+        ns.toSeq
+          .map(n => (n, hm.getOrElse(n, 0L), am.getOrElse(n, 0L)))
+          .toDF("node", "hub", "authority")
+    }
+  }
+
+  /** [[hits]]'s distributed passes over [[directed]] edges. */
+  private[graft] def hitsRounds(e: DataFrame, iters: Int): DataFrame = {
     val nodes = e.select(col("u").as("n"))
       .union(e.select(col("v").as("n")))
       .distinct()
       .localCheckpoint(true)
-    if (e.count() <= driverThreshold) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val earr = e.as[(Long, Long)].collect()
-      val ns = (earr.map(_._1) ++ earr.map(_._2)).distinct
-      var hm: Map[Long, Long] = ns.map(_ -> 1L).toMap
-      var am: Map[Long, Long] = Map.empty
-      for (_ <- 1 to iters) {
-        val a2 = scala.collection.mutable.Map[Long, Long]()
-        earr.foreach { case (u, v) =>
-          hm.get(u).foreach(hu => a2(v) = a2.getOrElse(v, 0L) + hu)
-        }
-        am = a2.toMap
-        val h2 = scala.collection.mutable.Map[Long, Long]()
-        earr.foreach { case (u, v) =>
-          am.get(v).foreach(av => h2(u) = h2.getOrElse(u, 0L) + av)
-        }
-        hm = h2.toMap
-      }
-      return ns.toSeq
-        .map(n => (n, hm.getOrElse(n, 0L), am.getOrElse(n, 0L)))
-        .toDF("node", "hub", "authority")
-    }
     var h = nodes.select(col("n"), lit(1L).as("h"))
     var a = nodes.select(col("n"), lit(0L).as("a"))
     for (_ <- 1 to iters) {
@@ -457,54 +476,82 @@ object Graph {
     * longs); returns (node, dist) for nodes reachable from `source`.
     * Throws if the distances haven't stabilized after `maxIters` rounds
     * (negative-weight semantics are out of scope). */
-  def sssp(edges: DataFrame, source: Long, maxIters: Int = 50,
-      driverThreshold: Long = DriverGraphThreshold): DataFrame = {
+  def sssp(edges: DataFrame, source: Long, maxIters: Int = 50): DataFrame =
+    relax(edges, source, maxIters, ShortestPath)
+
+  /** How [[sssp]] and [[widestPath]] relax an edge: a node's value `v`
+    * extends along weight `w` to `step(v, w)` and replaces an old value
+    * when `better` (the same functions over columns for the distributed
+    * rounds, whose per-node aggregate is `pick`). */
+  private[graft] final case class Relax(name: String, out: String,
+      init: Long, step: (Long, Long) => Long, better: (Long, Long) => Boolean,
+      stepCol: (Column, Column) => Column, pick: Column => Column,
+      betterCol: (Column, Column) => Column)
+
+  private[graft] val ShortestPath = Relax("sssp", "dist", 0L, _ + _, _ < _,
+    _ + _, min(_), _ < _)
+  private[graft] val WidestPath = Relax("widestPath", "cap", Long.MaxValue,
+    math.min, _ > _, least(_, _), max(_), _ > _)
+
+  /** Synchronous relaxation from `source` to a fixpoint, on the driver
+    * below [[DriverPath.MaxEdges]] edges and in [[relaxRounds]] above.
+    * Returns (node, `r.out`); throws if `maxIters` rounds still improve. */
+  private def relax(edges: DataFrame, source: Long, maxIters: Int,
+      r: Relax): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
-      .localCheckpoint(true)
-    if (e.count() <= driverThreshold) {
-      val earr = e.as[(Long, Long, Long)].collect()
-      var dist = Map(source -> 0L)
-      var improved = 1L
-      var it = 0
-      while (improved > 0 && it < maxIters) {
-        val next = scala.collection.mutable.Map[Long, Long](dist.toSeq: _*)
-        earr.foreach { case (s0, d0, w) =>
-          dist.get(s0).foreach { ds =>
-            val nd = ds + w
-            if (next.get(d0).forall(nd < _)) next(d0) = nd
+    val e = weighted(edges).localCheckpoint(true)
+    DriverPath.rows(e.as[(Long, Long, Long)]) match {
+      case None => relaxRounds(e, source, maxIters, r)
+      case Some(earr) =>
+        var cur = Map(source -> r.init)
+        var improved = 1L
+        var it = 0
+        while (improved > 0 && it < maxIters) {
+          val next = scala.collection.mutable.Map[Long, Long](cur.toSeq: _*)
+          earr.foreach { case (s0, d0, w) =>
+            cur.get(s0).foreach { v =>
+              val nv = r.step(v, w)
+              if (next.get(d0).forall(r.better(nv, _))) next(d0) = nv
+            }
           }
+          improved = next.count { case (k, v) => cur.get(k).forall(r.better(v, _)) }
+          cur = next.toMap
+          it += 1
         }
-        improved = next.count { case (k, v) => dist.get(k).forall(v < _) }
-        dist = next.toMap
-        it += 1
-      }
-      if (improved > 0)
-        throw new IllegalStateException(
-          s"sssp: not stable after $maxIters rounds")
-      return dist.toSeq.toDF("node", "dist")
+        if (improved > 0)
+          throw new IllegalStateException(
+            s"${r.name}: not stable after $maxIters rounds")
+        cur.toSeq.toDF("node", r.out)
     }
-    var dist = Seq((source, 0L)).toDF("node", "dist").localCheckpoint(true)
+  }
+
+  /** [[relax]]'s distributed rounds over [[weighted]] edges. */
+  private[graft] def relaxRounds(e: DataFrame, source: Long, maxIters: Int,
+      r: Relax): DataFrame = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    var cur = Seq((source, r.init)).toDF("node", r.out).localCheckpoint(true)
     var improved = 1L
     var it = 0
     while (improved > 0 && it < maxIters) {
-      val relaxed = dist.join(e, dist("node") === e("src"))
-        .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-        .union(dist)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+      val relaxed = cur.join(e, cur("node") === e("src"))
+        .select(col("dst").as("node"), r.stepCol(col(r.out), col("w")).as(r.out))
+        .union(cur)
+        .groupBy(col("node")).agg(r.pick(col(r.out)).as(r.out))
         .localCheckpoint(false)
       improved = relaxed.as("n")
-        .join(dist.as("o"), col("n.node") === col("o.node"), "left")
-        .filter(col("o.node").isNull || col("n.dist") < col("o.dist"))
+        .join(cur.as("o"), col("n.node") === col("o.node"), "left")
+        .filter(col("o.node").isNull ||
+          r.betterCol(col(s"n.${r.out}"), col(s"o.${r.out}")))
         .count()
-      dist = relaxed
+      cur = relaxed
       it += 1
     }
     if (improved > 0)
-      throw new IllegalStateException(s"sssp: not stable after $maxIters rounds")
-    dist
+      throw new IllegalStateException(
+        s"${r.name}: not stable after $maxIters rounds")
+    cur
   }
 
   /** Personalized PageRank from a single seed (Page et al. '99 §6;
@@ -527,12 +574,7 @@ object Graph {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     val spark = edges.sparkSession
     import spark.implicits._
-    val und = edges.select(col(aCol).cast("long").as("u"),
-        col(bCol).cast("long").as("v"))
-      .union(edges.select(col(bCol).cast("long").as("u"),
-        col(aCol).cast("long").as("v")))
-      .distinct()
-      .localCheckpoint(true)
+    val und = undirected(edges, aCol, bCol).localCheckpoint(true)
     val deg = und.groupBy(col("u")).agg(count(lit(1)).as("deg"))
       .localCheckpoint(true)
     var ranks = Seq((seed, 1.0)).toDF("node", "r")
@@ -609,32 +651,32 @@ object Graph {
     * shape), `localCheckpoint`-flattened; the edge relation never
     * re-materializes. Returns (`n`, `layer`). */
   def onionLayers(edges: DataFrame, aCol: String, bCol: String,
-      k: Int, rounds: Int,
-      driverThreshold: Long = DriverGraphThreshold): DataFrame = {
-    val und = edges.select(col(aCol).cast("long").as("u"),
-        col(bCol).cast("long").as("v"))
-      .union(edges.select(col(bCol).cast("long").as("u"),
-        col(aCol).cast("long").as("v")))
-      .distinct()
-      .localCheckpoint(true)
-    if (und.count() <= driverThreshold) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val earr = und.as[(Long, Long)].collect()
-      var surv = earr.map(_._1).toSet
-      val out = scala.collection.mutable.ArrayBuffer[(Long, Int)]()
-      for (r <- 1 to rounds) {
-        val deg = scala.collection.mutable.Map[Long, Long]()
-        earr.foreach { case (u, v) =>
-          if (surv(u) && surv(v)) deg(u) = deg.getOrElse(u, 0L) + 1
+      k: Int, rounds: Int): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val und = undirected(edges, aCol, bCol).localCheckpoint(true)
+    DriverPath.rows(und.as[(Long, Long)]) match {
+      case None => onionRounds(und, k, rounds)
+      case Some(earr) =>
+        var surv = earr.map(_._1).toSet
+        val out = scala.collection.mutable.ArrayBuffer[(Long, Int)]()
+        for (r <- 1 to rounds) {
+          val deg = scala.collection.mutable.Map[Long, Long]()
+          earr.foreach { case (u, v) =>
+            if (surv(u) && surv(v)) deg(u) = deg.getOrElse(u, 0L) + 1
+          }
+          val next = deg.iterator.collect { case (n, d) if d >= k => n }.toSet
+          (surv -- next).foreach(n => out += (n -> r))
+          surv = next
         }
-        val next = deg.iterator.collect { case (n, d) if d >= k => n }.toSet
-        (surv -- next).foreach(n => out += (n -> r))
-        surv = next
-      }
-      surv.foreach(n => out += (n -> (rounds + 1)))
-      return out.toSeq.toDF("n", "layer")
+        surv.foreach(n => out += (n -> (rounds + 1)))
+        out.toSeq.toDF("n", "layer")
     }
+  }
+
+  /** [[onionLayers]]' distributed peels over [[undirected]] edges. */
+  private[graft] def onionRounds(und: DataFrame, k: Int,
+      rounds: Int): DataFrame = {
     var surv = und.select(col("u").as("n")).distinct().localCheckpoint(true)
     var layers = surv.select(col("n"), lit(0).as("layer")).limit(0)
     for (r <- 1 to rounds) {
@@ -670,39 +712,39 @@ object Graph {
     * keyed by node, so partitioning is stable across rounds at any scale.
     * Returns (`n`, `l`) after exactly `iters` rounds. */
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
-      iters: Int,
-      driverThreshold: Long = DriverGraphThreshold): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val und = edges.select(col(aCol).cast("long").as("u"),
-        col(bCol).cast("long").as("v"))
-      .union(edges.select(col(bCol).cast("long").as("u"),
-        col(aCol).cast("long").as("v")))
-      .distinct()
-      .localCheckpoint(true)
-    if (und.count() <= driverThreshold) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val earr = und.as[(Long, Long)].collect()
-      var lab = earr.iterator.map(_._1).toSeq.distinct
-        .map(n => n -> n).toMap
-      for (_ <- 1 to iters) {
-        val cnt = scala.collection.mutable.Map[(Long, Long), Long]()
-        earr.foreach { case (u, v) =>
-          val key = (u, lab(v))
-          cnt(key) = cnt.getOrElse(key, 0L) + 1
+      iters: Int): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val und = undirected(edges, aCol, bCol).localCheckpoint(true)
+    DriverPath.rows(und.as[(Long, Long)]) match {
+      case None => labelPropagationRounds(und, iters)
+      case Some(earr) =>
+        var lab = earr.iterator.map(_._1).toSeq.distinct
+          .map(n => n -> n).toMap
+        for (_ <- 1 to iters) {
+          val cnt = scala.collection.mutable.Map[(Long, Long), Long]()
+          earr.foreach { case (u, v) =>
+            val key = (u, lab(v))
+            cnt(key) = cnt.getOrElse(key, 0L) + 1
+          }
+          val best = scala.collection.mutable.Map[Long, (Long, Long)]()
+          cnt.foreach { case ((n, l), c) =>
+            // argmax count, ties to the smaller label — the window's
+            // orderBy(c desc, l) rank 1
+            val cur = best.get(n)
+            if (cur.forall { case (bc, bl) => c > bc || (c == bc && l < bl) })
+              best(n) = (c, l)
+          }
+          lab = best.iterator.map { case (n, (_, l)) => n -> l }.toMap
         }
-        val best = scala.collection.mutable.Map[Long, (Long, Long)]()
-        cnt.foreach { case ((n, l), c) =>
-          // argmax count, ties to the smaller label — the window's
-          // orderBy(c desc, l) rank 1
-          val cur = best.get(n)
-          if (cur.forall { case (bc, bl) => c > bc || (c == bc && l < bl) })
-            best(n) = (c, l)
-        }
-        lab = best.iterator.map { case (n, (_, l)) => n -> l }.toMap
-      }
-      return lab.toSeq.toDF("n", "l")
+        lab.toSeq.toDF("n", "l")
     }
+  }
+
+  /** [[labelPropagation]]'s distributed rounds over [[undirected]] edges. */
+  private[graft] def labelPropagationRounds(und: DataFrame,
+      iters: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     var lab = und.select(col("u").as("n")).distinct()
       .select(col("n"), col("n").as("l"))
       .localCheckpoint(true)
@@ -729,55 +771,6 @@ object Graph {
     * reports the `Long.MaxValue` sentinel (no incoming constraint) —
     * callers usually exclude it. Returns (node, cap). */
   def widestPath(edges: DataFrame, source: Long,
-      maxIters: Int = 50,
-      driverThreshold: Long = DriverGraphThreshold): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
-      .localCheckpoint(true)
-    if (e.count() <= driverThreshold) {
-      val earr = e.as[(Long, Long, Long)].collect()
-      var cap = Map(source -> Long.MaxValue)
-      var improved = 1L
-      var it = 0
-      while (improved > 0 && it < maxIters) {
-        val next = scala.collection.mutable.Map[Long, Long](cap.toSeq: _*)
-        earr.foreach { case (s0, d0, w) =>
-          cap.get(s0).foreach { cs =>
-            val nc = math.min(cs, w)
-            if (next.get(d0).forall(nc > _)) next(d0) = nc
-          }
-        }
-        improved = next.count { case (k, v) => cap.get(k).forall(v > _) }
-        cap = next.toMap
-        it += 1
-      }
-      if (improved > 0)
-        throw new IllegalStateException(
-          s"widestPath: not stable after $maxIters rounds")
-      return cap.toSeq.toDF("node", "cap")
-    }
-    var cap = Seq((source, Long.MaxValue)).toDF("node", "cap")
-      .localCheckpoint(true)
-    var improved = 1L
-    var it = 0
-    while (improved > 0 && it < maxIters) {
-      val relaxed = cap.join(e, cap("node") === e("src"))
-        .select(col("dst").as("node"), least(col("cap"), col("w")).as("cap"))
-        .union(cap)
-        .groupBy(col("node")).agg(max(col("cap")).as("cap"))
-        .localCheckpoint(false)
-      improved = relaxed.as("n")
-        .join(cap.as("o"), col("n.node") === col("o.node"), "left")
-        .filter(col("o.node").isNull || col("n.cap") > col("o.cap"))
-        .count()
-      cap = relaxed
-      it += 1
-    }
-    if (improved > 0)
-      throw new IllegalStateException(
-        s"widestPath: not stable after $maxIters rounds")
-    cap
-  }
+      maxIters: Int = 50): DataFrame =
+    relax(edges, source, maxIters, WidestPath)
 }

@@ -71,29 +71,33 @@ object Ivf {
     else (proj0, n)
   }
 
-  /** Below this corpus size, Lloyd training runs in one driver loop over
-    * the collected (id, vec) rows (round 15) — the same size-based strategy
-    * switch as [[Graph.connectedComponents]]' union-find and a broadcast
-    * join: 64k vectors × 64 dims × 8 B ≈ 33 MB of driver memory, versus
-    * ~13 driver-scheduled jobs (init sort/sample/take + 2 AQE stages per
-    * iteration) whose per-job planning gaps dominated s3's bench time
-    * (profiled: 3.0 s of 5.4 s warm was inter-job gap). Above the
-    * threshold the distributed aggregate rounds run unchanged. */
-  private val DriverTrainThreshold = 1L << 16
-
   /** Training core over an already-materialized (id, vec) projection —
     * lets [[topK]] share one checkpoint between training and the final
     * cell assignment instead of scanning the source twice (and lets
-    * [[IvfIndex.build]] reuse the exact same deterministic training). */
+    * [[IvfIndex.build]] reuse the exact same deterministic training).
+    *
+    * Up to [[DriverPath.MaxVectors]] rows, Lloyd training runs in one
+    * driver loop over the collected rows ([[driverTrain]]) — the same
+    * size-based strategy switch as the Graph operators' driver loops and
+    * a broadcast join — instead of ~13 driver-scheduled jobs (init
+    * sort/sample/take + 2 AQE stages per iteration) whose per-job
+    * planning gaps dominated s3's bench time (profiled: 3.0 s of 5.4 s
+    * warm was inter-job gap). `n` is already counted, so the switch
+    * compares it with the cap instead of calling [[DriverPath.rows]].
+    * Above the cap, or for an id type the driver loop cannot order,
+    * [[lloydRounds]] runs. */
   private[operators] def trainOnProjection(proj: DataFrame, n: Long,
-      idCol: String, vecCol: String, k: Int, iters: Int,
-      driverThreshold: Long = DriverTrainThreshold): Array[Array[Double]] = {
-    if (n <= driverThreshold) {
-      driverTrain(proj, idCol, vecCol, k, iters) match {
-        case Some(c) => return c
-        case None    => () // unsupported id type: distributed path below
-      }
-    }
+      idCol: String, vecCol: String, k: Int,
+      iters: Int): Array[Array[Double]] = {
+    val small = n <= DriverPath.MaxVectors
+    (if (small) driverTrain(proj, idCol, vecCol, k, iters) else None)
+      .getOrElse(lloydRounds(proj, n, idCol, vecCol, k, iters))
+  }
+
+  /** The distributed Lloyd rounds: one aggregate job per iteration. */
+  private[operators] def lloydRounds(proj: DataFrame, n: Long,
+      idCol: String, vecCol: String, k: Int,
+      iters: Int): Array[Array[Double]] = {
     val toDouble = (r: org.apache.spark.sql.Row) =>
       r.getSeq[Any](0).map {
         case f: Float => f.toDouble
@@ -146,8 +150,8 @@ object Ivf {
     *    `Decimal(double)` + `changePrecision(28,12)` is the Cast, exact
     *    BigDecimal addition is the Sum (order-independent), `Decimal./`
     *    + `toPrecision(38,12)` is the Divide + CheckOverflow.
-    * IvfDriverParitySpec pins the equality against the forced-distributed
-    * branch. Returns None for non-numeric id types (falls back). */
+    * IvfDriverParitySpec pins the equality against [[lloydRounds]].
+    * Returns None for non-numeric id types (falls back). */
   private def driverTrain(proj: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int): Option[Array[Array[Double]]] = {
     val raw = proj.select(col(idCol), col(vecCol)).collect()

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 import graft.Tables
+import graft.operators.DriverPath
 
 /** Hundred-sixth batch — physical-design advisors and schema/graph
   * profiling:
@@ -87,51 +88,47 @@ object Round106Queries {
   }
 
   /** Three WL refinement rounds over weight-binned directed edges
-    * (a, b, wbin) → (nk, color1, color2, color3). Size-switched on
-    * `driverThreshold`; parameterized (round 15) solely so
-    * D35Q148ParitySpec can force the distributed branch and pin
-    * driver == distributed row-for-row — q148 always calls it with the
-    * default (the Graph-operator threshold). */
-  private[queries] def wlColors(s: SparkSession, e: DataFrame,
-      driverThreshold: Long = 1L << 20): DataFrame = {
+    * (a, b, wbin) → (nk, color1, color2, color3), size-switched on
+    * [[DriverPath]]. The nation graph has ≤625 edges, so the refinement
+    * runs in one driver loop (one collect of the weight-binned edges;
+    * identical string signatures, ASCII-only so JVM and UTF8 binary
+    * orders agree), collapsing 3 × (2 joins + 2 aggs + window +
+    * checkpoint) of scheduling into zero jobs. Above the cap
+    * [[wlRounds]] runs. */
+  private[queries] def wlColors(s: SparkSession, e: DataFrame): DataFrame = {
+    import s.implicits._
+    DriverPath.rows(e.select(col("a").cast("long"), col("b").cast("long"),
+        col("wbin").cast("long")).as[(Long, Long, Long)]) match {
+      case None => wlRounds(e)
+      case Some(es) =>
+        val ns = (es.map(_._1) ++ es.map(_._2)).distinct
+        def refineD(colors: Map[Long, Long]): Map[Long, Long] = {
+          val osig = es.groupBy(_._1).map { case (a, rows) =>
+            a -> rows.map(r => s"${r._3}:${colors(r._2)}").sorted
+              .mkString(",")
+          }
+          val isig = es.groupBy(_._2).map { case (b, rows) =>
+            b -> rows.map(r => s"${r._3}:${colors(r._1)}").sorted
+              .mkString(",")
+          }
+          val sig = ns.map(n => n -> (colors(n).toString + "|o" +
+            osig.getOrElse(n, "") + "|i" + isig.getOrElse(n, ""))).toMap
+          val rank = sig.values.toSeq.distinct.sorted.zipWithIndex
+            .map { case (v, i) => v -> (i + 1).toLong }.toMap
+          ns.map(n => n -> rank(sig(n))).toMap
+        }
+        val d1 = refineD(ns.map(_ -> 1L).toMap)
+        val d2 = refineD(d1)
+        val d3 = refineD(d2)
+        ns.toSeq.map(n => (n, d1(n), d2(n), d3(n)))
+          .toDF("nk", "color1", "color2", "color3")
+    }
+  }
+
+  /** [[wlColors]]' distributed refinement rounds. */
+  private[queries] def wlRounds(e: DataFrame): DataFrame = {
     val nodes = e.select(col("a").as("nk"))
       .unionByName(e.select(col("b").as("nk"))).distinct()
-
-    // Round 14: the three WL rounds run over a ≤625-edge nation graph —
-    // below the Graph-operator driver threshold the refinement runs in
-    // one driver loop (one collect of the weight-binned edges; identical
-    // string signatures, ASCII-only so JVM and UTF8 binary orders agree),
-    // collapsing 3 × (2 joins + 2 aggs + window + checkpoint) of
-    // scheduling into zero jobs. Above it the distributed rounds below
-    // run unchanged.
-    if (e.count() <= driverThreshold) {
-      val spark = s
-      import spark.implicits._
-      val es = e.select(col("a").cast("long"), col("b").cast("long"),
-        col("wbin").cast("long")).as[(Long, Long, Long)].collect()
-      val ns = (es.map(_._1) ++ es.map(_._2)).distinct
-      def refineD(colors: Map[Long, Long]): Map[Long, Long] = {
-        val osig = es.groupBy(_._1).map { case (a, rows) =>
-          a -> rows.map(r => s"${r._3}:${colors(r._2)}").sorted
-            .mkString(",")
-        }
-        val isig = es.groupBy(_._2).map { case (b, rows) =>
-          b -> rows.map(r => s"${r._3}:${colors(r._1)}").sorted
-            .mkString(",")
-        }
-        val sig = ns.map(n => n -> (colors(n).toString + "|o" +
-          osig.getOrElse(n, "") + "|i" + isig.getOrElse(n, ""))).toMap
-        val rank = sig.values.toSeq.distinct.sorted.zipWithIndex
-          .map { case (v, i) => v -> (i + 1).toLong }.toMap
-        ns.map(n => n -> rank(sig(n))).toMap
-      }
-      val d1 = refineD(ns.map(_ -> 1L).toMap)
-      val d2 = refineD(d1)
-      val d3 = refineD(d2)
-      return ns.toSeq.map(n => (n, d1(n), d2(n), d3(n)))
-        .toDF("nk", "color1", "color2", "color3")
-    }
-
     def refine(colors: DataFrame): DataFrame = {
       val osig = e.join(colors.select(col("nk").as("bn"), col("c").as("cb")),
           col("b") === col("bn"))

@@ -59,11 +59,10 @@ object Round109Queries {
       .select(col("u"), col("v"))
     val und = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
       .distinct().localCheckpoint(true)
-    // multi-source BFS closure: all sources advance one hop per round —
-    // round 14: lifted to Graph.multiSourceBfs so the ≤25-node nation
-    // graph resolves in one driver loop (same size-based strategy switch
-    // as Graph.bfs); the distributed frontier rounds run unchanged above
-    // the threshold
+    // multi-source BFS closure: all sources advance one hop per round
+    // (Graph.multiSourceBfs; the ≤25-node nation graph takes its
+    // DriverPath driver loop, the distributed frontier rounds run above
+    // the edge cap)
     val dist = graft.operators.Graph.multiSourceBfs(und)
     val ecc = dist.groupBy(col("src"))
       .agg(max(col("d")).as("ecc"), count(lit(1)).as("n_reachable"))

@@ -55,9 +55,9 @@ object Round115Queries {
     // The only corpus-scale pass is the edge aggregation above. The
     // thresholded graph is nation×nation — ≤25 nodes / ≤600 directed
     // edges by construction — so the 30 deflated power iterations run in
-    // driver arrays (the same size-based strategy switch as
-    // Graph.connectedComponents's driverThreshold path at
-    // operators/Graph.scala:36). The previous all-DataFrame formulation
+    // driver arrays (the driver-loop strategy of graft.operators.DriverPath,
+    // with no distributed branch: the graph is nation-sized at any
+    // scale). The previous all-DataFrame formulation
     // priced each iteration at ~6 Spark jobs of scale-independent
     // scheduling overhead (>12 min at sf0.01) — distributed machinery for
     // driver-sized math. Every float step mirrors the engine semantics

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.{DriverPath, Graph}
 
 /** Sixty-seventh batch — the dedup aggressiveness knob and skew audit:
   *
@@ -40,62 +41,48 @@ object Round67Queries {
         expr("cast(round(jaccard * 100) as bigint)").as("j_pct"))
       .localCheckpoint(true))
 
-  /** The sweep core, size-switched on `driverThreshold` — parameterized
-    * (round 15) solely so D35Q148ParitySpec can force the distributed
-    * branch and pin driver == distributed row-for-row; d35 always calls
-    * it with the default (the Graph-operator threshold). */
-  private[queries] def sweepFromPairs(s: SparkSession, pairs: DataFrame,
-      driverThreshold: Long = 1L << 20): DataFrame = {
-    import graft.operators.Graph
-    val spark = s
-    import spark.implicits._
-    // Size-switched like Graph.connectedComponents (round 14): below the
-    // same 2²⁰-edge threshold the WHOLE sweep runs on the driver — one
-    // collect, then per threshold a union-find over the filtered array.
-    // The old shape paid 3 × (CC collect + checkpoint + three count
-    // actions) of per-action scheduling on tiny edge sets; these pairs
-    // would hit CC's driver fast-path anyway, so this collapses ~15
-    // driver actions into one with identical values. Above the threshold
-    // the distributed per-threshold path runs unchanged.
-    val perT: Seq[(Long, Long, Long, Long, Long)] =
-      if (pairs.count() <= driverThreshold) {
-        val es = pairs.select(col("id_a").cast("long"),
-            col("id_b").cast("long"), col("j_pct"))
-          .as[(Long, Long, Long)].collect()
+  /** The sweep core, size-switched on [[DriverPath]] like
+    * Graph.connectedComponents: below its edge cap the WHOLE sweep runs
+    * on the driver — one collect, then per threshold a union-find over
+    * the filtered array. The old shape paid 3 × (CC collect + checkpoint
+    * + three count actions) of per-action scheduling on tiny edge sets;
+    * these pairs would hit CC's driver fast-path anyway, so this
+    * collapses ~15 driver actions into one with identical values. Above
+    * the cap [[sweepRounds]] runs. */
+  private[queries] def sweepFromPairs(s: SparkSession,
+      pairs: DataFrame): DataFrame = {
+    import s.implicits._
+    val perT = DriverPath.rows(pairs.select(col("id_a").cast("long"),
+        col("id_b").cast("long"), col("j_pct")).as[(Long, Long, Long)]) match {
+      case None => sweepRounds(pairs)
+      case Some(es) =>
         Thresholds.map { th =>
-          val fe = es.filter(_._3 >= th)
-          val parent = scala.collection.mutable.Map[Long, Long]()
-          def find(x: Long): Long = {
-            var r = x
-            while (parent(r) != r) r = parent(r)
-            var c = x
-            while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
-            r
-          }
-          fe.foreach { case (a, b, _) =>
-            parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-            val ra = find(a); val rb = find(b)
-            if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-          }
-          val nDocs = parent.size.toLong
-          val nClusters = parent.keysIterator.map(find).toSet.size.toLong
+          val fe = es.collect { case (a, b, j) if j >= th => (a, b) }
+          val lab = Graph.unionFind(fe)
+          val nDocs = lab.size.toLong
+          val nClusters = lab.values.toSet.size.toLong
           (th.toLong, fe.length.toLong, nDocs, nClusters, nDocs - nClusters)
         }
-      } else Thresholds.map { th =>
-        val e = pairs.filter(col("j_pct") >= th)
-          .select(col("id_a"), col("id_b"))
-        val labels = Graph.connectedComponents(e, "id_a", "id_b",
-            driverThreshold = driverThreshold)
-          .localCheckpoint(true)
-        val nPairs = e.count()
-        val nDocs = labels.count()
-        val nClusters = labels.select(col("l")).distinct().count()
-        (th.toLong, nPairs, nDocs, nClusters, nDocs - nClusters)
-      }
+    }
     perT.toDF("threshold_pct", "n_pairs", "n_docs_implicated",
         "n_clusters", "n_docs_dropped")
       .orderBy(col("threshold_pct"))
   }
+
+  /** The distributed sweep: per threshold, components over the filtered
+    * pairs and three count actions. One census row per threshold. */
+  private[queries] def sweepRounds(
+      pairs: DataFrame): Seq[(Long, Long, Long, Long, Long)] =
+    Thresholds.map { th =>
+      val e = pairs.filter(col("j_pct") >= th)
+        .select(col("id_a"), col("id_b"))
+      val labels = Graph.connectedComponents(e, "id_a", "id_b")
+        .localCheckpoint(true)
+      val nPairs = e.count()
+      val nDocs = labels.count()
+      val nClusters = labels.select(col("l")).distinct().count()
+      (th.toLong, nPairs, nDocs, nClusters, nDocs - nClusters)
+    }
 
   private val NParts = 32
 

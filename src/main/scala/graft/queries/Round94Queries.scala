@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.DriverPath
 import graft.functions.NativeExprs
 
 /** Ninety-fourth batch — privacy engineering, corpus keyness, and dense
@@ -97,24 +98,21 @@ object Round94Queries {
 
   // ── q136: k-truss (k = 4) peeling census ──────────────────────────────
 
-  /** Edge-count ceiling for the driver-side peeling path: 2 M edges ≈
-    * 32 MB of longs — comfortably driver-sized, and far above the
-    * co-purchase graph at any test SF (~12 k at sf0.1, linear growth).
-    * Above it the distributed wedge-join loop runs instead (the shape a
-    * 100 TB corpus needs); below it the 5 peeling rounds are pure array
-    * work instead of ~30 Spark jobs of scale-independent scheduling
-    * (the r11 verdict's What's-wrong #2 — q163's strategy switch). */
-  private val DriverEdgeCap = 2000000L
-
+  /** Driver-side peeling below [[DriverPath.MaxEdges]] — far above the
+    * co-purchase graph at any test SF (~12 k edges at sf0.1, linear
+    * growth). Above it [[ktrussRounds]] runs the distributed wedge-join
+    * loop (the shape a 100 TB corpus needs); below it the 5 peeling
+    * rounds are pure array work instead of ~30 Spark jobs of
+    * scale-independent scheduling. */
   def q136_ktruss(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e0 = Round6Queries.copurchaseEdges(s, dir).localCheckpoint(true)
-    val counts =
-      if (e0.count() <= DriverEdgeCap) {
-        // driver path: the one corpus-scale pass already happened inside
+    val counts = DriverPath.rows(e0.as[(Long, Long)]) match {
+      case None => ktrussRounds(e0)
+      case Some(e1) =>
+        // the one corpus-scale pass already happened inside
         // copurchaseEdges; peel support<2 edges over adjacency sets
-        var edges: Array[(Long, Long)] =
-          e0.collect().map(r => (r.getLong(0), r.getLong(1)))
+        var edges = e1
         def census(r: Long): (Long, Long, Long) =
           (r, edges.length.toLong,
             edges.iterator.flatMap(p => Iterator(p._1, p._2)).toSet.size.toLong)
@@ -133,29 +131,33 @@ object Round94Queries {
           acc += census(round.toLong)
         }
         acc.toSeq
-      } else {
-        // distributed path: support via the wedge equi-join, per round
-        var e = e0
-        val acc = scala.collection.mutable.ArrayBuffer(
-          (0L, e.count(), e.select(col("u").as("n"))
-            .union(e.select(col("v"))).distinct().count()))
-        for (round <- 1 to 5) {
-          val und = e.select(col("u").as("n"), col("v").as("w"))
-            .union(e.select(col("v").as("n"), col("u").as("w")))
-          val support = e
-            .join(und.as("n1"), col("n1.n") === col("u"))
-            .join(und.as("n2"),
-              col("n2.n") === col("v") && col("n2.w") === col("n1.w"))
-            .groupBy(col("u"), col("v")).agg(count(lit(1)).as("sup"))
-            .filter(col("sup") >= 2)
-            .select(col("u"), col("v"))
-          e = support.localCheckpoint(true)
-          acc += ((round.toLong, e.count(), e.select(col("u").as("n"))
-            .union(e.select(col("v"))).distinct().count()))
-        }
-        acc.toSeq
-      }
+    }
     counts.toDF("round", "n_edges", "n_nodes").orderBy(col("round"))
+  }
+
+  /** q136's distributed peel: support via the wedge equi-join, per round,
+    * over (`u`, `v`) edges. One (round, n_edges, n_nodes) census row per
+    * round, round 0 first. */
+  private[queries] def ktrussRounds(e0: DataFrame): Seq[(Long, Long, Long)] = {
+    var e = e0
+    val acc = scala.collection.mutable.ArrayBuffer(
+      (0L, e.count(), e.select(col("u").as("n"))
+        .union(e.select(col("v"))).distinct().count()))
+    for (round <- 1 to 5) {
+      val und = e.select(col("u").as("n"), col("v").as("w"))
+        .union(e.select(col("v").as("n"), col("u").as("w")))
+      val support = e
+        .join(und.as("n1"), col("n1.n") === col("u"))
+        .join(und.as("n2"),
+          col("n2.n") === col("v") && col("n2.w") === col("n1.w"))
+        .groupBy(col("u"), col("v")).agg(count(lit(1)).as("sup"))
+        .filter(col("sup") >= 2)
+        .select(col("u"), col("v"))
+      e = support.localCheckpoint(true)
+      acc += ((round.toLong, e.count(), e.select(col("u").as("n"))
+        .union(e.select(col("v"))).distinct().count()))
+    }
+    acc.toSeq
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -80,4 +80,37 @@ class BenchSpec extends AnyFunSuite {
     Files.delete(f)
     assert(Bench.timingsAt(f, "/data/sf0.1").isEmpty)
   }
+
+  test("lines print as UTF-8 whatever the default charset") {
+    val line = Bench.headlineLine("m", results, "/x/d.json", "/data/é/sf0.1")
+    val buf = new java.io.ByteArrayOutputStream
+    Bench.utf8Printer(buf).println(line)
+    // a strict decoder: malformed input throws instead of turning into U+FFFD
+    val text = java.nio.charset.StandardCharsets.UTF_8.newDecoder()
+      .decode(java.nio.ByteBuffer.wrap(buf.toByteArray)).toString
+    assert(text == line + System.lineSeparator())
+    assert(text.contains("/data/é/sf0.1"))
+  }
+
+  private val suite = Set("q1_agg", "q5_window", "t4_token_count")
+
+  test("SPARK_GRAFT_BENCH_ONLY: a file that is not a detail record fails") {
+    val f = Files.createTempFile("BENCH_r99", ".json")
+    f.toFile.deleteOnExit()
+    // a harness record: the headline is nested in a string, not a
+    // top-level queries object
+    Files.writeString(f, """{"n": 14, "rc": 0, "sf": 0.1, "tail": "{}"}""")
+    val e = intercept[IllegalArgumentException](Bench.benchOnly(f.toString, suite))
+    assert(e.getMessage.contains(f.toString))
+    assert(Bench.benchOnly(detailFile("/data/sf0.1").toString, suite) ==
+      results.map(_._1).toSet)
+  }
+
+  test("SPARK_GRAFT_BENCH_ONLY: unknown names are kept, an empty pick fails") {
+    assert(Bench.benchOnly("q1_agg, gone_query", suite) ==
+      Set("q1_agg", "gone_query"))
+    val e = intercept[IllegalArgumentException](
+      Bench.benchOnly("gone_query,also_gone", suite))
+    assert(e.getMessage.contains("gone_query,also_gone"))
+  }
 }

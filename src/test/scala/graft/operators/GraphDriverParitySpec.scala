@@ -7,8 +7,9 @@ import org.apache.spark.sql.DataFrame
   * size-switched driver fast-path (the connectedComponents precedent).
   * Both executions must agree row-for-row on a random graph — including
   * all tie-breaks (LPA's mode-with-min, HITS' absent-row-means-zero,
-  * onion's exactly-`rounds` peels) — with `driverThreshold` forced to 0
-  * (distributed) vs its default (driver) on the same input. */
+  * onion's exactly-`rounds` peels) — between the public operator (the
+  * driver loop, below DriverPath's edge cap) and its distributed rounds
+  * called directly on the same prepared input. */
 class GraphDriverParitySpec extends SparkSpec {
 
   private lazy val edges: DataFrame = {
@@ -35,36 +36,36 @@ class GraphDriverParitySpec extends SparkSpec {
 
   test("bfs: driver path == distributed path") {
     val a = Graph.bfs(edges, "u", "v", src = 1L, maxDepth = 4)
-    val b = Graph.bfs(edges, "u", "v", src = 1L, maxDepth = 4,
-      driverThreshold = 0L)
+    val b = Graph.bfsRounds(Graph.undirected(edges, "u", "v"), src = 1L,
+      maxDepth = 4)
     assert(rows(a, "n") == rows(b, "n"))
   }
 
   test("sssp: driver path == distributed path") {
     val a = Graph.sssp(wedges, source = 1L, maxIters = 50)
-    val b = Graph.sssp(wedges, source = 1L, maxIters = 50,
-      driverThreshold = 0L)
+    val b = Graph.relaxRounds(Graph.weighted(wedges), source = 1L,
+      maxIters = 50, Graph.ShortestPath)
     assert(rows(a, "node") == rows(b, "node"))
   }
 
   test("widestPath: driver path == distributed path") {
     val a = Graph.widestPath(wedges, source = 1L, maxIters = 50)
-    val b = Graph.widestPath(wedges, source = 1L, maxIters = 50,
-      driverThreshold = 0L)
+    val b = Graph.relaxRounds(Graph.weighted(wedges), source = 1L,
+      maxIters = 50, Graph.WidestPath)
     assert(rows(a, "node") == rows(b, "node"))
   }
 
   test("onionLayers: driver path == distributed path") {
     val a = Graph.onionLayers(edges, "u", "v", k = 3, rounds = 5)
-    val b = Graph.onionLayers(edges, "u", "v", k = 3, rounds = 5,
-      driverThreshold = 0L)
+    val b = Graph.onionRounds(Graph.undirected(edges, "u", "v"), k = 3,
+      rounds = 5)
     assert(rows(a, "n") == rows(b, "n"))
   }
 
   test("labelPropagation: driver path == distributed path") {
     val a = Graph.labelPropagation(edges, "u", "v", iters = 3)
-    val b = Graph.labelPropagation(edges, "u", "v", iters = 3,
-      driverThreshold = 0L)
+    val b = Graph.labelPropagationRounds(Graph.undirected(edges, "u", "v"),
+      iters = 3)
     assert(rows(a, "n") == rows(b, "n"))
   }
 
@@ -75,14 +76,13 @@ class GraphDriverParitySpec extends SparkSpec {
       .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
       .distinct()
     val a = Graph.multiSourceBfs(und)
-    val b = Graph.multiSourceBfs(und, driverThreshold = 0L)
+    val b = Graph.multiSourceBfsRounds(und)
     assert(rows(a, "src", "n") == rows(b, "src", "n"))
   }
 
   test("hits: driver path == distributed path") {
     val a = Graph.hits(wedges.select("src", "dst"), "src", "dst", iters = 2)
-    val b = Graph.hits(wedges.select("src", "dst"), "src", "dst", iters = 2,
-      driverThreshold = 0L)
+    val b = Graph.hitsRounds(Graph.directed(wedges, "src", "dst"), iters = 2)
     assert(rows(a, "node") == rows(b, "node"))
   }
 }

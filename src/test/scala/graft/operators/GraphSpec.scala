@@ -36,8 +36,8 @@ class GraphSpec extends SparkSpec {
 
   test("distributed star contraction agrees with the driver path") {
     val es = Seq((1L, 2L), (2L, 3L), (5L, 6L), (8L, 9L), (9L, 1L))
-    val dist = Graph.connectedComponents(es.toDF("a", "b"), "a", "b",
-        driverThreshold = 0L)
+    val dist = Graph.starContraction(
+        Graph.undirected(es.toDF("a", "b"), "a", "b"), maxRounds = 50)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist == bfsComponents(es))
     assert(dist == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 8L -> 1L, 9L -> 1L,
@@ -49,8 +49,8 @@ class GraphSpec extends SparkSpec {
     (1 to 5).foreach { _ =>
       val es = Seq.fill(40)((rnd.nextLong(25), rnd.nextLong(25)))
         .filter { case (a, b) => a != b }
-      val dist = Graph.connectedComponents(es.toDF("a", "b"), "a", "b",
-          driverThreshold = 0L)
+      val dist = Graph.starContraction(
+          Graph.undirected(es.toDF("a", "b"), "a", "b"), maxRounds = 50)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(dist == bfsComponents(es))
     }
@@ -60,8 +60,8 @@ class GraphSpec extends SparkSpec {
     // one-hop min-label propagation would need ~300 rounds here; the
     // contraction's O(log² n) bound finishes far inside the default budget
     val es = (1L to 300L).sliding(2).map(s => (s.head, s.last)).toSeq
-    val dist = Graph.connectedComponents(es.toDF("a", "b"), "a", "b",
-        driverThreshold = 0L)
+    val dist = Graph.starContraction(
+        Graph.undirected(es.toDF("a", "b"), "a", "b"), maxRounds = 50)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist.size == 300 && dist.values.forall(_ == 1L))
   }
@@ -71,8 +71,8 @@ class GraphSpec extends SparkSpec {
     // throw, not return silently-truncated labels
     val es = (1L to 200L).sliding(2).map(s => (s.head, s.last)).toSeq
     assertThrows[IllegalStateException] {
-      Graph.connectedComponents(es.toDF("a", "b"), "a", "b",
-        maxRounds = 1, driverThreshold = 0L).collect()
+      Graph.starContraction(Graph.undirected(es.toDF("a", "b"), "a", "b"),
+        maxRounds = 1).collect()
     }
   }
 

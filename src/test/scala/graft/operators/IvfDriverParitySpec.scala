@@ -23,10 +23,8 @@ class IvfDriverParitySpec extends SparkSpec {
       k: Int, iters: Int): (Array[Array[Double]], Array[Array[Double]]) = {
     val proj = df.select(col(idCol), col(vecCol)).localCheckpoint()
     val n = proj.count()
-    val driver = Ivf.trainOnProjection(proj, n, idCol, vecCol, k, iters,
-      driverThreshold = Long.MaxValue)
-    val dist = Ivf.trainOnProjection(proj, n, idCol, vecCol, k, iters,
-      driverThreshold = 0L)
+    val driver = Ivf.trainOnProjection(proj, n, idCol, vecCol, k, iters)
+    val dist = Ivf.lloydRounds(proj, n, idCol, vecCol, k, iters)
     (driver, dist)
   }
 

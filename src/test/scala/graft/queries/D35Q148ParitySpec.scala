@@ -7,10 +7,10 @@ import org.apache.spark.sql.DataFrame
   * WL driver loop replicate non-trivial semantics (min-label CC; ASCII
   * signature sort = UTF8 binary sort; dense-rank = sorted-distinct
   * index) whose distributed twins never execute at any oracle'd scale.
-  * Same discipline as GraphDriverParitySpec: run each core with the
-  * default threshold (driver path) and with `driverThreshold = 0`
-  * (distributed path) on the same input and assert row-for-row
-  * equality — including tie-breaks and nodes with no out- or in-edges. */
+  * Same discipline as GraphDriverParitySpec: run each core (the driver
+  * path, below DriverPath's edge cap) and its distributed function on
+  * the same input and assert row-for-row equality — including
+  * tie-breaks and nodes with no out- or in-edges. */
 class D35Q148ParitySpec extends SparkSpec {
 
   private def rows(df: DataFrame, sortCols: String*): Seq[String] =
@@ -21,8 +21,10 @@ class D35Q148ParitySpec extends SparkSpec {
     import spark.implicits._
     val rnd = new scala.util.Random(13)
     // clustered pairs whose j_pct straddles every sweep threshold, plus
-    // chains (driver union-by-min vs star-contraction must agree on the
-    // min label through multi-hop merges) and isolated high-j pairs
+    // chains (multi-hop merges) and isolated high-j pairs. The
+    // distributed sweep's per-threshold components take
+    // Graph.connectedComponents' own switch; GraphSpec checks both of
+    // its branches against BFS truth.
     val ps = (1 to 150).map { i =>
       val a = rnd.nextInt(40).toLong + 1
       val b = a + rnd.nextInt(20).toLong + 1
@@ -31,9 +33,8 @@ class D35Q148ParitySpec extends SparkSpec {
       Seq((500L, 501L, 50L), (600L, 601L, 69L), (700L, 701L, 70L))
     val pairs = ps.toDF("id_a", "id_b", "j_pct")
     val driver = Round67Queries.sweepFromPairs(spark, pairs)
-    val dist = Round67Queries.sweepFromPairs(spark, pairs,
-      driverThreshold = 0L)
-    assert(rows(driver, "threshold_pct") == rows(dist, "threshold_pct"))
+    val dist = Round67Queries.sweepRounds(pairs).toDF()
+    assert(rows(driver, "threshold_pct") == rows(dist, "_1"))
   }
 
   test("q148 WL colors: driver loop == distributed refinement rounds") {
@@ -47,7 +48,7 @@ class D35Q148ParitySpec extends SparkSpec {
     } ++ Seq((30L, 31L, 0L), (32L, 30L, 2L), (33L, 33L, 1L))
     val e = es.toDF("a", "b", "wbin").distinct()
     val driver = Round106Queries.wlColors(spark, e)
-    val dist = Round106Queries.wlColors(spark, e, driverThreshold = 0L)
+    val dist = Round106Queries.wlRounds(e)
     assert(rows(driver, "nk") == rows(dist, "nk"))
   }
 }

@@ -63,5 +63,8 @@ class Round94Spec extends SparkSpec {
     val got = rows.map(r => (r.getAs[Long]("round"),
       r.getAs[Long]("n_edges"), r.getAs[Long]("n_nodes"))).toList
     assert(got === expected)
+    // the distributed peel, which the driver path hides at every test SF
+    val e0 = Round6Queries.copurchaseEdges(spark, sf).localCheckpoint(true)
+    assert(Round94Queries.ktrussRounds(e0).toList === expected)
   }
 }
