@@ -18,4 +18,9 @@ object Scratch {
     java.nio.file.Files.createDirectories(root)
     root.resolve(name).toString
   }
+
+  /** The scratch directory `name` for the tables under `sfDir`: one per
+    * scale, so artifacts built at different scales never mix. */
+  def dir(name: String, sfDir: String): String =
+    dir(s"${name}_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
 }

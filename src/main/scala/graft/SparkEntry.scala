@@ -16,290 +16,55 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.queries.CoreQueries.q4_weekly(spark, "/root/testdata/sf0.001")
 
+  /** Every query module, once: the inventory's single registry. Its order
+    * is the merge order of [[queries]] and [[oracleSql]]; QueryRegistrySpec
+    * checks no name is declared twice, so no module shadows another. */
+  private[graft] val modules: Seq[graft.queries.QueryModule] = {
+    import graft.queries._
+    Seq(CoreQueries, MoreQueries, ExtensionQueries, Round3Queries,
+      Round4Queries, Round5Queries, Round6Queries, Round7Queries,
+      Round8Queries, Round9Queries, Round10Queries, Round11Queries,
+      Round12Queries, Round13Queries, Round14Queries, Round15Queries,
+      Round16Queries, Round17Queries, Round18Queries, Round19Queries,
+      Round20Queries, Round21Queries, Round22Queries, Round23Queries,
+      Round24Queries, Round25Queries, Round26Queries, Round27Queries,
+      Round28Queries, Round29Queries, Round30Queries, Round31Queries,
+      Round32Queries, Round33Queries, Round34Queries, Round35Queries,
+      Round36Queries, Round37Queries, Round38Queries, Round39Queries,
+      Round40Queries, Round41Queries, Round42Queries, Round43Queries,
+      Round44Queries, Round45Queries, Round46Queries, Round47Queries,
+      Round48Queries, Round49Queries, Round50Queries, Round51Queries,
+      Round52Queries, Round53Queries, Round54Queries, Round55Queries,
+      Round56Queries, Round57Queries, Round58Queries, Round59Queries,
+      Round60Queries, Round61Queries, Round62Queries, Round63Queries,
+      Round64Queries, Round65Queries, Round66Queries, Round67Queries,
+      Round68Queries, Round69Queries, Round70Queries, Round71Queries,
+      Round72Queries, Round73Queries, Round74Queries, Round75Queries,
+      Round76Queries, Round77Queries, Round78Queries, Round79Queries,
+      Round80Queries, Round81Queries, Round82Queries, Round83Queries,
+      Round84Queries, Round85Queries, Round86Queries, Round87Queries,
+      Round88Queries, Round89Queries, Round90Queries, Round91Queries,
+      Round92Queries, Round93Queries, Round94Queries, Round95Queries,
+      Round96Queries, Round97Queries, Round98Queries, Round99Queries,
+      Round100Queries, Round101Queries, Round102Queries, Round103Queries,
+      Round104Queries, Round105Queries, Round106Queries, Round107Queries,
+      Round108Queries, Round109Queries, Round110Queries, Round111Queries,
+      Round112Queries, Round113Queries, Round114Queries, Round115Queries,
+      Round116Queries, Round117Queries, Round118Queries, Round119Queries,
+      Round120Queries, Round121Queries, Round122Queries, Round123Queries,
+      Round124Queries, Round125Queries, Round126Queries, Round127Queries,
+      Round128Queries, Round129Queries, Round130Queries, Round131Queries,
+      Round132Queries, Round133Queries, Round134Queries, Round135Queries,
+      Round136Queries, Round137Queries, Round138Queries)
+  }
+
   /** One entry per implemented operator from SURVEY.md §2, plus the
     * training-data-pipeline extensions (dedup / similarity / text /
     * multimodal / events). */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.CoreQueries.queries ++
-      graft.queries.MoreQueries.queries ++
-      graft.queries.ExtensionQueries.queries ++
-      graft.queries.Round3Queries.queries ++
-      graft.queries.Round4Queries.queries ++
-      graft.queries.Round5Queries.queries ++
-      graft.queries.Round6Queries.queries ++
-      graft.queries.Round7Queries.queries ++
-      graft.queries.Round8Queries.queries ++
-      graft.queries.Round9Queries.queries ++
-      graft.queries.Round10Queries.queries ++
-      graft.queries.Round11Queries.queries ++
-      graft.queries.Round12Queries.queries ++
-      graft.queries.Round13Queries.queries ++
-      graft.queries.Round14Queries.queries ++
-      graft.queries.Round15Queries.queries ++
-      graft.queries.Round16Queries.queries ++
-      graft.queries.Round17Queries.queries ++
-      graft.queries.Round18Queries.queries ++
-      graft.queries.Round19Queries.queries ++
-      graft.queries.Round20Queries.queries ++
-      graft.queries.Round21Queries.queries ++
-      graft.queries.Round22Queries.queries ++
-      graft.queries.Round23Queries.queries ++
-      graft.queries.Round24Queries.queries ++
-      graft.queries.Round25Queries.queries ++
-      graft.queries.Round26Queries.queries ++
-      graft.queries.Round27Queries.queries ++
-      graft.queries.Round28Queries.queries ++
-      graft.queries.Round29Queries.queries ++
-      graft.queries.Round30Queries.queries ++
-      graft.queries.Round31Queries.queries ++
-      graft.queries.Round32Queries.queries ++
-      graft.queries.Round33Queries.queries ++
-      graft.queries.Round34Queries.queries ++
-      graft.queries.Round35Queries.queries ++
-      graft.queries.Round36Queries.queries ++
-      graft.queries.Round37Queries.queries ++
-      graft.queries.Round38Queries.queries ++
-      graft.queries.Round39Queries.queries ++
-      graft.queries.Round40Queries.queries ++
-      graft.queries.Round41Queries.queries ++
-      graft.queries.Round42Queries.queries ++
-      graft.queries.Round43Queries.queries ++
-      graft.queries.Round44Queries.queries ++
-      graft.queries.Round45Queries.queries ++
-      graft.queries.Round46Queries.queries ++
-      graft.queries.Round47Queries.queries ++
-      graft.queries.Round48Queries.queries ++
-      graft.queries.Round49Queries.queries ++
-      graft.queries.Round50Queries.queries ++
-      graft.queries.Round51Queries.queries ++
-      graft.queries.Round52Queries.queries ++
-      graft.queries.Round53Queries.queries ++
-      graft.queries.Round54Queries.queries ++
-      graft.queries.Round55Queries.queries ++
-      graft.queries.Round56Queries.queries ++
-      graft.queries.Round57Queries.queries ++
-      graft.queries.Round58Queries.queries ++
-      graft.queries.Round59Queries.queries ++
-      graft.queries.Round60Queries.queries ++
-      graft.queries.Round61Queries.queries ++
-      graft.queries.Round62Queries.queries ++
-      graft.queries.Round63Queries.queries ++
-      graft.queries.Round64Queries.queries ++
-      graft.queries.Round65Queries.queries ++
-      graft.queries.Round66Queries.queries ++
-      graft.queries.Round67Queries.queries ++
-      graft.queries.Round68Queries.queries ++
-      graft.queries.Round69Queries.queries ++
-      graft.queries.Round70Queries.queries ++
-      graft.queries.Round71Queries.queries ++
-      graft.queries.Round72Queries.queries ++
-      graft.queries.Round73Queries.queries ++
-      graft.queries.Round74Queries.queries ++
-      graft.queries.Round75Queries.queries ++
-      graft.queries.Round76Queries.queries ++
-      graft.queries.Round77Queries.queries ++
-      graft.queries.Round78Queries.queries ++
-      graft.queries.Round79Queries.queries ++
-      graft.queries.Round80Queries.queries ++
-      graft.queries.Round81Queries.queries ++
-      graft.queries.Round82Queries.queries ++
-      graft.queries.Round83Queries.queries ++
-      graft.queries.Round84Queries.queries ++
-      graft.queries.Round85Queries.queries ++
-      graft.queries.Round86Queries.queries ++
-      graft.queries.Round87Queries.queries ++
-      graft.queries.Round88Queries.queries ++
-      graft.queries.Round89Queries.queries ++
-      graft.queries.Round90Queries.queries ++
-      graft.queries.Round91Queries.queries ++
-      graft.queries.Round92Queries.queries ++
-      graft.queries.Round93Queries.queries ++
-      graft.queries.Round94Queries.queries ++
-      graft.queries.Round95Queries.queries ++
-      graft.queries.Round96Queries.queries ++
-      graft.queries.Round97Queries.queries ++
-      graft.queries.Round98Queries.queries ++
-      graft.queries.Round99Queries.queries ++
-      graft.queries.Round100Queries.queries ++
-      graft.queries.Round101Queries.queries ++
-      graft.queries.Round102Queries.queries ++
-      graft.queries.Round103Queries.queries ++
-      graft.queries.Round104Queries.queries ++
-      graft.queries.Round105Queries.queries ++
-      graft.queries.Round106Queries.queries ++
-      graft.queries.Round107Queries.queries ++
-      graft.queries.Round108Queries.queries ++
-      graft.queries.Round109Queries.queries ++
-      graft.queries.Round110Queries.queries ++
-      graft.queries.Round111Queries.queries ++
-      graft.queries.Round112Queries.queries ++
-      graft.queries.Round113Queries.queries ++
-      graft.queries.Round114Queries.queries ++
-      graft.queries.Round115Queries.queries ++
-      graft.queries.Round116Queries.queries ++
-      graft.queries.Round117Queries.queries ++
-      graft.queries.Round118Queries.queries ++
-      graft.queries.Round119Queries.queries ++
-      graft.queries.Round120Queries.queries ++
-      graft.queries.Round121Queries.queries ++
-      graft.queries.Round122Queries.queries ++
-      graft.queries.Round123Queries.queries ++
-      graft.queries.Round124Queries.queries ++
-      graft.queries.Round125Queries.queries ++
-      graft.queries.Round126Queries.queries ++
-      graft.queries.Round127Queries.queries ++
-      graft.queries.Round128Queries.queries ++
-      graft.queries.Round129Queries.queries ++
-      graft.queries.Round130Queries.queries ++
-      graft.queries.Round131Queries.queries ++
-      graft.queries.Round132Queries.queries ++
-      graft.queries.Round133Queries.queries ++
-      graft.queries.Round134Queries.queries ++
-      graft.queries.Round135Queries.queries ++
-      graft.queries.Round136Queries.queries ++
-      graft.queries.Round137Queries.queries ++
-      graft.queries.Round138Queries.queries
+    modules.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on the
     * same parquet tables. Omit for non-SQL-expressible ops. */
-  val oracleSql: Map[String, String] =
-    graft.queries.CoreQueries.oracles ++
-      graft.queries.MoreQueries.oracles ++
-      graft.queries.ExtensionQueries.oracles ++
-      graft.queries.Round3Queries.oracles ++
-      graft.queries.Round4Queries.oracles ++
-      graft.queries.Round5Queries.oracles ++
-      graft.queries.Round6Queries.oracles ++
-      graft.queries.Round7Queries.oracles ++
-      graft.queries.Round8Queries.oracles ++
-      graft.queries.Round9Queries.oracles ++
-      graft.queries.Round10Queries.oracles ++
-      graft.queries.Round11Queries.oracles ++
-      graft.queries.Round12Queries.oracles ++
-      graft.queries.Round13Queries.oracles ++
-      graft.queries.Round14Queries.oracles ++
-      graft.queries.Round15Queries.oracles ++
-      graft.queries.Round16Queries.oracles ++
-      graft.queries.Round17Queries.oracles ++
-      graft.queries.Round18Queries.oracles ++
-      graft.queries.Round19Queries.oracles ++
-      graft.queries.Round20Queries.oracles ++
-      graft.queries.Round21Queries.oracles ++
-      graft.queries.Round22Queries.oracles ++
-      graft.queries.Round23Queries.oracles ++
-      graft.queries.Round24Queries.oracles ++
-      graft.queries.Round25Queries.oracles ++
-      graft.queries.Round26Queries.oracles ++
-      graft.queries.Round27Queries.oracles ++
-      graft.queries.Round28Queries.oracles ++
-      graft.queries.Round29Queries.oracles ++
-      graft.queries.Round30Queries.oracles ++
-      graft.queries.Round31Queries.oracles ++
-      graft.queries.Round32Queries.oracles ++
-      graft.queries.Round33Queries.oracles ++
-      graft.queries.Round34Queries.oracles ++
-      graft.queries.Round35Queries.oracles ++
-      graft.queries.Round36Queries.oracles ++
-      graft.queries.Round37Queries.oracles ++
-      graft.queries.Round38Queries.oracles ++
-      graft.queries.Round39Queries.oracles ++
-      graft.queries.Round40Queries.oracles ++
-      graft.queries.Round41Queries.oracles ++
-      graft.queries.Round42Queries.oracles ++
-      graft.queries.Round43Queries.oracles ++
-      graft.queries.Round44Queries.oracles ++
-      graft.queries.Round45Queries.oracles ++
-      graft.queries.Round46Queries.oracles ++
-      graft.queries.Round47Queries.oracles ++
-      graft.queries.Round48Queries.oracles ++
-      graft.queries.Round49Queries.oracles ++
-      graft.queries.Round50Queries.oracles ++
-      graft.queries.Round51Queries.oracles ++
-      graft.queries.Round52Queries.oracles ++
-      graft.queries.Round53Queries.oracles ++
-      graft.queries.Round54Queries.oracles ++
-      graft.queries.Round55Queries.oracles ++
-      graft.queries.Round56Queries.oracles ++
-      graft.queries.Round57Queries.oracles ++
-      graft.queries.Round58Queries.oracles ++
-      graft.queries.Round59Queries.oracles ++
-      graft.queries.Round60Queries.oracles ++
-      graft.queries.Round61Queries.oracles ++
-      graft.queries.Round62Queries.oracles ++
-      graft.queries.Round63Queries.oracles ++
-      graft.queries.Round64Queries.oracles ++
-      graft.queries.Round65Queries.oracles ++
-      graft.queries.Round66Queries.oracles ++
-      graft.queries.Round67Queries.oracles ++
-      graft.queries.Round68Queries.oracles ++
-      graft.queries.Round69Queries.oracles ++
-      graft.queries.Round70Queries.oracles ++
-      graft.queries.Round71Queries.oracles ++
-      graft.queries.Round72Queries.oracles ++
-      graft.queries.Round73Queries.oracles ++
-      graft.queries.Round74Queries.oracles ++
-      graft.queries.Round75Queries.oracles ++
-      graft.queries.Round76Queries.oracles ++
-      graft.queries.Round77Queries.oracles ++
-      graft.queries.Round78Queries.oracles ++
-      graft.queries.Round79Queries.oracles ++
-      graft.queries.Round80Queries.oracles ++
-      graft.queries.Round81Queries.oracles ++
-      graft.queries.Round82Queries.oracles ++
-      graft.queries.Round83Queries.oracles ++
-      graft.queries.Round84Queries.oracles ++
-      graft.queries.Round85Queries.oracles ++
-      graft.queries.Round86Queries.oracles ++
-      graft.queries.Round87Queries.oracles ++
-      graft.queries.Round88Queries.oracles ++
-      graft.queries.Round89Queries.oracles ++
-      graft.queries.Round90Queries.oracles ++
-      graft.queries.Round91Queries.oracles ++
-      graft.queries.Round92Queries.oracles ++
-      graft.queries.Round93Queries.oracles ++
-      graft.queries.Round94Queries.oracles ++
-      graft.queries.Round95Queries.oracles ++
-      graft.queries.Round96Queries.oracles ++
-      graft.queries.Round97Queries.oracles ++
-      graft.queries.Round98Queries.oracles ++
-      graft.queries.Round99Queries.oracles ++
-      graft.queries.Round100Queries.oracles ++
-      graft.queries.Round101Queries.oracles ++
-      graft.queries.Round102Queries.oracles ++
-      graft.queries.Round103Queries.oracles ++
-      graft.queries.Round104Queries.oracles ++
-      graft.queries.Round105Queries.oracles ++
-      graft.queries.Round106Queries.oracles ++
-      graft.queries.Round107Queries.oracles ++
-      graft.queries.Round108Queries.oracles ++
-      graft.queries.Round109Queries.oracles ++
-      graft.queries.Round110Queries.oracles ++
-      graft.queries.Round111Queries.oracles ++
-      graft.queries.Round112Queries.oracles ++
-      graft.queries.Round113Queries.oracles ++
-      graft.queries.Round114Queries.oracles ++
-      graft.queries.Round115Queries.oracles ++
-      graft.queries.Round116Queries.oracles ++
-      graft.queries.Round117Queries.oracles ++
-      graft.queries.Round118Queries.oracles ++
-      graft.queries.Round119Queries.oracles ++
-      graft.queries.Round120Queries.oracles ++
-      graft.queries.Round121Queries.oracles ++
-      graft.queries.Round122Queries.oracles ++
-      graft.queries.Round123Queries.oracles ++
-      graft.queries.Round124Queries.oracles ++
-      graft.queries.Round125Queries.oracles ++
-      graft.queries.Round126Queries.oracles ++
-      graft.queries.Round127Queries.oracles ++
-      graft.queries.Round128Queries.oracles ++
-      graft.queries.Round129Queries.oracles ++
-      graft.queries.Round130Queries.oracles ++
-      graft.queries.Round131Queries.oracles ++
-      graft.queries.Round132Queries.oracles ++
-      graft.queries.Round133Queries.oracles ++
-      graft.queries.Round134Queries.oracles ++
-      graft.queries.Round135Queries.oracles ++
-      graft.queries.Round136Queries.oracles ++
-      graft.queries.Round137Queries.oracles ++
-      graft.queries.Round138Queries.oracles
+  val oracleSql: Map[String, String] = modules.flatMap(_.oracles).toMap
 }

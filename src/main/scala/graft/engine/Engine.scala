@@ -115,7 +115,9 @@ class Engine(
     val transformed =
       if (plan.transform.steps.nonEmpty) Transform.runSteps(spark, plan.transform.steps)
       else plan.transform.sql match {
-        case Some(sql) => Transform.single(spark, sql)
+        // back-compat single SQL over the registered views (reference
+        // templates.py:114-121)
+        case Some(sql) => spark.sql(sql)
         case None if extracted.isDefined => extracted.get
         case None => throw new IllegalArgumentException(
           "Provide transform.steps[...].sql (preferred) or transform.sql.")

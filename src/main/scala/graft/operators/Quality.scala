@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.nio.file.{Files, Path, Paths}
+import scala.util.Using
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, TimestampType}
@@ -97,37 +99,16 @@ object Quality {
       nonnullCols: Seq[String] = Nil, timestampCol: Option[String] = None,
       maxLagMinutes: Long = 180, delimiter: String = ",",
       encoding: String = "", clock: Clock = SystemClock): VerifyResult =
-    try {
-      val p = java.nio.file.Paths.get(path)
-      if (!java.nio.file.Files.exists(p) || java.nio.file.Files.size(p) == 0)
-        return VerifyResult(0, nonnullOk = false, freshOk = false, None,
-          status = false, error = Some(s"missing or empty: $path"))
-
+    verifyFile(path, "missing or empty",
+      absent = p => !Files.exists(p) || Files.size(p) == 0,
       // read back the way CsvSink wrote it: the writer quotes a value
       // holding a newline, so a record may span lines, and it escapes
       // embedded quotes with its default `\`
-      val df = graft.sources.Sources.loadCsv(spark, path,
+      read = graft.sources.Sources.loadCsv(spark, path,
         maxBytes = Long.MaxValue, delimiter = delimiter, encoding = encoding,
-        options = Map("multiLine" -> "true"))
-      val dq = dqCheck(df, minRows, nonnullCols,
-        freshnessMinutes = Some(maxLagMinutes),
-        timestampCol = timestampCol, clock = clock)
-
-      val (lag, freshOk) = timestampCol match {
-        case Some(_) => (dq.lagMinutes, dq.freshOk)
-        case None =>
-          // file-mtime freshness fallback (reference tools.py:251-253)
-          val mtime = java.nio.file.Files.getLastModifiedTime(p).toMillis
-          val l = (clock.nowEpochMillis - mtime) / 60000.0
-          (Some(l), l <= maxLagMinutes.toDouble)
-      }
-      VerifyResult(dq.rows, dq.nonnullOk, freshOk, lag,
-        status = dq.rows >= minRows && dq.nonnullOk && freshOk)
-    } catch {
-      case e: Exception =>
-        VerifyResult(0, nonnullOk = false, freshOk = false, None,
-          status = false, error = Some(e.toString))
-    }
+        options = Map("multiLine" -> "true")),
+      mtimeMillis = Files.getLastModifiedTime(_).toMillis,
+      minRows, nonnullCols, timestampCol, maxLagMinutes, clock)
 
   /** Post-load audit for the parquet directory sink (engine extension):
     * same single-pass aggregation over the re-read directory; freshness
@@ -135,32 +116,45 @@ object Quality {
   def verifyParquet(spark: SparkSession, dir: String, minRows: Long = 1,
       nonnullCols: Seq[String] = Nil, timestampCol: Option[String] = None,
       maxLagMinutes: Long = 180, clock: Clock = SystemClock): VerifyResult =
+    verifyFile(dir, "missing", absent = !Files.exists(_),
+      read = spark.read.parquet(dir),
+      mtimeMillis = p => Using.resource(Files.walk(p))(_
+        .filter(Files.isRegularFile(_))
+        .mapToLong(f => Files.getLastModifiedTime(f).toMillis)
+        .max().orElse(0L)),
+      minRows, nonnullCols, timestampCol, maxLagMinutes, clock)
+
+  /** The file sinks' shared audit: fail closed with `missing` when the
+    * output at `path` is `absent`; otherwise the single-pass DQ aggregation
+    * over the re-`read` output, with freshness from the max timestamp, or
+    * from the output's `mtimeMillis` when no timestamp column is given. */
+  private def verifyFile(path: String, missing: String,
+      absent: Path => Boolean, read: => DataFrame, mtimeMillis: Path => Long,
+      minRows: Long, nonnullCols: Seq[String], timestampCol: Option[String],
+      maxLagMinutes: Long, clock: Clock): VerifyResult =
     try {
-      val p = java.nio.file.Paths.get(dir)
-      if (!java.nio.file.Files.exists(p))
-        return VerifyResult(0, nonnullOk = false, freshOk = false, None,
-          status = false, error = Some(s"missing: $dir"))
-      val df = spark.read.parquet(dir)
-      val dq = dqCheck(df, minRows, nonnullCols,
-        freshnessMinutes = Some(maxLagMinutes),
-        timestampCol = timestampCol, clock = clock)
-      val (lag, freshOk) = timestampCol match {
-        case Some(_) => (dq.lagMinutes, dq.freshOk)
-        case None =>
-          val newest = java.nio.file.Files.walk(p)
-            .filter(java.nio.file.Files.isRegularFile(_))
-            .mapToLong(f => java.nio.file.Files.getLastModifiedTime(f).toMillis)
-            .max().orElse(0L)
-          val l = (clock.nowEpochMillis - newest) / 60000.0
-          (Some(l), l <= maxLagMinutes.toDouble)
+      val p = Paths.get(path)
+      if (absent(p)) failed(s"$missing: $path")
+      else {
+        val dq = dqCheck(read, minRows, nonnullCols,
+          freshnessMinutes = Some(maxLagMinutes),
+          timestampCol = timestampCol, clock = clock)
+        val (lag, freshOk) = timestampCol match {
+          case Some(_) => (dq.lagMinutes, dq.freshOk)
+          case None =>
+            val l = (clock.nowEpochMillis - mtimeMillis(p)) / 60000.0
+            (Some(l), l <= maxLagMinutes.toDouble)
+        }
+        VerifyResult(dq.rows, dq.nonnullOk, freshOk, lag,
+          status = dq.rows >= minRows && dq.nonnullOk && freshOk)
       }
-      VerifyResult(dq.rows, dq.nonnullOk, freshOk, lag,
-        status = dq.rows >= minRows && dq.nonnullOk && freshOk)
     } catch {
-      case e: Exception =>
-        VerifyResult(0, nonnullOk = false, freshOk = false, None,
-          status = false, error = Some(e.toString))
+      case e: Exception => failed(e.toString)
     }
+
+  private def failed(error: String): VerifyResult =
+    VerifyResult(0, nonnullOk = false, freshOk = false, None,
+      status = false, error = Some(error))
 
   /** Post-load DB audit (reference tools.py:120-168): COUNT(*) and MAX(ts)
     * pushed down to the database as subquery tables — only two scalar rows
@@ -188,9 +182,7 @@ object Quality {
       VerifyResult(rows, nonnullOk = true, freshOk = freshOk, lag,
         status = rows > 0 && freshOk)
     } catch {
-      case e: Exception =>
-        VerifyResult(0, nonnullOk = false, freshOk = false, None,
-          status = false, error = Some(e.toString))
+      case e: Exception => failed(e.toString)
     }
 
   /** Reference `pd.to_datetime(col)` equivalence: pass timestamps/dates

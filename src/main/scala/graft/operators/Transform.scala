@@ -26,17 +26,6 @@ object Transform {
     }.last
   }
 
-  /** Back-compat single SQL over already-registered views (reference
-    * templates.py:114-121). */
-  def single(spark: SparkSession, sql: String): DataFrame = spark.sql(sql)
-
-  /** `transform_sql` over one handle registered as `input_df` (reference
-    * tools.py:58-65). */
-  def singleOnHandle(spark: SparkSession, df: DataFrame, sql: String): DataFrame = {
-    df.createOrReplaceTempView("input_df")
-    spark.sql(sql)
-  }
-
   /** `python_udf` (reference tools.py:67-72): adds a column from a row-wise
     * arithmetic/boolean expression. `pandas.eval`'s expression language is a
     * subset of Spark SQL's, so this is the codegen'd `expr`, not a UDF. */

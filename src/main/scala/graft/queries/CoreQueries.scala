@@ -18,7 +18,7 @@ import graft.functions.Dialect
   *  - BIGINT-vs-INT type mismatches (DuckDB `length`, `EXTRACT`, `SUM(INT)`)
   *    are normalized by explicit casts in the oracle SQL.
   */
-object CoreQueries {
+object CoreQueries extends QueryModule {
 
   private def dec(c: Column, scale: Int = 4): Column = c.cast(DecimalType(18, scale))
   /** Order-independent double sum: exact DECIMAL accumulation, rounded
@@ -35,12 +35,9 @@ object CoreQueries {
     (round(sum(dec(c, scale)), 2).cast(DoubleType) /
       count(c)).cast(DoubleType)
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ── q1: scan → hash aggregate (partial+final), conditional-free ──────────
   def q1_agg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
         dsum(col("l_quantity")).as("sum_qty"),
@@ -52,7 +49,7 @@ object CoreQueries {
 
   // ── q2: filter + projection; predicates and pruning push to parquet ──────
   def q2_filter(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .filter(
         col("l_shipdate") >= lit("1998-01-01").cast(TimestampType) &&
         col("l_shipdate") <  lit("1999-01-01").cast(TimestampType) &&
@@ -63,9 +60,9 @@ object CoreQueries {
 
   // ── q3: 3-way join + group agg (TPC-H Q3 shape); dims broadcast ─────────
   def q3_join_agg(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-    val o = t(s, dir, "orders")
-    val l = t(s, dir, "lineitem")
+    val c = Tables.load(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
+    val o = Tables.load(s, dir, "orders")
+    val l = Tables.load(s, dir, "lineitem")
     // no broadcast hint on customer: it is only conditionally small (the
     // segment filter), so let AQE pick from runtime stats; nation/region
     // style bounded dims (q7) do get explicit hints.
@@ -79,8 +76,8 @@ object CoreQueries {
   // ── q4: LEFT JOIN + COALESCE + CASE WHEN + date_trunc week (flagship
   //        shape: reference prompt.txt:16-78) ─────────────────────────────
   def q4_weekly(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-    val l = t(s, dir, "lineitem")
+    val o = Tables.load(s, dir, "orders")
+    val l = Tables.load(s, dir, "lineitem")
     o.join(l, o("o_orderkey") === l("l_orderkey"), "left")
       .groupBy(
         date_trunc("week", o("o_orderdate")).cast(DateType).as("week"),
@@ -102,7 +99,7 @@ object CoreQueries {
     val w = Window.partitionBy(col("l_suppkey"))
       .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
         col("l_quantity"), col("l_extendedprice"), col("l_partkey"))
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .select(
         col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
         row_number().over(w).cast(LongType).as("rn"), // DuckDB ROW_NUMBER is BIGINT
@@ -115,7 +112,7 @@ object CoreQueries {
   // ── q6: CTE + multi-format date parse with null-on-failure fallback
   //        (reference prompt.txt:24-30 try_strptime chain) ────────────────
   def q6_dateparse(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = Tables.load(s, dir, "orders")
     val ds = when(col("o_orderkey") % 2 === 0, date_format(col("o_orderdate"), "yyyy-MM-dd"))
       .otherwise(date_format(col("o_orderdate"), "MM/dd/yyyy"))
     o.select(col("o_orderkey"), ds.as("ds"))
@@ -129,9 +126,9 @@ object CoreQueries {
 
   // ── q7: ROLLUP over region→nation with exact double agg ─────────────────
   def q7_rollup(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-    val n = t(s, dir, "nation")
-    val r = t(s, dir, "region")
+    val c = Tables.load(s, dir, "customer")
+    val n = Tables.load(s, dir, "nation")
+    val r = Tables.load(s, dir, "region")
     c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
       .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
       .rollup(col("r_name"), col("n_name"))
@@ -141,8 +138,10 @@ object CoreQueries {
 
   // ── q8: set operations — INTERSECT / EXCEPT with tags ───────────────────
   def q8_setops(s: SparkSession, dir: String): DataFrame = {
-    val cn = t(s, dir, "customer").select(col("c_nationkey").as("nationkey")).distinct()
-    val sn = t(s, dir, "supplier").select(col("s_nationkey").as("nationkey")).distinct()
+    val cn = Tables.load(s, dir, "customer")
+      .select(col("c_nationkey").as("nationkey")).distinct()
+    val sn = Tables.load(s, dir, "supplier")
+      .select(col("s_nationkey").as("nationkey")).distinct()
     val both = cn.intersect(sn).withColumn("tag", lit("both"))
     val cOnly = cn.except(sn).withColumn("tag", lit("cust_only"))
     val sOnly = sn.except(cn).withColumn("tag", lit("supp_only"))
@@ -153,8 +152,8 @@ object CoreQueries {
 
   // ── q9: semi / anti joins (EXISTS / NOT EXISTS) ─────────────────────────
   def q9_semi_anti(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-    val o = t(s, dir, "orders")
+    val c = Tables.load(s, dir, "customer")
+    val o = Tables.load(s, dir, "orders")
     val has = c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
       .select(lit("has_order").as("tag"), col("c_custkey"))
     val not = c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
@@ -164,14 +163,14 @@ object CoreQueries {
 
   // ── q10: top-k — ORDER BY ... LIMIT plans as TakeOrderedAndProject ──────
   def q10_topk(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       .limit(100)
 
   // ── q11: exact distinct aggregates ──────────────────────────────────────
   def q11_distinct(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .agg(
         countDistinct(col("l_partkey")).as("distinct_parts"),
         countDistinct(col("l_suppkey")).as("distinct_supps"),
@@ -180,7 +179,7 @@ object CoreQueries {
 
   // ── q12: scalar CASE WHEN buckets + grouped agg ─────────────────────────
   def q12_case(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .groupBy(
         when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "high")
           .otherwise("low").as("prio"),
@@ -190,7 +189,7 @@ object CoreQueries {
 
   // ── q13: date_trunc month + EXTRACT year ────────────────────────────────
   def q13_month(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .groupBy(
         date_trunc("month", col("o_orderdate")).cast(DateType).as("month"),
         year(col("o_orderdate")).as("yr"))
@@ -199,7 +198,7 @@ object CoreQueries {
 
   // ── q14: string functions — upper/substring/length/concat/LIKE ──────────
   def q14_strings(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables.load(s, dir, "part")
       .filter(col("p_name").contains("a"))
       .select(
         col("p_partkey"),
@@ -211,7 +210,7 @@ object CoreQueries {
 
   // ── q15: scalar subquery (above-average filter), exact threshold ────────
   def q15_subquery(s: SparkSession, dir: String): DataFrame = {
-    val p = t(s, dir, "part")
+    val p = Tables.load(s, dir, "part")
     val thr = p.agg(
       (round(sum(dec(col("p_retailprice"))), 2)
         .cast(DoubleType) / count(lit(1))).as("thr"))

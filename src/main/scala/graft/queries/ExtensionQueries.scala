@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import graft.Tables
 import graft.functions.{RollingMinHash, Text}
 import graft.operators.{Dedup, Multimodal, PixelMediaCodec, Similarity}
+import StreamConf.withStreamShuffle
 
 /** Training-data-pipeline operators (the build brief's first-class
   * extensions): dedup, similarity search, text analysis, multimodal
@@ -17,15 +18,12 @@ import graft.operators.{Dedup, Multimodal, PixelMediaCodec, Similarity}
   * rows-only here and are verified semantically in ScalaTest
   * (DedupSimilaritySpec) against exact ground truth.
   */
-object ExtensionQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object ExtensionQueries extends QueryModule {
 
   /** events.ts normalized to µs TimestampType across both testdata
     * generations (int64-nanos and timestamp[us]) via [[Tables.tsMicros]]. */
   private def eventsWithTs(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     ev.withColumn("ts_us", Tables.tsMicros(ev))
   }
 
@@ -36,7 +34,7 @@ object ExtensionQueries {
     * (union, self-join) get independent sources, as the file source
     * requires. */
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.readStream.schema(t(s, dir, "events").schema)
+    val raw = s.readStream.schema(Tables.load(s, dir, "events").schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
     raw.withColumn("ts_us", Tables.tsMicros(raw))
   }
@@ -44,32 +42,32 @@ object ExtensionQueries {
   // ── dedup ───────────────────────────────────────────────────────────────
 
   def d1_dedup_exact(s: SparkSession, dir: String): DataFrame =
-    Dedup.exact(t(s, dir, "documents"), "doc_id", "text")
+    Dedup.exact(Tables.load(s, dir, "documents"), "doc_id", "text")
       .orderBy(col("doc_id"))
 
   def d2_ngram_jaccard(s: SparkSession, dir: String): DataFrame =
-    Dedup.ngramJaccard(t(s, dir, "documents"), "doc_id", "text",
+    Dedup.ngramJaccard(Tables.load(s, dir, "documents"), "doc_id", "text",
         n = 3, threshold = 0.5)
       .orderBy(col("id_a"), col("id_b"))
 
   def d3_minhash_lsh(s: SparkSession, dir: String): DataFrame =
-    Dedup.minhashLsh(t(s, dir, "documents"), "doc_id", "text",
+    Dedup.minhashLsh(Tables.load(s, dir, "documents"), "doc_id", "text",
         shingleN = 3, numHashes = 32, bands = 8, threshold = 0.5)
       .orderBy(col("id_a"), col("id_b"))
 
   def d4_simhash(s: SparkSession, dir: String): DataFrame =
-    Dedup.simhashPairs(t(s, dir, "documents"), "doc_id", "text", maxDist = 3)
+    Dedup.simhashPairs(Tables.load(s, dir, "documents"), "doc_id", "text", maxDist = 3)
       .orderBy(col("id_a"), col("id_b"))
 
   def d5_embed_cosine_pairs(s: SparkSession, dir: String): DataFrame =
-    Dedup.embeddingCosinePairs(t(s, dir, "embeddings"), "vec_id", "embedding",
+    Dedup.embeddingCosinePairs(Tables.load(s, dir, "embeddings"), "vec_id", "embedding",
         dim = 64, threshold = 0.3, nPlanes = 4)
       .orderBy(col("id_a"), col("id_b"))
 
   /** Exact twin of d5 (same threshold, no LSH): the oracle-checked
     * baseline that also bounds d5's recall from above. */
   def d6_embed_cosine_exact(s: SparkSession, dir: String): DataFrame =
-    Dedup.embeddingCosineExact(t(s, dir, "embeddings"), "vec_id", "embedding",
+    Dedup.embeddingCosineExact(Tables.load(s, dir, "embeddings"), "vec_id", "embedding",
         threshold = 0.3)
       .orderBy(col("id_a"), col("id_b"))
 
@@ -82,7 +80,7 @@ object ExtensionQueries {
     * exact Jaccard → components. Oracle: a DuckDB recursive CTE over the
     * exact pairs. */
   def d7_dup_clusters(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.minhashLsh(t(s, dir, "documents"), "doc_id", "text",
+    val pairs = Dedup.minhashLsh(Tables.load(s, dir, "documents"), "doc_id", "text",
       shingleN = 3, numHashes = 32, bands = 8, threshold = 0.5)
     graft.operators.Graph.connectedComponents(pairs, "id_a", "id_b")
       .select(col("n").as("doc_id"), col("l").as("cluster"))
@@ -94,10 +92,10 @@ object ExtensionQueries {
     * The reporting step a corpus-dedup run ends with (what did dedup
     * save?), built on the same LSH→verify→components pipeline as d7. */
   def d8_dup_drop_stats(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.minhashLsh(t(s, dir, "documents"), "doc_id", "text",
+    val pairs = Dedup.minhashLsh(Tables.load(s, dir, "documents"), "doc_id", "text",
       shingleN = 3, numHashes = 32, bands = 8, threshold = 0.5)
     val labels = graft.operators.Graph.connectedComponents(pairs, "id_a", "id_b")
-    val lens = t(s, dir, "documents")
+    val lens = Tables.load(s, dir, "documents")
       .select(col("doc_id"), length(col("text")).as("len"))
     labels.join(lens, labels("n") === lens("doc_id"))
       .groupBy(col("l").as("cluster"))
@@ -112,7 +110,7 @@ object ExtensionQueries {
   // ── text analysis ───────────────────────────────────────────────────────
 
   def t1_text_stats(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(
+    Tables.load(s, dir, "documents").select(
       col("doc_id"),
       Text.tokenCount(col("text")).cast(IntegerType).as("n_tokens"),
       length(col("text")).as("len_chars"),
@@ -124,7 +122,7 @@ object ExtensionQueries {
       .orderBy(col("doc_id"))
 
   def t2_langid(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(
+    Tables.load(s, dir, "documents").select(
       col("doc_id"),
       Text.langId(col("text")).as("lang_pred"),
       col("lang").as("lang_declared"),
@@ -132,7 +130,7 @@ object ExtensionQueries {
       .orderBy(col("doc_id"))
 
   def t3_fingerprint_rolling(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(
+    Tables.load(s, dir, "documents").select(
       col("doc_id"),
       RollingMinHash.rollingMinHash(col("text"), k = 8).as("rhash"))
       .orderBy(col("doc_id"))
@@ -145,7 +143,7 @@ object ExtensionQueries {
     * lambda ×3 consumers: O(len²) interpreted, ~500 s at sf1
     * (round-12 sf1 finding; CharGramStats in NativeExprs.scala). */
   def t5_char_ngrams(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").select(
+    Tables.load(s, dir, "documents").select(
       col("doc_id"),
       Text.charGramStats(col("text"), 3).as("g"))
       .select(col("doc_id"),
@@ -158,7 +156,7 @@ object ExtensionQueries {
   // ── similarity search ───────────────────────────────────────────────────
 
   def s1_cosine_topk(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables.load(s, dir, "embeddings")
     Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 5)
       .orderBy(col("query_id"), col("rk"))
@@ -170,7 +168,7 @@ object ExtensionQueries {
     * oracle. Fewer tables trade recall for candidate volume — the knob a
     * 100 TB deployment tunes per corpus. */
   def s2_ann_lsh_topk(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables.load(s, dir, "embeddings")
     Similarity.lshTopK(emb, emb.filter(col("vec_id") < 5),
         "vec_id", "embedding", dim = 64, k = 5, nPlanes = 4, nTables = 16)
       .orderBy(col("query_id"), col("rk"))
@@ -183,7 +181,7 @@ object ExtensionQueries {
     * data the knob prunes hard: IvfSpec shows full recall probing 1 of 4
     * cells when structure exists. */
   def s3_ann_ivf_topk(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables.load(s, dir, "embeddings")
     graft.operators.Ivf.topK(emb, emb.filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 5, nCells = 16, iters = 3, nprobe = 16)
       .orderBy(col("query_id"), col("rk"))
@@ -221,7 +219,7 @@ object ExtensionQueries {
   }
 
   def e3_json_props(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .groupBy(col("event_type"))
       .agg(
         count(lit(1)).as("n"),
@@ -230,19 +228,6 @@ object ExtensionQueries {
       .orderBy(col("event_type"))
 
   private val streamRunSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily lowered:
-    * each stateful streaming op materializes one state store per shuffle
-    * partition, and at memory-sink test scale 32 stores are pure setup
-    * overhead (a real deployment sizes this to state volume instead). The
-    * result is partitioning-independent either way — the oracle gate
-    * proves that. */
-  private def withStreamShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
 
   /** e1's hourly aggregation executed through Structured Streaming
     * (`readStream` over the same parquet, AvailableNow-style drain into a
@@ -302,9 +287,9 @@ object ExtensionQueries {
     * aggregates revenue by nation. The oracle is the plain batch
     * join+aggregate, proving the join semantics carry to streams. */
   def e6_stream_static_join(s: SparkSession, dir: String): DataFrame = {
-    val schema = t(s, dir, "events").schema
+    val schema = Tables.load(s, dir, "events").schema
     val name = s"stream_enrich_${streamRunSeq.incrementAndGet()}"
-    val cust = t(s, dir, "customer")
+    val cust = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey"))
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -352,7 +337,7 @@ object ExtensionQueries {
     * mode a live dashboard consumes. Unwindowed, so state is one row per
     * key — bounded by key cardinality, not stream length. */
   def e10_stream_complete_agg(s: SparkSession, dir: String): DataFrame = {
-    val schema = t(s, dir, "events").schema
+    val schema = Tables.load(s, dir, "events").schema
     val name = s"stream_complete_${streamRunSeq.incrementAndGet()}"
     val src = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -406,7 +391,7 @@ object ExtensionQueries {
     * minimum such corpus id). The "don't re-ingest what you already have"
     * operator of a continuously-crawling pipeline. */
   def d9_cross_corpus_dedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val batch = docs.filter(col("doc_id") % 2 === 1)
     val corpus = docs.filter(col("doc_id") % 2 === 0)
     val best = Dedup.crossNgramJaccard(batch, corpus, "doc_id", "text",
@@ -468,7 +453,7 @@ object ExtensionQueries {
     * payload size (11-byte header + 192 raster bytes = 203/doc). */
   def m1_multimodal_features(s: SparkSession, dir: String): DataFrame = {
     val withPayload = Multimodal.attachImagePayload(
-      t(s, dir, "documents").select(col("doc_id"), col("text"), col("source")),
+      Tables.load(s, dir, "documents").select(col("doc_id"), col("text"), col("source")),
       "text", width = 8, height = 8, format = "ppm")
     val decoded =
       Multimodal.decodeFeatures(withPayload, featureDim = 8, PixelMediaCodec)
@@ -488,7 +473,7 @@ object ExtensionQueries {
     * which is exactly what lets the oracle check it. */
   def m3_batched_scores(s: SparkSession, dir: String): DataFrame = {
     val withPayload = Multimodal.attachImagePayload(
-      t(s, dir, "documents").select(col("doc_id"), col("text"), col("source")),
+      Tables.load(s, dir, "documents").select(col("doc_id"), col("text"), col("source")),
       "text", width = 8, height = 8, format = "ppm")
     Multimodal.scoreBatched(withPayload, batchSize = 32, PixelMediaCodec)
       .groupBy(col("source"))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import graft.Tables
 import graft.operators.{AsOf, Quality, Transform}
 import graft.plan.TransformStep
+import DecimalSums.{dec, dsum}
 
 /** Second SQL-surface batch: grouping sets, correlated subqueries, range
   * (band) joins, ranking windows, as-of join, union-distinct, HAVING,
@@ -14,19 +15,11 @@ import graft.plan.TransformStep
   * operators themselves (§2A) surfaced as oracle-checkable queries
   * (CSV sink/source round-trip, multi-step SQL fold, expression column,
   * DQ metrics). */
-object MoreQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def dec(c: org.apache.spark.sql.Column, scale: Int = 4) =
-    c.cast(DecimalType(18, scale))
-  private def dsum(c: org.apache.spark.sql.Column, scale: Int = 4) =
-    sum(dec(c, scale)).cast(DoubleType)
+object MoreQueries extends QueryModule {
 
   // ── q16: GROUPING SETS + grouping() flags (SQL entry) ───────────────────
   def q16_grouping_sets(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
     s.sql(
       """SELECT CAST(grouping(o_orderstatus) AS INT) AS g_status,
         |       CAST(grouping(o_orderpriority) AS INT) AS g_prio,
@@ -39,8 +32,8 @@ object MoreQueries {
 
   // ── q17: correlated scalar subquery (Catalyst decorrelates to a join) ───
   def q17_correlated(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "part").createOrReplaceTempView("part")
-    t(s, dir, "lineitem").createOrReplaceTempView("lineitem")
+    Tables.load(s, dir, "part").createOrReplaceTempView("part")
+    Tables.load(s, dir, "lineitem").createOrReplaceTempView("lineitem")
     s.sql(
       """SELECT p_partkey, p_name, p_retailprice FROM part p
         |WHERE (SELECT COALESCE(AVG(l.l_quantity), 0) FROM lineitem l
@@ -54,7 +47,7 @@ object MoreQueries {
     val price = col("l_extendedprice")
     val band = when(price < 20000.0, "low")
       .when(price < 60000.0, "mid").otherwise("high")
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy(band.as("band"))
       .agg(count(lit(1)).as("n"), dsum(price).as("total"))
       .orderBy(col("band"))
@@ -66,7 +59,7 @@ object MoreQueries {
     // quartiles need a total order. Deliberately scoped to the supplier dim
     // (the smallest table); a fact-table global rank would not scale.
     val w = Window.orderBy(col("s_acctbal").desc, col("s_suppkey"))
-    t(s, dir, "supplier").select(
+    Tables.load(s, dir, "supplier").select(
       col("s_suppkey"), col("s_name"),
       ntile(4).over(w).cast(LongType).as("quartile"),
       percent_rank().over(w).cast(DoubleType).as("pr"),
@@ -78,7 +71,7 @@ object MoreQueries {
 
   // ── q20: as-of join (purchases ↔ latest prior click per user) ──────────
   def q20_asof_join(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val e = raw.withColumn("ts_us", graft.Tables.tsMicros(raw))
     val purchases = e.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts_us"))
@@ -93,14 +86,14 @@ object MoreQueries {
 
   // ── q21: UNION with set (distinct) semantics ────────────────────────────
   def q21_union_distinct(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
-      .union(t(s, dir, "supplier").select(col("s_nationkey")))
+    Tables.load(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
+      .union(Tables.load(s, dir, "supplier").select(col("s_nationkey")))
       .distinct()
       .orderBy(col("nationkey"))
 
   // ── q22: HAVING over grouped counts ─────────────────────────────────────
   def q22_having(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy(col("l_partkey"))
       .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("qty"))
       .filter(col("n") > 40)
@@ -108,7 +101,7 @@ object MoreQueries {
 
   // ── q23: math function surface ──────────────────────────────────────────
   def q23_math(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part").select(
+    Tables.load(s, dir, "part").select(
       col("p_partkey"),
       round(sqrt(col("p_retailprice")), 6).as("sqrt_p"),
       round(log(col("p_retailprice")), 6).as("ln_p"),
@@ -122,7 +115,7 @@ object MoreQueries {
 
   // ── q24: array function surface over the embedding column ───────────────
   def q24_array_funcs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings").select(
+    Tables.load(s, dir, "embeddings").select(
       col("vec_id"),
       size(col("embedding")).as("dim"),
       round(element_at(col("embedding"), 1).cast(DoubleType), 6).as("first_val"),
@@ -132,14 +125,14 @@ object MoreQueries {
 
   // ── q25: ORDER BY + LIMIT/OFFSET pagination ─────────────────────────────
   def q25_offset(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"))
       .orderBy(col("o_orderkey"))
       .offset(10).limit(20)
 
   // ── q26: date/time function surface ─────────────────────────────────────
   def q26_date_funcs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders").select(
+    Tables.load(s, dir, "orders").select(
       col("o_orderkey"),
       year(col("o_orderdate")).as("yr"),
       quarter(col("o_orderdate")).as("qtr"),
@@ -156,7 +149,7 @@ object MoreQueries {
 
   // ── q27: pivot (wide conditional aggregation) ───────────────────────────
   def q27_pivot(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .groupBy(col("o_orderpriority"))
       .pivot("o_orderstatus", Seq("F", "O", "P"))
       .count()
@@ -168,7 +161,7 @@ object MoreQueries {
 
   // ── q28: exact percentiles + dispersion statistics ──────────────────────
   def q28_stats(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         round(expr("percentile(l_extendedprice, 0.5)"), 4).as("median_price"),
@@ -181,7 +174,7 @@ object MoreQueries {
 
   // ── q29: regex function surface ─────────────────────────────────────────
   def q29_regex(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part").select(
+    Tables.load(s, dir, "part").select(
       col("p_partkey"),
       regexp_extract(col("p_name"), "([a-z]+)$", 1).as("last_word"),
       col("p_name").rlike("^[a-z]+ [a-z]+").as("two_words"),
@@ -190,8 +183,8 @@ object MoreQueries {
 
   // ── q30: multiset set operations (INTERSECT ALL / EXCEPT ALL) ──────────
   def q30_setops_all(s: SparkSession, dir: String): DataFrame = {
-    val cn = t(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
-    val sn = t(s, dir, "supplier").select(col("s_nationkey").as("nationkey"))
+    val cn = Tables.load(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
+    val sn = Tables.load(s, dir, "supplier").select(col("s_nationkey").as("nationkey"))
     cn.intersectAll(sn).withColumn("tag", lit("inter_all"))
       .unionByName(cn.exceptAll(sn).withColumn("tag", lit("except_all")))
       .select(col("tag"), col("nationkey"))
@@ -200,7 +193,7 @@ object MoreQueries {
 
   // ── q31: ordered string aggregation ─────────────────────────────────────
   def q31_list_agg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "supplier")
+    Tables.load(s, dir, "supplier")
       .groupBy(col("s_nationkey"))
       .agg(array_join(sort_array(collect_list(col("s_name"))), ",")
         .as("names"), count(lit(1)).as("n"))
@@ -208,7 +201,7 @@ object MoreQueries {
 
   // ── q32: aggregate semantics over empty input (NULL sums, 0 count) ─────
   def q32_empty_aggs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .filter(col("l_quantity") < 0)
       .agg(
         count(lit(1)).as("n"),
@@ -218,14 +211,14 @@ object MoreQueries {
   // ── q33: 6-table star join (TPC-H Q5 shape) — Catalyst join reorder +
   //        broadcast chain on the bounded dims ──────────────────────────
   def q33_star_join(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-    val o = t(s, dir, "orders").filter(
+    val c = Tables.load(s, dir, "customer")
+    val o = Tables.load(s, dir, "orders").filter(
       col("o_orderdate") >= lit("1996-01-01").cast(TimestampType) &&
       col("o_orderdate") < lit("1998-01-01").cast(TimestampType))
-    val l = t(s, dir, "lineitem")
-    val sup = t(s, dir, "supplier")
-    val n = broadcast(t(s, dir, "nation"))
-    val r = broadcast(t(s, dir, "region").filter(col("r_name") === "ASIA"))
+    val l = Tables.load(s, dir, "lineitem")
+    val sup = Tables.load(s, dir, "supplier")
+    val n = broadcast(Tables.load(s, dir, "nation"))
+    val r = broadcast(Tables.load(s, dir, "region").filter(col("r_name") === "ASIA"))
     c.join(o, c("c_custkey") === o("o_custkey"))
       .join(l, l("l_orderkey") === o("o_orderkey"))
       .join(sup, l("l_suppkey") === sup("s_suppkey") &&
@@ -242,7 +235,7 @@ object MoreQueries {
   def q34_latest_per_group(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .select(col("o_custkey"), col("o_orderkey"),
         col("o_orderdate").cast(DateType).as("d"),
         row_number().over(w).as("rn"))
@@ -252,7 +245,7 @@ object MoreQueries {
 
   // ── q35: RANGE-frame rolling window (7-day revenue per priority) ───────
   def q35_rolling_window(s: SparkSession, dir: String): DataFrame = {
-    val daily = t(s, dir, "orders")
+    val daily = Tables.load(s, dir, "orders")
       .groupBy(
         datediff(col("o_orderdate").cast(DateType),
           lit("1995-01-01").cast(DateType)).as("day_no"),
@@ -269,11 +262,11 @@ object MoreQueries {
   //         (RangeJoin turns point-in-[start,end) into a shuffle join on
   //         7-day buckets instead of a nested loop; see SCALE.md) ─────────
   def q36_range_join(s: SparkSession, dir: String): DataFrame = {
-    val intervals = t(s, dir, "orders")
+    val intervals = Tables.load(s, dir, "orders")
       .filter(col("o_orderkey") % 1000 === 0)
       .select(col("o_orderkey"), col("o_orderdate").as("w_start"),
         (col("o_orderdate") + expr("INTERVAL 7 DAYS")).as("w_end"))
-    val li = t(s, dir, "lineitem")
+    val li = Tables.load(s, dir, "lineitem")
       .select(col("l_shipdate"), col("l_quantity"))
     graft.operators.RangeJoin.pointInInterval(
         li, intervals, "l_shipdate", "w_start", "w_end",
@@ -285,7 +278,7 @@ object MoreQueries {
 
   // ── q37: UNPIVOT (wide→long reshape, the inverse of q27's pivot) ───────
   def q37_unpivot(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables.load(s, dir, "part")
       .select(col("p_partkey"),
         col("p_retailprice").cast(DoubleType).as("p_retailprice"),
         col("p_size").cast(DoubleType).as("p_size"))
@@ -296,7 +289,7 @@ object MoreQueries {
   // ── q38: ranking/distribution window zoo (ntile, percent_rank,
   //         cume_dist, first/last/nth_value) under a total order ─────────
   def q38_window_funcs(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
     s.sql(
       """SELECT o_orderkey,
         |  CAST(ntile(4) OVER w AS INT) AS quartile,
@@ -316,7 +309,7 @@ object MoreQueries {
 
   // ── q39: TRY_CAST null-on-failure semantics (string→int/date) ──────────
   def q39_try_cast(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "part").createOrReplaceTempView("part")
+    Tables.load(s, dir, "part").createOrReplaceTempView("part")
     s.sql(
       """SELECT p_partkey,
         |  TRY_CAST(p_name AS INT) AS bad_int,
@@ -328,8 +321,8 @@ object MoreQueries {
   // ── q40: correlated LATERAL subquery in FROM (decorrelated by
   //         Catalyst into a join, not a per-row loop) ────────────────────
   def q40_lateral(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "customer").createOrReplaceTempView("customer")
-    t(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.load(s, dir, "customer").createOrReplaceTempView("customer")
+    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
     s.sql(
       """SELECT c.c_custkey, t.n,
         |  CAST(t.total AS DOUBLE) AS total
@@ -345,7 +338,7 @@ object MoreQueries {
   //         training pipeline needs (TABLESAMPLE is engine/seed-bound;
   //         an md5-prefix predicate picks the same ~10% in any engine) ───
   def q41_hash_sample(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .filter(substring(md5(concat_ws("-",
         col("l_orderkey").cast("string"),
         col("l_linenumber").cast("string"))), 1, 2) < "1a")
@@ -358,7 +351,7 @@ object MoreQueries {
   //        reader, aggregate — oracle aggregates the parquet directly, so
   //        a hash match proves value-preserving CSV round-trip ───────────
   def p1_csv_roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val sample = t(s, dir, "lineitem")
+    val sample = Tables.load(s, dir, "lineitem")
       .filter(col("l_orderkey") % 100 === 0)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
         col("l_extendedprice"))
@@ -374,7 +367,7 @@ object MoreQueries {
   // ── p5: ORC sink/source round-trip — value-preserving format surface
   //        beyond parquet/CSV (oracle aggregates the parquet directly) ────
   def p5_orc_roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val slice = t(s, dir, "orders")
+    val slice = Tables.load(s, dir, "orders")
       .filter(col("o_orderkey") % 97 === 0)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
     val out = graft.Scratch.dir("p5_orc")
@@ -386,7 +379,7 @@ object MoreQueries {
 
   // ── p6: JSON-lines sink/source round-trip (schema re-inferred on read) ─
   def p6_json_roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val slice = t(s, dir, "orders")
+    val slice = Tables.load(s, dir, "orders")
       .filter(col("o_orderkey") % 97 === 0)
       .select(col("o_orderkey"), col("o_totalprice"))
     val out = graft.Scratch.dir("p6_json")
@@ -398,7 +391,7 @@ object MoreQueries {
 
   // ── q42: GROUP BY ALL (identical dialect text in both engines) ─────────
   def q42_group_by_all(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
     s.sql(
       """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
         | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
@@ -409,7 +402,7 @@ object MoreQueries {
   // ── q43: gap-filled time series — a generated date spine left-joined to
   //         daily aggregates, missing days coalesced to 0 ────────────────
   def q43_gap_fill(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
     s.sql(
       """WITH spine AS (
         |  SELECT explode(sequence(DATE '1995-01-01', DATE '1995-03-31',
@@ -430,7 +423,7 @@ object MoreQueries {
 
   // ── q44: aggregate FILTER clause (per-aggregate predicates) ────────────
   def q44_filter_clause(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
     s.sql(
       """SELECT o_orderstatus, COUNT(*) AS n,
         |  COUNT(*) FILTER (WHERE o_totalprice > 100000) AS n_big,
@@ -443,7 +436,7 @@ object MoreQueries {
 
   // ── q45: max_by/arg_max with a deterministic (value, key) tiebreak ─────
   def q45_argmax(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .groupBy(col("o_orderstatus"))
       .agg(
         // price extremes are unique per group in this data (verified at
@@ -455,7 +448,7 @@ object MoreQueries {
 
   // ── q46: JSON path extraction (e3's regex twin done properly) ──────────
   def q46_json_funcs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("event_id"),
         get_json_object(col("props"), "$.k").cast(IntegerType).as("k"))
       .groupBy((col("k") % 10).as("k_mod"))
@@ -464,7 +457,7 @@ object MoreQueries {
 
   // ── q47: string-function surface (levenshtein/translate/pads/parts) ────
   def q47_string_funcs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part").select(
+    Tables.load(s, dir, "part").select(
       col("p_partkey"),
       levenshtein(col("p_name"), reverse(col("p_name"))).cast(IntegerType)
         .as("lev_palin"),
@@ -477,7 +470,7 @@ object MoreQueries {
   // ── q48: CUBE — completes the grouping-analytics triple alongside
   //         q16 (GROUPING SETS) and q7 (ROLLUP) ───────────────────────────
   def q48_cube(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
     s.sql(
       """SELECT CAST(grouping(o_orderstatus) AS INT) AS g_status,
         |       CAST(grouping(o_orderpriority) AS INT) AS g_prio,
@@ -508,7 +501,7 @@ object MoreQueries {
   // ── p3: expression-column operator (§2A #8, python_udf → expr) ─────────
   def p3_expr_column(s: SparkSession, dir: String): DataFrame =
     Transform.withExprColumn(
-      t(s, dir, "lineitem")
+      Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_extendedprice"), col("l_discount")),
       "l_extendedprice * (1 - l_discount)", "net")
@@ -516,13 +509,13 @@ object MoreQueries {
 
   // ── p4: DQ metrics as data (§2A #11) ───────────────────────────────────
   def p4_dq_metrics(s: SparkSession, dir: String): DataFrame =
-    Quality.dqMetricsDf(t(s, dir, "orders"),
+    Quality.dqMetricsDf(Tables.load(s, dir, "orders"),
       nonnullCols = Seq("o_custkey", "o_totalprice"),
       timestampCol = Some("o_orderdate"))
 
   // ── t4: token counting — whitespace + BPE-ish subword estimate ─────────
   def t4_token_count(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(
+    Tables.load(s, dir, "documents").select(
       col("doc_id"),
       graft.functions.Text.tokenCount(col("text")).cast(IntegerType)
         .as("n_tokens"),
@@ -540,7 +533,7 @@ object MoreQueries {
   //        percentiles. If a sketch ever drifts out of its published
   //        bound, the flag flips to false and the hash check fails. ──────
   def a1_approx(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem").agg(
+    Tables.load(s, dir, "lineitem").agg(
       count_distinct(col("l_partkey")).as("exact_parts"),
       count_distinct(col("l_orderkey")).as("exact_orders"),
       approx_count_distinct(col("l_partkey")).as("ap"),

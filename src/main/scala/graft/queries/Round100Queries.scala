@@ -37,15 +37,12 @@ import graft.functions.NwAlignExpr
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round100Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round100Queries extends QueryModule {
 
   // ── q144: Needleman–Wunsch over paired user event strings ─────────────
 
   def q144_needleman_wunsch(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     val strs = ev
       .select(col("user_id"),
         unix_micros(Tables.tsMicros(ev)).as("us"), col("event_id"),
@@ -76,7 +73,7 @@ object Round100Queries {
 
   def m34_quadtree(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.ImageExprs
-    val px = t(s, dir, "documents").select(col("doc_id"),
+    val px = Tables.load(s, dir, "documents").select(col("doc_id"),
         ImageExprs.decodePixels(
           ImageExprs.encodeImageFromText(col("text"), "pgm", 8, 8)).as("px"))
       .select(col("doc_id"), posexplode(col("px")).as(Seq("i", "v")))
@@ -105,7 +102,7 @@ object Round100Queries {
 
   def d46_dedup_funnel(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val base = t(s, dir, "documents")
+    val base = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("n_chars"))
       .localCheckpoint(true)
     def survivors(df: DataFrame, sigExpr: String): DataFrame =

@@ -31,10 +31,7 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round101Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round101Queries extends QueryModule {
 
   // ── p51: column lineage of the q3 join+agg plan ───────────────────────
 
@@ -49,7 +46,7 @@ object Round101Queries {
   // ── t56: ROC operating points ─────────────────────────────────────────
 
   def t56_roc_points(s: SparkSession, dir: String): DataFrame = {
-    val scored = t(s, dir, "documents").select(col("doc_id"),
+    val scored = Tables.load(s, dir, "documents").select(col("doc_id"),
         (col("doc_id") * 2654435761L % 1000L).as("sm"))
       .withColumn("label",
         when(col("sm") + col("doc_id") * 40503L % 600L >= 800L, 1L)
@@ -76,7 +73,7 @@ object Round101Queries {
   def m35_hist_equalization(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.ImageExprs
     import org.apache.spark.sql.expressions.Window
-    val px = t(s, dir, "documents").select(col("doc_id"),
+    val px = Tables.load(s, dir, "documents").select(col("doc_id"),
         ImageExprs.decodePixels(
           ImageExprs.encodeImageFromText(col("text"), "pgm", 8, 8)).as("px"))
       .select(col("doc_id"), explode(col("px")).as("v"))

@@ -31,16 +31,13 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round102Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round102Queries extends QueryModule {
 
   // ── q145: exact price-volume-mix decomposition ────────────────────────
 
   def q145_price_volume_mix(s: SparkSession, dir: String): DataFrame = {
-    val l = t(s, dir, "lineitem")
-    val li = l.join(t(s, dir, "part").select(col("p_partkey"),
+    val l = Tables.load(s, dir, "lineitem")
+    val li = l.join(Tables.load(s, dir, "part").select(col("p_partkey"),
         col("p_brand").as("brand")),
         col("p_partkey") === col("l_partkey"))
       .withColumn("yr", year(Tables.tsMicros(l, "l_shipdate")))
@@ -80,7 +77,7 @@ object Round102Queries {
 
   def m36_ordered_dither(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.ImageExprs
-    t(s, dir, "documents").select(col("doc_id"),
+    Tables.load(s, dir, "documents").select(col("doc_id"),
         ImageExprs.decodePixels(
           ImageExprs.encodeImageFromText(col("text"), "pgm", 8, 8)).as("px"))
       .select(col("doc_id"), posexplode(col("px")).as(Seq("i", "v")))
@@ -104,7 +101,7 @@ object Round102Queries {
 
   def t57_markov_entropy_rate(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     val e = ev.select(col("user_id"), col("event_type"),
         unix_micros(Tables.tsMicros(ev)).as("us"), col("event_id"))
       .withColumn("nxt", lead(col("event_type"), 1).over(

@@ -28,15 +28,12 @@ import graft.functions.BlobCountExpr
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round103Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round103Queries extends QueryModule {
 
   // ── q146: pairwise functional-dependency discovery ────────────────────
 
   def q146_fd_discovery(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = Tables.load(s, dir, "orders")
     // Round-14: the profiled cost was hashing 25× expanded STRING-cast
     // key tuples (guide §2.3 "narrower types"). Distinct counts are
     // invariant under the injective int→string casts, so the Expand now
@@ -73,7 +70,7 @@ object Round103Queries {
 
   def m37_blob_count(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.ImageExprs
-    t(s, dir, "documents").select(col("doc_id"),
+    Tables.load(s, dir, "documents").select(col("doc_id"),
         ImageExprs.decodePixels(
           ImageExprs.encodeImageFromText(col("text"), "pgm", 8, 8)).as("px"))
       .select(col("doc_id"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import StreamConf.withStreamShuffle
 
 /** Hundred-fourth batch — crawl-frontier URL canonicalization, batch
   * and streaming:
@@ -27,19 +28,9 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round104Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round104Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private def withStreamShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
 
   /** The two deterministic raw variants per document. */
   private def rawUrls(docs: DataFrame): DataFrame =
@@ -71,7 +62,7 @@ object Round104Queries {
   // ── d47: per-document canonicalization audit ──────────────────────────
 
   def d47_url_canonicalization(s: SparkSession, dir: String): DataFrame =
-    canonical(rawUrls(t(s, dir, "documents")))
+    canonical(rawUrls(Tables.load(s, dir, "documents")))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_variants"),
         countDistinct(col("canon")).as("n_canon"),
@@ -81,7 +72,7 @@ object Round104Queries {
   // ── e34: streaming ingest dedup on the canonical form ─────────────────
 
   def e34_stream_url_dedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val name = s"stream_url_dedup_${streamSeq.incrementAndGet()}"
     val stream = s.readStream.schema(docs.schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)

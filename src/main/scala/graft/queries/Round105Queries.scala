@@ -40,16 +40,13 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round105Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round105Queries extends QueryModule {
 
   // ── t58: Huffman coding economics per source ──────────────────────────
 
   def t58_huffman_economics(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.HuffmanCostExpr
-    val freq = t(s, dir, "documents")
+    val freq = Tables.load(s, dir, "documents")
       .filter(length(col("text")) > 0)
       .select(col("source"), explode(split(col("text"), "")).as("x"))
       .groupBy(col("source"), col("x")).agg(count(lit(1)).as("c"))
@@ -80,7 +77,7 @@ object Round105Queries {
 
   def t59_isotonic_calibration(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.PavaFitExpr
-    val bins = t(s, dir, "documents")
+    val bins = Tables.load(s, dir, "documents")
       .select(col("source"), expr("least(n_chars div 50, 10L)").as("bin"),
         (col("lang") === "en").cast("long").as("y"))
       .groupBy(col("source"), col("bin"))

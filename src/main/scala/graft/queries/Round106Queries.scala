@@ -43,16 +43,13 @@ import graft.operators.DriverPath
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round106Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round106Queries extends QueryModule {
 
   // ── q147: V-optimal histogram error curve per order priority ──────────
 
   def q147_voptimal_curve(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.VOptCurveExpr
-    val series = t(s, dir, "orders")
+    val series = Tables.load(s, dir, "orders")
       .groupBy(col("o_orderpriority").as("pri"),
         expr("(dayofyear(o_orderdate) - 1) div 10").cast("long").as("bk"))
       .agg(count(lit(1)).as("y"))
@@ -70,10 +67,10 @@ object Round106Queries {
   // ── q148: weighted WL color refinement on the nation trade graph ──────
 
   def q148_wl_refinement(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+    val raw = Tables.load(s, dir, "lineitem")
+      .join(Tables.load(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables.load(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .join(Tables.load(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("c_nationkey").as("a"), col("s_nationkey").as("b"))
       .agg(count(lit(1)).as("w"))
     val maxw = raw.agg(max(col("w")).as("maxw"))
@@ -81,7 +78,7 @@ object Round106Queries {
       .select(col("a"), col("b"), expr("(3 * w) div (maxw + 1)").as("wbin"))
       .localCheckpoint(true) // tiny (≤625 rows); reused 6× across rounds
     wlColors(s, e)
-      .join(t(s, dir, "nation").select(col("n_nationkey").as("nk"),
+      .join(Tables.load(s, dir, "nation").select(col("n_nationkey").as("nk"),
         col("n_name")), "nk")
       .select(col("n_name"), col("color1"), col("color2"), col("color3"))
       .orderBy(col("n_name"))
@@ -178,7 +175,7 @@ object Round106Queries {
 
   def q149_inclusion_deps(s: SparkSession, dir: String): DataFrame = {
     val d = Registry.map { case (cid, tbl, c) =>
-      t(s, dir, tbl).select(lit(cid).as("cid"),
+      Tables.load(s, dir, tbl).select(lit(cid).as("cid"),
         col(c).cast("long").as("v")).distinct()
     }.reduce(_ unionByName _)
     val sizes = d.groupBy(col("cid")).agg(count(lit(1)).as("n_a"))

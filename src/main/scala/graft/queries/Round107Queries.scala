@@ -41,17 +41,14 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round107Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round107Queries extends QueryModule {
 
   // ── q150: association rules over order baskets of part brands ─────────
 
   def q150_basket_rules(s: SparkSession, dir: String): DataFrame = {
-    val baskets = t(s, dir, "lineitem")
+    val baskets = Tables.load(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey"))
-      .join(broadcast(t(s, dir, "part")
+      .join(broadcast(Tables.load(s, dir, "part")
         .select(col("p_partkey"), col("p_brand").as("item"))),
         col("l_partkey") === col("p_partkey"))
       .select(col("ok"), col("item")).distinct()
@@ -91,7 +88,7 @@ object Round107Queries {
 
   def q151_dtw_profiles(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.DtwExpr
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     val prof = ev
       .select(col("event_type").as("et"),
         hour(Tables.tsMicros(ev)).cast("long").as("hr"))
@@ -123,7 +120,7 @@ object Round107Queries {
     // d5's integer lattice: quantize to round(x·10⁶) longs once, so every
     // pairwise squared distance is exact 64-bit arithmetic inside one
     // codegen'd loop (L2SqLong) — no decimal folds on the O(N²) hot path
-    val v = graft.Tables.spread(t(s, dir, "embeddings")
+    val v = graft.Tables.spread(Tables.load(s, dir, "embeddings")
       .select(col("vec_id").as("id"),
         transform(col("embedding"),
           x => round(x.cast(DoubleType) * lit(1e6)).cast("long")).as("q")))
@@ -152,7 +149,7 @@ object Round107Queries {
         .as("lsum"))
       .select(col("pid"),
         round(col("lsum").cast(DoubleType) / lit(LofK), 6).as("lof"))
-    lof.join(t(s, dir, "embeddings").select(col("vec_id"), col("label")),
+    lof.join(Tables.load(s, dir, "embeddings").select(col("vec_id"), col("label")),
         col("pid") === col("vec_id"))
       .select(col("vec_id"), col("label"), col("lof"))
       .orderBy(col("lof").desc, col("vec_id"))

@@ -40,16 +40,13 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round108Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round108Queries extends QueryModule {
 
   // ── q152: Viterbi regime decoding over monthly priority demand ────────
 
   def q152_viterbi_regimes(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.ViterbiExpr
-    val base = t(s, dir, "orders")
+    val base = Tables.load(s, dir, "orders")
       .groupBy(col("o_orderpriority").as("pri"),
         ((year(col("o_orderdate")) - 1992) * 12 +
           month(col("o_orderdate")) - 1).cast("long").as("mb"))
@@ -95,7 +92,7 @@ object Round108Queries {
       } yield Seq(KeyCols(i), KeyCols(j)))
 
   def p52_key_discovery(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = Tables.load(s, dir, "orders")
     // one scan: explode every combo's (name, serialized key) per row;
     // \u0001 can't occur in these columns, so the serialization is
     // injective and distinct-on-string == distinct-on-tuple
@@ -129,9 +126,9 @@ object Round108Queries {
   // ── s25: item-item collaborative filtering over order baskets ─────────
 
   def s25_item_cf(s: SparkSession, dir: String): DataFrame = {
-    val baskets = t(s, dir, "lineitem")
+    val baskets = Tables.load(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey"))
-      .join(broadcast(t(s, dir, "part")
+      .join(broadcast(Tables.load(s, dir, "part")
         .select(col("p_partkey"), col("p_brand").as("item"))),
         col("l_partkey") === col("p_partkey"))
       .select(col("ok"), col("item")).distinct()

@@ -38,18 +38,15 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round109Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round109Queries extends QueryModule {
 
   // ── q153: eccentricity census on the thresholded trade graph ──────────
 
   def q153_eccentricity(s: SparkSession, dir: String): DataFrame = {
-    val w = t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+    val w = Tables.load(s, dir, "lineitem")
+      .join(Tables.load(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables.load(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .join(Tables.load(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
       .filter(col("c_nationkey") =!= col("s_nationkey"))
       .groupBy(col("c_nationkey").as("u"), col("s_nationkey").as("v"))
       .agg(count(lit(1)).as("w"))
@@ -68,7 +65,7 @@ object Round109Queries {
       .agg(max(col("d")).as("ecc"), count(lit(1)).as("n_reachable"))
     val bounds = ecc.agg(max(col("ecc")).as("diam"), min(col("ecc")).as("radius"))
     ecc.crossJoin(broadcast(bounds))
-      .join(t(s, dir, "nation").select(col("n_nationkey").as("src"),
+      .join(Tables.load(s, dir, "nation").select(col("n_nationkey").as("src"),
         col("n_name")), Seq("src"))
       .select(col("n_name"), col("ecc"), col("n_reachable"),
         (col("ecc") === col("radius")).cast(LongType).as("is_center"),
@@ -81,7 +78,7 @@ object Round109Queries {
   private val GapUs = 3600L * 1000000L // 1 hour in microseconds
 
   def q154_seq_patterns(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val ev = raw.select(col("user_id"), col("event_type").as("et"),
       unix_micros(Tables.tsMicros(raw)).as("tu"))
     val nUsers = ev.agg(countDistinct(col("user_id")).as("n_users"))
@@ -123,7 +120,7 @@ object Round109Queries {
 
   def t61_dictionary_scan(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.AhoCountExpr
-    val counts = t(s, dir, "documents")
+    val counts = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         AhoCountExpr.ahoCount(col("text"), ScanTerms).as("c"))
       .select(col("doc_id"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
+import StreamConf.withStreamShuffle
 
 /** Tenth batch — the tokenizer/decontamination tail of a training-data
   * pipeline:
@@ -23,10 +24,7 @@ import graft.Tables
   * contract as the other d/t families — the reference's transform
   * dialect is open, /root/reference/tools.py:58-65).
   */
-object Round10Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round10Queries extends QueryModule {
 
   // ── d17: decontamination report — eval split = doc_id % 10 == 0, 4-gram
   //        collisions (the published recipes use 13-grams; the synthetic
@@ -36,7 +34,7 @@ object Round10Queries {
   //        operator scaladoc for the 100 TB shape. ──────────────────────
   def d17_decontaminate(s: SparkSession, dir: String): DataFrame =
     graft.operators.Decontaminate.report(
-      t(s, dir, "documents"), col("doc_id") % 10 === 0, n = 4)
+      Tables.load(s, dir, "documents"), col("doc_id") % 10 === 0, n = 4)
 
   // ── t17: BPE merge training — 3 rounds over the word-type table; each
   //        round one pair-count aggregate + a 1-row argmax. The output is
@@ -45,7 +43,7 @@ object Round10Queries {
   //        persist. ───────────────────────────────────────────────────────
   def t17_bpe_train(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val words = t(s, dir, "documents")
+    val words = Tables.load(s, dir, "documents")
       .select(explode(Text.tokens(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
     graft.operators.Bpe.trainMerges(s, words, rounds = 3)
@@ -61,7 +59,7 @@ object Round10Queries {
   //        oracle proves ingest-time decontamination computes exactly
   //        the batch answer. ───────────────────────────────────────────
   def e15_stream_decontaminate(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val name = s"stream_decontaminate_${streamSeq.incrementAndGet()}"
     val evalSet =
       graft.operators.Decontaminate.evalGrams(docs, col("doc_id") % 10 === 0, 4)
@@ -84,13 +82,6 @@ object Round10Queries {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private def withStreamShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
   // ── t19: BPE apply — tokenize the whole corpus with t17's learned
   //        merges and report per-doc compression. The corpus never loops:
   //        each word type carries its post-merge symbol count
@@ -99,7 +90,7 @@ object Round10Queries {
   //        the same n-gram-keyed join shape as t9/TF-IDF. ───────────────
   def t19_bpe_apply(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val toks = t(s, dir, "documents")
+    val toks = Tables.load(s, dir, "documents")
       .select(col("doc_id"), explode(Text.tokens(col("text"))).as("w"))
     val words = toks.groupBy(col("w")).agg(count(lit(1)).as("freq"))
     val seg = graft.operators.Bpe.segmented(s, words, rounds = 3)
@@ -124,7 +115,7 @@ object Round10Queries {
   //        never pairwise); |V| is a 1-row broadcast. ────────────────────
   def t18_loo_lm(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val withSh = t(s, dir, "documents").select(
+    val withSh = Tables.load(s, dir, "documents").select(
       col("doc_id"),
       Text.shingles(col("text"), 3).as("t3"),
       Text.shingles(col("text"), 2).as("t2"))
@@ -139,7 +130,7 @@ object Round10Queries {
     val g3 = pairs.groupBy(col("tri")).agg(count(lit(1)).as("c3g"))
     val d2 = bis.groupBy(col("doc_id"), col("bi")).agg(count(lit(1)).as("c2d"))
     val g2 = bis.groupBy(col("bi")).agg(count(lit(1)).as("c2g"))
-    val vocab = t(s, dir, "documents")
+    val vocab = Tables.load(s, dir, "documents")
       .select(explode(Text.tokens(col("text"))).as("w"))
       .agg(countDistinct(col("w")).as("vsz"))
     d3.join(g3, "tri")

@@ -31,17 +31,14 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round110Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round110Queries extends QueryModule {
 
   /** Transaction-count-weighted nation trade edges (u ≠ v). */
   private def tradeWeights(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+    Tables.load(s, dir, "lineitem")
+      .join(Tables.load(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables.load(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .join(Tables.load(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
       .filter(col("c_nationkey") =!= col("s_nationkey"))
       .groupBy(col("c_nationkey").cast(LongType).as("u"),
         col("s_nationkey").cast(LongType).as("v"))
@@ -128,7 +125,7 @@ object Round110Queries {
       (n, r6(bc.getOrElse(n, JBD.ZERO).doubleValue() / 2)))
       .toDF("nk", "betweenness")
     broadcast(scores)
-      .join(t(s, dir, "nation").select(col("n_nationkey").cast(LongType)
+      .join(Tables.load(s, dir, "nation").select(col("n_nationkey").cast(LongType)
         .as("nk"), col("n_name")), Seq("nk"))
       .select(col("n_name"), col("betweenness"))
       .orderBy(col("n_name"))
@@ -161,9 +158,9 @@ object Round110Queries {
       .withColumn("rnk", row_number().over(Window.orderBy(col("i")))
         .cast(LongType))
     matched
-      .join(t(s, dir, "nation").select(col("n_nationkey").as("u"),
+      .join(Tables.load(s, dir, "nation").select(col("n_nationkey").as("u"),
         col("n_name").as("name_u")), Seq("u"))
-      .join(t(s, dir, "nation").select(col("n_nationkey").as("v"),
+      .join(Tables.load(s, dir, "nation").select(col("n_nationkey").as("v"),
         col("n_name").as("name_v")), Seq("v"))
       .select(col("name_u"), col("name_v"), col("w"), col("rnk"))
       .orderBy(col("rnk"))

@@ -35,16 +35,13 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round111Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round111Queries extends QueryModule {
 
   // ── t62: BWT compressibility probe ────────────────────────────────────
 
   def t62_bwt_probe(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.BwtExpr
-    val p = t(s, dir, "documents")
+    val p = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         concat(substring(regexp_replace(lower(col("text")), "[^a-z ]", ""),
           1, 48), lit("|")).as("p"))
@@ -66,10 +63,10 @@ object Round111Queries {
   // ── q157: maximum spanning backbone (Kruskal) ─────────────────────────
 
   private def tradeWeights(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+    Tables.load(s, dir, "lineitem")
+      .join(Tables.load(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables.load(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .join(Tables.load(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
       .filter(col("c_nationkey") =!= col("s_nationkey"))
       .groupBy(col("c_nationkey").cast(LongType).as("u"),
         col("s_nationkey").cast(LongType).as("v"))
@@ -97,9 +94,9 @@ object Round111Queries {
         col("i"))
       .withColumn("rnk", row_number().over(Window.orderBy(col("i")))
         .cast(LongType))
-      .join(t(s, dir, "nation").select(col("n_nationkey").cast(LongType)
+      .join(Tables.load(s, dir, "nation").select(col("n_nationkey").cast(LongType)
         .as("u"), col("n_name").as("name_u")), Seq("u"))
-      .join(t(s, dir, "nation").select(col("n_nationkey").cast(LongType)
+      .join(Tables.load(s, dir, "nation").select(col("n_nationkey").cast(LongType)
         .as("v"), col("n_name").as("name_v")), Seq("v"))
       .select(col("name_u"), col("name_v"), col("w"), col("rnk"))
       .orderBy(col("rnk"))
@@ -108,7 +105,7 @@ object Round111Queries {
   // ── q158: max rally / max drawdown per priority ───────────────────────
 
   def q158_drawdown_rally(s: SparkSession, dir: String): DataFrame = {
-    val daily = t(s, dir, "orders")
+    val daily = Tables.load(s, dir, "orders")
       .groupBy(col("o_orderpriority").as("pri"),
         to_date(col("o_orderdate")).as("d"))
       // floor, not cast: DuckDB CAST(double AS BIGINT) rounds to nearest

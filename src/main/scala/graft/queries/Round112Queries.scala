@@ -35,15 +35,12 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round112Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round112Queries extends QueryModule {
 
   // ── q159: 1-D Wasserstein distance between hourly profiles ────────────
 
   def q159_wasserstein_drift(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val h = raw.select(col("event_type").as("et"),
         hour(Tables.tsMicros(raw)).cast(LongType).as("hr"))
       .groupBy(col("et"), col("hr")).agg(count(lit(1)).as("c"))
@@ -86,9 +83,9 @@ object Round112Queries {
   // ── q160: largest-remainder apportionment of revenue basis points ─────
 
   def q160_largest_remainder(s: SparkSession, dir: String): DataFrame = {
-    val spend = t(s, dir, "orders")
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(s, dir, "nation")),
+    val spend = Tables.load(s, dir, "orders")
+      .join(Tables.load(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables.load(s, dir, "nation")),
         col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"))
       .agg(sum(floor(col("o_totalprice") * 100).cast(LongType)).as("cents"))
@@ -111,7 +108,7 @@ object Round112Queries {
 
   def t63_lz78_probe(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Lz78Expr
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         substring(regexp_replace(lower(col("text")), "[^a-z ]", ""),
           1, 48).as("p"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
+import StreamConf.withStreamShuffle
 
 /** Hundred-thirteenth batch — stable assignment, blob labeling, and
   * a streaming drift twin:
@@ -35,33 +36,23 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round113Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round113Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private def withStreamShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
 
   // ── q161: Gale–Shapley stable matching on trade preferences ───────────
 
   def q161_stable_matching(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.StableMatchExpr
-    val wbase = t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+    val wbase = Tables.load(s, dir, "lineitem")
+      .join(Tables.load(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables.load(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .join(Tables.load(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("c_nationkey").cast(LongType).as("u"),
         col("s_nationkey").cast(LongType).as("v"))
       .agg(count(lit(1)).as("w"))
       .localCheckpoint(true)
-    val nk = t(s, dir, "nation")
+    val nk = Tables.load(s, dir, "nation")
       .select(col("n_nationkey").cast(LongType).as("k"))
     val grid = nk.as("a").crossJoin(nk.as("b"))
       .select(col("a.k").as("u"), col("b.k").as("v"))
@@ -85,9 +76,9 @@ object Round113Queries {
       .select(posexplode(col("pC")).as(Seq("i", "j")))
       .select(col("i").cast(LongType).as("i"), col("j"))
     matched
-      .join(t(s, dir, "nation").select(col("n_nationkey").cast(LongType)
+      .join(Tables.load(s, dir, "nation").select(col("n_nationkey").cast(LongType)
         .as("i"), col("n_name").as("cust_nation")), Seq("i"))
-      .join(t(s, dir, "nation").select(col("n_nationkey").cast(LongType)
+      .join(Tables.load(s, dir, "nation").select(col("n_nationkey").cast(LongType)
         .as("j"), col("n_name").as("supp_nation")), Seq("j"))
       .join(wbase.select(col("u").as("i"), col("v").as("j"), col("w")),
         Seq("i", "j"), "left")
@@ -100,7 +91,7 @@ object Round113Queries {
 
   def m38_blob_sizes(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.{BlobSizesExpr, ImageExprs}
-    t(s, dir, "documents").select(col("doc_id"),
+    Tables.load(s, dir, "documents").select(col("doc_id"),
         BlobSizesExpr.blobSizes(ImageExprs.decodePixels(
           ImageExprs.encodeImageFromText(col("text"), "pgm", 8, 8)), 105)
           .as("sz"))
@@ -114,7 +105,7 @@ object Round113Queries {
   // ── e35: streaming twin of the Wasserstein drift monitor ──────────────
 
   def e35_stream_wasserstein(s: SparkSession, dir: String): DataFrame = {
-    val schema = t(s, dir, "events").schema
+    val schema = Tables.load(s, dir, "events").schema
     val name = s"stream_emd_${streamSeq.incrementAndGet()}"
     val raw = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)

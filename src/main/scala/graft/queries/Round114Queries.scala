@@ -29,10 +29,7 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round114Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round114Queries extends QueryModule {
 
   // ── q162: consistent-hashing placement + resharding audit ─────────────
 
@@ -41,14 +38,14 @@ object Round114Queries {
 
   def q162_consistent_hashing(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.CountMin
-    val ring = t(s, dir, "nation")
+    val ring = Tables.load(s, dir, "nation")
       .select(col("n_nationkey").cast(LongType).as("nk"))
       .crossJoin(broadcast(s.range(0, 8).select(col("id").as("vn"))))
       .select(col("nk"),
         CountMin.mix61(col("nk") * 31 + col("vn") + 1,
           RingRow._1, RingRow._2).as("pos"))
       .localCheckpoint(true)
-    val keys = t(s, dir, "customer")
+    val keys = Tables.load(s, dir, "customer")
       .select(col("c_custkey").as("ck"),
         CountMin.mix61(col("c_custkey"), KeyRow._1, KeyRow._2).as("kpos"))
       .localCheckpoint(true)
@@ -79,7 +76,7 @@ object Round114Queries {
         col("x.ck") === col("y.ck") && col("x.owner") =!= col("y.owner"))
       .groupBy(col("x.owner").as("owner"))
       .agg(count(lit(1)).as("moved_in"))
-    t(s, dir, "nation")
+    Tables.load(s, dir, "nation")
       .select(col("n_nationkey").cast(LongType).as("nk"), col("n_name"))
       .crossJoin(broadcast(rem))
       .join(c1.select(col("owner").as("nk"), col("n_before")),
@@ -100,7 +97,7 @@ object Round114Queries {
 
   def m39_morphology(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.{ImageExprs, MorphExpr}
-    t(s, dir, "documents").select(col("doc_id"),
+    Tables.load(s, dir, "documents").select(col("doc_id"),
         MorphExpr.morphology(ImageExprs.decodePixels(
           ImageExprs.encodeImageFromText(col("text"), "pgm", 8, 8)), 105)
           .as("m"))

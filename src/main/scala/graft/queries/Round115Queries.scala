@@ -32,10 +32,7 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round115Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round115Queries extends QueryModule {
 
   // ── q163: spectral bisection by deflated power iteration ──────────────
 
@@ -43,10 +40,10 @@ object Round115Queries {
 
   def q163_spectral_bisection(s: SparkSession, dir: String): DataFrame = {
     import java.math.{BigDecimal => JBD, RoundingMode}
-    val w = t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+    val w = Tables.load(s, dir, "lineitem")
+      .join(Tables.load(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables.load(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .join(Tables.load(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
       .filter(col("c_nationkey") =!= col("s_nationkey"))
       .groupBy(col("c_nationkey").cast(LongType).as("u"),
         col("s_nationkey").cast(LongType).as("v"))
@@ -120,7 +117,7 @@ object Round115Queries {
       (n, r6(fx(n)), if (fx(n) >= 0) "P" else "N", cut))
       .toDF("n", "fiedler_score", "side", "cut_edges")
     broadcast(scores)
-      .join(t(s, dir, "nation").select(col("n_nationkey").cast(LongType)
+      .join(Tables.load(s, dir, "nation").select(col("n_nationkey").cast(LongType)
         .as("n"), col("n_name")), Seq("n"))
       .select(col("n_name"), col("fiedler_score"), col("side"),
         col("cut_edges"))
@@ -131,7 +128,7 @@ object Round115Queries {
 
   def t64_distinct_substrings(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.DistinctSubstringsExpr
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         substring(regexp_replace(lower(col("text")), "[^a-z ]", ""),
           1, 48).as("p"))

@@ -39,16 +39,13 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round116Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round116Queries extends QueryModule {
 
   // ── t65: duplicate-bigram and top-bigram repetition fractions ─────────
 
   def t65_gopher_repetition(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), Text.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
       .withColumn("bg", expr(
@@ -69,7 +66,7 @@ object Round116Queries {
 
   def t66_mattr(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), Text.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 20)
       .select(col("doc_id"),
@@ -85,7 +82,7 @@ object Round116Queries {
   // ── p53: deterministic hash-priority weighted sample ──────────────────
 
   def p53_hash_priority_sample(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("n_chars").cast(LongType).as("w"),
         expr("(doc_id * 2654435761) % 1000003").as("h"))
       .select(col("doc_id"), col("w"), col("h"),

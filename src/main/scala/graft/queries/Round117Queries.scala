@@ -48,10 +48,7 @@ import StreamConf.withStreamShuffle
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round117Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round117Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -69,7 +66,7 @@ object Round117Queries {
   // ── t67: per-source language-mixture entropy ──────────────────────────
 
   def t67_lang_mixture(s: SparkSession, dir: String): DataFrame = {
-    val counts = t(s, dir, "documents")
+    val counts = Tables.load(s, dir, "documents")
       .groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("c"))
     val langs = counts.groupBy(col("source"))
@@ -87,7 +84,7 @@ object Round117Queries {
 
   def d48_source_overlap(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val sh = t(s, dir, "documents")
+    val sh = Tables.load(s, dir, "documents")
       .select(col("source"), Text.tokens(col("text")).as("t"))
       // <3 tokens → no 3-shingles. Guard explicitly: Spark's
       // sequence(1, 0) DESCENDS ([1, 0]) where DuckDB's range(2, 2)
@@ -131,7 +128,7 @@ object Round117Queries {
         .stripMargin).as("top_bp"))
 
   def e36_stream_quality_gate(s: SparkSession, dir: String): DataFrame = {
-    val schema = t(s, dir, "documents").schema
+    val schema = Tables.load(s, dir, "documents").schema
     val name = s"stream_gate_${streamSeq.incrementAndGet()}"
     val raw = s.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
@@ -161,7 +158,7 @@ object Round117Queries {
 
   def m40_image_entropy(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.ImageExprs
-    val px = t(s, dir, "documents")
+    val px = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         explode(ImageExprs.decodePixels(ImageExprs.encodeImageFromText(
           col("text"), "pgm", 8, 8))).as("v"))

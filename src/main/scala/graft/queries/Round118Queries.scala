@@ -39,17 +39,14 @@ import StreamConf.withStreamShuffle
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round118Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round118Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── s26: centroid drift on the quantized lattice ──────────────────────
 
   def s26_centroid_drift(s: SparkSession, dir: String): DataFrame = {
-    val q = t(s, dir, "embeddings")
+    val q = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), expr(
         "transform(embedding, x -> cast(round(cast(x as double) * 1000) as bigint))")
         .as("qv"))
@@ -91,7 +88,7 @@ object Round118Queries {
 
   def t68_oov_rate(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val vocab = docs.filter(col("source") =!= "src0")
       .select(explode(Text.tokens(col("text"))).as("w"))
       .distinct()
@@ -111,7 +108,7 @@ object Round118Queries {
 
   def e37_stream_oov_monitor(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val vocab = docs.filter(col("source") =!= "src0")
       .select(explode(Text.tokens(col("text"))).as("w"))
       .distinct()

@@ -36,17 +36,14 @@ import StreamConf.withStreamShuffle
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round119Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round119Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── q164: exact winsorized mean via the distinct-value CDF ────────────
 
   def q164_winsorized_mean(s: SparkSession, dir: String): DataFrame = {
-    val v = t(s, dir, "orders")
+    val v = Tables.load(s, dir, "orders")
       .select(expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").as("x"))
     val dv = v.groupBy(col("x")).agg(count(lit(1)).as("c"))
     val cum = graft.operators.Rank.prefixSum(dv, "cum", col("c"), col("x"))
@@ -79,7 +76,7 @@ object Round119Queries {
 
   def t69_burstiness(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val nDocs = docs.agg(count(lit(1)).as("nd"))
     val cnt = docs
       .select(col("doc_id"), explode(Text.tokens(col("text"))).as("w"))
@@ -101,7 +98,7 @@ object Round119Queries {
   // ── e38: streaming centroid-drift monitor ─────────────────────────────
 
   def e38_stream_centroid_drift(s: SparkSession, dir: String): DataFrame = {
-    val schema = t(s, dir, "embeddings").schema
+    val schema = Tables.load(s, dir, "embeddings").schema
     val name = s"stream_drift_${streamSeq.incrementAndGet()}"
     val raw = s.readStream.schema(schema)
       .option("pathGlobFilter", "embeddings.parquet").parquet(dir)

@@ -24,10 +24,7 @@ import graft.Tables
   * contract as the other families — the reference's transform dialect
   * is open, /root/reference/tools.py:58-65).
   */
-object Round11Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round11Queries extends QueryModule {
 
   // ── s8: k-means (k=4, 2 Lloyd updates, seeds = 4 lowest vec_ids) —
   //        final assignment (vec_id, cluster, d2). Centroids broadcast;
@@ -35,7 +32,7 @@ object Round11Queries {
   //        k·d-group shuffle. ──────────────────────────────────────────
   def s8_kmeans(s: SparkSession, dir: String): DataFrame =
     graft.operators.Kmeans
-      .lloyd(t(s, dir, "embeddings"), "vec_id", "embedding", k = 4, iters = 2)
+      .lloyd(Tables.load(s, dir, "embeddings"), "vec_id", "embedding", k = 4, iters = 2)
       .select(col("id").as("vec_id"), col("c").as("cluster"), col("d2"))
       .orderBy(col("vec_id"))
 
@@ -45,7 +42,7 @@ object Round11Queries {
   //        the corpus side is one explode + one aggregate. ─────────────
   def t20_nb_langid(s: SparkSession, dir: String): DataFrame =
     graft.operators.NaiveBayes
-      .classify(t(s, dir, "documents"), col("doc_id") % 2 === 0,
+      .classify(Tables.load(s, dir, "documents"), col("doc_id") % 2 === 0,
         "doc_id", "text", "lang")
       .select(col("id").as("doc_id"), col("pred").as("pred_lang"),
         col("label").as("lang"), col("correct"), col("score"))

@@ -37,10 +37,7 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round120Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round120Queries extends QueryModule {
 
   // ── a24: CMS error vs width, one row per width ────────────────────────
 
@@ -48,7 +45,7 @@ object Round120Queries {
 
   def a24_cms_width_sweep(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.CountMin
-    val keys = t(s, dir, "lineitem").select(col("l_partkey").as("k"))
+    val keys = Tables.load(s, dir, "lineitem").select(col("l_partkey").as("k"))
       .localCheckpoint(true)
     val nn = keys.agg(count(lit(1)).as("n_total"))
     val exact = keys.groupBy(col("k")).agg(count(lit(1)).as("exact_cnt"))
@@ -76,7 +73,7 @@ object Round120Queries {
 
   def p54_sorted_batching(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val sized = t(s, dir, "documents")
+    val sized = Tables.load(s, dir, "documents")
       .select(col("doc_id"), Text.tokenCount(col("text")).cast(LongType)
         .as("len"))
     def plan(rankCol: org.apache.spark.sql.Column*): DataFrame =
@@ -99,7 +96,7 @@ object Round120Queries {
   // ── q165: deterministic k-fold assignment balance audit ───────────────
 
   def q165_kfold_balance(s: SparkSession, dir: String): DataFrame = {
-    val folded = t(s, dir, "documents")
+    val folded = Tables.load(s, dir, "documents")
       .select(col("lang"), expr("(doc_id * 2654435761) % 5").as("fold"))
     val per = folded.groupBy(col("fold"), col("lang"))
       .agg(count(lit(1)).as("n"))

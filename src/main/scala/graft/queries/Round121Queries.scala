@@ -40,10 +40,7 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round121Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round121Queries extends QueryModule {
 
   // ── a25: HLL error vs register count ──────────────────────────────────
 
@@ -55,7 +52,7 @@ object Round121Queries {
 
   def a25_hll_m_sweep(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.CountMin
-    val keys = t(s, dir, "lineitem").select(col("l_partkey").as("k"))
+    val keys = Tables.load(s, dir, "lineitem").select(col("l_partkey").as("k"))
       .localCheckpoint(true)
     val exact = keys.agg(countDistinct(col("k")).as("exact_distinct"))
     val regs = keys
@@ -91,7 +88,7 @@ object Round121Queries {
   // ── p55: next-fit-decreasing compaction plan over the month manifest ──
 
   def p55_compaction_plan(s: SparkSession, dir: String): DataFrame = {
-    val manifest = t(s, dir, "orders")
+    val manifest = Tables.load(s, dir, "orders")
       .groupBy(substring(col("o_orderdate").cast("string"), 1, 7)
         .as("part"))
       .agg(count(lit(1)).as("nrows"))
@@ -115,7 +112,7 @@ object Round121Queries {
 
   def m41_audio_clip_gate(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.AudioExprs
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         AudioExprs.decodeSamples(AudioExprs.encodeWavFromText(
           col("text"), sampleRate = 16000, n = 64)).as("sm"))

@@ -30,18 +30,15 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round122Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round122Queries extends QueryModule {
 
   // ── d49: purity + Rand index of k-means vs planted labels ─────────────
 
   def d49_kmeans_validation(s: SparkSession, dir: String): DataFrame = {
     val asg = graft.operators.Kmeans
-      .lloyd(t(s, dir, "embeddings"), "vec_id", "embedding", k = 4, iters = 2)
+      .lloyd(Tables.load(s, dir, "embeddings"), "vec_id", "embedding", k = 4, iters = 2)
       .select(col("id").as("vec_id"), col("c").as("cluster"))
-    val lab = t(s, dir, "embeddings").select(col("vec_id"), col("label"))
+    val lab = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("label"))
     val cont = asg.join(lab, Seq("vec_id"))
       .groupBy(col("cluster"), col("label"))
       .agg(count(lit(1)).as("n"))
@@ -70,7 +67,7 @@ object Round122Queries {
 
   def t70_distinct_ngrams(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val toks = t(s, dir, "documents")
+    val toks = Tables.load(s, dir, "documents")
       .select(Text.tokens(col("text")).as("t"))
       .localCheckpoint(true)
     val perN = (1 to 3).map { n =>

@@ -39,15 +39,12 @@ import graft.functions.{ImageExprs, JpegExprs}
   * CSV/JSON/SQL only); beyond-reference LLM-pipeline surface per the
   * build brief.
   */
-object Round123Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round123Queries extends QueryModule {
 
   // ── m42: grayscale baseline JPEG decode, closed-form DC oracle ────────
 
   def m42_jpeg_gray_decode(s: SparkSession, dir: String): DataFrame =
-    graft.Tables.spread(t(s, dir, "documents"))
+    graft.Tables.spread(Tables.load(s, dir, "documents"))
       .select(col("doc_id"),
         JpegExprs.encodeJpegGrayBlocks(col("text"), 4, 4, 50).as("jpg"))
       .select(col("doc_id"),
@@ -64,7 +61,7 @@ object Round123Queries {
   // ── m43: color 4:2:0 baseline JPEG decode, closed-form tile oracle ────
 
   def m43_jpeg_color_decode(s: SparkSession, dir: String): DataFrame =
-    graft.Tables.spread(t(s, dir, "documents"))
+    graft.Tables.spread(Tables.load(s, dir, "documents"))
       .select(col("doc_id"),
         JpegExprs.encodeJpegColorTiles(col("text"), 2, 2, 50).as("jpg"))
       .select(col("doc_id"),

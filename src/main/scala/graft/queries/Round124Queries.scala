@@ -33,10 +33,7 @@ import graft.functions.{ImageExprs, JpegCodec, JpegExprs}
   * CSV/JSON/SQL only); beyond-reference LLM-pipeline surface per the
   * build brief.
   */
-object Round124Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round124Queries extends QueryModule {
 
   private val Qualities = Seq(25, 50, 75, 90)
 
@@ -47,7 +44,7 @@ object Round124Queries {
     // encode is cheap per row and the decode side is already parallel
     // behind the posexplode, so the extra exchange never pays for itself)
     Qualities.map { q =>
-      t(s, dir, "documents")
+      Tables.load(s, dir, "documents")
         .select(col("doc_id"), lit(q.toLong).as("quality"),
           lit(JpegCodec.scaledLuminanceDc(q).toLong).as("q_dc"),
           JpegExprs.encodeJpegGrayBlocks(col("text"), 2, 2, q).as("jpg"))
@@ -67,7 +64,7 @@ object Round124Queries {
   // ── m45: truncated-payload ingest census via try-stats ─────────────────
 
   def m45_jpeg_poison_census(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         JpegExprs.encodeJpegGrayBlocks(col("text"), 2, 2, 50).as("full"))
       .select(col("doc_id"),

@@ -36,15 +36,12 @@ import graft.functions.{AdpcmExprs, AviExprs}
   * (/root/reference/tools.py is CSV/JSON/SQL only); beyond-reference
   * LLM-pipeline surface per the build brief.
   */
-object Round125Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round125Queries extends QueryModule {
 
   // ── m46: IMA-ADPCM round trip with gated reconstruction error ─────────
 
   def m46_adpcm_audio(s: SparkSession, dir: String): DataFrame = {
-    val dec = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val dec = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       .select(col("doc_id"), col("text"),
         AdpcmExprs.decodeSamples(
           AdpcmExprs.encodeAdpcmFromText(col("text"), 8000, 98)).as("dec"))
@@ -67,7 +64,7 @@ object Round125Queries {
   // ── m47: MJPEG-in-AVI per-frame decode, closed-form DC oracle ─────────
 
   def m47_mjpeg_frames(s: SparkSession, dir: String): DataFrame =
-    graft.Tables.spreadBarrier(t(s, dir, "documents"))
+    graft.Tables.spreadBarrier(Tables.load(s, dir, "documents"))
       .select(col("doc_id"),
         AviExprs.frameLumaSums(
           AviExprs.encodeAviMjpeg(col("text"), 4, 2, 2, 50)).as("sums"))

@@ -30,10 +30,7 @@ import graft.functions.{FlacExprs, TiffExprs}
   * (/root/reference/tools.py is CSV/JSON/SQL only); public FLAC spec
   * (RFC 9639).
   */
-object Round126Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round126Queries extends QueryModule {
 
   /** Samples per clip: 3 frames × [[graft.functions.FlacCodec.BlockSize]]. */
   private val NSamples = 192
@@ -59,7 +56,7 @@ object Round126Queries {
     * go/no-go table a privacy review reads before a corpus ships. */
   def t71_pii_scan(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.Column
-    val aug = t(s, dir, "documents").select(col("doc_id"), col("source"),
+    val aug = Tables.load(s, dir, "documents").select(col("doc_id"), col("source"),
       col("text"))
       // Luhn body: '4' + 14 digits; check digit from the 15-digit sum
       // (reversed odd positions doubled — they land on even positions of
@@ -130,7 +127,8 @@ object Round126Queries {
   // ── m48: FLAC round trip — lossless identity + coding decisions ───────
 
   def m48_flac_audio(s: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.spread(t(s, dir, "documents")).select(col("doc_id"), col("text"))
+    val docs = graft.Tables.spread(Tables.load(s, dir, "documents"))
+      .select(col("doc_id"), col("text"))
       .withColumn("payload", FlacExprs.encodeFlacFromText(col("text"), NSamples))
     // lossless identity, per sample: decode vs the fixture closed form
     // slope·n + wobble with slope = (cp0 mod 7) − 3, wobble = (cpn mod 32) − 16
@@ -168,7 +166,7 @@ object Round126Queries {
     * 2-byte tokens chunked at 128, singleton groups merged into literal
     * segments costing m + ceil(m/128)). */
   def m49_tiff_decode(s: SparkSession, dir: String): DataFrame = {
-    val enc = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val enc = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       .withColumn("payload",
         when(col("doc_id") % 2 === 1,
           TiffExprs.encodeTiffFromText(col("text"), 16, 16, 4, packbits = true))

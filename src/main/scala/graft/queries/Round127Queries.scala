@@ -31,15 +31,12 @@ import graft.functions.{ExifExprs, ImageExprs, Mp3Exprs}
   * (/root/reference/tools.py is CSV/JSON/SQL only); public EXIF 2.x /
   * ID3v2.3 / ISO 11172-3 layouts.
   */
-object Round127Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round127Queries extends QueryModule {
 
   // ── m50: EXIF APP1 extraction + pixel-decode coexistence ──────────────
 
   def m50_exif_extract(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(col("doc_id"),
+    Tables.load(s, dir, "documents").select(col("doc_id"),
         ExifExprs.encodeJpegWithExif(col("text"), col("doc_id"), 4, 4, 50)
           .as("jpg"), col("text"))
       .withColumn("x", ExifExprs.extract(col("jpg")))
@@ -58,7 +55,7 @@ object Round127Queries {
   // ── m51: MP3 container census ──────────────────────────────────────────
 
   def m51_mp3_census(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(col("doc_id"))
+    Tables.load(s, dir, "documents").select(col("doc_id"))
       .withColumn("c", Mp3Exprs.census(Mp3Exprs.encodeMp3FromId(col("doc_id"))))
       .select(col("doc_id"),
         col("c.title").as("title"), col("c.artist").as("artist"),

@@ -24,17 +24,14 @@ import graft.queries.StreamConf.withStreamShuffle
   * test vehicle (SCALE.md Known trade-offs); production drains to
   * files/Kafka with identical plan shapes.
   */
-object Round128Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round128Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── e39: per-source MP3 container census on the stream ────────────────
 
   def e39_stream_mp3_census(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val name = s"stream_mp3_${streamSeq.incrementAndGet()}"
     val raw = s.readStream.schema(docs.schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)

@@ -45,10 +45,7 @@ import graft.functions.Lz4SnappyExprs
   * (/root/reference/tools.py:22-41); beyond-reference LLM-pipeline
   * surface per the build brief.
   */
-object Round129Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round129Queries extends QueryModule {
 
   /** Corpus-proportional shard count, computed deterministically from
     * the row count and broadcast onto every row: the grain a real shard
@@ -71,7 +68,7 @@ object Round129Queries {
 
   def p56_lz4_shards(s: SparkSession, dir: String): DataFrame = {
     val docs = withShardIdx(
-      t(s, dir, "documents").select(col("source"), col("doc_id"), col("text")))
+      Tables.load(s, dir, "documents").select(col("source"), col("doc_id"), col("text")))
     val shards = docs
       .select(col("source"), col("shard_idx"),
         to_json(struct(col("doc_id"), col("text"))).as("line"))
@@ -115,7 +112,7 @@ object Round129Queries {
 
   def p57_snappy_shards(s: SparkSession, dir: String): DataFrame = {
     val docs = withShardIdx(
-      t(s, dir, "documents").select(col("source"), col("doc_id"), col("text")))
+      Tables.load(s, dir, "documents").select(col("source"), col("doc_id"), col("text")))
     val shards = docs
       .select(col("source"), col("shard_idx"),
         to_json(struct(col("doc_id"), col("text"))).as("line"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
+import StreamConf.withStreamShuffle
 
 /** Twelfth batch — corpus-assembly and gating tail:
   *
@@ -24,10 +25,7 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round12Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round12Queries extends QueryModule {
 
   // ── d18: SemDeDup on learned clusters — k-means assignment bounds the
   //        pair search (pairs only form within a cluster; at 100 TB, k
@@ -36,7 +34,7 @@ object Round12Queries {
   //        cluster, cosine ≥ 0.30 drops the larger vec_id. ─────────────
   def d18_semdedup_kmeans(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Kmeans, Vectors}
-    val e = t(s, dir, "embeddings")
+    val e = Tables.load(s, dir, "embeddings")
     val clusters = Kmeans.lloyd(e, "vec_id", "embedding", k = 4, iters = 2)
       .select(col("id").as("vec_id"), col("c").as("cluster"))
       .localCheckpoint() // two consumers: pair join + final labeling
@@ -65,7 +63,7 @@ object Round12Queries {
   //        computes exactly the batch answer. ──────────────────────────
   def e16_stream_nb_gate(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.NaiveBayes
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val name = s"stream_nb_gate_${streamSeq.incrementAndGet()}"
     // materialize: the stream-static broadcast sides would otherwise
     // re-execute the whole fit DAG in every microbatch (round 14)
@@ -90,20 +88,13 @@ object Round12Queries {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private def withStreamShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
   // ── p24: deterministic epoch shuffle — position = global row number
   //        under md5('epoch1:' || doc_id) (distributed two-level rank,
   //        no single-partition window), shard = (pos-1) mod 8. Rerunning
   //        the job reproduces the exact layout; changing the epoch salt
   //        reshuffles. ────────────────────────────────────────────────
   def p24_epoch_shuffle(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         md5(concat(lit("epoch1:"), col("doc_id").cast(StringType)))
           .as("h"))
@@ -119,7 +110,7 @@ object Round12Queries {
   //        corpus side is one explode + one aggregate). ────────────────
   def t21_oov_rate(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val toks = t(s, dir, "documents")
+    val toks = Tables.load(s, dir, "documents")
       .select(col("doc_id"), explode(Text.tokens(col("text"))).as("w"))
     val vocab = toks.groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("w")).limit(30)

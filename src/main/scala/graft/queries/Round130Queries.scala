@@ -41,17 +41,14 @@ import graft.queries.StreamConf.withStreamShuffle
   * mode over a bounded key domain, the adjudicated memory-sink test
   * vehicle).
   */
-object Round130Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round130Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── t72: HTML → text extraction round trip ───────────────────────────
 
   def t72_html_extract(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
       .select(col("source"), col("doc_id"), col("text"))
     docs
       .select(col("source"), col("text"),
@@ -76,7 +73,7 @@ object Round130Queries {
   // ── t73: UTF-8 validity audit over planted corruptions ───────────────
 
   def t73_utf8_audit(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
       .select(col("source"), col("doc_id"), col("text"))
     docs
       .select(col("source"), length(col("text")).as("tl"),
@@ -98,7 +95,7 @@ object Round130Queries {
   // ── e40: the UTF-8 audit as a streaming ingest gate ──────────────────
 
   def e40_stream_utf8_gate(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val name = s"stream_utf8_${streamSeq.incrementAndGet()}"
     val raw = s.readStream.schema(docs.schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
@@ -123,7 +120,7 @@ object Round130Queries {
   // ── m52: H.264 Annex-B NAL census ────────────────────────────────────
 
   def m52_h264_nal_census(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         H264Exprs.h264Census(H264Exprs.h264FromId(col("doc_id"))).as("c"))
       .select(col("doc_id"),

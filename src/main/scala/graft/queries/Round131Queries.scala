@@ -31,7 +31,7 @@ import graft.functions.ParquetFooterExprs
   * (/root/reference/tools.py:22-41); beyond-reference lakehouse
   * surface per the build brief.
   */
-object Round131Queries {
+object Round131Queries extends QueryModule {
 
   /** Pinned fixture dir — must match the oracle's literal paths. */
   private val FixtureDir = "/root/testdata/sf0.01"

@@ -26,15 +26,12 @@ import graft.functions.{MarkdownExprs, RobotsExprs}
   * Scale: both are per-row expression work + one ≤20-group rollup —
   * embarrassingly parallel, no corpus-scale shuffle.
   */
-object Round132Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round132Queries extends QueryModule {
 
   // ── t74: robots.txt politeness gate ──────────────────────────────────
 
   def t74_robots_txt(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").select(col("source"), col("doc_id"))
+    val docs = Tables.load(s, dir, "documents").select(col("source"), col("doc_id"))
     val srcNum = regexp_extract(col("source"), "([0-9]+)$", 1).cast("int")
     val robots = concat(
       lit("# fixture robots for "), col("source"), lit("\n"),
@@ -65,7 +62,7 @@ object Round132Queries {
   // ── t75: markdown → text extraction round trip ───────────────────────
 
   def t75_markdown_extract(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
       .select(col("source"), col("doc_id"), col("text"))
     docs
       .select(col("source"), col("text"), col("doc_id"),

@@ -26,17 +26,14 @@ import graft.queries.StreamConf.withStreamShuffle
   * codec/matcher work + one ≤20-group rollup; bounded complete-mode
   * state).
   */
-object Round133Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round133Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── p59: zstd JSONL shards with planted padding runs ─────────────────
 
   def p59_zstd_shards(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
       .select(col("source"), col("doc_id"), col("text"))
     val shards = docs
       .select(col("source"),
@@ -89,7 +86,7 @@ object Round133Queries {
   }
 
   def e41_stream_robots_gate(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val name = s"stream_robots_${streamSeq.incrementAndGet()}"
     val raw = s.readStream.schema(docs.schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)

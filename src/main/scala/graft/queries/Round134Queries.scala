@@ -24,17 +24,14 @@ import graft.queries.StreamConf.withStreamShuffle
   * Scale: per-row parse + bounded rollup, the same embarrassingly-
   * parallel shape as the rest of the ingest front door.
   */
-object Round134Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round134Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── t76: WebVTT cue census ───────────────────────────────────────────
 
   def t76_webvtt_cues(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         VttExprs.vttCensus(
           VttExprs.vttFromText(col("text"), col("doc_id"))).as("c"))
@@ -51,7 +48,7 @@ object Round134Queries {
   // ── e42: HTML → text extraction at ingest (stream) ───────────────────
 
   def e42_stream_html_extract(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val name = s"stream_html_${streamSeq.incrementAndGet()}"
     val raw = s.readStream.schema(docs.schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)

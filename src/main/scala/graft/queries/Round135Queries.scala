@@ -19,17 +19,14 @@ import graft.queries.StreamConf.withStreamShuffle
   *    arriving payload, per-source complete-mode rollup with
   *    row-for-row batch parity.
   */
-object Round135Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round135Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── m53: animated GIF frame/timeline census ──────────────────────────
 
   def m53_animgif_census(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         Gif89aExprs.animGifCensus(
           Gif89aExprs.animGifFromId(col("doc_id"))).as("c"))
@@ -48,7 +45,7 @@ object Round135Queries {
   // ── e43: markdown → text at ingest (stream) ──────────────────────────
 
   def e43_stream_markdown(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val name = s"stream_md_${streamSeq.incrementAndGet()}"
     val raw = s.readStream.schema(docs.schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)

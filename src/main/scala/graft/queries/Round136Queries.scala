@@ -17,13 +17,10 @@ import graft.functions.SitemapExprs
   *    crosses a year wrap), the exact priority mass in tenths and
   *    decoded-loc character mass all replay closed-form.
   */
-object Round136Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round136Queries extends QueryModule {
 
   def t77_sitemap_census(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         SitemapExprs.sitemapCensus(
           SitemapExprs.sitemapFromId(col("doc_id"))).as("c"))

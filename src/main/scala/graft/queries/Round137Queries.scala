@@ -28,15 +28,12 @@ import graft.functions.{JpegCensusExprs, JpegExprs}
   * (/root/reference/tools.py is CSV/JSON/SQL only); ITU-T T.81 §B/§G
   * marker layout.
   */
-object Round137Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round137Queries extends QueryModule {
 
   // ── m54: baseline + progressive JPEG ingest census ────────────────────
 
   def m54_jpeg_progressive_census(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         when(col("doc_id") % 2 === 0,
           JpegExprs.encodeJpegGrayBlocks(col("text"), 4, 4, 50))

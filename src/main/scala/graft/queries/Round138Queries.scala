@@ -32,16 +32,13 @@ import graft.functions.{ImageExprs, JpegCensusExprs, JpegExprs}
   * Reference scope: the reference has no media path
   * (/root/reference/tools.py is CSV/JSON/SQL only); ITU-T T.81 Annex G.
   */
-object Round138Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round138Queries extends QueryModule {
 
   // ── m55: progressive grayscale decode, closed-form DC oracle ──────────
 
   def m55_jpeg_progressive_gray_decode(s: SparkSession,
       dir: String): DataFrame =
-    graft.Tables.spread(t(s, dir, "documents"))
+    graft.Tables.spread(Tables.load(s, dir, "documents"))
       .select(col("doc_id"),
         JpegExprs.encodeJpegGrayBlocksProgressive(col("text"), 4, 4, 50)
           .as("jpg"))
@@ -63,7 +60,7 @@ object Round138Queries {
 
   def m56_jpeg_progressive_color_decode(s: SparkSession,
       dir: String): DataFrame =
-    graft.Tables.spread(t(s, dir, "documents"))
+    graft.Tables.spread(Tables.load(s, dir, "documents"))
       .select(col("doc_id"),
         JpegExprs.encodeJpegColorTilesProgressive(col("text"), 2, 2, 50)
           .as("jpg"))

@@ -15,17 +15,14 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round13Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round13Queries extends QueryModule {
 
   // ── s9: PQ-ADC — 4 subspaces × 16 dims, 4 codebook entries per
   //        subspace (the 4 lowest-id vectors' subslices — a production
   //        build trains them with s8's Lloyd per subspace), queries =
   //        vec_id % 100 == 0, top-5 by summed table distances. ─────────
   def s9_pq_adc(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Pq.adcTopK(t(s, dir, "embeddings"), "vec_id",
+    graft.operators.Pq.adcTopK(Tables.load(s, dir, "embeddings"), "vec_id",
         "embedding", m = 4, sub = 16, kCent = 4, queryMod = 100, topK = 5)
       .orderBy(col("query_id"), col("rk"))
 

@@ -22,10 +22,7 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round14Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round14Queries extends QueryModule {
 
   // ── s10: IVFADC — 4 coarse cells (2 Lloyd updates), nprobe=2, PQ =
   //        4×16 with 4 centroids/subspace, top-5. Cells and codes are
@@ -35,7 +32,7 @@ object Round14Queries {
   def s10_ivfadc(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Kmeans, Pq}
     import graft.functions.NativeExprs
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables.load(s, dir, "embeddings")
     val q = Kmeans.quantized(emb, "vec_id", "embedding").localCheckpoint()
     val cent = Kmeans.centroids(emb, "vec_id", "embedding",
       k = 4, iters = 2).localCheckpoint()
@@ -67,7 +64,7 @@ object Round14Queries {
   //        incremental index-build artifact. ──────────────────────────
   def e17_stream_pq_ingest(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Kmeans, Pq}
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables.load(s, dir, "embeddings")
     val name = s"stream_pq_ingest_${streamSeq.incrementAndGet()}"
     val cbLocal = Pq.codebook(
         Kmeans.quantized(emb, "vec_id", "embedding"), m = 4, sub = 16,

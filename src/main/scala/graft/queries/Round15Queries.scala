@@ -14,16 +14,13 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round15Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round15Queries extends QueryModule {
 
   // ── d19: 8-gram diagonals, report pairs whose longest exact shared
   //        run is ≥ 12 tokens. Pairs meet only via the gram equi-join;
   //        islands per (pair, diagonal) — never a global window. ───────
   def d19_substring_runs(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Substring.sharedRuns(t(s, dir, "documents"),
+    graft.operators.Substring.sharedRuns(Tables.load(s, dir, "documents"),
         "doc_id", "text", n = 8, minRunTokens = 12)
       .orderBy(col("id_a"), col("id_b"))
 
@@ -34,7 +31,7 @@ object Round15Queries {
   //        `over` pins the no-undercount guarantee cell by cell. ───────
   def a3_cms_counts(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.CountMin
-    val keys = t(s, dir, "lineitem").select(col("l_partkey").as("k"))
+    val keys = Tables.load(s, dir, "lineitem").select(col("l_partkey").as("k"))
     val cm = CountMin.sketch(keys, CountMin.DefaultFamily, w = 256)
       .localCheckpoint() // consumed once per probe row set
     val exact = keys.groupBy(col("k")).agg(count(lit(1)).as("exact_cnt"))

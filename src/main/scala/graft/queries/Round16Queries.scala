@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
+import SketchSql.MStr
 
 /** Sixteenth batch — sketch-driven planning + weighted graph distance:
   *
@@ -24,12 +25,7 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round16Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private val MStr = "2305843009213693951" // 2^61 - 1
+object Round16Queries extends QueryModule {
 
   // ── a4: |events ⋈ orders on user key| estimated from two 3×65536-cell
   //        sketches. Inner product per hash row ≥ true size (collisions
@@ -42,8 +38,8 @@ object Round16Queries {
   //        under a 6× additive term. ─────────────────────────────────────
   def a4_cms_join_size(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.CountMin
-    val aK = t(s, dir, "events").select(col("user_id").as("k"))
-    val bK = t(s, dir, "orders").select(col("o_custkey").as("k"))
+    val aK = Tables.load(s, dir, "events").select(col("user_id").as("k"))
+    val bK = Tables.load(s, dir, "orders").select(col("o_custkey").as("k"))
     val est = CountMin.joinSizeEstimate(
       CountMin.sketch(aK, CountMin.DefaultFamily, w = 65536),
       CountMin.sketch(bK, CountMin.DefaultFamily, w = 65536))
@@ -66,7 +62,7 @@ object Round16Queries {
     import graft.operators.CountMin
     val kk = 64
     val m48 = 1L << 48
-    val keys = t(s, dir, "lineitem").select(col("l_partkey").as("k"))
+    val keys = Tables.load(s, dir, "lineitem").select(col("l_partkey").as("k"))
     val top = keys.select(
         pmod(CountMin.mix61(col("k"), 1299709L, 104729L), lit(m48)).as("h"))
       .distinct()
@@ -90,7 +86,7 @@ object Round16Queries {
   def d20_minhash_jaccard_est(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.{NativeExprs, Text}
     val k = 32
-    val base = graft.Tables.spread(t(s, dir, "documents"))
+    val base = graft.Tables.spread(Tables.load(s, dir, "documents"))
       .select(col("doc_id").as("id"),
         array_distinct(Text.shingles(col("text"), 3)).as("shs"),
         NativeExprs.minhashSigPortable(Text.shingles(col("text"), 3), k)
@@ -123,10 +119,10 @@ object Round16Queries {
   //        the graph isn't complete). Bellman-Ford: one relax join + one
   //        min-aggregate per round, early exit on stability. ────────────
   def q78_sssp(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val su = t(s, dir, "supplier")
-    val or = t(s, dir, "orders")
-    val cu = t(s, dir, "customer")
+    val li = Tables.load(s, dir, "lineitem")
+    val su = Tables.load(s, dir, "supplier")
+    val or = Tables.load(s, dir, "orders")
+    val cu = Tables.load(s, dir, "customer")
     val edges = li
       .join(su, li("l_suppkey") === su("s_suppkey"))
       .join(or, li("l_orderkey") === or("o_orderkey"))
@@ -148,7 +144,7 @@ object Round16Queries {
   def e18_stream_cms_ingest(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.CountMin
     val name = s"stream_cms_ingest_${streamSeq.incrementAndGet()}"
-    val schema = t(s, dir, "lineitem").schema
+    val schema = Tables.load(s, dir, "lineitem").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "lineitem.parquet").parquet(dir)
     val cells = CountMin.sketch(stream.select(col("l_partkey").as("k")),

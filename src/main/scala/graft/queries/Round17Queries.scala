@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import SketchSql.MStr
 
 /** Seventeenth batch — membership gates, deterministic weighted
   * sampling, attribution analytics, URL dialect:
@@ -22,12 +23,7 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round17Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private val MStr = "2305843009213693951" // 2^61 - 1
+object Round17Queries extends QueryModule {
 
   // ── a6: ship the membership gate, not the key set: members are the
   //        custkeys holding a recent (orderkey ≡ 0 mod 11) order; the
@@ -37,12 +33,12 @@ object Round17Queries {
   def a6_bloom_membership(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.CountMin
     val w = 2048
-    val members = t(s, dir, "orders")
+    val members = Tables.load(s, dir, "orders")
       .filter(col("o_orderkey") % 11 === 0)
       .select(col("o_custkey").as("k")).distinct()
       .localCheckpoint() // feeds both the cell build and the exact check
     val cells = CountMin.sketch(members, CountMin.DefaultFamily, w)
-    val probe = t(s, dir, "customer").select(col("c_custkey").as("k"))
+    val probe = Tables.load(s, dir, "customer").select(col("c_custkey").as("k"))
     val flags = CountMin.membership(probe, cells, CountMin.DefaultFamily, w)
       .join(probe.join(members.withColumnRenamed("k", "mk"),
           col("k") === col("mk"), "left")
@@ -65,7 +61,7 @@ object Round17Queries {
   //        shards merge by re-taking the bottom-k of the union. ─────────
   def p25_weighted_sample(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.CountMin
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("n_chars").as("w"),
         CountMin.mix61(col("doc_id"), 1299709L, 104729L).as("mh"))
       .select(col("doc_id"), col("w"),
@@ -81,7 +77,7 @@ object Round17Queries {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .withColumn("touch",
         last(when(col("event_type").isin("click", "view"),
           col("event_type")), ignoreNulls = true).over(w))
@@ -96,7 +92,7 @@ object Round17Queries {
   //        — the oracle rebuilds the fields from first principles, so the
   //        parser's semantics are what's being hash-checked. ────────────
   def t22_url_hosts(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .withColumn("url", concat(lit("https://"), col("source"),
         lit(".example.org/docs/"), col("doc_id").cast("string"),
         lit("?lang="), col("lang")))

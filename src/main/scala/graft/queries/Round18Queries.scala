@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import SketchSql.MStr
 
 /** Eighteenth batch — integer HyperLogLog, bottleneck paths, and
   * normalization-aware dedup:
@@ -22,12 +23,7 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round18Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private val MStr = "2305843009213693951" // 2^61 - 1
+object Round18Queries extends QueryModule {
 
   // ── a7: one pass builds 64 registers (bucket = h mod 64, rank =
   //        1-based lowest-set-bit position of h div 64 — a broadcast join
@@ -40,7 +36,7 @@ object Round18Queries {
   def a7_hll_distinct(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.CountMin
     import s.implicits._
-    val keys = t(s, dir, "lineitem").select(col("l_partkey").as("k"))
+    val keys = Tables.load(s, dir, "lineitem").select(col("l_partkey").as("k"))
     val pow2 = Seq.tabulate(55)(e => (1L << e, e + 1)).toDF("p", "r")
     val regs = keys
       .select(CountMin.mix61(col("k"), 1299709L, 104729L).as("h"))
@@ -71,10 +67,10 @@ object Round18Queries {
   //        by state dedup. ─────────────────────────────────────────────
   def q80_widest_path(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.LongType
-    val li = t(s, dir, "lineitem")
-    val su = t(s, dir, "supplier")
-    val or = t(s, dir, "orders")
-    val cu = t(s, dir, "customer")
+    val li = Tables.load(s, dir, "lineitem")
+    val su = Tables.load(s, dir, "supplier")
+    val or = Tables.load(s, dir, "orders")
+    val cu = Tables.load(s, dir, "customer")
     val edges = li
       .join(su, li("l_suppkey") === su("s_suppkey"))
       .join(or, li("l_orderkey") === or("o_orderkey"))
@@ -98,7 +94,7 @@ object Round18Queries {
   //        normalized digest — d1's shuffle shape with a codegen'd
   //        normalization chain in the map stage. ─────────────────────────
   def d21_normalized_dedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
     val variants = docs.select((col("doc_id") + 1000000L).as("doc_id"),
       concat(upper(col("text")), lit(" !!")).as("text"))
     docs.unionByName(variants)
@@ -119,7 +115,7 @@ object Round18Queries {
   //        exactly what's being hash-checked. ───────────────────────────
   def q81_topk_per_key(s: SparkSession, dir: String): DataFrame =
     graft.operators.TopK.perKey(
-        t(s, dir, "orders").select(col("o_custkey"), col("o_orderkey"),
+        Tables.load(s, dir, "orders").select(col("o_custkey"), col("o_orderkey"),
           col("o_totalprice")),
         keyCols = Seq("o_custkey"), orderCol = "o_totalprice",
         tieCol = "o_orderkey", k = 2)

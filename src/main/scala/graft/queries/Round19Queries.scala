@@ -28,16 +28,13 @@ import graft.operators.{HistQuantile, Hll}
   * Reference scope: extension beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round19Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round19Queries extends QueryModule {
 
   // ── a8: grouped HLL distinct-user estimate per event_type. Registers
   //        and estimate are exact integer arithmetic (Hll scaladoc), so
   //        DuckDB replays every column bit for bit. ─────────────────────
   def a8_hll_grouped(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").select(col("event_type"), col("user_id"))
+    val ev = Tables.load(s, dir, "events").select(col("event_type"), col("user_id"))
     val est = Hll.estimate(
       Hll.registers(ev, Seq("event_type"), "user_id"), Seq("event_type"))
     val exact = ev.groupBy(col("event_type"))
@@ -55,7 +52,7 @@ object Round19Queries {
   //        (r7 verdict ask #3; the pre-fix plan windowed every bin). ────
   def a9_quantile_hist(s: SparkSession, dir: String): DataFrame = {
     val binW = 100000L
-    val cents = t(s, dir, "lineitem")
+    val cents = Tables.load(s, dir, "lineitem")
       .select(round(col("l_extendedprice") * 100).cast(LongType).as("c"))
     val hist = HistQuantile.histogram(cents, "c", binW).localCheckpoint()
     val qe = HistQuantile.quantiles(hist, binW, Seq(50, 90, 99))
@@ -86,7 +83,7 @@ object Round19Queries {
   //        merge across micro-batches is lossless. ──────────────────────
   def e19_stream_hll_grouped(s: SparkSession, dir: String): DataFrame = {
     val name = s"stream_hll_${streamSeq.incrementAndGet()}"
-    val schema = t(s, dir, "events").schema
+    val schema = Tables.load(s, dir, "events").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .select(col("event_type"), col("user_id"))
@@ -108,7 +105,7 @@ object Round19Queries {
     val h = substring(md5(col("doc_id").cast("string")), 1, 2)
     val split = when(h < "cc", "train").when(h < "e6", "val")
       .otherwise("test")
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(split.as("split"), col("doc_id"),
         graft.functions.Text.tokenCount(col("text")).cast(LongType)
           .as("ntok"))

@@ -29,13 +29,7 @@ import graft.operators.{HistQuantile, Vectors}
   * Reference scope: extension beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round20Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def sanitize(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
+object Round20Queries extends QueryModule {
 
   // ── s12: per-dimension affine int8 grid on the round(x·1e6) integer
   //        lattice: code = ((qx − mn)·255) div (mx − mn), decode =
@@ -44,7 +38,7 @@ object Round20Queries {
   //        64-long dot per pair in the compressed domain; top-25 per
   //        query rerank exactly. ─────────────────────────────────────────
   def s12_sq8_rerank(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables.load(s, dir, "embeddings")
     val flat = emb
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "x")))
       .select(col("vec_id"), col("i"),
@@ -93,17 +87,17 @@ object Round20Queries {
   //        the drift signal a pipeline alerts on. ──────────────────────
   def p27_hist_artifact_update(s: SparkSession, dir: String): DataFrame = {
     val binW = 100000L
-    val li = t(s, dir, "lineitem")
+    val li = Tables.load(s, dir, "lineitem")
     def cents(df: DataFrame) = df.select(
       round(col("l_extendedprice") * 100).cast(LongType).as("c"))
     val existing = HistQuantile.histogram(
       cents(li.filter(col("l_orderkey") % 2 === 0)), "c", binW)
-    val artDir = graft.Scratch.dir(s"p27_hist_${sanitize(dir)}")
+    val artDir = graft.Scratch.dir("p27_hist", dir)
     graft.sinks.ParquetSink.write(existing, artDir)
     val before = s.read.parquet(artDir)
     val batch = HistQuantile.histogram(
       cents(li.filter(col("l_orderkey") % 2 === 1)), "c", binW)
-    val mergedDir = graft.Scratch.dir(s"p27_hist_merged_${sanitize(dir)}")
+    val mergedDir = graft.Scratch.dir("p27_hist_merged", dir)
     graft.sinks.ParquetSink.write(
       HistQuantile.merge(before, batch), mergedDir)
     val after = s.read.parquet(mergedDir)
@@ -120,7 +114,7 @@ object Round20Queries {
   //        no float division). Only hours with a full trailing day
   //        qualify. The window runs over ≤ hours-in-fixture rows. ───────
   def q82_hourly_anomaly(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val hourly = raw
       .withColumn("ts_us", Tables.tsMicros(raw))
       .groupBy(date_trunc("hour", col("ts_us")).as("hour"))

@@ -26,10 +26,7 @@ import graft.operators.{CountMin, HistQuantile}
   * Reference scope: extension beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round21Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round21Queries extends QueryModule {
 
   private val RangeLo = 9131L // days('1995-01-01')
   private val RangeHi = 9496L // days('1996-01-01')
@@ -41,7 +38,7 @@ object Round21Queries {
   //        compute — a sketch drifting outside it hash-mismatches. ──────
   def a10_cms_range(s: SparkSession, dir: String): DataFrame = {
     import CountMin._
-    val days = t(s, dir, "lineitem")
+    val days = Tables.load(s, dir, "lineitem")
       .select(expr(
         "cast(datediff(cast(l_shipdate as date), date'1970-01-01') as bigint)")
         .as("k"))
@@ -63,7 +60,7 @@ object Round21Queries {
   //        Streaming (one stateful aggregation, complete mode). ─────────
   def e20_stream_hist_ingest(s: SparkSession, dir: String): DataFrame = {
     val name = s"stream_hist_${streamSeq.incrementAndGet()}"
-    val schema = t(s, dir, "lineitem").schema
+    val schema = Tables.load(s, dir, "lineitem").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "lineitem.parquet").parquet(dir)
       .select(round(col("l_extendedprice") * 100).cast(LongType).as("c"))
@@ -84,7 +81,7 @@ object Round21Queries {
   //        a power user's clicks meet only the ≤2 buckets each purchase
   //        window overlaps, never the user's whole click history. ───────
   def q83_position_attribution(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val e = raw.withColumn("ts_us", Tables.tsMicros(raw))
     val purchases = e.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id"),
@@ -123,7 +120,7 @@ object Round21Queries {
   //        the batch sketch cell for cell via the shared oracle CTEs. ───
   def e21_stream_dyadic_cms(s: SparkSession, dir: String): DataFrame = {
     val name = s"stream_dyadic_${streamSeq.incrementAndGet()}"
-    val schema = t(s, dir, "lineitem").schema
+    val schema = Tables.load(s, dir, "lineitem").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "lineitem.parquet").parquet(dir)
       // per-batch repartition before the per-row dyadic expansion

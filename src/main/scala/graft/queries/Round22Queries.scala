@@ -23,16 +23,13 @@ import graft.operators.{CountMin, Substring}
   * Reference scope: extension beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round22Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round22Queries extends QueryModule {
 
   // ── d22: 8-gram diagonals → ≥12-token islands → positional coverage →
   //        rebuild. Output hashes the cleaned text so the oracle checks
   //        the exact surviving byte sequence, not just counts. ──────────
   def d22_span_removal(s: SparkSession, dir: String): DataFrame =
-    Substring.removeSharedRuns(t(s, dir, "documents"), "doc_id", "text",
+    Substring.removeSharedRuns(Tables.load(s, dir, "documents"), "doc_id", "text",
         n = 8, minRunTokens = 12)
       .select(col("id").as("doc_id"), col("n_tokens"), col("n_removed"),
         md5(col("cleaned")).as("cleaned_md5"))
@@ -43,7 +40,7 @@ object Round22Queries {
   //        pure expression, zero shuffle to assign, reproducible
   //        everywhere. ─────────────────────────────────────────────────
   def t23_mixture_rebalance(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"))
+    val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("lang"))
     val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("n_orig"))
     val rates = counts
       .crossJoin(counts.agg(min(col("n_orig")).as("min_n")))

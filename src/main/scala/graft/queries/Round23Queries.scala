@@ -18,13 +18,10 @@ import graft.operators.HistQuantile
   * Reference scope: extension beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round23Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round23Queries extends QueryModule {
 
   def q84_convert_time_quantiles(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val e = raw.withColumn("ts_us", Tables.tsMicros(raw))
       .select(col("user_id"), col("event_type"),
         unix_micros(col("ts_us")).as("us"))

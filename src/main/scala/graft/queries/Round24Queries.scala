@@ -20,22 +20,16 @@ import graft.operators.Hll
   * Reference scope: extension beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round24Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def sanitize(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
+object Round24Queries extends QueryModule {
 
   private val RangeLo = "2024-01-08"
   private val RangeHi = "2024-01-14" // inclusive 7-day window
 
   def a11_hll_daily_union(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val ev = raw.select(to_date(Tables.tsMicros(raw)).as("day"),
       col("user_id"))
-    val artDir = graft.Scratch.dir(s"a11_daily_hll_${sanitize(dir)}")
+    val artDir = graft.Scratch.dir("a11_daily_hll", dir)
     graft.sinks.ParquetSink.write(
       Hll.registers(ev, Seq("day"), "user_id"), artDir)
     val lo = to_date(lit(RangeLo))

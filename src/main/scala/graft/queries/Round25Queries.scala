@@ -21,10 +21,7 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round25Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round25Queries extends QueryModule {
 
   private val Words = Seq("the", "scan", "join", "row", "data", "fast",
     "key", "order")
@@ -38,7 +35,7 @@ object Round25Queries {
         size(filter(Text.tokens(col("text")), t => t === lit(w)))
           .cast(LongType).as(s"x${i + 1}")
     }
-    val feats = t(s, dir, "documents")
+    val feats = Tables.load(s, dir, "documents")
       .select(col("doc_id") +:
         when(col("lang") === "en", 1L).otherwise(-1L).as("y") +:
         featCols: _*)

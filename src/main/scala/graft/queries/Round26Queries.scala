@@ -34,19 +34,13 @@ import graft.operators.CountMin
   * Reference scope: extension beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round26Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def sanitize(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
+object Round26Queries extends QueryModule {
 
   // ── m5/m6: real image decode, per-doc integer pixel stats ─────────────
 
   private def imageStatsQuery(s: SparkSession, dir: String, format: String,
       width: Int, height: Int): DataFrame = {
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
     docs
       .withColumn("payload",
         ImageExprs.encodeImageFromText(col("text"), format, width, height))
@@ -90,7 +84,7 @@ object Round26Queries {
     ("y_1993_empty", epochDay("1993-01-01"), epochDay("1994-01-01")))
 
   private def shipDays(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .select(expr(
         "cast(datediff(cast(l_shipdate as date), date'1970-01-01') as bigint)")
         .as("k"))
@@ -103,7 +97,7 @@ object Round26Queries {
     * and surfaced through `prebuildArtifacts`' artifact_build_sec. */
   private[queries] def cmsArtifactDir(s: SparkSession, dir: String): String =
     cmsBuilt.computeIfAbsent(dir, _ => {
-      val out = graft.Scratch.dir(s"a12_dyadic_cms_${sanitize(dir)}")
+      val out = graft.Scratch.dir("a12_dyadic_cms", dir)
       graft.sinks.ParquetSink.write(
         CountMin.dyadicSketch(shipDays(s, dir), CountMin.DefaultFamily, CmW),
         out)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.ImageExprs
 import graft.operators.HistQuantile
+import SketchSql.textByte
 
 /** Twenty-seventh batch — image TRANSFORMS over real decoded pixels,
   * completing the multimodal family (decode → transform → analyze →
@@ -29,17 +30,14 @@ import graft.operators.HistQuantile
   * Reference scope: extension beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round27Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round27Queries extends QueryModule {
 
   private def withPpm(df: DataFrame): DataFrame =
     df.withColumn("payload",
       ImageExprs.encodeImageFromText(col("text"), "ppm", 8, 8))
 
   def m7_image_downsample(s: SparkSession, dir: String): DataFrame =
-    withPpm(t(s, dir, "documents").select(col("doc_id"), col("text")))
+    withPpm(Tables.load(s, dir, "documents").select(col("doc_id"), col("text")))
       .select(col("doc_id"),
         ImageExprs.imageDownsampleStats(col("payload")).as("st"))
       .select(col("doc_id"),
@@ -53,7 +51,7 @@ object Round27Queries {
       .orderBy(col("doc_id"))
 
   def m8_luminance_hist(s: SparkSession, dir: String): DataFrame = {
-    val lums = withPpm(t(s, dir, "documents").select(col("text")))
+    val lums = withPpm(Tables.load(s, dir, "documents").select(col("text")))
       .withColumn("px", ImageExprs.decodePixels(col("payload")))
       .select(explode(expr(
         "transform(sequence(0, 63), j -> " +
@@ -66,7 +64,7 @@ object Round27Queries {
 
   def e22_stream_image_stats(s: SparkSession, dir: String): DataFrame = {
     val name = s"stream_image_${streamSeq.incrementAndGet()}"
-    val schema = t(s, dir, "documents").schema
+    val schema = Tables.load(s, dir, "documents").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
       .select(col("source"), ImageExprs.imageStats(
@@ -89,15 +87,10 @@ object Round27Queries {
     "m8_luminance_hist"     -> (m8_luminance_hist _),
     "e22_stream_image_stats" -> (e22_stream_image_stats _))
 
-  /** Raster closed form shared with the m5/m6 oracles: sample i =
-    * ord(text[i mod len]) mod 256. */
-  private def v(i: String): String =
-    s"(ord(substr(text, CAST((($i) % length(text)) + 1 AS INT), 1)) % 256)"
-
   /** Pooled sample j (j in 0..47): channel j%3, block ((j//3)%4, j//12)
     * of the 8×8 source — the floor-mean of the 2×2 block. */
   private def pooled(j: String): String = {
-    def p(y: String, x: String, c: String) = v(s"3*(8*($y) + ($x)) + ($c)")
+    def p(y: String, x: String, c: String) = textByte(s"3*(8*($y) + ($x)) + ($c)")
     val (c, bx, by) = (s"($j)%3", s"(($j)//3)%4", s"($j)//12")
     s"""(${p(s"2*($by)", s"2*($bx)", c)} +
        | ${p(s"2*($by)", s"2*($bx)+1", c)} +
@@ -125,16 +118,16 @@ object Round27Queries {
     "m8_luminance_hist" ->
       s"""WITH lum AS (
         |  SELECT unnest(list_transform(range(0, 64), j ->
-        |    (299*${v("3*j")} + 587*${v("3*j+1")} + 114*${v("3*j+2")}) // 1000)) AS l
+        |    (299*${textByte("3*j")} + 587*${textByte("3*j+1")} + 114*${textByte("3*j+2")}) // 1000)) AS l
         |  FROM documents)
         |SELECT CAST(l // 16 AS BIGINT) AS bin, COUNT(*) AS cnt
         |FROM lum GROUP BY 1 ORDER BY 1""".stripMargin,
     "e22_stream_image_stats" ->
       s"""WITH f AS (
         |  SELECT source,
-        |    CAST(list_sum(list_transform(range(0, 192), i -> ${v("i")})) AS BIGINT) AS s_all,
-        |    CAST(list_min(list_transform(range(0, 192), i -> ${v("i")})) AS INT) AS mn,
-        |    CAST(list_max(list_transform(range(0, 192), i -> ${v("i")})) AS INT) AS mx
+        |    CAST(list_sum(list_transform(range(0, 192), i -> ${textByte("i")})) AS BIGINT) AS s_all,
+        |    CAST(list_min(list_transform(range(0, 192), i -> ${textByte("i")})) AS INT) AS mn,
+        |    CAST(list_max(list_transform(range(0, 192), i -> ${textByte("i")})) AS INT) AS mx
         |  FROM documents)
         |SELECT source, COUNT(*) AS n_docs,
         |  CAST(SUM(s_all) AS BIGINT) AS px_total,

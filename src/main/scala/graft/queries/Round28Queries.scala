@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 import graft.Tables
 import graft.functions.{AudioExprs, ImageExprs}
+import SketchSql.textByte
 
 /** Twenty-eighth batch — poison-pill tolerance and the REAL audio leg:
   *
@@ -27,13 +28,10 @@ import graft.functions.{AudioExprs, ImageExprs}
   * Reference scope: extension beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round28Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round28Queries extends QueryModule {
 
   def m9_corrupt_tolerance(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
     docs
       .withColumn("payload",
@@ -52,7 +50,7 @@ object Round28Queries {
   }
 
   def m10_audio_features(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(col("doc_id"), col("text"))
+    Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       .withColumn("payload",
         AudioExprs.encodeWavFromText(col("text"), sampleRate = 16000, n = 64))
       .select(col("doc_id"),
@@ -71,11 +69,6 @@ object Round28Queries {
     "m9_corrupt_tolerance" -> (m9_corrupt_tolerance _),
     "m10_audio_features"   -> (m10_audio_features _))
 
-  /** Gray raster closed form (shared convention with m5/m6): sample i =
-    * ord(text[i mod len]) mod 256. */
-  private def v(i: String): String =
-    s"(ord(substr(text, CAST((($i) % length(text)) + 1 AS INT), 1)) % 256)"
-
   /** WAV fixture sample i: ((cp·257) mod 65536) − 32768, signed. */
   private def smp(i: String): String =
     s"(((ord(substr(text, CAST((($i) % length(text)) + 1 AS INT), 1)) * 257) % 65536) - 32768)"
@@ -85,7 +78,7 @@ object Round28Queries {
       s"""WITH f AS (
         |  SELECT source,
         |    CASE WHEN doc_id % 7 = 0 THEN NULL ELSE
-        |      CAST(list_sum(list_transform(range(0, 64), i -> ${v("i")}))
+        |      CAST(list_sum(list_transform(range(0, 64), i -> ${textByte("i")}))
         |        AS BIGINT) END AS s_all
         |  FROM documents)
         |SELECT source, COUNT(*) AS n_docs,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 import graft.Tables
 import graft.functions.VideoExprs
+import SketchSql.textByte
 
 /** Twenty-ninth batch — the video leg goes real (Y4M/YUV4MPEG2), which
   * retires the engine's last stubbed media decoder:
@@ -24,10 +25,7 @@ import graft.functions.VideoExprs
   * Reference scope: extension beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round29Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round29Queries extends QueryModule {
 
   private val W = 8; private val H = 8; private val NFrames = 4
   private val FrameSize = W * H + 2 * (W / 2) * (H / 2) // 96
@@ -41,7 +39,7 @@ object Round29Queries {
           VideoExprs.encodeY4mFromText(col("text"), W, H, NFrames, omitC = false)))
 
   def m11_video_stats(s: SparkSession, dir: String): DataFrame =
-    withY4m(t(s, dir, "documents").select(col("doc_id"), col("text")))
+    withY4m(Tables.load(s, dir, "documents").select(col("doc_id"), col("text")))
       .select(col("doc_id"),
         length(col("payload")).cast(IntegerType).as("n_payload_bytes"),
         VideoExprs.videoStats(col("payload")).as("st"))
@@ -56,7 +54,7 @@ object Round29Queries {
       .orderBy(col("doc_id"))
 
   def m12_frame_sample(s: SparkSession, dir: String): DataFrame =
-    withY4m(t(s, dir, "documents").select(col("doc_id"), col("text")))
+    withY4m(Tables.load(s, dir, "documents").select(col("doc_id"), col("text")))
       .withColumn("fs", VideoExprs.frameYSums(col("payload")))
       .select(col("doc_id"),
         posexplode(col("fs")).as(Seq("frame_idx", "y_sum")))
@@ -68,11 +66,6 @@ object Round29Queries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "m11_video_stats"  -> (m11_video_stats _),
     "m12_frame_sample" -> (m12_frame_sample _))
-
-  /** Raster closed form shared with the image/audio fixtures: global
-    * sample g = ord(text[g mod len]) mod 256. */
-  private def v(g: String): String =
-    s"(ord(substr(text, CAST((($g) % length(text)) + 1 AS INT), 1)) % 256)"
 
   // header bytes: "YUV4MPEG2 W8 H8 F25:1 Ip A1:1" (30 incl. \n) + " C420" (5)
   private val HdrNoC = 30
@@ -88,20 +81,20 @@ object Round29Queries {
         |  CAST(25 AS INT) AS fps_num, CAST(1 AS INT) AS fps_den,
         |  CAST($NFrames AS INT) AS n_frames,
         |  CAST(list_sum(list_transform(range(0, ${NFrames * YSize}), k ->
-        |    ${v(s"$FrameSize*(k//$YSize) + (k%$YSize)")})) AS BIGINT) AS y_sum_all,
-        |  CAST(list_sum(list_transform(range(0, $YSize), i -> ${v("i")}))
+        |    ${textByte(s"$FrameSize*(k//$YSize) + (k%$YSize)")})) AS BIGINT) AS y_sum_all,
+        |  CAST(list_sum(list_transform(range(0, $YSize), i -> ${textByte("i")}))
         |    AS BIGINT) AS y_sum_f0,
         |  CAST(list_sum(list_transform(range(0, ${NFrames * (FrameSize - YSize)}), k ->
-        |    ${v(s"$FrameSize*(k//${FrameSize - YSize}) + $YSize + (k%${FrameSize - YSize})")})) AS BIGINT) AS uv_sum,
+        |    ${textByte(s"$FrameSize*(k//${FrameSize - YSize}) + $YSize + (k%${FrameSize - YSize})")})) AS BIGINT) AS uv_sum,
         |  CAST(list_min(list_transform(range(0, ${NFrames * YSize}), k ->
-        |    ${v(s"$FrameSize*(k//$YSize) + (k%$YSize)")})) AS INT) AS y_min,
+        |    ${textByte(s"$FrameSize*(k//$YSize) + (k%$YSize)")})) AS INT) AS y_min,
         |  CAST(list_max(list_transform(range(0, ${NFrames * YSize}), k ->
-        |    ${v(s"$FrameSize*(k//$YSize) + (k%$YSize)")})) AS INT) AS y_max
+        |    ${textByte(s"$FrameSize*(k//$YSize) + (k%$YSize)")})) AS INT) AS y_max
         |FROM documents ORDER BY doc_id""".stripMargin,
     "m12_frame_sample" ->
       s"""SELECT doc_id, CAST(t.f AS INT) AS frame_idx,
         |  CAST(list_sum(list_transform(range(0, $YSize), i ->
-        |    ${v(s"$FrameSize*t.f + i")})) AS BIGINT) AS y_sum
+        |    ${textByte(s"$FrameSize*t.f + i")})) AS BIGINT) AS y_sum
         |FROM documents CROSS JOIN (VALUES (0), (2)) AS t(f)
         |ORDER BY doc_id, frame_idx""".stripMargin)
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 import graft.Tables
 import graft.functions.ImageExprs
+import SketchSql.textByte
 
 /** Thirtieth batch — the real decoder joins the dedup family:
   *
@@ -29,13 +30,11 @@ import graft.functions.ImageExprs
   * Reference scope: extension beyond the reference surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round30Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round30Queries extends QueryModule {
 
   def d23_image_phash_dedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.spread(t(s, dir, "documents")).select(col("doc_id"), col("text"))
+    val docs = graft.Tables.spread(Tables.load(s, dir, "documents"))
+      .select(col("doc_id"), col("text"))
     val variants = docs.select((col("doc_id") + 1000000L).as("doc_id"),
       expr("concat(substring(text, 1, 5), 'q', substring(text, 7))")
         .as("text"))
@@ -79,7 +78,7 @@ object Round30Queries {
     * streaming gates must agree count for count. */
   def e23_stream_media_gate(s: SparkSession, dir: String): DataFrame = {
     val name = s"stream_media_${streamSeq.incrementAndGet()}"
-    val schema = t(s, dir, "documents").schema
+    val schema = Tables.load(s, dir, "documents").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
       .withColumn("payload",
@@ -111,9 +110,9 @@ object Round30Queries {
     * (documents × embeddings on doc_id), per-rule failure counts ride
     * along so a drifting modality is attributable. */
   def p28_multimodal_gate(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables.load(s, dir, "embeddings")
       .select(col("vec_id").as("doc_id"),
         expr("aggregate(embedding, 0L, (acc, x) -> acc + " +
           "IF(abs(CAST(ROUND(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) " +
@@ -141,9 +140,6 @@ object Round30Queries {
     "e23_stream_media_gate"  -> (e23_stream_media_gate _),
     "p28_multimodal_gate"    -> (p28_multimodal_gate _))
 
-  private def v(g: String): String =
-    s"(ord(substr(text, CAST((($g) % length(text)) + 1 AS INT), 1)) % 256)"
-
   val oracles: Map[String, String] = Map(
     // e23 is the streaming twin of m9 — same gate, same oracle
     "e23_stream_media_gate" -> Round28Queries.oracles("m9_corrupt_tolerance"),
@@ -157,8 +153,8 @@ object Round30Queries {
         |f AS (
         |  SELECT d.source,
         |    len(string_split_regex(trim(d.text), '\\s+')) >= 5 AS text_ok,
-        |    (list_max(list_transform(range(0, 64), i -> ${v("i")})) -
-        |     list_min(list_transform(range(0, 64), i -> ${v("i")}))) >= 8
+        |    (list_max(list_transform(range(0, 64), i -> ${textByte("i")})) -
+        |     list_min(list_transform(range(0, 64), i -> ${textByte("i")}))) >= 8
         |      AS image_ok,
         |    q.strong >= 2 AS embed_ok
         |  FROM documents d JOIN q USING (doc_id))
@@ -181,7 +177,7 @@ object Round30Queries {
         |  FROM documents),
         |px AS (
         |  SELECT doc_id,
-        |    list_transform(range(0, 64), i -> ${v("i")}) AS p
+        |    list_transform(range(0, 64), i -> ${textByte("i")}) AS p
         |  FROM corpus),
         |wm AS (
         |  SELECT doc_id, p, CAST(list_sum(p) AS BIGINT) // 64 AS mean

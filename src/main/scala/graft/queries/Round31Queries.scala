@@ -29,10 +29,7 @@ import graft.Tables
   * linkage semantics from public literature (Seidman '83; Raghavan '07;
   * Fellegi–Sunter '69).
   */
-object Round31Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round31Queries extends QueryModule {
 
   // ── q85: onion layers of the co-purchase graph, k=9, 10 peel rounds.
   //        Graph.onionLayers runs exactly 10 synchronous peels (converged
@@ -91,7 +88,7 @@ object Round31Queries {
   /** The record set d24 resolves: base customers plus planted near-dup
     * variants (name levenshtein-1, balance +37¢) for every third key. */
   private[graft] def d24Records(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "customer").select(
+    val base = Tables.load(s, dir, "customer").select(
       col("c_custkey").as("id"),
       col("c_name").as("name"),
       col("c_nationkey").as("nat"),
@@ -135,7 +132,7 @@ object Round31Queries {
   //        ~500-item scoreboard; the rank window runs on the aggregate,
   //        not the events. ─────────────────────────────────────────────────
   def q87_decayed_trend(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val scored = raw
       .select(col("event_type"),
         get_json_object(col("props"), "$.k").cast(IntegerType).as("k"),

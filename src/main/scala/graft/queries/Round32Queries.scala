@@ -26,13 +26,7 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round32Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def sanitize(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
+object Round32Queries extends QueryModule {
 
   // ── p29: join-view delta maintenance. View = per-day (n_items,
   //        revenue cents) of orders⋈lineitem. Base/delta splits are
@@ -47,9 +41,9 @@ object Round32Queries {
   //        recomputes the view from scratch: the hash gate IS the delta
   //        algebra's correctness proof. ───────────────────────────────────
   def p29_join_view_delta(s: SparkSession, dir: String): DataFrame = {
-    val ord = t(s, dir, "orders")
+    val ord = Tables.load(s, dir, "orders")
       .select(col("o_orderkey").as("ok"), col("o_orderdate").as("d"))
-    val li = t(s, dir, "lineitem")
+    val li = Tables.load(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_suppkey"),
         round(col("l_extendedprice") * 100).cast(LongType).as("cents"))
     val (ord0, dOrd) = (ord.filter(col("ok") % 7 =!= 0),
@@ -59,7 +53,7 @@ object Round32Queries {
     def view(o: DataFrame, l: DataFrame): DataFrame =
       o.join(l, "ok").groupBy(col("d"))
         .agg(count(lit(1)).as("n_items"), sum(col("cents")).as("revenue_c"))
-    val artDir = graft.Scratch.dir(s"p29_view_${sanitize(dir)}")
+    val artDir = graft.Scratch.dir("p29_view", dir)
     graft.sinks.ParquetSink.write(view(ord0, li0), artDir)
     val v0 = s.read.parquet(artDir)
     val delta = view(dOrd, li0)
@@ -84,7 +78,7 @@ object Round32Queries {
   //        ANN itself. ────────────────────────────────────────────────────
   def s13_ann_recall(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Dedup, Similarity}
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables.load(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < 20)
     val k = 10
     val gt = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding",
@@ -133,7 +127,7 @@ object Round32Queries {
   //        same oracle as q87. ──────────────────────────────────────────
   def e24_stream_decayed_trend(s: SparkSession, dir: String): DataFrame = {
     val name = s"stream_trend_${streamSeq.incrementAndGet()}"
-    val schema = t(s, dir, "events").schema
+    val schema = Tables.load(s, dir, "events").schema
     val raw = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
     val agg = raw
@@ -169,7 +163,7 @@ object Round32Queries {
   def t25_ccnet_buckets(s: SparkSession, dir: String): DataFrame = {
     val scores = Round4Queries.t9_trigram_lm(s, dir)
       .select(col("doc_id"), col("lm_score"))
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"))
+    val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("lang"))
     val w = Window.partitionBy(col("lang"))
       .orderBy(col("lm_score").desc, col("doc_id"))
     scores.join(docs, "doc_id")

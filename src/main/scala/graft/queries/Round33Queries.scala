@@ -25,10 +25,7 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round33Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round33Queries extends QueryModule {
 
   // ── q88: day-of-week × hour-of-day profile. dow is computed portably
   //        as days-since-Monday-2024-01-01 mod 7 (no engine dayofweek
@@ -37,7 +34,7 @@ object Round33Queries {
   //        join broadcasts the profile. dev_bp cross-multiplies instead
   //        of dividing by the slot mean — exact integers, q82's trick. ───
   def q88_seasonal_profile(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val hourly = raw
       .groupBy(date_trunc("hour", Tables.tsMicros(raw)).as("hour"))
       .agg(count(lit(1)).as("cnt"))
@@ -60,7 +57,7 @@ object Round33Queries {
   //        one in-partition sort + one linear scan — the window-shuffle
   //        cost with fold semantics windows can't express. ───────────────
   def q89_capped_balance(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val ev = raw.withColumn("ts_us", Tables.tsMicros(raw))
       .withColumn("cents", round(col("value") * 100).cast(LongType))
       .withColumn("delta",
@@ -78,7 +75,7 @@ object Round33Queries {
   //        census; at any scale both are group-by shuffles on bounded
   //        key spaces. ───────────────────────────────────────────────────
   def q90_k_anonymity(s: SparkSession, dir: String): DataFrame = {
-    val cls = t(s, dir, "customer")
+    val cls = Tables.load(s, dir, "customer")
       .select(col("c_nationkey").as("nat"), col("c_mktsegment").as("seg"),
         expr("cast(round(c_acctbal * 100) as bigint) div 100000")
           .as("band"))

@@ -25,10 +25,7 @@ import graft.operators.{Graph, Hll}
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round34Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round34Queries extends QueryModule {
 
   // ── a13: click-audience vs purchase-audience overlap. Three register
   //        pipelines (A, B, and the union via register merge — NOT a
@@ -38,7 +35,7 @@ object Round34Queries {
   //        estimates subtracted); it is reported raw with the exact
   //        anchors alongside — the honest sketch contract a1/a10 use. ────
   def a13_hll_overlap(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").select(col("event_type"), col("user_id"))
+    val ev = Tables.load(s, dir, "events").select(col("event_type"), col("user_id"))
     val a = ev.filter(col("event_type") === "click")
     val b = ev.filter(col("event_type") === "purchase")
     val regsA = Hll.registers(a, Seq.empty, "user_id")

@@ -26,10 +26,7 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round35Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round35Queries extends QueryModule {
 
   // ── s15: embeddings quantize to round(x·10³) (coarser than the 10⁶
   //        lattice elsewhere: it keeps every Gram cell ≲1e8 so the
@@ -40,7 +37,7 @@ object Round35Queries {
   //        rounded to 12 dp. Returns the 64 loadings and the dominant
   //        eigenvalue estimate (the last normalizer). ────────────────────
   def s15_power_iteration(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables.load(s, dir, "embeddings")
     // per-vector OUTER PRODUCT by two chained generates off ONE scan —
     // no self-join, no shuffle before the 4096-cell aggregate (the
     // original shape joined q⋈q on vec_id: same cells, one avoidable
@@ -83,7 +80,7 @@ object Round35Queries {
   //        at any corpus scale. Output: the 30 most target-like pool
   //        docs (the ones DSIR resampling would keep). ──────────────────
   def d25_importance_weights(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val tok = docs.select(col("doc_id"), col("lang"),
         explode(graft.functions.Text.tokens(col("text"))).as("w"))
       .withColumn("f",
@@ -123,7 +120,7 @@ object Round35Queries {
   //        tv_bp = Σ|…|·10000 div (2·T1·T4) — exact integers, one
   //        output row per event type. ────────────────────────────────────
   def p30_drift_monitor(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val ev = raw.select(col("event_type"),
         to_date(Tables.tsMicros(raw)).as("day"),
         expr("cast(round(value * 100) as bigint) div 5000").as("bin"))

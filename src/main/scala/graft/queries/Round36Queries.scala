@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
 import graft.functions.VideoExprs
+import SketchSql.textByte
 
 /** Thirty-sixth batch — sketch differencing and temporal video signal:
   *
@@ -26,10 +27,7 @@ import graft.functions.VideoExprs
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round36Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round36Queries extends QueryModule {
 
   // ── a14: item = props.k (the bounded catalog 0..127); sketches are
   //        w=64, d=3 — 192 cells per period regardless of event volume.
@@ -38,7 +36,7 @@ object Round36Queries {
   //        carries). Top 10 by |estimated delta|. ──────────────────────
   def a14_cms_heavy_changers(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.CountMin
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val ev = raw.select(
       get_json_object(col("props"), "$.k").cast(LongType).as("k"),
       to_date(Tables.tsMicros(raw)).as("day"))
@@ -82,7 +80,7 @@ object Round36Queries {
   //        series; a pair is a CUT when its mean |Δluma| ≥ 80 (of 255).
   //        One codegen'd decode per document; the explode is 3 rows. ────
   def m13_scene_cuts(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(col("doc_id"),
+    Tables.load(s, dir, "documents").select(col("doc_id"),
         VideoExprs.frameYDeltas(
           when(col("doc_id") % 2 === 0,
             VideoExprs.encodeY4mFromText(col("text"), W, H, NFrames,
@@ -101,10 +99,6 @@ object Round36Queries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "a14_cms_heavy_changers" -> (a14_cms_heavy_changers _),
     "m13_scene_cuts"         -> (m13_scene_cuts _))
-
-  /** Raster closed form shared with the media fixtures. */
-  private def v(g: String): String =
-    s"(ord(substr(text, CAST((($g) % length(text)) + 1 AS INT), 1)) % 256)"
 
   val oracles: Map[String, String] = Map(
     "a14_cms_heavy_changers" ->
@@ -166,8 +160,8 @@ object Round36Queries {
       s"""WITH d AS (
         |  SELECT doc_id, text, CAST(t.f AS INT) AS frame_idx,
         |    CAST(list_sum(list_transform(range(0, $YSize), i ->
-        |      abs(${v(s"$FrameSize*t.f + i")} -
-        |          ${v(s"$FrameSize*(t.f-1) + i")}))) AS BIGINT) AS delta
+        |      abs(${textByte(s"$FrameSize*t.f + i")} -
+        |          ${textByte(s"$FrameSize*(t.f-1) + i")}))) AS BIGINT) AS delta
         |  FROM documents CROSS JOIN (VALUES (1), (2), (3)) AS t(f))
         |SELECT doc_id, frame_idx, delta, delta // 64 AS mad,
         |  delta // 64 >= 80 AS is_cut

@@ -29,24 +29,18 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round37Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def sanitize(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
+object Round37Queries extends QueryModule {
 
   // ── p31: write a pushdown-relevant slice to ORC partitioned by return
   //        flag, read it back, aggregate. At 100 TB the ORC scan gets
   //        the same PushedFilters/ReadSchema treatment as parquet —
   //        format breadth without a second code path. ───────────────────
   def p31_orc_roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val slice = t(s, dir, "lineitem")
+    val slice = Tables.load(s, dir, "lineitem")
       .filter(col("l_shipdate") >= to_date(lit("1998-01-01")))
       .select(col("l_returnflag"), col("l_quantity"),
         round(col("l_extendedprice") * 100).cast(LongType).as("cents"))
-    val orcDir = graft.Scratch.dir(s"p31_orc_${sanitize(dir)}")
+    val orcDir = graft.Scratch.dir("p31_orc", dir)
     slice.write.mode(SaveMode.Overwrite)
       .partitionBy("l_returnflag").orc(orcDir)
     s.read.orc(orcDir)
@@ -63,7 +57,7 @@ object Round37Queries {
   //        changed row; unchanged rows drop out. The changelog feeds
   //        incremental consumers — p29's delta joins eat exactly this. ──
   def p32_snapshot_diff(s: SparkSession, dir: String): DataFrame = {
-    val v0 = t(s, dir, "customer").select(col("c_custkey").as("id"),
+    val v0 = Tables.load(s, dir, "customer").select(col("c_custkey").as("id"),
       round(col("c_acctbal") * 100).cast(LongType).as("balc"))
     val survivors = v0.filter(col("id") % 13 =!= 0)
     val v1 = survivors
@@ -88,7 +82,7 @@ object Round37Queries {
   //        join generates source pairs — Σ_sh |sources(sh)|² work, never
   //        |corpus|². Jaccard in exact integer basis points. ────────────
   def d26_source_overlap(s: SparkSession, dir: String): DataFrame = {
-    val post = t(s, dir, "documents")
+    val post = Tables.load(s, dir, "documents")
       .select(col("source"),
         explode(array_distinct(
           graft.functions.Text.shingles(col("text"), 3))).as("sh"))
@@ -115,7 +109,7 @@ object Round37Queries {
   //        Reciprocal rank in integer basis points: 10000 div rank. ─────
   def s16_ann_mrr(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Dedup, Similarity}
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables.load(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < 20)
     val gt1 = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding",
         k = 1)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
+import SketchSql.MStr
 
 /** Thirty-eighth batch — evaluation harnesses for the dedup and
   * classification legs (the counterpart of s13/s16's ANN metrics):
@@ -22,10 +23,7 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round38Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round38Queries extends QueryModule {
 
   // ── d27: truth = exact 3-gram Jaccard ≥ 0.5 via shingle postings
   //        (Σ count² per shingle, never corpus²); weak ANN = 2 bands ×
@@ -34,7 +32,7 @@ object Round38Queries {
   //        same tuples). found ⇔ the pair shares ≥1 band. ──────────────
   def d27_dedup_recall(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.{NativeExprs, Text}
-    val base = graft.Tables.spread(t(s, dir, "documents"))
+    val base = graft.Tables.spread(Tables.load(s, dir, "documents"))
       .select(col("doc_id").as("id"),
         array_distinct(Text.shingles(col("text"), 3)).as("shs"),
         NativeExprs.minhashSigPortable(Text.shingles(col("text"), 3), 8)
@@ -105,7 +103,6 @@ object Round38Queries {
     "d27_dedup_recall"         -> (d27_dedup_recall _),
     "t26_classifier_agreement" -> (t26_classifier_agreement _))
 
-  private val MStr = "2305843009213693951"
   /** First 8 portable minhash multipliers: B2^(j+1) mod 2^61−1. */
   private val mhFam8: String =
     (0 until 8).map(j =>

@@ -22,15 +22,12 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round39Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round39Queries extends QueryModule {
 
   // ── q92: hourly counts per type (the fact aggregate), then one
   //        hash-partition + in-partition sort + linear scan. ────────────
   def q92_ewma_smoothing(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val hourly = raw
       .groupBy(col("event_type"),
         date_trunc("hour", Tables.tsMicros(raw)).as("hour"))
@@ -46,7 +43,7 @@ object Round39Queries {
   //        points; docs too short for one shingle drop out (consistently
   //        in both engines). ────────────────────────────────────────────
   def t27_ngram_novelty(s: SparkSession, dir: String): DataFrame = {
-    val sh = t(s, dir, "documents")
+    val sh = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         explode(array_distinct(
           graft.functions.Text.shingles(col("text"), 8))).as("sh"))

@@ -7,28 +7,19 @@ import org.apache.spark.sql.types._
 import graft.Tables
 import graft.functions.Text
 import graft.operators.Multimodal
+import DecimalSums.{dec, dsum}
 
 /** Third batch: exact percentiles, stratified deterministic sampling,
   * SCD Type-2 dimension versioning (the warehouse-history operator an ETL
   * engine is expected to ship), a composite document quality gate, and
   * frame-sample chunking over multimodal payloads.
   */
-object Round3Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def dec(c: org.apache.spark.sql.Column, scale: Int = 4) =
-    c.cast(DecimalType(18, scale))
-  private def dsum(c: org.apache.spark.sql.Column, scale: Int = 4) =
-    sum(dec(c, scale)).cast(DoubleType)
-
-  private def scratch(name: String): String = graft.Scratch.dir(name)
+object Round3Queries extends QueryModule {
 
   // ── q49: exact percentiles per group (`percentile` is the exact sort-
   //        based aggregate; a1 covers the approximate sketch twin) ────────
   def q49_percentile(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         round(expr("percentile(l_extendedprice, 0.25)"), 6).as("p25"),
@@ -51,7 +42,7 @@ object Round3Queries {
     val thr = when(col("l_returnflag") === "A", "1a")
       .when(col("l_returnflag") === "N", "0d")
       .otherwise("33")
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .filter(substring(key, 1, 2) < thr)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
@@ -66,7 +57,7 @@ object Round3Queries {
   def p7_scd2(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("d"), col("o_orderkey"))
-    val base = t(s, dir, "orders").select(
+    val base = Tables.load(s, dir, "orders").select(
       col("o_custkey"), col("o_orderkey"),
       col("o_orderdate").cast(DateType).as("d"),
       col("o_orderpriority").as("state"))
@@ -100,7 +91,7 @@ object Round3Queries {
       when(Text.stopwordRatio(txt, Text.defaultStopwords) < 0.01,
         "low_stopword"),
       when(Text.langId(txt) === "und", "lang_und"))
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), (reasons === "").as("keep"),
         reasons.as("reasons"))
       .orderBy(col("doc_id"))
@@ -111,7 +102,7 @@ object Round3Queries {
   //        zero-filling empty months. The recursion runs on both engines
   //        natively. ───────────────────────────────────────────────────────
   def q55_recursive_cte(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
     s.sql(
       """WITH RECURSIVE months(m) AS (
         |  SELECT DATE '1995-01-01'
@@ -135,7 +126,7 @@ object Round3Queries {
   //        string-re-parsing per field at scale. Oracle recomputes the
   //        same paths with its native JSON machinery. ────────────────────
   def q56_variant(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("event_id"), parse_json(col("props")).as("v"))
       .select(col("event_id"),
         expr("variant_get(v, '$.k', 'int')").as("k"),
@@ -153,7 +144,7 @@ object Round3Queries {
   def q57_topk_per_group(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val agg = new graft.functions.TopKAgg(3).toColumn
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .select(col("o_orderpriority"), col("o_totalprice"), col("o_orderkey"))
       .as[(String, Double, Long)]
       .groupByKey(_._1)
@@ -177,7 +168,7 @@ object Round3Queries {
     val dim = s.createDataFrame(Seq(
       ("A", "returned"), ("N", "active"), ("R", "refunded")))
       .toDF("flag", "flag_name")
-    val li = t(s, dir, "lineitem")
+    val li = Tables.load(s, dir, "lineitem")
       .select(col("l_returnflag").as("flag"), col("l_quantity"))
     graft.operators.Skew.saltedJoin(li, dim, "flag", salts = 8)
       .groupBy(col("flag_name"))
@@ -191,8 +182,8 @@ object Round3Queries {
   //        Pinning both on one nullable subquery proves the engine honors
   //        ANSI semantics rather than the intuitive-but-wrong reading. ───
   def q59_not_in_null(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "customer").createOrReplaceTempView("customer")
-    t(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.load(s, dir, "customer").createOrReplaceTempView("customer")
+    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
     s.sql(
       """WITH sub AS (
         |  SELECT CASE WHEN o_orderkey % 1000 = 0 THEN NULL
@@ -212,8 +203,8 @@ object Round3Queries {
   //        column. The reality of 100 TB accumulated over schema
   //        versions. ──────────────────────────────────────────────────────
   def p10_schema_evolution(s: SparkSession, dir: String): DataFrame = {
-    val out = scratch("p10_evo")
-    val orders = t(s, dir, "orders")
+    val out = graft.Scratch.dir("p10_evo")
+    val orders = Tables.load(s, dir, "orders")
     orders.filter(col("o_orderkey") % 2 === 0)
       .select(col("o_orderkey"), col("o_totalprice"))
       .write.mode("overwrite").parquet(s"$out/batch1")
@@ -232,8 +223,8 @@ object Round3Queries {
   //        leaves the rest untouched: re-running a day's backfill can't
   //        clobber the other days. ────────────────────────────────────────
   def p11_partition_backfill(s: SparkSession, dir: String): DataFrame = {
-    val out = scratch("p11_orders_by_status")
-    val orders = t(s, dir, "orders")
+    val out = graft.Scratch.dir("p11_orders_by_status")
+    val orders = Tables.load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
     orders.write.partitionBy("o_orderstatus").mode("overwrite").parquet(out)
     // re-run the 'F' partition's pipeline (same input → same output);
@@ -253,7 +244,7 @@ object Round3Queries {
   //        text (the audit trail a privacy pass leaves behind). Plain
   //        regexp column ops: codegen'd, shuffle-free, row-parallel. ─────
   def t8_pii_scrub(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events").select(
+    Tables.load(s, dir, "events").select(
       col("event_id"),
       size(regexp_extract_all(col("props"), lit("[0-9]+"), lit(0)))
         .as("n_redacted"),
@@ -268,7 +259,7 @@ object Round3Queries {
   def m2_frame_sample(s: SparkSession, dir: String): DataFrame = {
     val frameLen = 20
     val withPayload = Multimodal.attachFakePayload(
-      t(s, dir, "documents").select(col("doc_id"), col("text")), "text")
+      Tables.load(s, dir, "documents").select(col("doc_id"), col("text")), "text")
       .withColumn("n_frames",
         (length(col("text")) / frameLen).cast(IntegerType) + 1)
     Multimodal.sampleFrameIndexes(withPayload, "n_frames", stride = 2)
@@ -284,11 +275,11 @@ object Round3Queries {
   // ── q51: FULL OUTER join — both sides partial, so nulls appear on each
   //        side (the one join shape the suite didn't yet pin) ─────────────
   def q51_full_outer(s: SparkSession, dir: String): DataFrame = {
-    val a = t(s, dir, "orders")
+    val a = Tables.load(s, dir, "orders")
       .filter(col("o_totalprice") > 150000)
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_big_orders"))
-    val b = t(s, dir, "customer")
+    val b = Tables.load(s, dir, "customer")
       .filter(col("c_acctbal") > 5000)
       .select(col("c_custkey"), col("c_acctbal"))
     a.join(b, col("o_custkey") === col("c_custkey"), "full_outer")
@@ -303,7 +294,7 @@ object Round3Queries {
   //        introspect. Output stays scalar so engines compare values, not
   //        map encodings. ───────────────────────────────────────────────
   def q52_map_funcs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .groupBy(col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n"))
       .groupBy(col("o_orderstatus"))
@@ -323,7 +314,7 @@ object Round3Queries {
   //        anything bigger than one count), top-3 terms per doc with a
   //        deterministic (score desc, term asc) tiebreak. ────────────────
   def t7_tfidf(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val tok = docs.select(col("doc_id"),
       explode(Text.tokens(lower(col("text")))).as("term"))
     val tf = tok.groupBy(col("doc_id"), col("term"))
@@ -347,7 +338,7 @@ object Round3Queries {
   //        non-null observation forward over a sparse column (the
   //        gap-filling idiom time-series pipelines lean on) ──────────────
   def q53_ignore_nulls(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
     s.sql(
       """SELECT o_custkey, o_orderkey,
         |  LAST_VALUE(CASE WHEN o_orderstatus <> 'P' THEN o_totalprice END)
@@ -370,8 +361,8 @@ object Round3Queries {
   //        one directory — PlanAuditSpec pins the PartitionFilters), and
   //        the oracle proves the round-trip loses nothing. ───────────────
   def p8_partition_prune(s: SparkSession, dir: String): DataFrame = {
-    val out = scratch("p8_orders_by_status")
-    t(s, dir, "orders")
+    val out = graft.Scratch.dir("p8_orders_by_status")
+    Tables.load(s, dir, "orders")
       .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
     s.read.parquet(out)
       .filter(col("o_orderstatus") === "F")
@@ -384,7 +375,7 @@ object Round3Queries {
   //        corner (every/any twins of DuckDB bool_and/bool_or, bit_and/or
   //        over integral keys) ───────────────────────────────────────────
   def q54_bool_bit_aggs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         every(col("l_quantity") < 50).as("all_small"),
@@ -404,7 +395,7 @@ object Round3Queries {
       .when(col("o_orderdate").cast(DateType).isNull, "bad_date")
       .when(!col("o_orderstatus").isin("O", "F", "P"), "unknown_status")
       .otherwise("ok")
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .groupBy(rule.as("rule"))
       .agg(count(lit(1)).as("n"),
         dsum(col("o_totalprice")).as("total_price"))

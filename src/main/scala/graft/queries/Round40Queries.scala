@@ -21,10 +21,7 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round40Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round40Queries extends QueryModule {
 
   // ── q93: top-2 lineitems per supplier by quantity. The coalesce()s
   //        are load-bearing: they make the sort keys provably
@@ -64,7 +61,7 @@ object Round40Queries {
   }
 
   private def q93Body(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "lineitem").select(
+    val base = Tables.load(s, dir, "lineitem").select(
       col("l_suppkey").as("sk"),
       coalesce(col("l_quantity").cast(LongType), lit(0L)).as("q"),
       (coalesce(col("l_orderkey"), lit(0L)) * 8L +

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
+import DecimalSums.dec
 
 /** Forty-first batch — table-format lifecycle, corpus growth law, and a
   * dialect staple:
@@ -23,16 +24,7 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round41Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def sanitize(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
-
-  private def dec(c: org.apache.spark.sql.Column, sc: Int) =
-    c.cast(DecimalType(18, sc))
+object Round41Queries extends QueryModule {
 
   // ── p33: v1 = pre-1997 orders (2 files), v2 = v1 + the 1997+ delta
   //        (2 more files), v3 = COMPACTION of v2's content into 2 fresh
@@ -43,10 +35,10 @@ object Round41Queries {
   //        file bookkeeping, and proof the expired version now throws. ──
   def p33_snapshot_expire(s: SparkSession, dir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
-    val base = graft.Scratch.dir(s"p33_v1_${sanitize(dir)}")
-    val delta = graft.Scratch.dir(s"p33_delta_${sanitize(dir)}")
-    val compacted = graft.Scratch.dir(s"p33_v3_${sanitize(dir)}")
-    val ord = t(s, dir, "orders").select(col("o_orderkey"),
+    val base = graft.Scratch.dir("p33_v1", dir)
+    val delta = graft.Scratch.dir("p33_delta", dir)
+    val compacted = graft.Scratch.dir("p33_v3", dir)
+    val ord = Tables.load(s, dir, "orders").select(col("o_orderkey"),
       col("o_orderdate"), col("o_totalprice"))
     ord.filter(col("o_orderdate") < "1997-01-01")
       .repartition(2).write.mode("overwrite").parquet(base)
@@ -83,7 +75,7 @@ object Round41Queries {
   //        then t13's rounded-DECIMAL least squares on the log-log
   //        points. ──────────────────────────────────────────────────────
   def t28_heaps_law(s: SparkSession, dir: String): DataFrame = {
-    val tok = t(s, dir, "documents")
+    val tok = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         explode(graft.functions.Text.tokens(col("text"))).as("w"))
     val perDoc = tok.groupBy(col("doc_id"))
@@ -123,7 +115,7 @@ object Round41Queries {
 
   // ── q94: sorted-distinct CSV of part names per brand. ────────────────
   def q94_string_agg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables.load(s, dir, "part")
       .groupBy(col("p_brand"))
       .agg(countDistinct(col("p_name")).as("n_names"),
         concat_ws(",", sort_array(collect_set(col("p_name"))))

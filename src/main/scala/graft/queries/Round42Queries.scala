@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
 import graft.functions.ImageExprs
+import SketchSql.textByte
 
 /** Forty-second batch — data auditing, curation, and image features:
   *
@@ -25,10 +26,7 @@ import graft.functions.ImageExprs
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round42Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round42Queries extends QueryModule {
 
   // Benford expectation, ⌊log10(1+1/d)·10⁴⌋ pinned as integers so both
   // engines share literal values (no float log in the gate)
@@ -39,7 +37,7 @@ object Round42Queries {
   def q95_benford(s: SparkSession, dir: String): DataFrame = {
     val sp = s
     import sp.implicits._
-    val digits = t(s, dir, "orders")
+    val digits = Tables.load(s, dir, "orders")
       .select(substring(round(col("o_totalprice") * 100).cast(LongType)
         .cast(StringType), 1, 1).cast(IntegerType).as("digit"))
       .groupBy(col("digit")).agg(count(lit(1)).as("n"))
@@ -56,12 +54,12 @@ object Round42Queries {
   // ── d28: d7's clusters (LSH pairs → connected components) joined to
   //        the source column; one aggregate per cluster. ───────────────
   def d28_cluster_sources(s: SparkSession, dir: String): DataFrame = {
-    val pairs = graft.operators.Dedup.minhashLsh(t(s, dir, "documents"),
+    val pairs = graft.operators.Dedup.minhashLsh(Tables.load(s, dir, "documents"),
       "doc_id", "text", shingleN = 3, numHashes = 32, bands = 8,
       threshold = 0.5)
     val labels = graft.operators.Graph
       .connectedComponents(pairs, "id_a", "id_b")
-    val src = t(s, dir, "documents").select(col("doc_id"), col("source"))
+    val src = Tables.load(s, dir, "documents").select(col("doc_id"), col("source"))
     labels.join(src, labels("n") === src("doc_id"))
       .groupBy(col("l").as("cluster"))
       .agg(count(lit(1)).as("n_docs"),
@@ -85,7 +83,7 @@ object Round42Queries {
   }
 
   def m14_edge_density(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(col("doc_id"),
+    Tables.load(s, dir, "documents").select(col("doc_id"),
         ImageExprs.decodePixels(
           ImageExprs.encodeImageFromText(col("text"), "pgm", 8, 8))
           .as("p"))
@@ -104,13 +102,8 @@ object Round42Queries {
     "d28_cluster_sources" -> (d28_cluster_sources _),
     "m14_edge_density"    -> (m14_edge_density _))
 
-  /** Raster closed form shared with the media fixtures (0-based global
-    * sample index). */
-  private def v(g: String): String =
-    s"(ord(substr(text, CAST((($g) % length(text)) + 1 AS INT), 1)) % 256)"
-
   private def duckPix(dy: Int, dx: Int): String =
-    v(s"((k // 6) + 1 + ($dy)) * 8 + ((k % 6) + 1 + ($dx))")
+    textByte(s"((k // 6) + 1 + ($dy)) * 8 + ((k % 6) + 1 + ($dx))")
   private def duckMag: String = {
     def gx = s"((${duckPix(-1, 1)} + 2*${duckPix(0, 1)} + ${duckPix(1, 1)}) - " +
       s"(${duckPix(-1, -1)} + 2*${duckPix(0, -1)} + ${duckPix(1, -1)}))"

@@ -22,17 +22,14 @@ import graft.functions.AudioExprs
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round43Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round43Queries extends QueryModule {
 
   private val FrameLen = 8
   private val ActiveThreshold = 2000000000L // ~70% of the E[Σs²] scale
 
   // ── m15: 64 samples → 8 frames of 8; one decode per document. ────────
   def m15_audio_vad(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(col("doc_id"),
+    Tables.load(s, dir, "documents").select(col("doc_id"),
         AudioExprs.frameEnergies(
           AudioExprs.encodeWavFromText(col("text"), sampleRate = 16000,
             n = 64), FrameLen).as("fe"))
@@ -48,8 +45,8 @@ object Round43Queries {
   // ── t29: cross-source exact pairs, oriented by ingest order. ─────────
   def t29_copy_direction(s: SparkSession, dir: String): DataFrame = {
     val pairs = graft.operators.Dedup.ngramJaccard(
-      t(s, dir, "documents"), "doc_id", "text", n = 3, threshold = 0.5)
-    val src = t(s, dir, "documents").select(col("doc_id"), col("source"))
+      Tables.load(s, dir, "documents"), "doc_id", "text", n = 3, threshold = 0.5)
+    val src = Tables.load(s, dir, "documents").select(col("doc_id"), col("source"))
     pairs
       .join(src.select(col("doc_id").as("id_a"),
         col("source").as("origin_src")), "id_a")

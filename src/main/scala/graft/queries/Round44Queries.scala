@@ -23,17 +23,14 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round44Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round44Queries extends QueryModule {
 
   // ── s17: census of s8's Lloyd output (k=4, 2 iterations — the same
   //        unrolled-oracle clustering); imbalance_bp = n_c·k·10⁴/N
   //        (10000 = perfectly balanced). ────────────────────────────────
   def s17_kmeans_health(s: SparkSession, dir: String): DataFrame = {
     val assign = graft.operators.Kmeans
-      .lloyd(t(s, dir, "embeddings"), "vec_id", "embedding", k = 4,
+      .lloyd(Tables.load(s, dir, "embeddings"), "vec_id", "embedding", k = 4,
         iters = 2)
     val census = assign.groupBy(col("c").as("cluster"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("d2")).as("ssq"))
@@ -53,7 +50,7 @@ object Round44Queries {
   //        numerator is ≥ 0 (Gini is non-negative), so truncating and
   //        flooring integer division agree. ─────────────────────────────
   def q96_gini_spend(s: SparkSession, dir: String): DataFrame = {
-    val spend = t(s, dir, "orders")
+    val spend = Tables.load(s, dir, "orders")
       .groupBy(col("o_custkey"))
       .agg(sum(round(col("o_totalprice") * 100).cast(LongType))
         .as("spend_c"))
@@ -77,7 +74,7 @@ object Round44Queries {
 
   // ── t30: Gini impurity 1 − Σp² per source, cross-multiplied to bp. ───
   def t30_source_diversity(s: SparkSession, dir: String): DataFrame = {
-    val byLang = t(s, dir, "documents")
+    val byLang = Tables.load(s, dir, "documents")
       .groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("nl"))
     byLang.groupBy(col("source"))

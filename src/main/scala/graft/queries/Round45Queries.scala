@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
 import graft.functions.VideoExprs
+import SketchSql.textByte
 
 /** Forty-fifth batch — reader-layer resilience, streaming video signal,
   * and cohort economics:
@@ -24,13 +25,7 @@ import graft.functions.VideoExprs
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round45Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def sanitize(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
+object Round45Queries extends QueryModule {
 
   private val BadLines = Seq(
     "not_a_number,garbage-one,99x",
@@ -43,8 +38,8 @@ object Round45Queries {
   //        lines, read back PERMISSIVE with a corrupt-record column.
   //        Bad rows quarantine; good rows must aggregate exactly. ───────
   def p34_csv_permissive(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.Scratch.dir(s"p34_csv_${sanitize(dir)}") + "/parts.csv"
-    val slice = t(s, dir, "part").select(col("p_partkey"), col("p_name"),
+    val path = graft.Scratch.dir("p34_csv", dir) + "/parts.csv"
+    val slice = Tables.load(s, dir, "part").select(col("p_partkey"), col("p_name"),
       round(col("p_retailprice") * 100).cast(LongType).as("cents"))
     graft.sinks.CsvSink.writeSingleFile(slice, path)
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
@@ -75,7 +70,7 @@ object Round45Queries {
   //        in complete mode (state = |sources| rows). ───────────────────
   def e25_stream_scene_cuts(s: SparkSession, dir: String): DataFrame = {
     val name = s"stream_scenecut_${streamSeq.incrementAndGet()}"
-    val schema = t(s, dir, "documents").schema
+    val schema = Tables.load(s, dir, "documents").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
       .withColumn("deltas", VideoExprs.frameYDeltas(
@@ -105,7 +100,7 @@ object Round45Queries {
   //        of that cohort through that relative week. Two aggregates +
   //        one window over the (≤ weeks²) triangle. ────────────────────
   def q97_cohort_ltv(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val ev = raw.withColumn("day", to_date(Tables.tsMicros(raw)))
       .withColumn("week", expr(
         "date_sub(day, CAST((datediff(day, DATE '2024-01-01') % 7) AS INT))"))
@@ -137,9 +132,6 @@ object Round45Queries {
 
   private val FrameSize = 96
   private val YSize = 64
-  private def v(g: String): String =
-    s"(ord(substr(text, CAST((($g) % length(text)) + 1 AS INT), 1)) % 256)"
-
   val oracles: Map[String, String] = Map(
     "p34_csv_permissive" ->
       """SELECT CAST(COUNT(*) AS BIGINT) AS n_good,
@@ -153,8 +145,8 @@ object Round45Queries {
         |  SELECT source,
         |    list_transform(range(1, ${NFrames}), f ->
         |      CAST(list_sum(list_transform(range(0, $YSize), i ->
-        |        abs(${v(s"$FrameSize*f + i")} -
-        |            ${v(s"$FrameSize*(f-1) + i")}))) AS BIGINT)) AS deltas
+        |        abs(${textByte(s"$FrameSize*f + i")} -
+        |            ${textByte(s"$FrameSize*(f-1) + i")}))) AS BIGINT)) AS deltas
         |  FROM documents)
         |SELECT source, COUNT(*) AS n_docs,
         |  CAST(SUM(list_sum(deltas)) AS BIGINT) AS total_mad,

@@ -26,18 +26,12 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round46Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def sanitize(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
+object Round46Queries extends QueryModule {
 
   // ── q98: day index = days since 2024-01-01 (0..29); bitmap = BIT_OR
   //        of 1<<idx (duplicate-day safe). Week masks are literals. ─────
   def q98_activity_bitmaps(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val w1Mask = 127L            // days 0..6
     val w4Mask = 127L << 21      // days 21..27
     val bitmaps = raw
@@ -61,7 +55,7 @@ object Round46Queries {
 
   // ── d30: modal 5-token prefix per source. ────────────────────────────
   def d30_boilerplate(s: SparkSession, dir: String): DataFrame = {
-    val pfx = t(s, dir, "documents")
+    val pfx = Tables.load(s, dir, "documents")
       .select(col("source"),
         concat_ws(" ", slice(graft.functions.Text.tokens(col("text")),
           1, 5)).as("prefix"))
@@ -85,12 +79,12 @@ object Round46Queries {
   //        published read equals the good batch. ───────────────────────
   def p35_write_audit_publish(s: SparkSession, dir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
-    val pubDir = graft.Scratch.dir(s"p35_pub_${sanitize(dir)}")
+    val pubDir = graft.Scratch.dir("p35_pub", dir)
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       s.sparkContext.hadoopConfiguration)
     fs.delete(new Path(pubDir), true) // idempotent re-run
     def stage(df: DataFrame, name: String): String = {
-      val d = graft.Scratch.dir(s"p35_stage_${name}_${sanitize(dir)}")
+      val d = graft.Scratch.dir(s"p35_stage_$name", dir)
       df.write.mode("overwrite").parquet(d); d
     }
     def audit(d: String): Boolean = {
@@ -102,7 +96,7 @@ object Round46Queries {
     }
     val published = scala.collection.mutable.ArrayBuffer.empty[String]
     def publish(d: String): Unit = { published += d }
-    val ord = t(s, dir, "orders").select(col("o_orderkey"),
+    val ord = Tables.load(s, dir, "orders").select(col("o_orderkey"),
       round(col("o_totalprice") * 100).cast(LongType).as("cents"))
     val good = stage(ord, "good")
     val bad = stage(ord.withColumn("o_orderkey",

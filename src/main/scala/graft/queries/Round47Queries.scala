@@ -16,16 +16,13 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round47Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round47Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   def e26_stream_activity_bitmaps(s: SparkSession, dir: String): DataFrame = {
     val name = s"stream_bitmap_${streamSeq.incrementAndGet()}"
-    val schema = t(s, dir, "events").schema
+    val schema = Tables.load(s, dir, "events").schema
     val raw = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
     val agg = raw

@@ -17,10 +17,7 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round48Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round48Queries extends QueryModule {
 
   // current (open-ended) versions get a cap beyond the data's horizon so
   // the bucket explode stays bounded (~85 30-day buckets over the
@@ -31,7 +28,7 @@ object Round48Queries {
     val hist = Round3Queries.p7_scd2(s, dir)
       .select(col("o_custkey"), col("state"), col("valid_from"),
         coalesce(col("valid_to"), lit(Horizon)).as("valid_to"))
-    val pts = t(s, dir, "orders").select(col("o_custkey"),
+    val pts = Tables.load(s, dir, "orders").select(col("o_custkey"),
       col("o_orderdate").cast(DateType).as("d"),
       round(col("o_totalprice") * 100).cast(LongType).as("cents"))
     graft.operators.RangeJoin.pointInIntervalKeyed(

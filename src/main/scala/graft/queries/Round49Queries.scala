@@ -19,10 +19,7 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round49Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round49Queries extends QueryModule {
 
   def t31_score_correlation(s: SparkSession, dir: String): DataFrame = {
     val q = ExtensionQueries.t2_langid(s, dir)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
+import StreamConf.withStreamShuffle
+import DecimalSums.{dec, dsum}
 
 /** Fourth batch: the incremental-maintenance / storage-layout operators a
   * warehouse engine runs continuously at scale — MERGE upsert, partial-
@@ -19,16 +21,7 @@ import graft.Tables
   * reference delegates to pandas/DuckDB in-memory (templates.py:79-108)
   * but a 100 TB deployment must run as distributed jobs.
   */
-object Round4Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def dec(c: Column, scale: Int = 4) = c.cast(DecimalType(18, scale))
-  private def dsum(c: Column, scale: Int = 4) =
-    sum(dec(c, scale)).cast(DoubleType)
-
-  private def scratch(name: String): String = graft.Scratch.dir(name)
+object Round4Queries extends QueryModule {
 
   // ── p12: small-file compaction — the maintenance job every streaming
   //        ingest needs: N tiny files → ceil(bytes/target) right-sized
@@ -37,9 +30,9 @@ object Round4Queries {
   //        Round4QueriesSpec. At 100 TB the same job runs per partition
   //        with `maxPartitionBytes`-sized tasks; nothing is collected. ───
   def p12_compaction(s: SparkSession, dir: String): DataFrame = {
-    val smallDir = scratch("p12_small")
-    val compactDir = scratch("p12_compact")
-    val src = t(s, dir, "lineitem")
+    val smallDir = graft.Scratch.dir("p12_small")
+    val compactDir = graft.Scratch.dir("p12_compact")
+    val src = Tables.load(s, dir, "lineitem")
       .filter(col("l_shipdate") >= "1995-01-01" &&
         col("l_shipdate") < "1996-01-01")
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
@@ -67,7 +60,7 @@ object Round4Queries {
   //        Delta/Iceberg MERGE compiles to for whole-partition rewrites.
   //        Decimal price math keeps both engines bit-identical. ──────────
   def p13_merge_upsert(s: SparkSession, dir: String): DataFrame = {
-    val ord = t(s, dir, "orders")
+    val ord = Tables.load(s, dir, "orders")
     val price24 = (c: Column) => c.cast(DecimalType(24, 4))
     val base = ord.filter(col("o_orderkey") % 3 =!= 0)
       .select(col("o_orderkey"), col("o_orderstatus"),
@@ -90,7 +83,7 @@ object Round4Queries {
   //        exactly (the oracle IS the full recompute). At 100 TB this is
   //        the difference between scanning one day and scanning years. ───
   def p14_incremental_agg(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(
+    val o = Tables.load(s, dir, "orders").select(
       date_trunc("month", col("o_orderdate")).cast(DateType).as("month"),
       col("o_orderdate"), col("o_totalprice"))
     val cutoff = "1999-01-01"
@@ -114,7 +107,7 @@ object Round4Queries {
   //        explicit — on a cluster the filter ships as a broadcast var,
   //        never the dim rows themselves. ─────────────────────────────────
   def p15_bloom_prune(s: SparkSession, dir: String): DataFrame = {
-    val keys = t(s, dir, "orders")
+    val keys = Tables.load(s, dir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))
     // sized by a generous constant bound rather than a counting pass: the
@@ -123,7 +116,7 @@ object Round4Queries {
     val bloom = keys.stat.bloomFilter("o_orderkey", 1L << 20, 0.01)
     val bc = s.sparkContext.broadcast(bloom)
     val mightContain = udf((k: Long) => bc.value.mightContainLong(k))
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .filter(mightContain(col("l_orderkey")))
       .join(broadcast(keys), col("l_orderkey") === col("o_orderkey"),
         "left_semi")
@@ -137,7 +130,7 @@ object Round4Queries {
   //        over 365 rows (windowing happens AFTER aggregation, so the
   //        single-partition sort is over days, never raw rows). ──────────
   def q60_interpolate(s: SparkSession, dir: String): DataFrame = {
-    val daily = t(s, dir, "orders")
+    val daily = Tables.load(s, dir, "orders")
       .filter(col("o_custkey") % 100 === 7 &&
         col("o_orderdate") >= "1995-01-01" &&
         col("o_orderdate") < "1996-01-01")
@@ -175,7 +168,7 @@ object Round4Queries {
   //        map-side-combined aggregate; bucket count is constant, so the
   //        reduce side is O(buckets) regardless of input size. ───────────
   def q61_histogram(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy(least(floor(col("l_extendedprice") / 10000), lit(9))
         .cast(IntegerType).as("bucket"))
       .agg(count(lit(1)).as("n"),
@@ -188,7 +181,7 @@ object Round4Queries {
   //        (post-distinct), not raw orders, so the single-partition sort
   //        is bounded by the date range, not the data volume. ────────────
   def q62_islands(s: SparkSession, dir: String): DataFrame = {
-    val days = t(s, dir, "orders")
+    val days = Tables.load(s, dir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderdate").cast(DateType).as("d"))
       .distinct()
@@ -207,7 +200,7 @@ object Round4Queries {
   //        with an explicit lexicographic tie-break (bare `mode()` is
   //        engine-dependent on ties; argmax over (count, key) is total). ──
   def q63_mode(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val ev = raw.withColumn("ts_us", graft.Tables.tsMicros(raw))
     val counts = ev
       .groupBy(hour(col("ts_us")).as("hr"), col("event_type"))
@@ -240,7 +233,7 @@ object Round4Queries {
   //        expression is the `sortWithinPartitions` key of a clustered
   //        write, turning 2-D filters into zone-map prunes. ──────────────
   def q64_zorder(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables.load(s, dir, "part")
       .select(col("p_partkey"), col("p_size"),
         morton8(col("p_partkey") % 256, col("p_size").cast(LongType))
           .as("z"))
@@ -256,7 +249,7 @@ object Round4Queries {
   //        shuffle-partition by n-gram and nothing is collected. ─────────
   def t9_trigram_lm(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val withSh = t(s, dir, "documents").select(
+    val withSh = Tables.load(s, dir, "documents").select(
       col("doc_id"),
       Text.shingles(col("text"), 3).as("t3"),
       Text.shingles(col("text"), 2).as("t2"))
@@ -281,7 +274,7 @@ object Round4Queries {
   //        (doc_id, word), partial counts map-side combined. ─────────────
   def t10_ttr(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), explode(Text.tokens(col("text"))).as("w"))
       .groupBy(col("doc_id"), col("w"))
       .agg(count(lit(1)).as("cnt"))
@@ -304,7 +297,7 @@ object Round4Queries {
   //        O(docs²). ───────────────────────────────────────────────────
   def d10_passage_dedup(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val sh = t(s, dir, "documents")
+    val sh = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         explode(array_distinct(Text.shingles(col("text"), 8))).as("sh"))
     val docFreq = sh.groupBy(col("sh")).agg(count(lit(1)).as("ndocs"))
@@ -326,8 +319,8 @@ object Round4Queries {
   //        zones cannot match). This is the layout maintenance job that
   //        turns 2-D scans into zone reads at 100 TB. ────────────────────
   def p16_zorder_layout(s: SparkSession, dir: String): DataFrame = {
-    val out = scratch("p16_zsorted")
-    t(s, dir, "part")
+    val out = graft.Scratch.dir("p16_zsorted")
+    Tables.load(s, dir, "part")
       .select(col("p_partkey"), col("p_size"), col("p_retailprice"),
         (col("p_partkey") % 256).as("x"),
         morton8(col("p_partkey") % 256, col("p_size").cast(LongType))
@@ -347,7 +340,7 @@ object Round4Queries {
   //        (the overlap bound ⌈t·|a|⌉ never depends on |b|). ─────────────
   def d11_containment(s: SparkSession, dir: String): DataFrame =
     graft.operators.Dedup.ngramContainment(
-        t(s, dir, "documents"), "doc_id", "text", n = 3, threshold = 0.8)
+        Tables.load(s, dir, "documents"), "doc_id", "text", n = 3, threshold = 0.8)
       .orderBy(col("id_a"), col("id_b"))
 
   // ── p17: CDC apply — collapse a keyed change stream (latest-wins with
@@ -355,7 +348,7 @@ object Round4Queries {
   //        One window shuffle on the key; at 100 TB the same plan applies
   //        a day's change log to a snapshot without touching history. ────
   def p17_cdc_apply(s: SparkSession, dir: String): DataFrame = {
-    val ops = t(s, dir, "orders").select(
+    val ops = Tables.load(s, dir, "orders").select(
       col("o_custkey"), col("o_orderdate"), col("o_orderkey"),
       col("o_totalprice"), col("o_orderpriority"),
       when(col("o_orderkey") % 10 === 0, "D").otherwise("U").as("op"))
@@ -389,15 +382,15 @@ object Round4Queries {
       // layout job shuffles and stores only what the downstream joins
       // read (a bucketed table is a materialized artifact — width is
       // cost)
-      t(s, dir, "lineitem").select("l_orderkey", "l_extendedprice")
+      Tables.load(s, dir, "lineitem").select("l_orderkey", "l_extendedprice")
         .write.mode("overwrite")
-        .option("path", scratch(s"p18_li_$k"))
+        .option("path", graft.Scratch.dir(s"p18_li_$k"))
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
         .saveAsTable(s"p18_li_bucketed_$k")
-      t(s, dir, "orders")
+      Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_orderpriority", "o_orderstatus")
         .write.mode("overwrite")
-        .option("path", scratch(s"p18_o_$k"))
+        .option("path", graft.Scratch.dir(s"p18_o_$k"))
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
         .saveAsTable(s"p18_o_bucketed_$k")
       k
@@ -427,7 +420,7 @@ object Round4Queries {
   //        key domain's cardinality. ─────────────────────────────────────
   def a2_heavy_hitters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val keyed = t(s, dir, "lineitem")
+    val keyed = Tables.load(s, dir, "lineitem")
       .withColumn("x", col("l_orderkey") % 4096 + 1)
       .select(col("x").bitwiseAND(-col("x")).as("key"))
     val candidates: Seq[Long] = keyed.as[Long]
@@ -458,7 +451,7 @@ object Round4Queries {
   //        memory-bandwidth/recall trade of billion-vector search. ───────
   def s4_ann_rerank(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Vectors
-    val prepped = t(s, dir, "embeddings").select(
+    val prepped = Tables.load(s, dir, "embeddings").select(
       col("vec_id"), col("embedding"),
       expr("""transform(embedding, v -> float(round(v * (127.0D /
              |  greatest(array_max(transform(embedding, x -> abs(x))),
@@ -496,13 +489,6 @@ object Round4Queries {
 
   private val streamRunSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private def withStreamShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
   // ── e11: streaming data-quality monitor — the continuous twin of the
   //        batch DQ gate (p4): per-hour row volume, value totals and
   //        envelope, and out-of-range counts over the live stream. The
@@ -510,7 +496,7 @@ object Round4Queries {
   //        exactly the reference's dq_check thresholds, evaluated per
   //        window instead of per batch. ───────────────────────────────────
   def e11_stream_dq(s: SparkSession, dir: String): DataFrame = {
-    val schema = t(s, dir, "events").schema
+    val schema = Tables.load(s, dir, "events").schema
     val name = s"stream_dq_${streamRunSeq.incrementAndGet()}"
     val raw = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)

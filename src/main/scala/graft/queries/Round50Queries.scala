@@ -27,15 +27,12 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round50Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round50Queries extends QueryModule {
 
   // ── q100: bitmaps once, then 24 broadcast masks (days 6..29; the
   //        first 6 days lack a full window). ───────────────────────────
   def q100_sliding_distinct(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val bitmaps = raw
       .withColumn("ts_us", Tables.tsMicros(raw))
       .select(col("user_id"),
@@ -64,7 +61,7 @@ object Round50Queries {
     import graft.operators.CountMin
     val kk = 64
     val m48 = 1L << 48
-    val ev = t(s, dir, "events").select(col("event_type"), col("user_id"))
+    val ev = Tables.load(s, dir, "events").select(col("event_type"), col("user_id"))
     def hashes(et: String): DataFrame = ev
       .filter(col("event_type") === et)
       .select(pmod(CountMin.mix61(col("user_id"), 1299709L, 104729L),
@@ -99,7 +96,7 @@ object Round50Queries {
   def q101_mad(s: SparkSession, dir: String): DataFrame = {
     // localCheckpoint: five driver actions (two medians' counts + ranks,
     // the final n) re-read the scan otherwise (round 14, guide §1.2)
-    val cents = t(s, dir, "orders")
+    val cents = Tables.load(s, dir, "orders")
       .select(col("o_orderkey"),
         round(col("o_totalprice") * 100).cast(LongType).as("c"))
       .localCheckpoint()

@@ -20,16 +20,13 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round51Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round51Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   def e27_stream_sliding_distinct(s: SparkSession, dir: String): DataFrame = {
     val name = s"stream_sliding_bm_${streamSeq.incrementAndGet()}"
-    val schema = t(s, dir, "events").schema
+    val schema = Tables.load(s, dir, "events").schema
     val raw = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
     val agg = raw
@@ -62,7 +59,7 @@ object Round51Queries {
   //        window over |customers| rows, not orders). 5·cum ≥ 4·total
   //        is the integer form of cum ≥ 0.8·total. ─────────────────────
   def q102_pareto(s: SparkSession, dir: String): DataFrame = {
-    val spend = t(s, dir, "orders")
+    val spend = Tables.load(s, dir, "orders")
       .groupBy(col("o_custkey"))
       .agg(sum(round(col("o_totalprice") * 100).cast(LongType))
         .as("spend_c"))

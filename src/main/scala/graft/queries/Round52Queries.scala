@@ -23,15 +23,12 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round52Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round52Queries extends QueryModule {
 
   // ── q103: daily counts per type (dense 30-day grid so quiet days
   //        subtract), k = total div 30; one secondary-sort scan. ────────
   def q103_cusum(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val daily = raw
       .withColumn("day", to_date(Tables.tsMicros(raw)))
       .groupBy(col("event_type"), col("day"))
@@ -78,7 +75,7 @@ object Round52Queries {
   // ── t33: per-item per-day counts over the dense grid; Fano in bp by
   //        cross-multiplication: F = (nΣx² − (Σx)²) / (n·Σx). ──────────
   def t33_burstiness(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val perDay = raw
       .select(get_json_object(col("props"), "$.k").cast(LongType).as("item"),
         to_date(Tables.tsMicros(raw)).as("day"))

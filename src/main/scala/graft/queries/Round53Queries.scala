@@ -19,14 +19,11 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round53Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round53Queries extends QueryModule {
 
   def d31_bloom_dedup_gate(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.CountMin
-    val docs = t(s, dir, "documents").select(col("doc_id"),
+    val docs = Tables.load(s, dir, "documents").select(col("doc_id"),
       expr("CAST(conv(substring(md5(lower(regexp_replace(trim(text), " +
         "'\\\\s+', ' '))), 1, 15), 16, 10) AS BIGINT)").as("k"))
     val corpus = docs.filter(col("doc_id") % 2 === 0).localCheckpoint()

@@ -33,17 +33,14 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its transform
   * dialect is open, /root/reference/tools.py:58-65).
   */
-object Round54Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round54Queries extends QueryModule {
 
   private val ChunkLen = 64
   private val Stride   = 48
 
   def t34_chunk_windows(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
       .filter(length(trim(col("text"))) > 0)
       .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
       .withColumn("n", size(col("toks")))
@@ -63,7 +60,7 @@ object Round54Queries {
   }
 
   def q104_l_diversity(s: SparkSession, dir: String): DataFrame = {
-    val cls = t(s, dir, "customer")
+    val cls = Tables.load(s, dir, "customer")
       .select(col("c_nationkey").as("nat"),
         expr("cast(round(c_acctbal * 100) as bigint) div 100000").as("band"),
         col("c_mktsegment").as("seg"))

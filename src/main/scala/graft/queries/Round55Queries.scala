@@ -31,17 +31,14 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its transform
   * dialect is open, /root/reference/tools.py:58-65).
   */
-object Round55Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round55Queries extends QueryModule {
 
   private val K = 4 // neighborhood size for the margin denominator
 
   def s18_margin_mining(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Vectors
     val emb = graft.Tables.spread(
-      t(s, dir, "embeddings").select(col("vec_id"), col("embedding")))
+      Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding")))
     val a = emb.filter(col("vec_id") % 2 === 0)
       .select(col("vec_id").as("a"), col("embedding").as("va"))
     val b = emb.filter(col("vec_id") % 2 =!= 0)
@@ -91,7 +88,7 @@ object Round55Queries {
   def t35_quality_gate_relative(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
     val toks = Text.tokens(col("text"))
-    val scoredDocs = t(s, dir, "documents")
+    val scoredDocs = Tables.load(s, dir, "documents")
       .filter(length(trim(col("text"))) > 0)
       .select(col("doc_id"), col("source"),
         size(array_distinct(toks)).cast(LongType).as("n_distinct"),

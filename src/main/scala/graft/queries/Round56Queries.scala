@@ -25,19 +25,13 @@ import graft.operators.Hll
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round56Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def sanitize(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
+object Round56Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   def e28_stream_cusum(s: SparkSession, dir: String): DataFrame = {
     val name = s"stream_cusum_${streamSeq.incrementAndGet()}"
-    val schema = t(s, dir, "events").schema
+    val schema = Tables.load(s, dir, "events").schema
     val raw = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
     val daily = raw
@@ -57,10 +51,10 @@ object Round56Queries {
   }
 
   def a16_hll_sliding(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val ev = raw.select(to_date(Tables.tsMicros(raw)).as("day"),
       col("user_id"))
-    val artDir = graft.Scratch.dir(s"a16_daily_hll_${sanitize(dir)}")
+    val artDir = graft.Scratch.dir("a16_daily_hll", dir)
     graft.sinks.ParquetSink.write(
       Hll.registers(ev, Seq("day"), "user_id"), artDir)
     // 24 fully-covered 7-day windows ending Jan 7 .. Jan 30

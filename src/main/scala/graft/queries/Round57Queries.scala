@@ -28,14 +28,11 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round57Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round57Queries extends QueryModule {
 
   def t36_bm25(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val tok = docs.select(col("doc_id"),
       explode(Text.tokens(lower(col("text")))).as("term"))
     val tf = tok.groupBy(col("doc_id"), col("term"))
@@ -72,7 +69,7 @@ object Round57Queries {
 
   def s19_rank_fusion(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Vectors
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val emb = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val q = broadcast(emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv")))
     val c = emb.select(col("vec_id").as("cand_id"), col("embedding").as("cv"))

@@ -32,14 +32,11 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round58Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round58Queries extends QueryModule {
 
   def m16_image_patches(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.ImageExprs
-    val px = t(s, dir, "documents").select(col("doc_id"),
+    val px = Tables.load(s, dir, "documents").select(col("doc_id"),
         ImageExprs.encodeImageFromText(col("text"), "pgm", 8, 8)
           .as("payload"))
       .select(col("doc_id"), ImageExprs.decodePixels(col("payload")).as("px"))

@@ -37,16 +37,10 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round59Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def sanitize(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
+object Round59Queries extends QueryModule {
 
   def q107_ks_drift(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").select(col("event_type"),
+    val ev = Tables.load(s, dir, "events").select(col("event_type"),
       expr("cast(round(value * 100) as bigint)").as("cents"))
     def cdf(typ: String, c: String) = ev
       .filter(col("event_type") === typ)
@@ -80,9 +74,9 @@ object Round59Queries {
   private[queries] val PruneHi = 300
 
   def p36_stats_prune(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("n_chars"),
+    val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("n_chars"),
       expr(s"cast(least(n_chars div $BandW, 7) as int)").as("shard"))
-    val artDir = graft.Scratch.dir(s"p36_zonemap_${sanitize(dir)}")
+    val artDir = graft.Scratch.dir("p36_zonemap", dir)
     docs.repartition(8, col("shard")).write.mode("overwrite")
       .partitionBy("shard").parquet(artDir)
     val manifest = s.read.parquet(artDir)
@@ -108,7 +102,7 @@ object Round59Queries {
     val perDoc = Round10Queries.t19_bpe_apply(s, dir)
       .select(col("doc_id"), col("n_words"), col("n_chars"),
         col("n_bpe_tokens"))
-    val langs = t(s, dir, "documents").select(col("doc_id"), col("lang"))
+    val langs = Tables.load(s, dir, "documents").select(col("doc_id"), col("lang"))
     perDoc.join(langs, "doc_id")
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
+import StreamConf.withStreamShuffle
+import DecimalSums.{dec, dsum}
 
 /** Fifth batch: the product-analytics queries every event pipeline ends up
   * running (ordered funnels, cohort retention, true time-interval rolling
@@ -18,23 +20,14 @@ import graft.Tables
   * the LLM-pipeline extensions the build plan adds beyond reference
   * parity; each is re-expressed as a declarative Spark plan.
   */
-object Round5Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def dec(c: Column, scale: Int = 4) = c.cast(DecimalType(18, scale))
-  private def dsum(c: Column, scale: Int = 4) =
-    sum(dec(c, scale)).cast(DoubleType)
-
-  private def scratch(name: String): String = graft.Scratch.dir(name)
+object Round5Queries extends QueryModule {
 
   /** events.ts normalized to µs TimestampType across both testdata
     * generations via [[graft.Tables.tsMicros]]; both engines compare at
     * microsecond resolution, so ordering and interval arithmetic agree
     * exactly. */
   private def eventsTs(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     raw.withColumn("ts_us", graft.Tables.tsMicros(raw))
   }
 
@@ -114,7 +107,7 @@ object Round5Queries {
   //        100 TB. ──────────────────────────────────────────────────────
   def t11_repetition(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val base = t(s, dir, "documents").select(col("doc_id"),
+    val base = Tables.load(s, dir, "documents").select(col("doc_id"),
       Text.tokens(col("text")).as("toks"),
       Text.shingles(col("text"), 2).as("bi"),
       Text.shingles(col("text"), 3).as("tri"))
@@ -155,7 +148,7 @@ object Round5Queries {
   //        rather than a semantic 0.95+. ───────────────────────────────────
   def d12_semdedup(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Vectors
-    val e = t(s, dir, "embeddings")
+    val e = Tables.load(s, dir, "embeddings")
     val a = e.select(col("label").as("l"), col("vec_id").as("id_a"),
       col("embedding").as("va"))
     val b = e.select(col("label").as("l"), col("vec_id").as("id_b"),
@@ -178,7 +171,7 @@ object Round5Queries {
   //        same plan shape as s1, plus one tiny vote aggregate. ──────────
   def s5_knn_classify(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Vectors
-    val e = t(s, dir, "embeddings")
+    val e = Tables.load(s, dir, "embeddings")
     val q = broadcast(e.filter(col("vec_id") % 100 === 0).select(
       col("vec_id").as("query_id"), col("embedding").as("qv"),
       col("label").as("true_label")))
@@ -207,9 +200,9 @@ object Round5Queries {
   //        The manifest is the entire mechanism real table formats build
   //        on — data files are immutable, versions are file-list diffs. ──
   def p19_time_travel(s: SparkSession, dir: String): DataFrame = {
-    val baseDir = scratch("p19_v1")
-    val deltaDir = scratch("p19_v2delta")
-    val ord = t(s, dir, "orders").select(col("o_orderkey"),
+    val baseDir = graft.Scratch.dir("p19_v1")
+    val deltaDir = graft.Scratch.dir("p19_v2delta")
+    val ord = Tables.load(s, dir, "orders").select(col("o_orderkey"),
       col("o_orderdate"), col("o_totalprice"))
     ord.filter(col("o_orderdate") < "1997-01-01")
       .write.mode("overwrite").parquet(baseDir)
@@ -226,7 +219,7 @@ object Round5Queries {
       2 -> (files(baseDir) ++ files(deltaDir)))
     // persist the manifest the way a table format would (version ledger)
     val manifestPath = new org.apache.hadoop.fs.Path(
-      scratch("p19_manifest"), "manifest.json")
+      graft.Scratch.dir("p19_manifest"), "manifest.json")
     val out = fs.create(manifestPath, true)
     out.write(manifest.toSeq.sortBy(_._1).map { case (v, fl) =>
       graft.Json.compact(scala.collection.immutable.VectorMap("version" -> v, "files" -> fl))
@@ -243,13 +236,6 @@ object Round5Queries {
 
   private val streamRunSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private def withStreamShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
   // ── e12: built-in session_window streaming aggregation — the declarative
   //        twin of e5's flatMapGroupsWithState sessionizer. Sessions merge
   //        while each event lands strictly inside the previous event's
@@ -259,7 +245,7 @@ object Round5Queries {
   //        rules, so the built-in operator's exact merge and eviction
   //        semantics are hash-proven against SQL, not assumed. ───────────
   def e12_stream_session_window(s: SparkSession, dir: String): DataFrame = {
-    val schema = t(s, dir, "events").schema
+    val schema = Tables.load(s, dir, "events").schema
     val name = s"stream_sesswin_${streamRunSeq.incrementAndGet()}"
     val raw = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -326,7 +312,7 @@ object Round5Queries {
           .cast(DecimalType(28, 12))).cast(DoubleType).as("s"))
       .select(col("doc_id"),
         round(log2(col("n")) - col("s") / col("n"), 6).as("h"))
-    val docs = t(s, dir, "documents").filter(length(col("text")) > 0)
+    val docs = Tables.load(s, dir, "documents").filter(length(col("text")) > 0)
     val chars = entropy(docs
       .select(col("doc_id"), explode(split(col("text"), "")).as("x"))
       .groupBy(col("doc_id"), col("x")).agg(count(lit(1)).as("c")))
@@ -350,7 +336,7 @@ object Round5Queries {
   //        nothing pairwise. ────────────────────────────────────────────
   def m4_cdc_chunks(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.CdcCuts
-    val chunks = t(s, dir, "documents")
+    val chunks = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("text"),
         array_sort(array_union(
           CdcCuts.cdcCuts(col("text"), w = 16, maskBits = 6),

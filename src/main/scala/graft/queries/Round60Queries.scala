@@ -30,13 +30,10 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round60Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round60Queries extends QueryModule {
 
   def q108_holt_trend(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val daily = raw
       .withColumn("day", to_date(Tables.tsMicros(raw)))
       .groupBy(col("event_type"), col("day"))
@@ -63,7 +60,7 @@ object Round60Queries {
 
   def p37_layout_audit(s: SparkSession, dir: String): DataFrame = {
     import Round59Queries.{BandW, PruneLo, PruneHi}
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("n_chars"))
+    val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("n_chars"))
     val matched = docs
       .filter(col("n_chars") >= PruneLo && col("n_chars") <= PruneHi)
       .agg(count(lit(1)).as("n_rows_matched"))

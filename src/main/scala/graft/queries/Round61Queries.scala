@@ -32,16 +32,13 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round61Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round61Queries extends QueryModule {
 
   private val BinW = 100000L // $1000 bins over price cents
   private val Qs = Seq(50, 90, 99)
 
   def a17_grouped_quantiles(s: SparkSession, dir: String): DataFrame = {
-    val cents = t(s, dir, "lineitem").select(
+    val cents = Tables.load(s, dir, "lineitem").select(
       col("l_returnflag").as("g"),
       expr("cast(round(l_extendedprice * 100) as bigint)").as("v"))
     val hist = cents
@@ -71,7 +68,7 @@ object Round61Queries {
 
   def m17_audio_windows(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.AudioExprs
-    val pcm = t(s, dir, "documents").select(col("doc_id"),
+    val pcm = Tables.load(s, dir, "documents").select(col("doc_id"),
       AudioExprs.decodeSamples(
         AudioExprs.encodeWavFromText(col("text"), sampleRate = 16000,
           n = NSamples)).as("pcm"))

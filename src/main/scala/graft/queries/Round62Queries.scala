@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
+import SketchSql.textByte
 
 /** Sixty-second batch — mixture geometry, filtered ANN, keyframes:
   *
@@ -31,14 +32,11 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round62Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round62Queries extends QueryModule {
 
   def t38_jsd_sources(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val tok = t(s, dir, "documents").select(col("source"),
+    val tok = Tables.load(s, dir, "documents").select(col("source"),
       explode(Text.tokens(lower(col("text")))).as("term"))
     val counts = tok.groupBy(col("source"), col("term"))
       .agg(count(lit(1)).as("cnt"))
@@ -67,7 +65,7 @@ object Round62Queries {
 
   def s20_filtered_ann(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Vectors
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables.load(s, dir, "embeddings")
     val q = broadcast(emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("label").as("lab")))
@@ -98,7 +96,7 @@ object Round62Queries {
           omitC = true))
       .otherwise(VideoExprs.encodeY4mFromText(col("text"), W, H, NFrames,
         omitC = false))
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), VideoExprs.frameYSums(payload).as("ysums"),
         VideoExprs.frameYDeltas(payload).as("deltas"))
       .select(col("doc_id"), col("deltas"),
@@ -116,10 +114,6 @@ object Round62Queries {
     "t38_jsd_sources" -> (t38_jsd_sources _),
     "s20_filtered_ann" -> (s20_filtered_ann _),
     "m18_keyframes"    -> (m18_keyframes _))
-
-  /** Raster closed form shared with the media fixtures. */
-  private def v(g: String): String =
-    s"(ord(substr(text, CAST((($g) % length(text)) + 1 AS INT), 1)) % 256)"
 
   val oracles: Map[String, String] = Map(
     "t38_jsd_sources" ->
@@ -180,11 +174,11 @@ object Round62Queries {
       s"""WITH fr AS (
         |  SELECT doc_id, text, CAST(t.f AS BIGINT) AS frame_idx,
         |    CAST(list_sum(list_transform(range(0, $YSize), i ->
-        |      ${v(s"$FrameSize*t.f + i")})) AS BIGINT) AS y_sum,
+        |      ${textByte(s"$FrameSize*t.f + i")})) AS BIGINT) AS y_sum,
         |    CASE WHEN t.f = 0 THEN CAST(-1 AS BIGINT)
         |    ELSE CAST(list_sum(list_transform(range(0, $YSize), i ->
-        |      abs(${v(s"$FrameSize*t.f + i")} -
-        |          ${v(s"$FrameSize*(t.f-1) + i")}))) AS BIGINT) // 64
+        |      abs(${textByte(s"$FrameSize*t.f + i")} -
+        |          ${textByte(s"$FrameSize*(t.f-1) + i")}))) AS BIGINT) // 64
         |    END AS mad
         |  FROM documents CROSS JOIN (VALUES (0), (1), (2), (3)) AS t(f))
         |SELECT doc_id, frame_idx, y_sum, mad

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import SketchSql.MStr
 
 /** Sixty-third batch — LSH parameter economics and merge-on-read:
   *
@@ -27,13 +28,7 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round63Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def sanitize(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
+object Round63Queries extends QueryModule {
 
   private val pairsBuilt =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -47,9 +42,9 @@ object Round63Queries {
     * recomputation. */
   private[queries] def exactPairsDir(s: SparkSession, dir: String): String =
     pairsBuilt.computeIfAbsent(dir, _ => {
-      val out = graft.Scratch.dir(s"exact_pairs_${sanitize(dir)}")
+      val out = graft.Scratch.dir("exact_pairs", dir)
       graft.sinks.ParquetSink.write(
-        graft.operators.Dedup.ngramJaccard(t(s, dir, "documents"),
+        graft.operators.Dedup.ngramJaccard(Tables.load(s, dir, "documents"),
           "doc_id", "text", n = 3, threshold = 0.5), out)
       out
     })
@@ -59,7 +54,7 @@ object Round63Queries {
   def d33_lsh_tuning(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
     import graft.functions.{NativeExprs, Text}
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     // the PORTABLE family (d20's) — the oracle replays every slot, so
     // candidate sets must be value-identical, not just engine-internal
     val sig = docs
@@ -116,7 +111,7 @@ object Round63Queries {
   }
 
   def p38_merge_on_read(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "customer").select(col("c_custkey").as("id"),
+    val base = Tables.load(s, dir, "customer").select(col("c_custkey").as("id"),
       expr("cast(round(c_acctbal * 100) as bigint)").as("balc"))
     val deletes = base.filter(col("id") % 7 === 3).select(col("id"))
     val updates = base.filter(col("id") % 5 === 0)
@@ -126,8 +121,7 @@ object Round63Queries {
       .join(updates, Seq("id"), "left")
       .select(col("id"), coalesce(col("new_balc"), col("balc")).as("balc"))
     // copy-on-write: materialize the rewrite, then read it back
-    val cowDir = graft.Scratch.dir(
-      s"p38_cow_${dir.replaceAll("[^A-Za-z0-9]", "_")}")
+    val cowDir = graft.Scratch.dir("p38_cow", dir)
     graft.sinks.ParquetSink.write(mor, cowDir)
     val cow = s.read.parquet(cowDir)
     val morAgg = mor.agg(count(lit(1)).as("n_live_mor"),
@@ -147,8 +141,6 @@ object Round63Queries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "d33_lsh_tuning"    -> (d33_lsh_tuning _),
     "p38_merge_on_read" -> (p38_merge_on_read _))
-
-  private val MStr = "2305843009213693951"
 
   /** Same 32-multiplier portable minhash family as d20's oracle. */
   private val mhFam: String =

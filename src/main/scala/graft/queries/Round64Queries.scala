@@ -35,10 +35,7 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round64Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round64Queries extends QueryModule {
 
   // day numbers; valid/tx intervals are [from, to)
   private val TxCorrection = 6L
@@ -48,7 +45,7 @@ object Round64Queries {
   private val Inf = 999L
 
   def q109_bitemporal(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "part").select(col("p_partkey").as("k"),
+    val base = Tables.load(s, dir, "part").select(col("p_partkey").as("k"),
       expr("cast(round(p_retailprice * 100) as bigint)").as("cents"))
     // version 1: valid [1, ∞) believed from tx day 1; for k % 5 = 0 the
     // belief is superseded on tx day 6 by a +1000¢ correction
@@ -75,7 +72,7 @@ object Round64Queries {
   private val RangeD = 500L // cents; also the bin width
 
   def a18_range_join_estimate(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").select(col("event_type"),
+    val ev = Tables.load(s, dir, "events").select(col("event_type"),
       expr("cast(round(value * 100) as bigint)").as("cents"))
     def hist(typ: String, c: String) = ev
       .filter(col("event_type") === typ)
@@ -112,7 +109,7 @@ object Round64Queries {
 
   def m19_channel_stats(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.ImageExprs
-    val px = t(s, dir, "documents").select(
+    val px = Tables.load(s, dir, "documents").select(
         ImageExprs.decodePixels(ImageExprs.encodeImageFromText(
           col("text"), "ppm", 8, 8)).as("px"))
       .select(posexplode(col("px")).as(Seq("i", "v")))

@@ -30,14 +30,11 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round65Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round65Queries extends QueryModule {
 
   def s21_mmr(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Vectors
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val emb = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val q = broadcast(emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv")))
     val c = emb.select(col("vec_id").as("cand_id"), col("embedding").as("cv"))
@@ -99,7 +96,7 @@ object Round65Queries {
   private val WindowUs = 86400000000L // 24 h in micros
 
   def q110_linear_attribution(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val ev = raw.select(col("event_id"), col("user_id"), col("event_type"),
       unix_micros(Tables.tsMicros(raw)).as("ts_us"))
     val purchases = ev.filter(col("event_type") === "purchase")

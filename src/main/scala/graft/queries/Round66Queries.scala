@@ -27,10 +27,7 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round66Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round66Queries extends QueryModule {
 
   def d34_cluster_medoid(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Graph
@@ -62,7 +59,7 @@ object Round66Queries {
 
   def a19_cm_error_profile(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.CountMin
-    val keys = t(s, dir, "lineitem").select(col("l_partkey").as("k"))
+    val keys = Tables.load(s, dir, "lineitem").select(col("l_partkey").as("k"))
     val cells = CountMin.sketch(keys, CountMin.DefaultFamily, w = CmW)
     val exact = keys.groupBy(col("k")).agg(count(lit(1)).as("exact_cnt"))
       .localCheckpoint(true)

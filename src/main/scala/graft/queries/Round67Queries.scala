@@ -27,10 +27,7 @@ import graft.operators.{DriverPath, Graph}
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round67Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round67Queries extends QueryModule {
 
   private val Thresholds = Seq(50, 60, 70) // percent
 
@@ -87,7 +84,7 @@ object Round67Queries {
   private val NParts = 32
 
   def p39_partition_skew_audit(s: SparkSession, dir: String): DataFrame = {
-    val parts = t(s, dir, "events")
+    val parts = Tables.load(s, dir, "events")
       .groupBy(expr(s"user_id % $NParts").as("part"))
       .agg(count(lit(1)).as("n"))
     parts.agg(count(lit(1)).as("n_parts_occupied"),

@@ -25,15 +25,12 @@ import graft.Tables
   * Reference scope: extensions beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round68Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round68Queries extends QueryModule {
 
   private val NDays = 30
 
   def q112_survival(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val life = raw
       .select(col("user_id"),
         expr("datediff(to_date(ts), DATE '2024-01-01') + 1").as("day"))
@@ -72,7 +69,7 @@ object Round68Queries {
 
   def t40_langid_confusion(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val preds = t(s, dir, "documents").select(
+    val preds = Tables.load(s, dir, "documents").select(
       Text.langId(col("text")).as("lang_pred"),
       col("lang").as("lang_declared"))
     val cells = preds.groupBy(col("lang_declared"), col("lang_pred"))

@@ -20,10 +20,7 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round69Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round69Queries extends QueryModule {
 
   def d36_transitivity_audit(s: SparkSession, dir: String): DataFrame = {
     val pairs = s.read.parquet(Round63Queries.exactPairsDir(s, dir))

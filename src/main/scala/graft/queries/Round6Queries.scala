@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
+import StreamConf.withStreamShuffle
+import DecimalSums.{dec, dsum}
 
 /** Sixth batch: graph analytics over a co-occurrence graph (exact triangle
   * count, frontier BFS), the remaining product-analytics staples (Markov
@@ -18,19 +20,12 @@ import graft.Tables
   * LLM-pipeline extensions the build plan adds beyond reference parity;
   * each is re-expressed as a declarative Spark plan.
   */
-object Round6Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def dec(c: Column, scale: Int = 4) = c.cast(DecimalType(18, scale))
-  private def dsum(c: Column, scale: Int = 4) =
-    sum(dec(c, scale)).cast(DoubleType)
+object Round6Queries extends QueryModule {
 
   /** events.ts normalized to µs TimestampType across both testdata
     * generations via [[graft.Tables.tsMicros]]. */
   private def eventsTs(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     raw.withColumn("ts_us", graft.Tables.tsMicros(raw))
   }
 
@@ -39,7 +34,7 @@ object Round6Queries {
     * stays sparse as sf grows (degree is what the Σdeg² wedge cost feeds
     * on, and the full co-purchase graph densifies superlinearly). */
   private[queries] def copurchaseEdges(s: SparkSession, dir: String): DataFrame = {
-    val pl = t(s, dir, "lineitem")
+    val pl = Tables.load(s, dir, "lineitem")
       .filter(col("l_partkey") % 10 === 0)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
@@ -88,7 +83,7 @@ object Round6Queries {
   //        lag(12) would misalign on missing months). The monthly frame is
   //        tiny; everything after the first aggregation broadcasts. ──────
   def q71_yoy(s: SparkSession, dir: String): DataFrame = {
-    val m = t(s, dir, "orders")
+    val m = Tables.load(s, dir, "orders")
       .groupBy(date_trunc("month", col("o_orderdate"))
         .cast(DateType).as("mon"))
       .agg(dsum(col("o_totalprice"), 2).as("revenue"))
@@ -107,7 +102,7 @@ object Round6Queries {
   //        ⌈n/10⌉ customers, the rest ⌊n/10⌋, reproduced arithmetically
   //        from (rank, n). No stage sees more than its sort range. ───────
   def q72_decile(s: SparkSession, dir: String): DataFrame = {
-    val spend = t(s, dir, "orders")
+    val spend = Tables.load(s, dir, "orders")
       .groupBy(col("o_custkey"))
       .agg(dsum(col("o_totalprice"), 2).as("spend"))
     // two consumers below (the max(p) aggregate and the crossJoin) re-run
@@ -162,7 +157,7 @@ object Round6Queries {
   //        built-in slide semantics (epoch-aligned starts) are
   //        hash-proven. ──────────────────────────────────────────────────
   def e13_stream_sliding(s: SparkSession, dir: String): DataFrame = {
-    val schema = t(s, dir, "events").schema
+    val schema = Tables.load(s, dir, "events").schema
     val name = s"stream_sliding_${streamSeq.incrementAndGet()}"
     val raw = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -185,13 +180,6 @@ object Round6Queries {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private def withStreamShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
   // ── t13: Zipf's-law fit — least-squares slope/intercept of
   //        log(frequency) on log(rank) over the corpus vocabulary
   //        (natural text ≈ −1; synthetic/boilerplate corpora deviate, so
@@ -203,7 +191,7 @@ object Round6Queries {
   //        (graft.operators.Rank), never a global row_number window. ─────
   def t13_zipf(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val wc = t(s, dir, "documents")
+    val wc = Tables.load(s, dir, "documents")
       .select(explode(Text.tokens(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
     val ranked = graft.operators.Rank.globalRank(wc, "r",
@@ -235,7 +223,7 @@ object Round6Queries {
   //        20 surviving rows only. ──────────────────────────────────────
   def t14_pmi(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val uni = docs.select(explode(Text.tokens(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cu"))
     val bi = docs.select(explode(Text.shingles(col("text"), 2)).as("b"))
@@ -266,7 +254,7 @@ object Round6Queries {
   //        the norm-augmentation reduction documented on the operator as
   //        the LSH scale path. ────────────────────────────────────────────
   def s6_mips_topk(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables.load(s, dir, "embeddings")
     graft.operators.Similarity.mipsTopK(emb,
         emb.filter(col("vec_id") % 100 === 50), "vec_id", "embedding", k = 5)
       .orderBy(col("query_id"), col("rk"))
@@ -279,7 +267,7 @@ object Round6Queries {
   //        the unpivot runs on a single row. The everyday DQ
   //        profiling op a pipeline runs before trusting a new feed. ──────
   def p20_profile(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "customer")
+    val d = Tables.load(s, dir, "customer")
     def minMax(c: String, numeric: Boolean): (Column, Column) =
       if (numeric)
         (min(col(c)).cast(DecimalType(18, 2)).cast(StringType),

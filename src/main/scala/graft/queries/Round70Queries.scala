@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 import graft.Tables
 import graft.functions.ImageExprs
+import SketchSql.textByte
 
 /** Seventieth batch — query-by-image serving:
   *
@@ -22,13 +23,10 @@ import graft.functions.ImageExprs
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round70Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round70Queries extends QueryModule {
 
   def m20_phash_retrieval(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
     def withBands(df: DataFrame): DataFrame = df
       .withColumn("bands", ImageExprs.aHashBands(
         ImageExprs.encodeImageFromText(col("text"), "pgm", 8, 8)))
@@ -63,10 +61,6 @@ object Round70Queries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "m20_phash_retrieval" -> (m20_phash_retrieval _))
 
-  /** Raster closed form shared with the media fixtures. */
-  private def v(g: String): String =
-    s"(ord(substr(text, CAST((($g) % length(text)) + 1 AS INT), 1)) % 256)"
-
   val oracles: Map[String, String] = Map(
     "m20_phash_retrieval" ->
       s"""WITH qdocs AS (
@@ -75,7 +69,7 @@ object Round70Queries {
         |  FROM documents WHERE doc_id < 5),
         |qpx AS (
         |  SELECT query_id,
-        |    list_transform(range(0, 64), i -> ${v("i")}) AS p
+        |    list_transform(range(0, 64), i -> ${textByte("i")}) AS p
         |  FROM qdocs),
         |qwm AS (SELECT query_id, p, CAST(list_sum(p) AS BIGINT) // 64
         |          AS mean FROM qpx),
@@ -87,7 +81,7 @@ object Round70Queries {
         |  FROM qwm CROSS JOIN (VALUES (0), (1), (2), (3)) t(b)),
         |cpx AS (
         |  SELECT doc_id AS cand_id,
-        |    list_transform(range(0, 64), i -> ${v("i")}) AS p
+        |    list_transform(range(0, 64), i -> ${textByte("i")}) AS p
         |  FROM documents),
         |cwm AS (SELECT cand_id, p, CAST(list_sum(p) AS BIGINT) // 64
         |          AS mean FROM cpx),

@@ -21,16 +21,13 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round71Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round71Queries extends QueryModule {
 
   // exclusive horizon: 2024-01-31 00:00:00 UTC in epoch micros
   private val HorizonUs = 1706659200000000L
 
   def q113_twap(s: SparkSession, dir: String): DataFrame = {
-    val raw = t(s, dir, "events")
+    val raw = Tables.load(s, dir, "events")
     val ev = raw.select(col("event_type"), col("event_id"),
       unix_micros(Tables.tsMicros(raw)).as("us"),
       expr("cast(round(value * 100) as bigint)").as("cents"))

@@ -18,13 +18,10 @@ import graft.Tables
   * Reference scope: extension beyond the reference surface (its
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round72Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round72Queries extends QueryModule {
 
   def t41_charclass_profile(s: SparkSession, dir: String): DataFrame = {
-    val cls = t(s, dir, "documents").select(col("source"),
+    val cls = Tables.load(s, dir, "documents").select(col("source"),
       length(col("text")).cast("long").as("n_chars"),
       (length(col("text")) -
         length(regexp_replace(col("text"), "[A-Z]", ""))).cast("long")

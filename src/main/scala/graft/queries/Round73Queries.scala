@@ -33,15 +33,12 @@ import graft.functions.ImageExprs
   * (/root/reference/tools.py is CSV/JSON/SQL only); beyond-reference
   * LLM-pipeline surface per the build brief.
   */
-object Round73Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round73Queries extends QueryModule {
 
   // ── m21: real PNG decode (DEFLATE + all five scanline filters) ────────
 
   def m21_image_stats_png(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(col("doc_id"), col("text"))
+    Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       .withColumn("payload",
         ImageExprs.encodeImageFromText(col("text"), "png", 16, 16))
       .select(col("doc_id"), ImageExprs.imageStats(col("payload")).as("st"))
@@ -61,7 +58,7 @@ object Round73Queries {
       ImageExprs.imageStats(
         ImageExprs.encodeImageFromText(col("text"), format, 8, 8))
         .getField("sum_all")
-    t(s, dir, "documents").select(col("doc_id"), col("text"))
+    Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       .select(col("doc_id"),
         sumVia("ppm").as("sum_ppm"),
         sumVia("bmp").as("sum_bmp"),

@@ -36,15 +36,12 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline + analytics surface
   * (the reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round74Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round74Queries extends QueryModule {
 
   // ── d37: edit-distance refinement of the near-dup pair artifact ───────
 
   def d37_edit_distance_refine(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
     val pairs = s.read.parquet(Round63Queries.exactPairsDir(s, dir))
       .select(col("id_a"), col("id_b"))
     val lev = levenshtein(col("text_a"), col("text_b"))
@@ -67,7 +64,7 @@ object Round74Queries {
 
   def t42_kneser_ney(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val bi = docs.select(explode(Text.shingles(col("text"), 2)).as("b"))
       .groupBy(col("b")).agg(count(lit(1)).as("cb"))
       .withColumn("w1", element_at(split(col("b"), " "), 1))
@@ -93,7 +90,7 @@ object Round74Queries {
   // ── q114: RFM quartile segmentation census ────────────────────────────
 
   def q114_rfm_segments(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
+    val orders = Tables.load(s, dir, "orders")
     val maxDate = orders.agg(max(col("o_orderdate").cast("date")).as("d_max"))
     val per = orders
       .groupBy(col("o_custkey").as("custkey"))

@@ -33,20 +33,14 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline + analytics surface
   * (the reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round75Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def sanitize(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
+object Round75Queries extends QueryModule {
 
   // ── p40: orphan-file audit + physical GC ──────────────────────────────
 
   def p40_orphan_files(s: SparkSession, dir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
-    val table = graft.Scratch.dir(s"p40_table_${sanitize(dir)}")
-    val ord = t(s, dir, "orders").select(col("o_orderkey"),
+    val table = graft.Scratch.dir("p40_table", dir)
+    val ord = Tables.load(s, dir, "orders").select(col("o_orderkey"),
       col("o_orderdate"), col("o_totalprice"))
     ord.repartition(2).write.mode("overwrite").parquet(table)
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
@@ -92,7 +86,7 @@ object Round75Queries {
   private val EventTypes = Seq("click", "error", "purchase", "signup", "view")
 
   def q115_pivot(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     ev.select(date_format(Tables.tsMicros(ev), "yyyy-MM-dd").as("day"),
         col("event_type"))
       .groupBy(col("day"))
@@ -109,7 +103,7 @@ object Round75Queries {
     // word TRIGRAMS, not unigrams: the synthetic vocabulary is 31 words
     // each occurring hundreds of times (no N_1 mass at all), while the
     // trigram counts show the classic Zipf tail GT exists to smooth
-    val freq = t(s, dir, "documents")
+    val freq = Tables.load(s, dir, "documents")
       .select(explode(Text.shingles(col("text"), 3)).as("g"))
       .groupBy(col("g")).agg(count(lit(1)).as("r"))
     val coc = freq.groupBy(col("r")).agg(count(lit(1)).as("n_r"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.ImageExprs
+import SketchSql.textByte
 
 /** Seventy-sixth batch — containment dedup, LATERAL, and the compressed
   * decode composed with the resize kernel:
@@ -34,10 +35,7 @@ import graft.functions.ImageExprs
   * Reference scope: beyond-reference LLM-pipeline + analytics surface
   * (the reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round76Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round76Queries extends QueryModule {
 
   // ── d38: directional containment pairs (prefix-filtered) ──────────────
 
@@ -58,7 +56,7 @@ object Round76Queries {
   def d38_containment(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
     import org.apache.spark.sql.expressions.Window
-    val sh = t(s, dir, "documents")
+    val sh = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         explode(array_distinct(Text.shingles(col("text"), 3))).as("shingle"))
     val dfreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
@@ -157,16 +155,16 @@ object Round76Queries {
       |ORDER BY region, acctbal_cents DESC, custkey""".stripMargin
 
   def q116_lateral_topn(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "region").createOrReplaceTempView("region")
-    t(s, dir, "nation").createOrReplaceTempView("nation")
-    t(s, dir, "customer").createOrReplaceTempView("customer")
+    Tables.load(s, dir, "region").createOrReplaceTempView("region")
+    Tables.load(s, dir, "nation").createOrReplaceTempView("nation")
+    Tables.load(s, dir, "customer").createOrReplaceTempView("customer")
     s.sql(lateralSql)
   }
 
   // ── m23: PNG-gray decode + 2× pool, one expression chain ──────────────
 
   def m23_png_pooled_gray(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(col("doc_id"), col("text"))
+    Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       .select(col("doc_id"),
         ImageExprs.imageDownsampleStats(
           ImageExprs.encodeImageFromText(col("text"), "png_gray", 8, 8))
@@ -183,14 +181,10 @@ object Round76Queries {
     "q116_lateral_topn"   -> (q116_lateral_topn _),
     "m23_png_pooled_gray" -> (m23_png_pooled_gray _))
 
-  /** Gray source sample i (0..63): the codepoint fold. */
-  private def v(i: String): String =
-    s"(ord(substr(text, CAST((($i) % length(text)) + 1 AS INT), 1)) % 256)"
-
   /** Pooled gray sample j (0..15): floor-mean of the 2×2 block at
     * (j mod 4, j div 4) of the 8×8 source. */
   private def pooled(j: String): String = {
-    def p(y: String, x: String) = v(s"8*($y) + ($x)")
+    def p(y: String, x: String) = textByte(s"8*($y) + ($x)")
     val (bx, by) = (s"($j)%4", s"($j)//4")
     s"""(${p(s"2*($by)", s"2*($bx)")} +
        | ${p(s"2*($by)", s"2*($bx)+1")} +

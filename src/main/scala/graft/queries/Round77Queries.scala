@@ -33,10 +33,7 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline + analytics surface
   * (the reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round77Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round77Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -46,7 +43,7 @@ object Round77Queries {
 
   def e29_stream_pivot(s: SparkSession, dir: String): DataFrame = {
     val name = s"stream_pivot_${streamSeq.incrementAndGet()}"
-    val schema = t(s, dir, "events").schema
+    val schema = Tables.load(s, dir, "events").schema
     val raw = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
     val agg = raw
@@ -70,7 +67,7 @@ object Round77Queries {
   // ── q117: max concurrent sessions per day (boundary sweep) ────────────
 
   def q117_max_concurrency(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     val e = ev.withColumn("ts_us", Tables.tsMicros(ev))
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_us"), col("event_id"))
@@ -117,7 +114,7 @@ object Round77Queries {
     import graft.operators.CountMin
     val kk = 64
     val m48 = 1L << 48
-    val ev = t(s, dir, "events").select(col("event_type"), col("user_id"))
+    val ev = Tables.load(s, dir, "events").select(col("event_type"), col("user_id"))
     def hashes(et: String): DataFrame = ev
       .filter(col("event_type") === et)
       .select(pmod(CountMin.mix61(col("user_id"), 1299709L, 104729L),

@@ -31,16 +31,13 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round78Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round78Queries extends QueryModule {
 
   // ── s22: multi-probe LSH recall curve ─────────────────────────────────
 
   def s22_lsh_probe_curve(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Dedup, Similarity}
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables.load(s, dir, "embeddings")
     val bucketed = emb.select(col("vec_id"),
       Dedup.lshBucket(col("embedding"), dim = 64, nPlanes = 4).as("bucket"))
     val qb = broadcast(bucketed.filter(col("vec_id") < 5)
@@ -77,7 +74,7 @@ object Round78Queries {
 
   def t44_source_keywords(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val tok = docs.select(col("source"),
       explode(Text.tokens(lower(col("text")))).as("term"))
     val tf = tok.groupBy(col("source"), col("term"))

@@ -31,10 +31,7 @@ import graft.functions.{ImageExprs, PngExprs}
   * Reference scope: beyond-reference LLM-pipeline + analytics surface
   * (the reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round79Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round79Queries extends QueryModule {
 
   // ── q118: truncated Katz centrality, exact scaled integers ────────────
 
@@ -62,7 +59,7 @@ object Round79Queries {
   // ── m24: tEXt metadata round-trip through the PNG container ───────────
 
   def m24_png_text_chunks(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         PngExprs.encodePngGrayWithMeta(col("text"), col("lang"),
           col("source"), 8, 8).as("payload"))

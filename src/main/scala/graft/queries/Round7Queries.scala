@@ -13,10 +13,7 @@ import graft.Tables
   * contract as the other d/t families (reference transform dialect is
   * open — /root/reference/tools.py:58-65).
   */
-object Round7Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round7Queries extends QueryModule {
 
   // ── d13: winnowed fingerprint overlap — pairs of documents sharing ≥5
   //        winnowing fingerprints (k=16 codepoints, window w=16), scored
@@ -29,7 +26,7 @@ object Round7Queries {
   //        Candidates meet only through the fingerprint equi-join;
   //        nothing pairwise. ──────────────────────────────────────────
   def d13_winnow_overlap(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Dedup.winnowOverlap(t(s, dir, "documents"),
+    graft.operators.Dedup.winnowOverlap(Tables.load(s, dir, "documents"),
         "doc_id", "text", k = 16, w = 16, minShared = 5)
       .orderBy(col("id_a"), col("id_b"))
 
@@ -41,7 +38,7 @@ object Round7Queries {
   def t15_readability(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
     val toks = Text.tokens(col("text"))
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .filter(length(trim(col("text"))) > 0)
       .select(col("doc_id"),
         size(toks).cast(LongType).as("n_words"),

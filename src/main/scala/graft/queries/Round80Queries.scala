@@ -36,16 +36,13 @@ import graft.functions.ImageExprs
   * Reference scope: beyond-reference LLM-pipeline + analytics surface
   * (the reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round80Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round80Queries extends QueryModule {
 
   // ── t45: Burrows' Delta between sources ───────────────────────────────
 
   def t45_burrows_delta(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val tok = docs.select(col("source"),
       explode(Text.tokens(lower(col("text")))).as("term"))
     val tot = tok.groupBy(col("source")).agg(count(lit(1)).as("n_tok"))
@@ -88,7 +85,7 @@ object Round80Queries {
   // ── q119: χ² independence, exact DECIMAL(38,0) scaling ────────────────
 
   def q119_chi2_independence(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     val e = ev.select(
       (datediff(Tables.tsMicros(ev).cast("date"), lit("2024-01-01"))
         % 7).cast(LongType).as("dow"),
@@ -116,7 +113,7 @@ object Round80Queries {
   // ── m25: quadrant tile stats over the decoded raster ──────────────────
 
   def m25_image_tiles(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(col("doc_id"),
+    Tables.load(s, dir, "documents").select(col("doc_id"),
         ImageExprs.decodePixels(
           ImageExprs.encodeImageFromText(col("text"), "png", 8, 8)).as("px"))
       .select(col("doc_id"), posexplode(col("px")).as(Seq("i", "v")))

@@ -34,22 +34,16 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline + analytics surface
   * (the reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round81Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def sanitize(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
+object Round81Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── p41: day → month partition evolution with pruning proof ───────────
 
   def p41_partition_evolution(s: SparkSession, dir: String): DataFrame = {
-    val v1 = graft.Scratch.dir(s"p41_daily_${sanitize(dir)}")
-    val v2 = graft.Scratch.dir(s"p41_monthly_${sanitize(dir)}")
-    val slice = t(s, dir, "orders")
+    val v1 = graft.Scratch.dir("p41_daily", dir)
+    val v2 = graft.Scratch.dir("p41_monthly", dir)
+    val slice = Tables.load(s, dir, "orders")
       .filter(col("o_orderdate") >= "1995-01-01" &&
         col("o_orderdate") < "1995-04-01")
       .select(col("o_orderkey"), col("o_totalprice"),
@@ -95,7 +89,7 @@ object Round81Queries {
 
   def q120_runs_test(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = t(s, dir, "orders")
+    val daily = Tables.load(s, dir, "orders")
       .filter(col("o_orderdate") >= "1995-01-01" &&
         col("o_orderdate") < "1996-01-01")
       .groupBy(col("o_orderdate").cast("string").as("d"))
@@ -131,7 +125,7 @@ object Round81Queries {
 
   def e30_stream_chi2(s: SparkSession, dir: String): DataFrame = {
     val name = s"stream_chi2_${streamSeq.incrementAndGet()}"
-    val schema = t(s, dir, "events").schema
+    val schema = Tables.load(s, dir, "events").schema
     val raw = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
     val agg = raw

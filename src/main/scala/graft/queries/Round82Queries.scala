@@ -29,18 +29,12 @@ import graft.Tables
   * Reference scope: beyond-reference analytics surface (the reference's
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round82Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def sanitize(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
+object Round82Queries extends QueryModule {
 
   // ── q121: daily OHLC candles ──────────────────────────────────────────
 
   def q121_ohlc(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     val e = ev.select(
       Tables.tsMicros(ev).cast("date").cast("string").as("day"),
       unix_micros(Tables.tsMicros(ev)).as("ts_us"), col("event_id"),
@@ -79,8 +73,8 @@ object Round82Queries {
       " CAST(o_orderdate AS STRING))"
 
   def p42_table_checksum(s: SparkSession, dir: String): DataFrame = {
-    val copyDir = graft.Scratch.dir(s"p42_copy_${sanitize(dir)}")
-    val orders = t(s, dir, "orders").select(col("o_orderkey"),
+    val copyDir = graft.Scratch.dir("p42_copy", dir)
+    val orders = Tables.load(s, dir, "orders").select(col("o_orderkey"),
       col("o_custkey"), col("o_orderstatus"), col("o_totalprice"),
       col("o_orderdate"))
     def checksum(df: DataFrame): DataFrame = df
@@ -100,8 +94,8 @@ object Round82Queries {
   // ── q122: ordered LISTAGG ─────────────────────────────────────────────
 
   def q122_listagg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "nation")
-      .join(broadcast(t(s, dir, "region")),
+    Tables.load(s, dir, "nation")
+      .join(broadcast(Tables.load(s, dir, "region")),
         col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name").as("region"))
       .agg(array_join(array_sort(collect_list(col("n_name"))), ",")

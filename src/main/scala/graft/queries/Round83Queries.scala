@@ -40,15 +40,12 @@ import graft.Tables
   * Reference scope: beyond-reference analytics surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round83Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round83Queries extends QueryModule {
 
   // ── q123: Mann-Whitney U, 1995 vs 1996 order values ───────────────────
 
   def q123_mann_whitney(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = Tables.load(s, dir, "orders")
       .filter(col("o_orderdate") >= "1995-01-01" &&
         col("o_orderdate") < "1997-01-01")
       .select(round(col("o_totalprice") * 100).cast(LongType).as("v"),
@@ -80,7 +77,7 @@ object Round83Queries {
   // ── q124: Cramér's V + top Pearson-residual cells ─────────────────────
 
   def q124_cramers_v(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     val e = ev.select(
       (datediff(Tables.tsMicros(ev).cast("date"), lit("2024-01-01"))
         % 7).cast(LongType).as("dow"),
@@ -122,7 +119,7 @@ object Round83Queries {
   // ── q125: exact-integer ACF at lags 1..7 ──────────────────────────────
 
   def q125_acf(s: SparkSession, dir: String): DataFrame = {
-    val daily = t(s, dir, "orders")
+    val daily = Tables.load(s, dir, "orders")
       .filter(col("o_orderdate") >= "1995-01-01" &&
         col("o_orderdate") < "1996-01-01")
       .groupBy(col("o_orderdate").cast("date").as("d"))
@@ -147,7 +144,7 @@ object Round83Queries {
   // ── q126: Theil-Sen median pairwise slope ─────────────────────────────
 
   def q126_theil_sen(s: SparkSession, dir: String): DataFrame = {
-    val daily = t(s, dir, "orders")
+    val daily = Tables.load(s, dir, "orders")
       .filter(col("o_orderdate") >= "1995-01-01" &&
         col("o_orderdate") < "1996-01-01")
       .groupBy(col("o_orderdate").cast("date").as("d"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.functions.{ImageExprs, ShardExprs}
+import SketchSql.textByte
 
 /** Eighty-fourth batch — compressed-shard and archive ingestion, plus a
   * second fully in-JVM compressed image format:
@@ -42,15 +43,12 @@ import graft.functions.{ImageExprs, ShardExprs}
   * (/root/reference/tools.py:22-41); beyond-reference LLM-pipeline
   * surface per the build brief.
   */
-object Round84Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round84Queries extends QueryModule {
 
   // ── m26: GIF87a LZW round-trip + cross-codec invariance ───────────────
 
   def m26_gif_lzw(s: SparkSession, dir: String): DataFrame = {
-    val withStats = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val withStats = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       .select(col("doc_id"),
         ImageExprs.imageStats(
           ImageExprs.encodeImageFromText(col("text"), "gif", 16, 16)).as("st"),
@@ -69,7 +67,7 @@ object Round84Queries {
   // ── p43: gzip JSONL shards, assembled and parsed back ─────────────────
 
   def p43_gzip_jsonl(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
       .select(col("source"), col("doc_id"), col("text"))
     val shards = docs
       .select(col("source"),
@@ -98,7 +96,7 @@ object Round84Queries {
   // ── p44: WARC response records, framed and parsed back ────────────────
 
   def p44_warc_roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
       .select(col("source"), col("doc_id"), col("text"))
     val rec = concat(
       lit("WARC/1.0\r\n"),
@@ -139,15 +137,11 @@ object Round84Queries {
     "p43_gzip_jsonl"     -> (p43_gzip_jsonl _),
     "p44_warc_roundtrip" -> (p44_warc_roundtrip _))
 
-  /** Gray source sample i (0..255): the codepoint fold. */
-  private def v(i: String): String =
-    s"(ord(substr(text, CAST((($i) % length(text)) + 1 AS INT), 1)) % 256)"
-
   val oracles: Map[String, String] = Map(
     "m26_gif_lzw" ->
       s"""WITH px AS (
         |  SELECT doc_id,
-        |    list_transform(range(0, 256), i -> ${v("i")}) AS p
+        |    list_transform(range(0, 256), i -> ${textByte("i")}) AS p
         |  FROM documents)
         |SELECT doc_id,
         |  CAST(16 AS INT) AS width, CAST(16 AS INT) AS height,

@@ -43,15 +43,12 @@ import graft.functions.AudioExprs
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round85Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round85Queries extends QueryModule {
 
   // ── m27: µ-law round-trip with gated reconstruction error ─────────────
 
   def m27_mulaw_audio(s: SparkSession, dir: String): DataFrame = {
-    val dec = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val dec = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       .select(col("doc_id"), col("text"),
         AudioExprs.decodeSamples(
           AudioExprs.encodeMulawFromText(col("text"), 8000, 256)).as("dec"))
@@ -74,7 +71,7 @@ object Round85Queries {
   // ── a21: base-2 exponential histogram quantile serving ────────────────
 
   def a21_exp_histogram(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     val v = ev.select(col("event_type").as("et"),
         round(col("value") * 100).cast(LongType).as("c"))
       .filter(col("c") >= 1)
@@ -114,7 +111,7 @@ object Round85Queries {
 
   def t46_stupid_backoff(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val tok = docs.select(col("source"), col("doc_id"),
         posexplode(Text.tokens(lower(col("text")))).as(Seq("pos", "w")))
       .localCheckpoint()

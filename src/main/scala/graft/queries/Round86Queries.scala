@@ -45,10 +45,7 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round86Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round86Queries extends QueryModule {
 
   /** Letter→Soundex-code map for A..Z (0 = vowel/ignored). */
   private val SdxMap = "01230120022455012623010202"
@@ -57,7 +54,7 @@ object Round86Queries {
 
   def d39_soundex_blocking(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val tok = t(s, dir, "documents").select(col("doc_id"),
+    val tok = Tables.load(s, dir, "documents").select(col("doc_id"),
       explode(Text.tokens(col("text"))).as("w"))
     val vocab = tok.groupBy(col("w"))
       .agg(count(lit(1)).as("occurrences"),
@@ -159,12 +156,12 @@ object Round86Queries {
   private val R2 = 25000000L // radius 5000, squared
 
   def q127_spatial_cell_join(s: SparkSession, dir: String): DataFrame = {
-    val cp = t(s, dir, "customer").select(col("c_custkey").as("c"),
+    val cp = Tables.load(s, dir, "customer").select(col("c_custkey").as("c"),
         expr("(c_custkey * 7919) % 1000000").as("x"),
         expr("(c_custkey * 104729) % 1000000").as("y"))
       .withColumn("cx", expr(s"x div $Cell"))
       .withColumn("cy", expr(s"y div $Cell"))
-    val spe = t(s, dir, "supplier").select(col("s_suppkey").as("sk"),
+    val spe = Tables.load(s, dir, "supplier").select(col("s_suppkey").as("sk"),
         expr("(s_suppkey * 60013) % 1000000").as("sx"),
         expr("(s_suppkey * 122777) % 1000000").as("sy"))
       .select(col("sk"), col("sx"), col("sy"),

@@ -51,10 +51,7 @@ import graft.functions.{JaroWinklerSim, NativeExprs}
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round87Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round87Queries extends QueryModule {
 
   /** Mersenne prime 2^61−1 — the portable-hash field modulus. */
   private val P = (1L << 61) - 1
@@ -76,7 +73,7 @@ object Round87Queries {
     // unchanged. At 100 TB the distinct dimension grows with the real
     // name vocabulary, not the corpus — the canonical
     // score-distinct-values ER optimization.
-    val p = t(s, dir, "part")
+    val p = Tables.load(s, dir, "part")
       .select(col("p_partkey"), col("p_name"), col("p_brand"))
     val names = p.select(col("p_brand"), col("p_name")).distinct()
     // ordered pairs incl. na = nb, so each record pair (pa < pb) maps to
@@ -102,7 +99,7 @@ object Round87Queries {
   // ── a22: AMS tug-of-war second-frequency-moment sketch ────────────────
 
   def a22_ams_f2(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select((col("l_partkey") + 1).as("k"))
+    val li = Tables.load(s, dir, "lineitem").select((col("l_partkey") + 1).as("k"))
     val sgn = li
       .select(col("k"), explode(sequence(lit(0L), lit(15L))).as("r"))
       .withColumn("k2", NativeExprs.mulmodP(col("k"), col("k")))
@@ -117,7 +114,7 @@ object Round87Queries {
       .withColumn("sign", lit(1L) - lit(2L) * (shiftright(col("h"), 12) % 2L))
     val est = sgn.groupBy(col("r"))
       .agg(sum(col("sign")).as("signed_sum"))
-    val exact = t(s, dir, "lineitem")
+    val exact = Tables.load(s, dir, "lineitem")
       .groupBy(col("l_partkey")).agg(count(lit(1)).as("c"))
       .agg(sum(col("c") * col("c")).as("f2_exact"))
     est.crossJoin(broadcast(exact))
@@ -152,7 +149,7 @@ object Round87Queries {
   // ── p45: per-column encoding-stats layout advisor ─────────────────────
 
   def p45_encoding_stats(s: SparkSession, dir: String): DataFrame = {
-    val src = t(s, dir, "lineitem").select(
+    val src = Tables.load(s, dir, "lineitem").select(
       col("l_orderkey"),
       col("l_linenumber").cast("long").as("ln2"),
       col("l_orderkey").cast("long").as("ok"),

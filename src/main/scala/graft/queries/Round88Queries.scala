@@ -42,10 +42,7 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round88Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round88Queries extends QueryModule {
 
   private val Stop = Seq("a", "the", "and", "of", "to", "in", "is", "it",
     "on", "for")
@@ -53,7 +50,7 @@ object Round88Queries {
   // ── t47: RAKE degree/frequency keyword scores ─────────────────────────
 
   def t47_rake(s: SparkSession, dir: String): DataFrame = {
-    val tok = t(s, dir, "documents")
+    val tok = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "w")))
       .withColumn("sw", when(col("w").isInCollection(Stop), 1).otherwise(0))
@@ -75,7 +72,7 @@ object Round88Queries {
   // ── t48: quantile normalization of per-source length distributions ────
 
   def t48_quantile_normalize(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
     val nn = docs.agg(count(lit(1)).as("n"))
     // pooled global rank via Rank.globalRank (range-partitioned sort +
@@ -99,7 +96,7 @@ object Round88Queries {
   // ── t49: reliability bins + Brier + expected calibration error ────────
 
   def t49_calibration(s: SparkSession, dir: String): DataFrame = {
-    val scored = t(s, dir, "documents").select(col("doc_id"),
+    val scored = Tables.load(s, dir, "documents").select(col("doc_id"),
         (col("doc_id") * 2654435761L % 1000L).as("sm"))
       .withColumn("label",
         when(col("sm") + col("doc_id") * 40503L % 600L >= 800L, 1L)
@@ -131,7 +128,7 @@ object Round88Queries {
 
   /** The integer point set (shared spelling with the oracle). */
   private def points(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer").select(col("c_custkey").as("c"),
+    Tables.load(s, dir, "customer").select(col("c_custkey").as("c"),
       expr("(c_custkey * 7919) % 100000").as("x"),
       expr("(c_custkey * 104729) % 100000").as("y"))
 

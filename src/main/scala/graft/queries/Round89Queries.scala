@@ -51,10 +51,7 @@ import graft.functions.NativeExprs
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round89Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round89Queries extends QueryModule {
 
   // ── s23: multi-start greedy kNN-graph walks ───────────────────────────
 
@@ -80,7 +77,7 @@ object Round89Queries {
 
   def s23_graph_greedy_ann(s: SparkSession, dir: String): DataFrame = {
     val qv = graft.operators.Kmeans
-      .quantized(t(s, dir, "embeddings"), "vec_id", "embedding")
+      .quantized(Tables.load(s, dir, "embeddings"), "vec_id", "embedding")
       .localCheckpoint(true)
     // Index build, round-14 redesign (the r13 weak): the d38 pattern —
     // LSH buckets GENERATE candidates, exact integer distance VERIFIES
@@ -243,7 +240,7 @@ object Round89Queries {
     * map-local either way. The CASE itself is unchanged and still shared
     * verbatim with the oracle. */
   def q130_allen_census(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     val us = unix_micros(Tables.tsMicros(ev))
     val iv = ev
       .select(col("user_id"), to_date(Tables.tsMicros(ev)).as("day"),
@@ -270,7 +267,7 @@ object Round89Queries {
   // ── p46: sort-key advisor — run counts under candidate sort orders ────
 
   def p46_sort_advisor(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables.load(s, dir, "lineitem")
     val src = li.select(
       col("l_orderkey").cast("long").as("ok"), col("l_partkey").as("pk"),
       col("l_suppkey").as("sk"), col("l_quantity").cast("long").as("qty"),

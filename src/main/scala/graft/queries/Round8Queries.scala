@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
 import graft.operators.Dedup
+import StreamConf.withStreamShuffle
+import DecimalSums.{dec, dsum}
 
 /** Eighth batch — the persisted-artifact paths (the "at 100 TB you'd
   * persist the index" half of the scale story, now real code):
@@ -32,18 +34,7 @@ import graft.operators.Dedup
   * (/root/reference/tools.py:58-65); the CSV knobs mirror the
   * reference's to_csv sep/encoding surface (tools.py:257-258).
   */
-object Round8Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def dec(c: org.apache.spark.sql.Column, scale: Int = 4) =
-    c.cast(DecimalType(18, scale))
-  private def dsum(c: org.apache.spark.sql.Column, scale: Int = 4) =
-    sum(dec(c, scale)).cast(DoubleType)
-
-  private def sanitize(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9.]", "_")
+object Round8Queries extends QueryModule {
 
   // ── s7: ANN top-k from the PERSISTED IVF index. Identical semantics and
   //        oracle to s3 (same deterministic quantizer, nprobe = nCells on
@@ -56,8 +47,8 @@ object Round8Queries {
 
   private def ivfIndexDir(s: SparkSession, dir: String): String =
     ivfBuilt.computeIfAbsent(dir, _ => {
-      val out = graft.Scratch.dir(s"s7_ivf_${sanitize(dir)}")
-      graft.operators.IvfIndex.build(t(s, dir, "embeddings"),
+      val out = graft.Scratch.dir("s7_ivf", dir)
+      graft.operators.IvfIndex.build(Tables.load(s, dir, "embeddings"),
         "vec_id", "embedding", nCells = 16, iters = 3, out)
       out
     })
@@ -65,7 +56,7 @@ object Round8Queries {
   def s7_ann_ivf_persisted(s: SparkSession, dir: String): DataFrame = {
     val idx = ivfIndexDir(s, dir)
     graft.operators.IvfIndex.topK(s, idx,
-        t(s, dir, "embeddings").filter(col("vec_id") < 5),
+        Tables.load(s, dir, "embeddings").filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 5, nprobe = 16)
       .orderBy(col("query_id"), col("rk"))
   }
@@ -81,10 +72,10 @@ object Round8Queries {
 
   private def corpusSetsDir(s: SparkSession, dir: String): String =
     postingsBuilt.computeIfAbsent(dir, _ => {
-      val out = graft.Scratch.dir(s"d14_corpus_sets_${sanitize(dir)}")
+      val out = graft.Scratch.dir("d14_corpus_sets", dir)
       graft.sinks.ParquetSink.write(
         Dedup.shingleSets(
-          t(s, dir, "documents").filter(col("doc_id") % 2 === 0),
+          Tables.load(s, dir, "documents").filter(col("doc_id") % 2 === 0),
           "doc_id", "text", n = 3),
         out)
       out
@@ -102,10 +93,10 @@ object Round8Queries {
 
   private def corpusBandsDir(s: SparkSession, dir: String): String =
     bandsBuilt.computeIfAbsent(dir, _ => {
-      val out = graft.Scratch.dir(s"d15_corpus_bands_${sanitize(dir)}")
+      val out = graft.Scratch.dir("d15_corpus_bands", dir)
       graft.sinks.ParquetSink.write(
         Dedup.minhashBands(
-          t(s, dir, "documents").filter(col("doc_id") % 2 === 0),
+          Tables.load(s, dir, "documents").filter(col("doc_id") % 2 === 0),
           "doc_id", "text", shingleN = 3, numHashes = 32, bands = 8),
         out)
       out
@@ -114,7 +105,7 @@ object Round8Queries {
   def d15_lsh_incremental(s: SparkSession, dir: String): DataFrame = {
     val corpusBands = s.read.parquet(corpusBandsDir(s, dir))
     val corpusSets = s.read.parquet(corpusSetsDir(s, dir))
-    val batch = t(s, dir, "documents").filter(col("doc_id") % 2 === 1)
+    val batch = Tables.load(s, dir, "documents").filter(col("doc_id") % 2 === 1)
     val best = Dedup.crossMinhashLsh(batch, corpusBands, corpusSets,
         "doc_id", "text", shingleN = 3, numHashes = 32, bands = 8,
         threshold = 0.5)
@@ -161,7 +152,7 @@ object Round8Queries {
 
   private def streamIngestDedup(s: SparkSession, dir: String,
       deltaFilter: Column): DataFrame = {
-    val schema = t(s, dir, "documents").schema
+    val schema = Tables.load(s, dir, "documents").schema
     val outDir = graft.Scratch.dir(
       s"e14_verdicts_${streamSeq.incrementAndGet()}")
     val corpusPostings =
@@ -199,7 +190,7 @@ object Round8Queries {
     // read the landed verdicts with an explicit schema: a batch with no
     // candidate pairs writes no part files
     val best = s.read.schema("doc_id BIGINT, dup_of BIGINT").parquet(outDir)
-    t(s, dir, "documents").filter(deltaFilter)
+    Tables.load(s, dir, "documents").filter(deltaFilter)
       .select(col("doc_id")).join(best, Seq("doc_id"), "left")
       .select(col("doc_id"), col("dup_of"), col("dup_of").isNull.as("kept"))
       .orderBy(col("doc_id"))
@@ -207,16 +198,9 @@ object Round8Queries {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private def withStreamShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
   def d14_incremental_dedup(s: SparkSession, dir: String): DataFrame = {
     val corpusSets = s.read.parquet(corpusSetsDir(s, dir))
-    val batch = t(s, dir, "documents").filter(col("doc_id") % 2 === 1)
+    val batch = Tables.load(s, dir, "documents").filter(col("doc_id") % 2 === 1)
     val best = Dedup.crossNgramJaccardAgainstSets(batch, corpusSets,
         "doc_id", "text", n = 3, threshold = 0.5)
       .groupBy(col("id_a").as("doc_id"))
@@ -236,7 +220,7 @@ object Round8Queries {
   //        ingest → dedup → index-update cycle is behind the gate. ──────
   def d16_artifact_update(s: SparkSession, dir: String): DataFrame = {
     val corpusSets = s.read.parquet(corpusSetsDir(s, dir))
-    val batch = t(s, dir, "documents").filter(col("doc_id") % 2 === 1)
+    val batch = Tables.load(s, dir, "documents").filter(col("doc_id") % 2 === 1)
     // Round 14: tokenize the batch ONCE — the dedup probe and the kept-set
     // merge both read the same checkpointed shingle-set table (the old
     // shape re-shingled the kept docs a second time).
@@ -246,7 +230,7 @@ object Round8Queries {
         threshold = 0.5)
       .select(col("id_a").as("id")).distinct()
     val keptSets = batchSets.join(dupIds, Seq("id"), "left_anti")
-    val out = graft.Scratch.dir(s"d16_merged_${sanitize(dir)}")
+    val out = graft.Scratch.dir("d16_merged", dir)
     graft.sinks.ParquetSink.write(corpusSets.unionByName(keptSets), out)
     val merged = s.read.parquet(out)
     merged
@@ -263,7 +247,7 @@ object Round8Queries {
   //        overlap denominator stays the uncapped fingerprint count. The
   //        scale knob itself is what hash-matches here. ─────────────────
   def d13b_winnow_capped(s: SparkSession, dir: String): DataFrame =
-    Dedup.winnowOverlap(t(s, dir, "documents"), "doc_id", "text",
+    Dedup.winnowOverlap(Tables.load(s, dir, "documents"), "doc_id", "text",
         k = 16, w = 16, minShared = 5, maxDf = Some(5L))
       .orderBy(col("id_a"), col("id_b"))
 
@@ -285,7 +269,7 @@ object Round8Queries {
   //        construction straight from parquet, so a hash match proves the
   //        quoting round-trip loses nothing. ───────────────────────────
   def p21_csv_quoted_multiline(s: SparkSession, dir: String): DataFrame = {
-    val sample = t(s, dir, "customer")
+    val sample = Tables.load(s, dir, "customer")
       .filter(col("c_custkey") % 50 === 0)
       .select(col("c_custkey"),
         concat(col("c_name"), lit(",\"\n"), col("c_mktsegment")).as("tricky"),
@@ -306,7 +290,7 @@ object Round8Queries {
   //        characters through both the sink and the reference-compat
   //        reader's (delimiter, encoding) knobs. ───────────────────────
   def p22_csv_sep_encoding(s: SparkSession, dir: String): DataFrame = {
-    val sample = t(s, dir, "nation")
+    val sample = Tables.load(s, dir, "nation")
       .select(col("n_nationkey"),
         concat(lit("café » "), col("n_name")).as("label"),
         col("n_regionkey"))

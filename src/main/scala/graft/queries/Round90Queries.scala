@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import StreamConf.withStreamShuffle
 
 /** Ninetieth batch — content-aware text segmentation, temporal network
   * motifs, and a streaming model-monitoring twin:
@@ -33,24 +34,14 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round90Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round90Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private def withStreamShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
 
   // ── t51: TextTiling adjacent-window cosine segmentation ───────────────
 
   def t51_texttiling(s: SparkSession, dir: String): DataFrame = {
-    val tok = t(s, dir, "documents")
+    val tok = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "w")))
     val nd = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
@@ -96,7 +87,7 @@ object Round90Queries {
   private val WinUs = 6L * 3600L * 1000000L
 
   def q131_temporal_motifs(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     val e = ev.select(col("user_id"), col("event_id"), col("event_type"),
       unix_micros(Tables.tsMicros(ev)).as("us"))
     val ab = e.as("a").join(e.as("b"),
@@ -120,7 +111,7 @@ object Round90Queries {
   // ── e31: streaming calibration-monitor twin of t49 ────────────────────
 
   def e31_stream_calibration(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val name = s"stream_calibration_${streamSeq.incrementAndGet()}"
     val stream = s.readStream.schema(docs.schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)

@@ -40,15 +40,12 @@ import graft.functions.ImageExprs
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round91Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round91Queries extends QueryModule {
 
   // ── q132: exact Shapley-value channel attribution ─────────────────────
 
   def q132_shapley_attribution(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     val ch = ev
       .select(col("user_id"), col("event_type"),
         to_date(Tables.tsMicros(ev)).as("day"))
@@ -99,7 +96,7 @@ object Round91Queries {
   // ── m28: one-level Haar wavelet signature + near-dup clusters ─────────
 
   def m28_haar_signature(s: SparkSession, dir: String): DataFrame = {
-    val px = t(s, dir, "documents").select(col("doc_id"),
+    val px = Tables.load(s, dir, "documents").select(col("doc_id"),
         ImageExprs.decodePixels(
           ImageExprs.encodeImageFromText(col("text"), "pgm", 8, 8)).as("px"))
       .select(col("doc_id"), posexplode(col("px")).as(Seq("i", "v")))
@@ -133,7 +130,7 @@ object Round91Queries {
   // ── q133: Kendall τ-b rank correlation ────────────────────────────────
 
   def q133_kendall_tau(s: SparkSession, dir: String): DataFrame = {
-    val m = t(s, dir, "orders").filter(col("o_custkey") % 4 === 0)
+    val m = Tables.load(s, dir, "orders").filter(col("o_custkey") % 4 === 0)
       .groupBy(col("o_custkey").as("c"))
       .agg(count(lit(1)).as("n_orders"),
         sum(expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)")).as("spend_c"))

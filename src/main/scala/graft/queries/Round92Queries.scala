@@ -33,15 +33,12 @@ import graft.functions.{AudioExprs, ImageExprs}
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round92Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round92Queries extends QueryModule {
 
   // ── d43: adjusted Rand index of signature vs exact clusterings ────────
 
   def d43_adjusted_rand(s: SparkSession, dir: String): DataFrame = {
-    val px = t(s, dir, "documents").select(col("doc_id"),
+    val px = Tables.load(s, dir, "documents").select(col("doc_id"),
         ImageExprs.decodePixels(
           ImageExprs.encodeImageFromText(col("text"), "pgm", 8, 8)).as("px"))
       .select(col("doc_id"), posexplode(col("px")).as(Seq("i", "v")))
@@ -105,7 +102,7 @@ object Round92Queries {
   def d44_jw_pruned(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.JaroWinklerSim
     graft.plans.Rules.install(s, optimizations = Seq(graft.plans.JwPrefilterRule))
-    val p = t(s, dir, "part")
+    val p = Tables.load(s, dir, "part")
       .filter(col("p_partkey") < 2000)
       .select(col("p_partkey"), col("p_name"), col("p_brand"))
     p.as("a").join(p.as("b"),
@@ -122,7 +119,7 @@ object Round92Queries {
   // ── m29: Walsh–Hadamard sequency energies over PCM frames ─────────────
 
   def m29_wht_audio(s: SparkSession, dir: String): DataFrame = {
-    val smp = t(s, dir, "documents").select(col("doc_id"),
+    val smp = Tables.load(s, dir, "documents").select(col("doc_id"),
         AudioExprs.decodeSamples(
           AudioExprs.encodeWavFromText(col("text"), 16000, 64)).as("sm"))
       .select(col("doc_id"), posexplode(col("sm")).as(Seq("i", "v")))

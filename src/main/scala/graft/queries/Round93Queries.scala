@@ -36,15 +36,12 @@ import graft.functions.ImageExprs
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round93Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round93Queries extends QueryModule {
 
   // ── q134: event-sequence regex census ─────────────────────────────────
 
   def q134_event_regex(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     val seq = ev
       .select(col("user_id"), to_date(Tables.tsMicros(ev)).as("day"),
         unix_micros(Tables.tsMicros(ev)).as("us"), col("event_id"),
@@ -74,7 +71,7 @@ object Round93Queries {
 
   def q135_sprt(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     val obs = ev.filter(col("event_type").isin("purchase", "view"))
       .select(col("user_id"), col("event_id"),
         unix_micros(Tables.tsMicros(ev)).as("us"),
@@ -107,7 +104,7 @@ object Round93Queries {
 
   def m30_integral_image(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val px = t(s, dir, "documents").select(col("doc_id"),
+    val px = Tables.load(s, dir, "documents").select(col("doc_id"),
         ImageExprs.decodePixels(
           ImageExprs.encodeImageFromText(col("text"), "pgm", 8, 8)).as("px"))
       .select(col("doc_id"), posexplode(col("px")).as(Seq("i", "v")))

@@ -34,15 +34,12 @@ import graft.functions.NativeExprs
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round94Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round94Queries extends QueryModule {
 
   // ── p48: crypto-shredding with integrity tags ─────────────────────────
 
   def p48_crypto_shred(s: SparkSession, dir: String): DataFrame = {
-    val cust = t(s, dir, "customer")
+    val cust = Tables.load(s, dir, "customer")
     val enc = cust.select(col("c_custkey").as("k"),
         expr("CAST(ROUND(c_acctbal * 100) AS BIGINT)").as("balc"))
       .select(col("k"),
@@ -72,7 +69,7 @@ object Round94Queries {
 
   def t52_keyness_g2(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val tok = t(s, dir, "documents")
+    val tok = Tables.load(s, dir, "documents")
       .select(when(col("source") === "src0", "a").otherwise("b").as("corp"),
         explode(Text.tokens(col("text"))).as("w"))
     val cnt = tok.groupBy(col("w"))

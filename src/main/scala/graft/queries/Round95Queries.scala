@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{ImageExprs, WisDpExpr}
+import StreamConf.withStreamShuffle
 
 /** Ninety-fifth batch — per-key dynamic programming as a native
   * expression, motion estimation, and a streaming keyness twin:
@@ -36,24 +37,14 @@ import graft.functions.{ImageExprs, WisDpExpr}
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round95Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round95Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private def withStreamShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
 
   // ── q137: weighted interval scheduling via the native DP expression ───
 
   def q137_interval_scheduling(s: SparkSession, dir: String): DataFrame = {
-    val ords = t(s, dir, "orders").filter(col("o_custkey") % 8 === 1)
+    val ords = Tables.load(s, dir, "orders").filter(col("o_custkey") % 8 === 1)
     val base = ords.select(col("o_custkey").as("c"),
       col("o_orderkey").as("ok"),
       unix_micros(Tables.tsMicros(ords, "o_orderdate")).as("st"),
@@ -71,7 +62,7 @@ object Round95Queries {
   // ── m31: 4×4-block SAD motion estimation between rotated rasters ──────
 
   def m31_block_motion(s: SparkSession, dir: String): DataFrame = {
-    val frames = t(s, dir, "documents").select(col("doc_id"),
+    val frames = Tables.load(s, dir, "documents").select(col("doc_id"),
       ImageExprs.decodePixels(
         ImageExprs.encodeImageFromText(col("text"), "pgm", 8, 8)).as("f0"),
       ImageExprs.decodePixels(ImageExprs.encodeImageFromText(
@@ -111,7 +102,7 @@ object Round95Queries {
 
   def e32_stream_keyness(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val name = s"stream_keyness_${streamSeq.incrementAndGet()}"
     val stream = s.readStream.schema(docs.schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)

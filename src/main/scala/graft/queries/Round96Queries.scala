@@ -34,15 +34,12 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round96Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round96Queries extends QueryModule {
 
   // ── t53: Luhn checksum validation census ──────────────────────────────
 
   def t53_luhn_validation(s: SparkSession, dir: String): DataFrame = {
-    val cand = t(s, dir, "documents").select(col("doc_id"),
+    val cand = Tables.load(s, dir, "documents").select(col("doc_id"),
       expr("lpad(CAST((doc_id * 48271 % 100000000000) AS STRING), 11, '0')")
         .as("body"))
     val withSum = cand.withColumn("s", expr(
@@ -77,8 +74,8 @@ object Round96Queries {
   // ── q138: business-day gap census (no calendar table) ─────────────────
 
   def q138_business_days(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-    val l = t(s, dir, "lineitem")
+    val o = Tables.load(s, dir, "orders")
+    val l = Tables.load(s, dir, "lineitem")
     val pairs = o.select(col("o_orderkey"),
         to_date(Tables.tsMicros(o, "o_orderdate")).as("d1"))
       .join(l.select(col("l_orderkey"),
@@ -105,7 +102,7 @@ object Round96Queries {
   // ── a23: exact power-sum moments (skewness + excess kurtosis) ─────────
 
   def a23_higher_moments(s: SparkSession, dir: String): DataFrame = {
-    val b = t(s, dir, "customer").select(col("c_mktsegment").as("seg"),
+    val b = Tables.load(s, dir, "customer").select(col("c_mktsegment").as("seg"),
       expr("CAST(ROUND(c_acctbal * 100) AS BIGINT)").as("x"))
     val p = b.groupBy(col("seg")).agg(count(lit(1)).as("n"),
       sum(expr("CAST(x AS DECIMAL(38,0))")).as("d1"),

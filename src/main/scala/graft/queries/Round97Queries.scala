@@ -32,15 +32,12 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round97Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round97Queries extends QueryModule {
 
   // ── q139: windowed 2D skyline ─────────────────────────────────────────
 
   def q139_skyline(s: SparkSession, dir: String): DataFrame = {
-    val m = t(s, dir, "orders").groupBy(col("o_custkey").as("c"))
+    val m = Tables.load(s, dir, "orders").groupBy(col("o_custkey").as("c"))
       .agg(count(lit(1)).as("n_orders"),
         expr("""CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
           | AS BIGINT) div COUNT(*)""".stripMargin).as("avg_cents"))
@@ -58,7 +55,7 @@ object Round97Queries {
 
   def m32_bayer_binning(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.ImageExprs
-    val px = t(s, dir, "documents").select(col("doc_id"),
+    val px = Tables.load(s, dir, "documents").select(col("doc_id"),
         ImageExprs.decodePixels(
           ImageExprs.encodeImageFromText(col("text"), "pgm", 8, 8)).as("px"))
       .select(col("doc_id"), posexplode(col("px")).as(Seq("i", "v")))
@@ -83,7 +80,7 @@ object Round97Queries {
 
   def t54_gate_ablation(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val f = t(s, dir, "documents").select(
+    val f = Tables.load(s, dir, "documents").select(
       when(col("n_chars") >= 250, 1L).otherwise(0L).as("r_len"),
       when(col("lang") === "en", 1L).otherwise(0L).as("r_lang"),
       when(size(Text.tokens(col("text"))) >= 45, 1L).otherwise(0L)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import StreamConf.withStreamShuffle
 
 /** Ninety-eighth batch — FIFO queue semantics in set algebra, alpha
   * compositing, and a streaming skyline twin:
@@ -34,24 +35,14 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round98Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round98Queries extends QueryModule {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private def withStreamShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
 
   // ── q141: FIFO allocation via cumulative-interval overlap ─────────────
 
   def q141_fifo_allocation(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables.load(s, dir, "lineitem")
     def flow(pred: String): DataFrame = {
       val f = li.filter(expr(pred)).select(col("l_partkey").as("pk"),
         col("l_quantity").cast("long").as("qty"),
@@ -94,7 +85,7 @@ object Round98Queries {
 
   def m33_alpha_composite(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.ImageExprs
-    t(s, dir, "documents").select(col("doc_id"),
+    Tables.load(s, dir, "documents").select(col("doc_id"),
         (col("doc_id") % 256).as("alpha"),
         ImageExprs.decodePixels(ImageExprs.encodeImageFromText(
           col("text"), "pgm", 8, 8)).as("src"),
@@ -120,7 +111,7 @@ object Round98Queries {
   // ── e33: streaming twin of the windowed skyline ───────────────────────
 
   def e33_stream_skyline(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
+    val orders = Tables.load(s, dir, "orders")
     val name = s"stream_skyline_${streamSeq.incrementAndGet()}"
     val stream = s.readStream.schema(orders.schema)
       .option("pathGlobFilter", "orders.parquet").parquet(dir)

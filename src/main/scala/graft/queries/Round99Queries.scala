@@ -37,10 +37,7 @@ import graft.Tables
   * Reference scope: beyond-reference LLM-pipeline surface (the
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
-object Round99Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round99Queries extends QueryModule {
 
   // ── q142: snake round-robin shard balance audit ───────────────────────
 
@@ -52,7 +49,7 @@ object Round99Queries {
     // exactly this (operators/Rank.scala). LongType rank also lands the
     // shard column as BIGINT, matching the oracle's ROW_NUMBER() dtype.
     val sized = graft.operators.Rank.globalRank(
-        t(s, dir, "documents").select(col("doc_id"), col("n_chars")),
+        Tables.load(s, dir, "documents").select(col("doc_id"), col("n_chars")),
         "rk1", col("n_chars").desc, col("doc_id"))
       .withColumn("rk", col("rk1") - 1L)
     val per = sized
@@ -71,7 +68,7 @@ object Round99Queries {
   // ── q143: two-pass exact median via group-median band ─────────────────
 
   def q143_two_pass_median(s: SparkSession, dir: String): DataFrame = {
-    val v = t(s, dir, "orders").select((col("o_custkey") % 25).as("grp"),
+    val v = Tables.load(s, dir, "orders").select((col("o_custkey") % 25).as("grp"),
         expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").as("x"),
         col("o_orderkey").as("ok"))
       .localCheckpoint(true)
@@ -112,7 +109,7 @@ object Round99Queries {
 
   def t55_vocab_coverage(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val freq = t(s, dir, "documents")
+    val freq = Tables.load(s, dir, "documents")
       .select(explode(Text.tokens(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
       .withColumn("rk", row_number().over(

@@ -19,10 +19,7 @@ import graft.Tables
   * dialect is open, /root/reference/tools.py:58-65); q76 exercises a
   * dialect corner of that open surface directly.
   */
-object Round9Queries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+object Round9Queries extends QueryModule {
 
   // ── t16: mixture sampling — per-source target weights realized by a
   //        deterministic md5-threshold on the *content*: keep iff the
@@ -38,7 +35,7 @@ object Round9Queries {
     val w = (srcIdx % 4 + 1).cast(DoubleType) / lit(4.0)
     val h = conv(substring(md5(col("text")), 1, 8), 16, 10).cast(LongType)
     val kept = (h < (w * lit(4294967296.0)).cast(LongType)).cast(IntegerType)
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("source"), w.as("target_w"), kept.as("k"))
       .groupBy(col("source"), col("target_w"))
       .agg(count(lit(1)).as("n_total"),
@@ -59,7 +56,7 @@ object Round9Queries {
   //        (single-threaded) window. ────────────────────────────────────
   def p23_sequence_pack(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         Text.tokenCount(col("text")).cast(LongType).as("n_tok"))
     val cum = graft.operators.Rank.prefixSum(docs, "cum", col("n_tok"),
@@ -81,7 +78,7 @@ object Round9Queries {
   //        "the ALL row" and "a genuinely-NULL key" without the grouping
   //        indicator; identical SQL text runs in both engines. ──────────
   def q76_grouping_id(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
     s.sql(
       """SELECT o_orderstatus, o_orderpriority,
         |  CAST(GROUPING(o_orderstatus) AS INT) AS g_status,

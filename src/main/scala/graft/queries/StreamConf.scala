@@ -2,8 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared stream-shuffle scoping for the streaming twins (the same
-  * helper several older files carry privately).
+/** Stream-shuffle scoping for every streaming twin in the inventory.
   *
   * Stateful streaming aggregations allocate one state-store instance
   * per shuffle partition per micro-batch; the twins' stateful state is
@@ -13,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   * micro-batch. Scoping the conf to the stream's drain keeps batch
   * queries at the session width. At production scale the same knob is
   * sized to the stream's STATE cardinality, not the batch data width —
-  * that is the point being encoded here. */
+  * that is the point being encoded here. The results do not depend on
+  * the width; the oracle gate checks that. */
 object StreamConf {
   def withStreamShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"

@@ -1,6 +1,7 @@
 package graft.operators
 
 import java.nio.file.Files
+import scala.util.Using
 import graft.SparkSpec
 
 class QualitySpec extends SparkSpec {
@@ -71,5 +72,75 @@ class QualitySpec extends SparkSpec {
     val stale = Quality.verifyCsv(spark, p.toString,
       timestampCol = Some("updated"), maxLagMinutes = 10, clock = frozen)
     assert(!stale.status)
+  }
+
+  private val thirtyMinLater = new Clock {
+    val nowEpochMillis: Long = frozen.nowEpochMillis + 30 * 60000L
+  }
+
+  /** Stamp every file under `root` with the `frozen` instant, so the
+    * file-mtime freshness fallback reads exactly 30 minutes under
+    * `thirtyMinLater`. */
+  private def stampAll(root: java.nio.file.Path): Unit = {
+    val t = java.nio.file.attribute.FileTime.fromMillis(frozen.nowEpochMillis)
+    Using.resource(Files.walk(root))(_.filter(Files.isRegularFile(_))
+      .forEach(f => Files.setLastModifiedTime(f, t)))
+  }
+
+  test("verifyCsv: empty file fails with missing or empty") {
+    val p = tmpDir("vre").resolve("empty.csv")
+    Files.writeString(p, "")
+    val r = Quality.verifyCsv(spark, p.toString)
+    assert(!r.status && r.error.exists(_.startsWith("missing or empty:")))
+  }
+
+  test("verifyCsv: mtime freshness through the injected clock") {
+    val p = tmpDir("vrm").resolve("out.csv")
+    Files.writeString(p, "id,v\n1,a\n2,b\n")
+    stampAll(p)
+    val ok = Quality.verifyCsv(spark, p.toString, maxLagMinutes = 60,
+      clock = thirtyMinLater)
+    assert(ok.status && ok.freshOk && ok.lagMinutes.contains(30.0))
+    val stale = Quality.verifyCsv(spark, p.toString, maxLagMinutes = 10,
+      clock = thirtyMinLater)
+    assert(!stale.status && !stale.freshOk && stale.error.isEmpty)
+  }
+
+  test("verifyParquet: missing directory fails with missing:") {
+    val r = Quality.verifyParquet(spark, "/no/such/parquet_dir")
+    assert(!r.status && r.rows == 0 && r.lagMinutes.isEmpty)
+    assert(r.error.exists(_.startsWith("missing:")))
+  }
+
+  test("verifyParquet: rows + nonnull + newest part-file mtime freshness") {
+    val d = tmpDir("vrp").resolve("out")
+    Seq[(Int, Option[String])]((1, Some("a")), (2, Some("b")), (3, None))
+      .toDF("id", "v").coalesce(2).write.parquet(d.toString)
+    stampAll(d)
+    val ok = Quality.verifyParquet(spark, d.toString, minRows = 3,
+      nonnullCols = Seq("id"), maxLagMinutes = 60, clock = thirtyMinLater)
+    assert(ok.status && ok.rows == 3 && ok.nonnullOk && ok.freshOk)
+    assert(ok.lagMinutes.contains(30.0) && ok.error.isEmpty)
+    val tooFew = Quality.verifyParquet(spark, d.toString, minRows = 4,
+      clock = thirtyMinLater)
+    assert(!tooFew.status && tooFew.freshOk)
+    val nulls = Quality.verifyParquet(spark, d.toString,
+      nonnullCols = Seq("v"), clock = thirtyMinLater)
+    assert(!nulls.status && !nulls.nonnullOk)
+    val stale = Quality.verifyParquet(spark, d.toString, maxLagMinutes = 10,
+      clock = thirtyMinLater)
+    assert(!stale.status && !stale.freshOk && stale.lagMinutes.contains(30.0))
+  }
+
+  test("verifyParquet: timestamp-column freshness") {
+    val d = tmpDir("vrpt").resolve("out")
+    Seq((1, "2024-01-01T23:45:00"), (2, "2024-01-01T10:00:00"))
+      .toDF("id", "updated").write.parquet(d.toString)
+    val r = Quality.verifyParquet(spark, d.toString,
+      timestampCol = Some("updated"), maxLagMinutes = 30, clock = frozen)
+    assert(r.status && r.lagMinutes.contains(15.0))
+    val stale = Quality.verifyParquet(spark, d.toString,
+      timestampCol = Some("updated"), maxLagMinutes = 10, clock = frozen)
+    assert(!stale.status && !stale.freshOk)
   }
 }

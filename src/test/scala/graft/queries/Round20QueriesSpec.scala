@@ -37,7 +37,7 @@ class Round20QueriesSpec extends SparkSpec {
       round($"l_extendedprice" * 100).cast("long").as("c"))
     val direct = HistQuantile.histogram(cents, "c", 100000L)
     val artifact = spark.read.parquet(
-      graft.Scratch.dir(s"p27_hist_merged_${sf.replaceAll("[^A-Za-z0-9]", "_")}"))
+      graft.Scratch.dir("p27_hist_merged", sf))
     assert(artifact.exceptAll(direct).isEmpty &&
       direct.exceptAll(artifact).isEmpty,
       "write-back merge must equal the full-data histogram cell for cell")
