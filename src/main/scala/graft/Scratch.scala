@@ -19,8 +19,12 @@ object Scratch {
     root.resolve(name).toString
   }
 
+  /** `sfDir` as a name fragment: every character other than an ASCII
+    * letter or digit becomes `_`. Names scratch directories and the
+    * catalog tables built from one scale's data. */
+  def key(sfDir: String): String = sfDir.replaceAll("[^A-Za-z0-9]", "_")
+
   /** The scratch directory `name` for the tables under `sfDir`: one per
     * scale, so artifacts built at different scales never mix. */
-  def dir(name: String, sfDir: String): String =
-    dir(s"${name}_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
+  def dir(name: String, sfDir: String): String = dir(s"${name}_${key(sfDir)}")
 }

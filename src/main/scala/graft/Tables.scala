@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet testdata (TESTDATA.md).
   *
@@ -16,6 +17,19 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
+
+  /** Table `name` as a file stream: the streaming file source wants a
+    * directory, so it reads `sfDir` glob-filtered to the one table file,
+    * with the batch table's schema. */
+  def stream(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    stream(spark, sfDir, name, load(spark, sfDir, name).schema)
+
+  /** [[stream]] with a schema the caller already has (from its own batch
+    * load of the same table), so no second schema read runs. */
+  def stream(spark: SparkSession, sfDir: String, name: String,
+      schema: StructType): DataFrame =
+    spark.readStream.schema(schema)
+      .option("pathGlobFilter", s"$name.parquet").parquet(sfDir)
 
   /** Register every table as a temp view so `spark.sql` queries (and the
     * engine's transform steps) can reference them by name, mirroring the

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import graft.Tables
 import graft.functions.{RollingMinHash, Text}
 import graft.operators.{Dedup, Multimodal, PixelMediaCodec, Similarity}
-import StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 
 /** Training-data-pipeline operators (the build brief's first-class
   * extensions): dedup, similarity search, text analysis, multimodal
@@ -34,8 +34,7 @@ object ExtensionQueries extends QueryModule {
     * (union, self-join) get independent sources, as the file source
     * requires. */
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.readStream.schema(Tables.load(s, dir, "events").schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "events")
     raw.withColumn("ts_us", Tables.tsMicros(raw))
   }
 
@@ -227,16 +226,11 @@ object ExtensionQueries extends QueryModule {
           .cast(IntegerType)).as("sum_k"))
       .orderBy(col("event_type"))
 
-  private val streamRunSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** e1's hourly aggregation executed through Structured Streaming
     * (`readStream` over the same parquet, AvailableNow-style drain into a
     * memory sink) — hash-matching e1's oracle proves batch/stream parity
     * of the windowed aggregation. */
   def e4_stream_hourly(s: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_hourly_${streamRunSeq.incrementAndGet()}"
-    // the streaming file source wants a directory; glob-filter to the one
-    // table file inside the sf dir (eventsStream does both)
     val stream = eventsStream(s, dir)
     val agg = stream
       .groupBy(window(col("ts_us"), "1 hour"), col("event_type"))
@@ -244,12 +238,7 @@ object ExtensionQueries extends QueryModule {
         count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType)
           .as("total_value"))
-    withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+    drain(agg, "complete")
       .select(col("window.start").as("hour"), col("event_type"),
         col("n"), col("total_value"))
       .orderBy(col("hour"), col("event_type"))
@@ -265,18 +254,12 @@ object ExtensionQueries extends QueryModule {
     * through the hash gate, not asserted. */
   def e5_stream_sessionize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val name = s"stream_sess_${streamRunSeq.incrementAndGet()}"
     val stream = eventsStream(s, dir)
       .select(col("event_id"), col("ts_us").as("ts"),
         col("user_id"), col("event_type"), col("value"))
       .as[graft.streaming.Event]
-    withStreamShuffle(s, 4) {
-      val q = graft.streaming.EventStreams.sessionize(stream, gapMinutes = 30)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+    drain(graft.streaming.EventStreams.sessionize(stream, gapMinutes = 30),
+        "append")
       .select(col("user_id"), col("n_events"), col("sess_start"),
         col("sess_end"))
       .orderBy(col("user_id"), col("sess_start"))
@@ -287,24 +270,16 @@ object ExtensionQueries extends QueryModule {
     * aggregates revenue by nation. The oracle is the plain batch
     * join+aggregate, proving the join semantics carry to streams. */
   def e6_stream_static_join(s: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.load(s, dir, "events").schema
-    val name = s"stream_enrich_${streamRunSeq.incrementAndGet()}"
     val cust = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey"))
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val stream = Tables.stream(s, dir, "events")
       .join(cust, col("user_id") === col("c_custkey"))
       .groupBy(col("c_nationkey"))
       .agg(
         count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType)
           .as("total_value"))
-    withStreamShuffle(s, 4) {
-      val q = stream.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).orderBy(col("c_nationkey"))
+    drain(stream, "complete").orderBy(col("c_nationkey"))
   }
 
   /** Streaming exact dedup under a watermark: the stream is the events
@@ -313,16 +288,10 @@ object ExtensionQueries extends QueryModule {
     * must equal the batch aggregate over the *original* table — the
     * dedup-on-ingest contract, proven through the oracle. */
   def e7_stream_dedup(s: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_dedup_${streamRunSeq.incrementAndGet()}"
     def src = eventsStream(s, dir)
     val deduped = graft.streaming.EventStreams.dedupWithinWatermark(
       src.union(src), idCol = "event_id", tsCol = "ts_us")
-    withStreamShuffle(s, 4) {
-      val q = deduped.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+    drain(deduped, "append")
       .groupBy(col("event_type"))
       .agg(
         count(lit(1)).as("n"),
@@ -337,20 +306,12 @@ object ExtensionQueries extends QueryModule {
     * mode a live dashboard consumes. Unwindowed, so state is one row per
     * key — bounded by key cardinality, not stream length. */
   def e10_stream_complete_agg(s: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.load(s, dir, "events").schema
-    val name = s"stream_complete_${streamRunSeq.incrementAndGet()}"
-    val src = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val src = Tables.stream(s, dir, "events")
     val agged = src.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType)
           .as("total_value"))
-    withStreamShuffle(s, 4) {
-      val q = agged.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).orderBy(col("event_type"))
+    drain(agged, "complete").orderBy(col("event_type"))
   }
 
   /** Stream-stream time-interval join: purchase events join click events
@@ -359,7 +320,6 @@ object ExtensionQueries extends QueryModule {
     * streams. Inner matches emit as rows arrive; the oracle is the batch
     * interval join over the same table. */
   def e8_stream_interval_join(s: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_ivjoin_${streamRunSeq.incrementAndGet()}"
     def src = eventsStream(s, dir)
       .select(col("event_id"), col("ts_us"),
         col("user_id"), col("event_type"))
@@ -374,12 +334,7 @@ object ExtensionQueries extends QueryModule {
       col("user_id") === col("c_user") &&
         col("c_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
         col("c_ts") <= col("p_ts"))
-    withStreamShuffle(s, 4) {
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+    drain(joined, "append")
       .groupBy(col("p_id"))
       .agg(count(lit(1)).as("n_clicks"), max(col("c_ts")).as("last_click"))
       .orderBy(col("p_id"))
@@ -412,7 +367,6 @@ object ExtensionQueries extends QueryModule {
     * finite stream drains, so they never emit; the oracle reproduces
     * exactly that eviction rule. */
   def e9_stream_outer_interval_join(s: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_ivojoin_${streamRunSeq.incrementAndGet()}"
     def src = eventsStream(s, dir)
       .select(col("event_id"), col("ts_us"),
         col("user_id"), col("event_type"))
@@ -428,12 +382,7 @@ object ExtensionQueries extends QueryModule {
         col("c_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
         col("c_ts") <= col("p_ts"),
       "leftOuter")
-    withStreamShuffle(s, 4) {
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+    drain(joined, "append")
       .groupBy(col("p_id"))
       // count the *click* column: null-padded outer rows count as zero
       .agg(count(col("c_user")).as("n_clicks"),

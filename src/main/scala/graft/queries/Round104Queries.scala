@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 
 /** Hundred-fourth batch — crawl-frontier URL canonicalization, batch
   * and streaming:
@@ -29,8 +29,6 @@ import StreamConf.withStreamShuffle
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
 object Round104Queries extends QueryModule {
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** The two deterministic raw variants per document. */
   private def rawUrls(docs: DataFrame): DataFrame =
@@ -73,18 +71,11 @@ object Round104Queries extends QueryModule {
 
   def e34_stream_url_dedup(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
-    val name = s"stream_url_dedup_${streamSeq.incrementAndGet()}"
-    val stream = s.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = Tables.stream(s, dir, "documents", docs.schema)
     val deduped = canonical(rawUrls(stream))
       .select(col("doc_id"), col("canon"))
       .dropDuplicates("canon")
-    withStreamShuffle(s, 4) {
-      val q = deduped.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).agg(
+    drain(deduped, "append").agg(
       count(lit(1)).as("n_admitted"),
       countDistinct(col("canon")).as("n_distinct_canon"),
       countDistinct(col("doc_id")).as("n_docs"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
-import StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 
 /** Tenth batch — the tokenizer/decontamination tail of a training-data
   * pipeline:
@@ -60,11 +60,9 @@ object Round10Queries extends QueryModule {
   //        the batch answer. ───────────────────────────────────────────
   def e15_stream_decontaminate(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
-    val name = s"stream_decontaminate_${streamSeq.incrementAndGet()}"
     val evalSet =
       graft.operators.Decontaminate.evalGrams(docs, col("doc_id") % 10 === 0, 4)
-    val stream = s.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = Tables.stream(s, dir, "documents", docs.schema)
       .filter(col("doc_id") % 10 =!= 0)
       // per-batch repartition before the heavy per-row gram expansion
       // (round 14 — see e36's note)
@@ -72,15 +70,8 @@ object Round10Queries extends QueryModule {
     val hits = graft.operators.Decontaminate.hitsAgainst(stream, evalSet, 4)
       .groupBy(col("doc_id"), col("n_tok"), col("pos"))
       .agg(max(col("e")).as("e"))
-    withStreamShuffle(s, 4) {
-      val q = hits.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    graft.operators.Decontaminate.coverage(s.table(name))
+    graft.operators.Decontaminate.coverage(drain(hits, "complete"))
   }
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── t19: BPE apply — tokenize the whole corpus with t17's learned
   //        merges and report per-doc compression. The corpus never loops:

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
-import StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 
 /** Hundred-thirteenth batch — stable assignment, blob labeling, and
   * a streaming drift twin:
@@ -37,8 +37,6 @@ import StreamConf.withStreamShuffle
   * transform dialect is open, /root/reference/tools.py:58-65).
   */
 object Round113Queries extends QueryModule {
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── q161: Gale–Shapley stable matching on trade preferences ───────────
 
@@ -105,19 +103,11 @@ object Round113Queries extends QueryModule {
   // ── e35: streaming twin of the Wasserstein drift monitor ──────────────
 
   def e35_stream_wasserstein(s: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.load(s, dir, "events").schema
-    val name = s"stream_emd_${streamSeq.incrementAndGet()}"
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "events")
     val agg = raw.select(col("event_type").as("et"),
         hour(Tables.tsMicros(raw)).cast(LongType).as("hr"))
       .groupBy(col("et"), col("hr")).agg(count(lit(1)).as("c"))
-    withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    emdFromCounts(s, s.table(name).localCheckpoint(true))
+    emdFromCounts(s, drain(agg, "complete").localCheckpoint(true))
   }
 
   /** q159's normalization + EMD algebra over (et, hr, c) counts. */

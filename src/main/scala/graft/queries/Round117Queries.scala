@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.Tables
-import StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 
 /** Hundred-seventeenth batch — corpus governance: mixture auditing,
   * cross-source contamination, ingest-time quality gating, and a vision
@@ -49,8 +49,6 @@ import StreamConf.withStreamShuffle
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
 object Round117Queries extends QueryModule {
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** t12's order-independent entropy: log2(n) − Σ round(c·log2 c, 12)/n
     * over a (key, c) count table, rounded to 6 dp. */
@@ -128,10 +126,7 @@ object Round117Queries extends QueryModule {
         .stripMargin).as("top_bp"))
 
   def e36_stream_quality_gate(s: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.load(s, dir, "documents").schema
-    val name = s"stream_gate_${streamSeq.incrementAndGet()}"
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "documents")
       // per-batch repartition: the bigram profile is per-row-heavy and a
       // small file batch arrives as one partition (round 14; production
       // streams repartition before heavy stateless compute for the same
@@ -146,12 +141,7 @@ object Round117Queries extends QueryModule {
           .as("n_flag_top"),
         sum(when(col("dup_bp") >= 500 || col("top_bp") >= 600, 1L)
           .otherwise(0L)).as("n_gated"))
-    withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).orderBy(col("source"))
+    drain(agg, "complete").orderBy(col("source"))
   }
 
   // ── m40: image histogram entropy through the PGM codec ────────────────

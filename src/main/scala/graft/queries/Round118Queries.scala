@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.Tables
-import StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 
 /** Hundred-eighteenth batch — embedding-space monitoring and frozen-vocab
   * coverage:
@@ -40,8 +40,6 @@ import StreamConf.withStreamShuffle
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
 object Round118Queries extends QueryModule {
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── s26: centroid drift on the quantized lattice ──────────────────────
 
@@ -114,21 +112,14 @@ object Round118Queries extends QueryModule {
       .distinct()
       .withColumn("in_vocab", lit(1L))
       .localCheckpoint(true) // the frozen artifact the stream probes
-    val name = s"stream_oov_${streamSeq.incrementAndGet()}"
-    val raw = s.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "documents", docs.schema)
     val agg = raw.filter(col("source") === "src0")
       .select(col("doc_id"), explode(Text.tokens(col("text"))).as("w"))
       .join(vocab, Seq("w"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tok"),
         sum(when(col("in_vocab").isNull, 1L).otherwise(0L)).as("n_oov"))
-    withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+    drain(agg, "complete")
       .select(col("doc_id"), col("n_tok"), col("n_oov"),
         expr("n_oov * 10000 div n_tok").as("oov_bp"))
       .orderBy(col("doc_id"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
-import StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 
 /** Hundred-nineteenth batch — robust aggregation, term dispersion, and
   * streaming vector-space monitoring:
@@ -37,8 +37,6 @@ import StreamConf.withStreamShuffle
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
 object Round119Queries extends QueryModule {
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── q164: exact winsorized mean via the distinct-value CDF ────────────
 
@@ -98,22 +96,14 @@ object Round119Queries extends QueryModule {
   // ── e38: streaming centroid-drift monitor ─────────────────────────────
 
   def e38_stream_centroid_drift(s: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.load(s, dir, "embeddings").schema
-    val name = s"stream_drift_${streamSeq.incrementAndGet()}"
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "embeddings")
     val agg = raw
       .select((col("vec_id") % 2).as("grp"), posexplode(expr(
         "transform(embedding, x -> cast(round(cast(x as double) * 1000) as bigint))"))
         .as(Seq("i", "v")))
       .groupBy(col("grp"), col("i"))
       .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
-    withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    Round118Queries.driftFromSums(s.table(name).localCheckpoint(true))
+    Round118Queries.driftFromSums(drain(agg, "complete").localCheckpoint(true))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Mp3Exprs
-import graft.queries.StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 
 /** Hundred-twenty-eighth batch — the metadata-plane census moves onto
   * the stream:
@@ -26,15 +26,11 @@ import graft.queries.StreamConf.withStreamShuffle
   */
 object Round128Queries extends QueryModule {
 
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   // ── e39: per-source MP3 container census on the stream ────────────────
 
   def e39_stream_mp3_census(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
-    val name = s"stream_mp3_${streamSeq.incrementAndGet()}"
-    val raw = s.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "documents", docs.schema)
     val agg = raw
       .withColumn("c", Mp3Exprs.census(Mp3Exprs.encodeMp3FromId(col("doc_id"))))
       .groupBy(col("source"))
@@ -43,12 +39,7 @@ object Round128Queries extends QueryModule {
         sum(col("c.audio_bytes")).as("audio_bytes"),
         sum(col("c.duration_ms")).as("duration_ms"),
         max(col("c.sum_kbps")).as("max_kbps_sum"))
-    withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).orderBy(col("source"))
+    drain(agg, "complete").orderBy(col("source"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

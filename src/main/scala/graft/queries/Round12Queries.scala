@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
-import StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 
 /** Twelfth batch — corpus-assembly and gating tail:
   *
@@ -64,29 +64,20 @@ object Round12Queries extends QueryModule {
   def e16_stream_nb_gate(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.NaiveBayes
     val docs = Tables.load(s, dir, "documents")
-    val name = s"stream_nb_gate_${streamSeq.incrementAndGet()}"
     // materialize: the stream-static broadcast sides would otherwise
     // re-execute the whole fit DAG in every microbatch (round 14)
     val model = NaiveBayes.materialize(
       NaiveBayes.fit(docs, col("doc_id") % 2 === 0, "text", "lang"))
-    val stream = s.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = Tables.stream(s, dir, "documents", docs.schema)
       .filter(col("doc_id") % 2 =!= 0)
     val scored = NaiveBayes.scores(stream, model, "doc_id", "text")
-    withStreamShuffle(s, 4) {
-      val q = scored.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    NaiveBayes.argmax(s.table(name))
+    NaiveBayes.argmax(drain(scored, "complete"))
       .join(docs.select(col("doc_id").as("id"), col("lang")), "id")
       .select(col("id").as("doc_id"), col("pred").as("pred_lang"),
         col("lang"), (col("pred") === col("lang")).as("correct"),
         col("score"))
       .orderBy(col("doc_id"))
   }
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── p24: deterministic epoch shuffle — position = global row number
   //        under md5('epoch1:' || doc_id) (distributed two-level rank,

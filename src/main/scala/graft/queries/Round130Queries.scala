@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{H264Exprs, HtmlExprs, Utf8Exprs}
-import graft.queries.StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 
 /** Hundred-thirtieth batch — the web-ingest front door:
   *
@@ -42,8 +42,6 @@ import graft.queries.StreamConf.withStreamShuffle
   * vehicle).
   */
 object Round130Queries extends QueryModule {
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── t72: HTML → text extraction round trip ───────────────────────────
 
@@ -96,9 +94,7 @@ object Round130Queries extends QueryModule {
 
   def e40_stream_utf8_gate(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
-    val name = s"stream_utf8_${streamSeq.incrementAndGet()}"
-    val raw = s.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "documents", docs.schema)
     val agg = raw
       .select(col("source"),
         Utf8Exprs.utf8Audit(
@@ -109,12 +105,7 @@ object Round130Queries extends QueryModule {
         sum(col("a.n_errors")).as("n_errors"),
         sum(col("a.surrogate_attempts") + col("a.overlong_attempts"))
           .as("n_suspect"))
-    withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).orderBy(col("source"))
+    drain(agg, "complete").orderBy(col("source"))
   }
 
   // ── m52: H.264 Annex-B NAL census ────────────────────────────────────

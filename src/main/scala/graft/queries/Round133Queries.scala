@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.functions.{RobotsExprs, ZstdExprs}
-import graft.queries.StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 
 /** Hundred-thirty-third batch — the modern shard codec + the crawl
   * gate on the stream:
@@ -27,8 +27,6 @@ import graft.queries.StreamConf.withStreamShuffle
   * state).
   */
 object Round133Queries extends QueryModule {
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── p59: zstd JSONL shards with planted padding runs ─────────────────
 
@@ -87,9 +85,7 @@ object Round133Queries extends QueryModule {
 
   def e41_stream_robots_gate(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
-    val name = s"stream_robots_${streamSeq.incrementAndGet()}"
-    val raw = s.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "documents", docs.schema)
     val srcNum = regexp_extract(col("source"), "([0-9]+)$", 1).cast("int")
     val agg = raw
       .select(col("source"),
@@ -99,12 +95,7 @@ object Round133Queries extends QueryModule {
       .agg(count(lit(1)).as("n_urls"),
         sum(when(col("allowed"), 1L).otherwise(0L)).as("n_allowed"),
         sum(when(col("allowed"), 0L).otherwise(1L)).as("n_denied"))
-    withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).orderBy(col("source"))
+    drain(agg, "complete").orderBy(col("source"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{HtmlExprs, VttExprs}
-import graft.queries.StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 
 /** Hundred-thirty-fourth batch — captions + the HTML gate on the
   * stream:
@@ -25,8 +25,6 @@ import graft.queries.StreamConf.withStreamShuffle
   * parallel shape as the rest of the ingest front door.
   */
 object Round134Queries extends QueryModule {
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── t76: WebVTT cue census ───────────────────────────────────────────
 
@@ -49,9 +47,7 @@ object Round134Queries extends QueryModule {
 
   def e42_stream_html_extract(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
-    val name = s"stream_html_${streamSeq.incrementAndGet()}"
-    val raw = s.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "documents", docs.schema)
     val agg = raw
       .select(col("source"), col("text"),
         HtmlExprs.htmlExtract(
@@ -62,12 +58,7 @@ object Round134Queries extends QueryModule {
         sum(col("ex.n_links").cast("long")).as("n_links"),
         sum(when(translate(col("ex.body"), "\n", " ") === col("text"), 1L)
           .otherwise(0L)).as("n_roundtrip"))
-    withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).orderBy(col("source"))
+    drain(agg, "complete").orderBy(col("source"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{Gif89aExprs, MarkdownExprs}
-import graft.queries.StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 
 /** Hundred-thirty-fifth batch — the animation plane + markdown at
   * ingest:
@@ -20,8 +20,6 @@ import graft.queries.StreamConf.withStreamShuffle
   *    row-for-row batch parity.
   */
 object Round135Queries extends QueryModule {
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── m53: animated GIF frame/timeline census ──────────────────────────
 
@@ -46,9 +44,7 @@ object Round135Queries extends QueryModule {
 
   def e43_stream_markdown(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
-    val name = s"stream_md_${streamSeq.incrementAndGet()}"
-    val raw = s.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "documents", docs.schema)
     val agg = raw
       .select(col("source"), col("text"), col("doc_id"),
         MarkdownExprs.markdownExtract(
@@ -61,12 +57,7 @@ object Round135Queries extends QueryModule {
         sum(when(translate(col("ex.body"), "\n", " ") ===
           concat(lit("doc "), col("doc_id"), lit(" "), col("text")), 1L)
           .otherwise(0L)).as("n_roundtrip"))
-    withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).orderBy(col("source"))
+    drain(agg, "complete").orderBy(col("source"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

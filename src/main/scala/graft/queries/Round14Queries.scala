@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.streaming.Drain.drain
 
 /** Fourteenth batch — the full IVFADC composition and its streaming
   * ingest half:
@@ -65,7 +66,6 @@ object Round14Queries extends QueryModule {
   def e17_stream_pq_ingest(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Kmeans, Pq}
     val emb = Tables.load(s, dir, "embeddings")
-    val name = s"stream_pq_ingest_${streamSeq.incrementAndGet()}"
     val cbLocal = Pq.codebook(
         Kmeans.quantized(emb, "vec_id", "embedding"), m = 4, sub = 16,
         kCent = 4)
@@ -76,23 +76,15 @@ object Round14Queries extends QueryModule {
         rows.sortBy(_.getLong(0))
           .map(_.getSeq[Long](2).toArray).toArray
       }.toArray
-    val stream = s.readStream.schema(emb.schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+    val stream = Tables.stream(s, dir, "embeddings", emb.schema)
       .filter(col("vec_id") % 2 === 1)
     val codes = Pq.encodeMapped(
       Kmeans.quantized(stream, "vec_id", "embedding"), cbLocal,
       m = 4, sub = 16)
-    StreamConf.withStreamShuffle(s, 4) {
-      val query = codes.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try query.processAllAvailable() finally query.stop()
-    }
-    s.table(name)
+    drain(codes, "append")
       .select(col("id").as("vec_id"), col("j"), col("code"))
       .orderBy(col("vec_id"), col("j"))
   }
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s10_ivfadc"          -> (s10_ivfadc _),

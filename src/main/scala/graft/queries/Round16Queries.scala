@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
+import graft.streaming.Drain.drain
 import SketchSql.MStr
 
 /** Sixteenth batch — sketch-driven planning + weighted graph distance:
@@ -143,21 +144,11 @@ object Round16Queries extends QueryModule {
   //        oracle recomputes it from the batch table). ──────────────────
   def e18_stream_cms_ingest(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.CountMin
-    val name = s"stream_cms_ingest_${streamSeq.incrementAndGet()}"
-    val schema = Tables.load(s, dir, "lineitem").schema
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet").parquet(dir)
+    val stream = Tables.stream(s, dir, "lineitem")
     val cells = CountMin.sketch(stream.select(col("l_partkey").as("k")),
       CountMin.DefaultFamily, w = 256)
-    StreamConf.withStreamShuffle(s, 4) {
-      val query = cells.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try query.processAllAvailable() finally query.stop()
-    }
-    s.table(name).orderBy(col("i"), col("b"))
+    drain(cells, "complete").orderBy(col("i"), col("b"))
   }
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "a4_cms_join_size"        -> (a4_cms_join_size _),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.operators.{HistQuantile, Hll}
+import graft.streaming.Drain.drain
 
 /** Nineteenth batch — per-group cardinality sketching, mergeable
   * quantiles, and deterministic dataset splits:
@@ -82,18 +83,10 @@ object Round19Queries extends QueryModule {
   //        Hash-matching the batch-derived oracle proves the sketch's
   //        merge across micro-batches is lossless. ──────────────────────
   def e19_stream_hll_grouped(s: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_hll_${streamSeq.incrementAndGet()}"
-    val schema = Tables.load(s, dir, "events").schema
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val stream = Tables.stream(s, dir, "events")
       .select(col("event_type"), col("user_id"))
     val regs = Hll.registers(stream, Seq("event_type"), "user_id")
-    StreamConf.withStreamShuffle(s, 4) {
-      val query = regs.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try query.processAllAvailable() finally query.stop()
-    }
-    s.table(name).orderBy(col("event_type"), col("bkt"))
+    drain(regs, "complete").orderBy(col("event_type"), col("bkt"))
   }
 
   // ── p26: reproducible train/val/test assignment by md5(doc_id) prefix:
@@ -114,8 +107,6 @@ object Round19Queries extends QueryModule {
         min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
       .orderBy(col("split"))
   }
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "a8_hll_grouped"        -> (a8_hll_grouped _),

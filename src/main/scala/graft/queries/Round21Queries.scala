@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.operators.{CountMin, HistQuantile}
+import graft.streaming.Drain.drain
 
 /** Twenty-first batch — range sketching, streaming histogram ingest, and
   * position-based attribution:
@@ -59,18 +60,10 @@ object Round21Queries extends QueryModule {
   // ── e20: lineitem price cents histogram built through Structured
   //        Streaming (one stateful aggregation, complete mode). ─────────
   def e20_stream_hist_ingest(s: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_hist_${streamSeq.incrementAndGet()}"
-    val schema = Tables.load(s, dir, "lineitem").schema
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet").parquet(dir)
+    val stream = Tables.stream(s, dir, "lineitem")
       .select(round(col("l_extendedprice") * 100).cast(LongType).as("c"))
     val cells = HistQuantile.histogram(stream, "c", 100000L)
-    StreamConf.withStreamShuffle(s, 4) {
-      val query = cells.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try query.processAllAvailable() finally query.stop()
-    }
-    s.table(name).orderBy(col("bin"))
+    drain(cells, "complete").orderBy(col("bin"))
   }
 
   // ── q83: credits in basis points per position class. Middles split
@@ -119,10 +112,7 @@ object Round21Queries extends QueryModule {
   //        aggregation is the one stateful op (complete mode). Equal to
   //        the batch sketch cell for cell via the shared oracle CTEs. ───
   def e21_stream_dyadic_cms(s: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_dyadic_${streamSeq.incrementAndGet()}"
-    val schema = Tables.load(s, dir, "lineitem").schema
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "lineitem.parquet").parquet(dir)
+    val stream = Tables.stream(s, dir, "lineitem")
       // per-batch repartition before the per-row dyadic expansion
       // (round 14 — see e36's note)
       .repartition(s.sparkContext.defaultParallelism)
@@ -130,15 +120,8 @@ object Round21Queries extends QueryModule {
         "cast(datediff(cast(l_shipdate as date), date'1970-01-01') as bigint)")
         .as("k"))
     val cells = CountMin.dyadicSketch(stream, CountMin.DefaultFamily, CmW)
-    StreamConf.withStreamShuffle(s, 4) {
-      val query = cells.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try query.processAllAvailable() finally query.stop()
-    }
-    s.table(name).orderBy(col("i"), col("b"))
+    drain(cells, "complete").orderBy(col("i"), col("b"))
   }
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "a10_cms_range"            -> (a10_cms_range _),

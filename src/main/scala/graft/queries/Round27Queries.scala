@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.ImageExprs
 import graft.operators.HistQuantile
+import graft.streaming.Drain.drain
 import SketchSql.textByte
 
 /** Twenty-seventh batch — image TRANSFORMS over real decoded pixels,
@@ -60,13 +61,8 @@ object Round27Queries extends QueryModule {
     HistQuantile.histogram(lums, "c", 16L).orderBy(col("bin"))
   }
 
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   def e22_stream_image_stats(s: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_image_${streamSeq.incrementAndGet()}"
-    val schema = Tables.load(s, dir, "documents").schema
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = Tables.stream(s, dir, "documents")
       .select(col("source"), ImageExprs.imageStats(
         ImageExprs.encodeImageFromText(col("text"), "ppm", 8, 8)).as("st"))
     val agg = stream.groupBy(col("source")).agg(
@@ -74,12 +70,7 @@ object Round27Queries extends QueryModule {
       sum(col("st.sum_all")).as("px_total"),
       min(col("st.px_min")).as("px_min"),
       max(col("st.px_max")).as("px_max"))
-    StreamConf.withStreamShuffle(s, 4) {
-      val query = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try query.processAllAvailable() finally query.stop()
-    }
-    s.table(name).orderBy(col("source"))
+    drain(agg, "complete").orderBy(col("source"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 import graft.Tables
 import graft.functions.ImageExprs
+import graft.streaming.Drain.drain
 import SketchSql.textByte
 
 /** Thirtieth batch — the real decoder joins the dedup family:
@@ -69,18 +70,13 @@ object Round30Queries extends QueryModule {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Streaming twin of m9's media quarantine: continuous document
     * ingest, per-row decode-or-NULL (`try_image_stats` is stateless, so
     * poison pills can't wedge the stream), ONE stateful per-source
     * aggregation in complete mode. Shares m9's oracle — the batch and
     * streaming gates must agree count for count. */
   def e23_stream_media_gate(s: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_media_${streamSeq.incrementAndGet()}"
-    val schema = Tables.load(s, dir, "documents").schema
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = Tables.stream(s, dir, "documents")
       .withColumn("payload",
         ImageExprs.encodeImageFromText(col("text"), "pgm", 8, 8))
       .withColumn("payload",
@@ -92,12 +88,7 @@ object Round30Queries extends QueryModule {
       count(col("st")).as("n_decoded"),
       sum(when(col("st").isNull, 1L).otherwise(0L)).as("n_rejected"),
       sum(col("st.sum_all")).as("px_total"))
-    StreamConf.withStreamShuffle(s, 4) {
-      val query = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try query.processAllAvailable() finally query.stop()
-    }
-    s.table(name).orderBy(col("source"))
+    drain(agg, "complete").orderBy(col("source"))
   }
 
   /** Cross-modal quality gate — the composite keep/drop decision a

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
+import graft.streaming.Drain.drain
 
 /** Thirty-second batch — pipeline-maintenance and evaluation shapes:
   *
@@ -116,8 +117,6 @@ object Round32Queries extends QueryModule {
       .orderBy(col("query_id"))
   }
 
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   // ── e24: q87's trending scoreboard maintained by Structured Streaming —
   //        ONE stateful (event_type, k) aggregation in complete mode
   //        (state = the ~500-item scoreboard, not the events); the top-20
@@ -126,10 +125,7 @@ object Round32Queries extends QueryModule {
   //        incremental state equals the batch aggregate cell for cell —
   //        same oracle as q87. ──────────────────────────────────────────
   def e24_stream_decayed_trend(s: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_trend_${streamSeq.incrementAndGet()}"
-    val schema = Tables.load(s, dir, "events").schema
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "events")
     val agg = raw
       .select(col("event_type"),
         get_json_object(col("props"), "$.k").cast(IntegerType).as("k"),
@@ -138,12 +134,7 @@ object Round32Queries extends QueryModule {
       .withColumn("w", expr("shiftleft(CAST(1 AS BIGINT), 30 - age)"))
       .groupBy(col("event_type"), col("k"))
       .agg(count(lit(1)).as("n"), sum(col("w")).as("score"))
-    StreamConf.withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+    drain(agg, "complete")
       .withColumn("rank", row_number().over(
           Window.orderBy(col("score").desc, col("event_type"), col("k")))
         .cast(LongType))

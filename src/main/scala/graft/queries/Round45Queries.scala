@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
 import graft.functions.VideoExprs
+import graft.streaming.Drain.drain
 import SketchSql.textByte
 
 /** Forty-fifth batch — reader-layer resilience, streaming video signal,
@@ -63,16 +64,12 @@ object Round45Queries extends QueryModule {
       sum(when(col("_bad").isNull, col("p_partkey"))).as("key_checksum"))
   }
 
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
   private val W = 8; private val H = 8; private val NFrames = 4
 
   // ── e25: decode + MAFD per row, ONE stateful per-source aggregation
   //        in complete mode (state = |sources| rows). ───────────────────
   def e25_stream_scene_cuts(s: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_scenecut_${streamSeq.incrementAndGet()}"
-    val schema = Tables.load(s, dir, "documents").schema
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = Tables.stream(s, dir, "documents")
       .withColumn("deltas", VideoExprs.frameYDeltas(
         when(col("doc_id") % 2 === 0,
           VideoExprs.encodeY4mFromText(col("text"), W, H, NFrames,
@@ -87,12 +84,7 @@ object Round45Queries extends QueryModule {
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_mad")).as("total_mad"),
         sum(col("doc_cuts")).as("n_cut_pairs"))
-    StreamConf.withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).orderBy(col("source"))
+    drain(agg, "complete").orderBy(col("source"))
   }
 
   // ── q97: cohort = signup week per user (first signup event); LTV

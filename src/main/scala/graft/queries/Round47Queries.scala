@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.streaming.Drain.drain
 
 /** Forty-seventh batch — the bitmap index joins the streaming side:
   *
@@ -18,13 +19,8 @@ import graft.Tables
   */
 object Round47Queries extends QueryModule {
 
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   def e26_stream_activity_bitmaps(s: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_bitmap_${streamSeq.incrementAndGet()}"
-    val schema = Tables.load(s, dir, "events").schema
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "events")
     val agg = raw
       .withColumn("ts_us", Tables.tsMicros(raw))
       .select(col("user_id"),
@@ -32,14 +28,9 @@ object Round47Queries extends QueryModule {
           "datediff(to_date(ts_us), DATE '2024-01-01'))").as("bit"))
       .groupBy(col("user_id"))
       .agg(expr("bit_or(bit)").as("bm"))
-    StreamConf.withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
     val w1Mask = 127L
     val w4Mask = 127L << 21
-    s.table(name).agg(
+    drain(agg, "complete").agg(
       count(lit(1)).as("n_users"),
       sum(when(expr(s"bm & $w1Mask") =!= 0L, 1L).otherwise(0L))
         .as("n_week1"),

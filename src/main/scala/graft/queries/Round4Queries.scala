@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
-import StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 import DecimalSums.{dec, dsum}
 
 /** Fourth batch: the incremental-maintenance / storage-layout operators a
@@ -377,7 +377,7 @@ object Round4Queries extends QueryModule {
 
   private[queries] def p18Tables(s: SparkSession, dir: String): (String, String) = {
     val key = p18Layout.computeIfAbsent(dir, _ => {
-      val k = dir.replaceAll("[^A-Za-z0-9]", "_")
+      val k = graft.Scratch.key(dir)
       // project to the join/agg columns before the bucketed write: the
       // layout job shuffles and stores only what the downstream joins
       // read (a bucketed table is a materialized artifact — width is
@@ -487,8 +487,6 @@ object Round4Queries extends QueryModule {
       .orderBy(col("query_id"), col("rk"))
   }
 
-  private val streamRunSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   // ── e11: streaming data-quality monitor — the continuous twin of the
   //        batch DQ gate (p4): per-hour row volume, value totals and
   //        envelope, and out-of-range counts over the live stream. The
@@ -496,10 +494,7 @@ object Round4Queries extends QueryModule {
   //        exactly the reference's dq_check thresholds, evaluated per
   //        window instead of per batch. ───────────────────────────────────
   def e11_stream_dq(s: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.load(s, dir, "events").schema
-    val name = s"stream_dq_${streamRunSeq.incrementAndGet()}"
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "events")
     val stream = raw.withColumn("ts_us", graft.Tables.tsMicros(raw))
     val agg = stream
       .groupBy(window(col("ts_us"), "1 hour"))
@@ -509,12 +504,7 @@ object Round4Queries extends QueryModule {
         min(dec(col("value"), 6)).cast(DoubleType).as("min_value"),
         max(dec(col("value"), 6)).cast(DoubleType).as("max_value"),
         count(when(col("value") > 400, 1)).as("n_outliers"))
-    withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+    drain(agg, "complete")
       .select(col("window.start").as("hour"), col("n"),
         col("total_value"), col("min_value"), col("max_value"),
         col("n_outliers"))

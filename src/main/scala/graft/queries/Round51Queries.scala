@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
+import graft.streaming.Drain.drain
 
 /** Fifty-first batch — the bitmap window goes streaming; Pareto
   * concentration:
@@ -22,13 +23,8 @@ import graft.Tables
   */
 object Round51Queries extends QueryModule {
 
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   def e27_stream_sliding_distinct(s: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_sliding_bm_${streamSeq.incrementAndGet()}"
-    val schema = Tables.load(s, dir, "events").schema
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "events")
     val agg = raw
       .withColumn("ts_us", Tables.tsMicros(raw))
       .select(col("user_id"),
@@ -36,15 +32,10 @@ object Round51Queries extends QueryModule {
           "datediff(to_date(ts_us), DATE '2024-01-01'))").as("bit"))
       .groupBy(col("user_id"))
       .agg(expr("bit_or(bit)").as("bm"))
-    StreamConf.withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
     val days = s.range(6, 30).select(col("id").as("day_idx"),
       expr("shiftleft(CAST(127 AS BIGINT), CAST(id AS INT) - 6)")
         .as("mask"))
-    s.table(name).crossJoin(broadcast(days))
+    drain(agg, "complete").crossJoin(broadcast(days))
       .groupBy(col("day_idx"))
       .agg(sum(when(expr("bm & mask") =!= 0L, 1L).otherwise(0L))
         .as("n_distinct_7d"))

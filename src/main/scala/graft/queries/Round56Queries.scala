@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.Hll
+import graft.streaming.Drain.drain
 
 /** Fifty-sixth batch — streaming changepoints and sliding sketch serving:
   *
@@ -27,27 +28,18 @@ import graft.operators.Hll
   */
 object Round56Queries extends QueryModule {
 
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   def e28_stream_cusum(s: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_cusum_${streamSeq.incrementAndGet()}"
-    val schema = Tables.load(s, dir, "events").schema
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "events")
     val daily = raw
       .select(col("event_type"), to_date(Tables.tsMicros(raw)).as("day"))
       .groupBy(col("event_type"), col("day"))
       .agg(count(lit(1)).as("x"))
-    StreamConf.withStreamShuffle(s, 4) {
-      val q = daily.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
     // the memory-sink view is not a MultiInstanceRelation, so the
     // grid-vs-daily self-join inside cusumFromDaily would see conflicting
     // attribute ids; checkpointing the |types|×30 rollup makes it a
     // cloneable leaf (and the scan input is tiny by construction)
-    Round52Queries.cusumFromDaily(s, s.table(name).localCheckpoint(true))
+    Round52Queries.cusumFromDaily(s,
+      drain(daily, "complete").localCheckpoint(true))
   }
 
   def a16_hll_sliding(s: SparkSession, dir: String): DataFrame = {

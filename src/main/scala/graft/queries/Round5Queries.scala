@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
-import StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 import DecimalSums.{dec, dsum}
 
 /** Fifth batch: the product-analytics queries every event pipeline ends up
@@ -234,8 +234,6 @@ object Round5Queries extends QueryModule {
       .orderBy(col("version"))
   }
 
-  private val streamRunSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   // ── e12: built-in session_window streaming aggregation — the declarative
   //        twin of e5's flatMapGroupsWithState sessionizer. Sessions merge
   //        while each event lands strictly inside the previous event's
@@ -245,22 +243,14 @@ object Round5Queries extends QueryModule {
   //        rules, so the built-in operator's exact merge and eviction
   //        semantics are hash-proven against SQL, not assumed. ───────────
   def e12_stream_session_window(s: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.load(s, dir, "events").schema
-    val name = s"stream_sesswin_${streamRunSeq.incrementAndGet()}"
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "events")
     val stream = raw
       .select(col("user_id"), graft.Tables.tsMicros(raw).as("ts"))
       .withWatermark("ts", "30 minutes")
     val agg = stream
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"))
-    withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+    drain(agg, "append")
       .select(col("user_id"),
         col("session_window.start").as("sess_start"),
         col("session_window.end").as("sess_end"),

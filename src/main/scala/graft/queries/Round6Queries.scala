@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
-import StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 import DecimalSums.{dec, dsum}
 
 /** Sixth batch: graph analytics over a co-occurrence graph (exact triangle
@@ -157,28 +157,18 @@ object Round6Queries extends QueryModule {
   //        built-in slide semantics (epoch-aligned starts) are
   //        hash-proven. ──────────────────────────────────────────────────
   def e13_stream_sliding(s: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.load(s, dir, "events").schema
-    val name = s"stream_sliding_${streamSeq.incrementAndGet()}"
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "events")
     val stream = raw.withColumn("ts_us", graft.Tables.tsMicros(raw))
     val agg = stream
       .groupBy(window(col("ts_us"), "1 hour", "15 minutes"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType)
           .as("total_value"))
-    withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+    drain(agg, "complete")
       .select(col("window.start").as("win_start"), col("n"),
         col("total_value"))
       .orderBy(col("win_start"))
   }
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── t13: Zipf's-law fit — least-squares slope/intercept of
   //        log(frequency) on log(rank) over the corpus vocabulary

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.streaming.Drain.drain
 
 /** Seventy-seventh batch — a streaming reshaping twin, interval
   * concurrency, and the KMV difference estimator:
@@ -35,28 +36,18 @@ import graft.Tables
   */
 object Round77Queries extends QueryModule {
 
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   private val EventTypes = Seq("click", "error", "purchase", "signup", "view")
 
   // ── e29: streaming ingest → day×type rollup → batch pivot ─────────────
 
   def e29_stream_pivot(s: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_pivot_${streamSeq.incrementAndGet()}"
-    val schema = Tables.load(s, dir, "events").schema
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "events")
     val agg = raw
       .withColumn("ts_us", Tables.tsMicros(raw))
       .groupBy(date_format(col("ts_us"), "yyyy-MM-dd").as("day"),
         col("event_type"))
       .agg(count(lit(1)).as("n"))
-    StreamConf.withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name).localCheckpoint(true)
+    drain(agg, "complete").localCheckpoint(true)
       .groupBy(col("day"))
       .pivot("event_type", EventTypes)
       .agg(sum(col("n")))

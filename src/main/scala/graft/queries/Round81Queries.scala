@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.Tables
+import graft.streaming.Drain.drain
 
 /** Eighty-first batch — physical layout evolution, a randomness gate,
   * and the χ² monitor's streaming twin:
@@ -35,8 +36,6 @@ import graft.Tables
   * (the reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
 object Round81Queries extends QueryModule {
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── p41: day → month partition evolution with pruning proof ───────────
 
@@ -124,10 +123,7 @@ object Round81Queries extends QueryModule {
   // ── e30: streaming χ² — rollup on the stream, test at read time ───────
 
   def e30_stream_chi2(s: SparkSession, dir: String): DataFrame = {
-    val name = s"stream_chi2_${streamSeq.incrementAndGet()}"
-    val schema = Tables.load(s, dir, "events").schema
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val raw = Tables.stream(s, dir, "events")
     val agg = raw
       .withColumn("ts_us", Tables.tsMicros(raw))
       .groupBy(
@@ -135,12 +131,7 @@ object Round81Queries extends QueryModule {
           .cast(LongType).as("dow"),
         col("event_type").as("et"))
       .agg(count(lit(1)).as("obs"))
-    StreamConf.withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val o = s.table(name).localCheckpoint(true)
+    val o = drain(agg, "complete").localCheckpoint(true)
     val rt = o.groupBy(col("dow")).agg(sum(col("obs")).as("rtot"))
     val ct = o.groupBy(col("et")).agg(sum(col("obs")).as("ctot"))
     val n = o.agg(sum(col("obs")).as("n"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
 import graft.operators.Dedup
-import StreamConf.withStreamShuffle
+import graft.streaming.Drain
 import DecimalSums.{dec, dsum}
 
 /** Eighth batch — the persisted-artifact paths (the "at 100 TB you'd
@@ -152,13 +152,10 @@ object Round8Queries extends QueryModule {
 
   private def streamIngestDedup(s: SparkSession, dir: String,
       deltaFilter: Column): DataFrame = {
-    val schema = Tables.load(s, dir, "documents").schema
-    val outDir = graft.Scratch.dir(
-      s"e14_verdicts_${streamSeq.incrementAndGet()}")
+    val outDir = graft.Scratch.dir(Drain.freshName("e14_verdicts"))
     val corpusPostings =
       Dedup.postingList(s.read.parquet(corpusSetsDir(s, dir)))
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = Tables.stream(s, dir, "documents")
       .filter(deltaFilter)
       // per-batch repartition before the heavy per-row shingle pass
       // (round 14 — see e36's note)
@@ -169,24 +166,20 @@ object Round8Queries extends QueryModule {
       .join(corpusPostings.as("b"), col("a.sh") === col("b.sh"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.n_sh").as("na"), col("b.n_sh").as("nb"))
-    withStreamShuffle(s, 4) {
-      val q = joined.writeStream.outputMode("append")
-        .foreachBatch { (mb: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], _: Long) =>
-          val inter = mb.groupBy(col("id_a"), col("id_b"),
-              col("na"), col("nb"))
-            .agg(count(lit(1)).as("inter"))
-          val jac = col("inter").cast(DoubleType) /
-            (col("na") + col("nb") - col("inter")).cast(DoubleType)
-          inter.filter(jac >= 0.5)
-            .groupBy(col("id_a").as("doc_id"))
-            .agg(min(col("id_b")).as("dup_of"))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    Drain.run(joined)(_.outputMode("append")
+      .foreachBatch { (mb: org.apache.spark.sql.Dataset[
+          org.apache.spark.sql.Row], _: Long) =>
+        val inter = mb.groupBy(col("id_a"), col("id_b"),
+            col("na"), col("nb"))
+          .agg(count(lit(1)).as("inter"))
+        val jac = col("inter").cast(DoubleType) /
+          (col("na") + col("nb") - col("inter")).cast(DoubleType)
+        inter.filter(jac >= 0.5)
+          .groupBy(col("id_a").as("doc_id"))
+          .agg(min(col("id_b")).as("dup_of"))
+          .write.mode("append").parquet(outDir)
+        ()
+      })
     // read the landed verdicts with an explicit schema: a batch with no
     // candidate pairs writes no part files
     val best = s.read.schema("doc_id BIGINT, dup_of BIGINT").parquet(outDir)
@@ -195,8 +188,6 @@ object Round8Queries extends QueryModule {
       .select(col("doc_id"), col("dup_of"), col("dup_of").isNull.as("kept"))
       .orderBy(col("doc_id"))
   }
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   def d14_incremental_dedup(s: SparkSession, dir: String): DataFrame = {
     val corpusSets = s.read.parquet(corpusSetsDir(s, dir))

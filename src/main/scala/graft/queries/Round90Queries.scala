@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 
 /** Ninetieth batch — content-aware text segmentation, temporal network
   * motifs, and a streaming model-monitoring twin:
@@ -35,8 +35,6 @@ import StreamConf.withStreamShuffle
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
 object Round90Queries extends QueryModule {
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── t51: TextTiling adjacent-window cosine segmentation ───────────────
 
@@ -112,9 +110,7 @@ object Round90Queries extends QueryModule {
 
   def e31_stream_calibration(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
-    val name = s"stream_calibration_${streamSeq.incrementAndGet()}"
-    val stream = s.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = Tables.stream(s, dir, "documents", docs.schema)
     val binned = stream.select(col("doc_id"),
         (col("doc_id") * 2654435761L % 1000L).as("sm"))
       .withColumn("label",
@@ -125,12 +121,7 @@ object Round90Queries extends QueryModule {
         sum(col("label")).as("sum_label"),
         sum((col("sm") - lit(1000L) * col("label")) *
           (col("sm") - lit(1000L) * col("label"))).as("sq"))
-    withStreamShuffle(s, 4) {
-      val q = binned.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val bins = s.table(name)
+    val bins = drain(binned, "complete")
     val tot = bins.agg(sum(col("n")).as("nn"),
       sum(col("sq")).as("brier_num"),
       sum(abs(lit(1000L) * col("sum_label") - col("sum_sm"))).as("ece_num"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{ImageExprs, WisDpExpr}
-import StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 
 /** Ninety-fifth batch — per-key dynamic programming as a native
   * expression, motion estimation, and a streaming keyness twin:
@@ -38,8 +38,6 @@ import StreamConf.withStreamShuffle
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
 object Round95Queries extends QueryModule {
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── q137: weighted interval scheduling via the native DP expression ───
 
@@ -103,9 +101,7 @@ object Round95Queries extends QueryModule {
   def e32_stream_keyness(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
     val docs = Tables.load(s, dir, "documents")
-    val name = s"stream_keyness_${streamSeq.incrementAndGet()}"
-    val stream = s.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = Tables.stream(s, dir, "documents", docs.schema)
       // per-batch repartition before the heavy per-row tokenize
       // (round 14 — see e36's note)
       .repartition(s.sparkContext.defaultParallelism)
@@ -115,12 +111,7 @@ object Round95Queries extends QueryModule {
       .groupBy(col("w"))
       .agg(sum(when(col("corp") === "a", 1L).otherwise(0L)).as("a"),
         sum(when(col("corp") === "b", 1L).otherwise(0L)).as("b"))
-    withStreamShuffle(s, 4) {
-      val q = counts.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val cnt = s.table(name)
+    val cnt = drain(counts, "complete")
     val tot = cnt.agg(sum(col("a")).as("ta"), sum(col("b")).as("tb"))
     cnt.crossJoin(broadcast(tot))
       .select(col("w").as("term"), col("a"), col("b"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import StreamConf.withStreamShuffle
+import graft.streaming.Drain.drain
 
 /** Ninety-eighth batch — FIFO queue semantics in set algebra, alpha
   * compositing, and a streaming skyline twin:
@@ -36,8 +36,6 @@ import StreamConf.withStreamShuffle
   * reference's transform dialect is open, /root/reference/tools.py:58-65).
   */
 object Round98Queries extends QueryModule {
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ── q141: FIFO allocation via cumulative-interval overlap ─────────────
 
@@ -112,19 +110,12 @@ object Round98Queries extends QueryModule {
 
   def e33_stream_skyline(s: SparkSession, dir: String): DataFrame = {
     val orders = Tables.load(s, dir, "orders")
-    val name = s"stream_skyline_${streamSeq.incrementAndGet()}"
-    val stream = s.readStream.schema(orders.schema)
-      .option("pathGlobFilter", "orders.parquet").parquet(dir)
+    val stream = Tables.stream(s, dir, "orders", orders.schema)
     val agg = stream.groupBy(col("o_custkey").as("c"))
       .agg(count(lit(1)).as("n_orders"),
         sum(expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
           .as("spend_cents"))
-    withStreamShuffle(s, 4) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table(name)
+    drain(agg, "complete")
       .select(col("c"), col("n_orders"),
         expr("spend_cents div n_orders").as("avg_cents"))
       .withColumn("best_above",

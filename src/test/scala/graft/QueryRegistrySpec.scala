@@ -11,17 +11,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * by two modules lets the later one win; a private helper copy drifts
   * from its twins. */
 class QueryRegistrySpec extends AnyFunSuite {
-  private val root = Paths.get("src/main/scala/graft/queries")
-
-  /** (file name, source) of every file under graft/queries. */
-  private lazy val sources: Seq[(String, String)] = {
+  /** (file name, source) of every Scala file under `dir`. */
+  private def scalaFiles(dir: String): Seq[(String, String)] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"not found: ${root.toAbsolutePath}")
-    Using.resource(Files.list(root)) { paths =>
+    Using.resource(Files.walk(root)) { paths =>
       paths.iterator().asScala.filter(_.toString.endsWith(".scala"))
         .map(p => p.getFileName.toString -> Files.readString(p))
         .toSeq.sortBy(_._1)
     }
   }
+
+  private lazy val sources = scalaFiles("src/main/scala/graft/queries")
 
   test("every query module under graft/queries is registered exactly once") {
     val obj = """(?m)^object (\w+)""".r
@@ -48,6 +49,22 @@ class QueryRegistrySpec extends AnyFunSuite {
     for (copy <- Seq("private def t(", "def sanitize", "private val MStr",
         "private def v("))
       assert(declaring(copy) === Nil, s"private copies of `$copy`")
-    assert(declaring("def withStreamShuffle") === Seq("StreamConf.scala"))
+  }
+
+  test("streaming twins drain and read files through the shared helpers") {
+    // graft.streaming.Drain runs every stream, Tables.stream opens every
+    // file stream
+    val copies = Seq("withStreamShuffle", "format(\"memory\")",
+        "processAllAvailable", ".writeStream", ".readStream", "AtomicInteger")
+      .map(c => c -> sources.collect { case (f, src) if src.contains(c) => f })
+      .filter(_._2.nonEmpty)
+    assert(copies === Nil, "own copies of the streaming plumbing")
+  }
+
+  test("one copy of the scale-dir name rule") {
+    val copies = scalaFiles("src/main/scala").collect {
+      case (f, src) if src.contains("[^A-Za-z0-9]") => f
+    }
+    assert(copies === Seq("Scratch.scala"))
   }
 }
