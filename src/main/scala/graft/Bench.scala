@@ -56,8 +56,13 @@ object Bench {
     // per deployment, not per query — prebuild them here and surface the
     // cost as "artifact_build_sec" in the detail line, so the s7/d14
     // entries measure serving and the build is reported, not hidden.
+    // A filtered run skips it: each artifact reader builds on first use,
+    // and the min-of-two below keeps its serving time as long as that
+    // first pass, build included, stays under `rerunCapSec` (at sf0.1 the
+    // slowest, d16, took 5.9 s).
     val artifactBuildSec =
-      graft.queries.Round8Queries.prebuildArtifacts(spark, sfDir)
+      if (nameFilter.isDefined) 0.0
+      else graft.queries.Round8Queries.prebuildArtifacts(spark, sfDir)
     // Per-query timing policy (the "mode" field in the emitted JSON):
     // every query is timed once, then re-timed and the min reported unless
     // the first pass exceeded `rerunCapSec`. Short queries are

@@ -1,6 +1,13 @@
 package graft
 
+import scala.util.Try
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet testdata (TESTDATA.md).
@@ -15,12 +22,32 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Table `name`, read with the schema of its one file's footer. The
+    * footer is read on the driver and converted by Spark's own converter
+    * under the session conf (so `nanosAsLong` still decides `events.ts`);
+    * Spark's inference would run a job for the same read. A path that is
+    * not a file (missing, or a directory) goes to Spark's own read, which
+    * raises its path error or infers the directory. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val file = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    Try(file.getFileSystem(conf).getFileStatus(file)).filter(_.isFile)
+      .toOption match {
+      case None => spark.read.parquet(path)
+      case Some(status) =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(status, conf), SKIP_ROW_GROUPS)
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          new Footer(status.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).parquet(path)
+    }
+  }
 
   /** Table `name` as a file stream: the streaming file source wants a
     * directory, so it reads `sfDir` glob-filtered to the one table file,
-    * with the batch table's schema. */
+    * with the batch table's schema (its footer's, read on the driver). */
   def stream(spark: SparkSession, sfDir: String, name: String): DataFrame =
     stream(spark, sfDir, name, load(spark, sfDir, name).schema)
 

@@ -165,21 +165,20 @@ class Engine(
           load.mode, load.keyCols))
     }
 
-    // 5) Verify (reference templates.py:142-166)
+    // 5) Verify (reference templates.py:142-166). A file is read back
+    // with the schema the sink wrote, so no job runs to infer it.
     val vf = plan.verify
+    val minRows = vf.minRows.getOrElse(plan.checks.minRows)
+    val nonnullCols = vf.nonnullCols.getOrElse(plan.checks.nonnullCols)
     val ver = load.to match {
       case "csv" =>
-        Quality.verifyCsv(spark, load.filePath.get,
-          minRows = vf.minRows.getOrElse(plan.checks.minRows),
-          nonnullCols = vf.nonnullCols.getOrElse(plan.checks.nonnullCols),
-          timestampCol = vf.tsCol, maxLagMinutes = vf.maxLagMinutes,
-          clock = clock)
+        Quality.verifyCsv(spark, load.filePath.get, minRows, nonnullCols,
+          vf.tsCol, vf.maxLagMinutes, clock = clock,
+          schema = Some(transformed.schema),
+          header = load.includeHeader)
       case "parquet" =>
-        Quality.verifyParquet(spark, load.filePath.get,
-          minRows = vf.minRows.getOrElse(plan.checks.minRows),
-          nonnullCols = vf.nonnullCols.getOrElse(plan.checks.nonnullCols),
-          timestampCol = vf.tsCol, maxLagMinutes = vf.maxLagMinutes,
-          clock = clock)
+        Quality.verifyParquet(spark, load.filePath.get, transformed.schema,
+          minRows, nonnullCols, vf.tsCol, vf.maxLagMinutes, clock)
       case _ =>
         Quality.verifyTable(spark, load.connStr.get, load.table.get,
           tsCol = vf.tsCol, maxLagMinutes = vf.maxLagMinutes, clock = clock)

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.util.Using
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, TimestampType}
+import org.apache.spark.sql.types.{DateType, StructType, TimestampType}
 
 /** Injected clock — freshness math is wall-clock-dependent in the reference
   * (`utcnow`, tools.py:116, 161); injecting it makes the gates testable
@@ -94,11 +94,15 @@ object Quality {
   /** Post-load CSV audit (reference tools.py:170-264, ops.py:49-109):
     * re-read the sink, same single-pass aggregation; freshness from max
     * timestamp or file-mtime fallback when no timestamp column is given
-    * (tools.py:245-253). */
+    * (tools.py:245-253). The engine passes the `schema` it wrote and
+    * whether it wrote a `header`, so the read-back infers nothing; with
+    * no schema the columns are inferred, as the reference's pandas read
+    * does. */
   def verifyCsv(spark: SparkSession, path: String, minRows: Long = 1,
       nonnullCols: Seq[String] = Nil, timestampCol: Option[String] = None,
       maxLagMinutes: Long = 180, delimiter: String = ",",
-      encoding: String = "", clock: Clock = SystemClock): VerifyResult =
+      encoding: String = "", clock: Clock = SystemClock,
+      schema: Option[StructType] = None, header: Boolean = true): VerifyResult =
     verifyFile(path, "missing or empty",
       absent = p => !Files.exists(p) || Files.size(p) == 0,
       // read back the way CsvSink wrote it: the writer quotes a value
@@ -106,18 +110,22 @@ object Quality {
       // embedded quotes with its default `\`
       read = graft.sources.Sources.loadCsv(spark, path,
         maxBytes = Long.MaxValue, delimiter = delimiter, encoding = encoding,
-        options = Map("multiLine" -> "true")),
+        options = Map("multiLine" -> "true", "header" -> header.toString),
+        schema = schema),
       mtimeMillis = Files.getLastModifiedTime(_).toMillis,
       minRows, nonnullCols, timestampCol, maxLagMinutes, clock)
 
   /** Post-load audit for the parquet directory sink (engine extension):
     * same single-pass aggregation over the re-read directory; freshness
-    * from the newest part-file mtime when no timestamp column is given. */
-  def verifyParquet(spark: SparkSession, dir: String, minRows: Long = 1,
-      nonnullCols: Seq[String] = Nil, timestampCol: Option[String] = None,
-      maxLagMinutes: Long = 180, clock: Clock = SystemClock): VerifyResult =
+    * from the newest part-file mtime when no timestamp column is given.
+    * The directory is read with the `schema` it was written with
+    * (partition columns included), so no footer is read to learn it. */
+  def verifyParquet(spark: SparkSession, dir: String, schema: StructType,
+      minRows: Long = 1, nonnullCols: Seq[String] = Nil,
+      timestampCol: Option[String] = None, maxLagMinutes: Long = 180,
+      clock: Clock = SystemClock): VerifyResult =
     verifyFile(dir, "missing", absent = !Files.exists(_),
-      read = spark.read.parquet(dir),
+      read = spark.read.schema(schema).parquet(dir),
       mtimeMillis = p => Using.resource(Files.walk(p))(_
         .filter(Files.isRegularFile(_))
         .mapToLong(f => Files.getLastModifiedTime(f).toMillis)

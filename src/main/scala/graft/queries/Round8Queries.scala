@@ -296,11 +296,12 @@ object Round8Queries extends QueryModule {
   }
 
   /** Build the persisted artifacts (IVF index, corpus shingle sets) ahead
-    * of time — idempotent per process. The bench calls this in its warmup
-    * and reports the elapsed build time as its own JSON field: artifacts
-    * build once per deployment, so charging the build to whichever query
-    * happens to run first would measure neither the build (truncated by
-    * min-of-two) nor the serving cost (inflated). Returns seconds. */
+    * of time — idempotent per process. A full bench run calls this in its
+    * warmup and reports the elapsed build time as its own JSON field:
+    * artifacts build once per deployment, so charging the build to
+    * whichever query happens to run first would measure neither the build
+    * (truncated by min-of-two) nor the serving cost (inflated). Returns
+    * seconds. */
   def prebuildArtifacts(s: SparkSession, dir: String): Double = {
     val t0 = System.nanoTime()
     ivfIndexDir(s, dir)

@@ -18,11 +18,14 @@ object Sources {
     * fixture's sentinel — FIXTURES.md §A1). Pre-flight size guard mirrors
     * the reference's `max_bytes` check (ops.py:22-24); at cluster scale
     * replace with quota enforcement at the catalog layer, not per-file
-    * stat. `options` pass through to the Spark CSV reader last. */
+    * stat. `options` pass through to the Spark CSV reader last. A given
+    * `schema` replaces the inference: the read then runs no job of its
+    * own. */
   def loadCsv(spark: SparkSession, path: String,
       maxBytes: Long = 1073741824L, delimiter: String = ",",
       encoding: String = "",
-      options: Map[String, String] = Map.empty): DataFrame = {
+      options: Map[String, String] = Map.empty,
+      schema: Option[StructType] = None): DataFrame = {
     val p = Paths.get(path)
     if (!Files.exists(p)) throw new java.io.FileNotFoundException(path)
     val size = Files.size(p)
@@ -34,6 +37,7 @@ object Sources {
       .option("nullValue", "NA")
       .option("sep", delimiter)
     if (encoding.nonEmpty) r = r.option("encoding", encoding)
+    schema.foreach(r.schema)
     r.options(options).csv(path)
   }
 

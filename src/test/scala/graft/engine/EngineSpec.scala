@@ -408,6 +408,23 @@ class EngineSpec extends SparkSpec {
     }
   }
 
+  Seq("single file" -> "to: csv, include_header: false",
+      "partition_by" -> "to: csv, include_header: false, partition_by: [region]")
+    .foreach { case (what, load) =>
+      test(s"a headerless csv load passes verify ($what)") {
+        val dir = tmpDir("noheader")
+        val in = regionInput(dir)
+        val out = dir.resolve("out").toString
+        val alerter = new RecordingAlerter
+        val res = new Engine(spark, alerter).run(regionPlan(in, out, load,
+          minRows = 3, checks = ", nonnull_cols: [region, sku, price]"))
+        assert(res.status == "ok", res.toJson)
+        assert(res.verify.get.rows == res.dq.get.rows && res.dq.get.rows == 3,
+          res.toJson)
+        assert(res.verify.get.nonnullOk && alerter.sent.isEmpty)
+      }
+    }
+
   test("a transform with zero rows fails the gate with rows=0") {
     val dir = tmpDir("empty")
     val in = regionInput(dir)

@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.file.Files
 import scala.util.Using
 import graft.SparkSpec
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 class QualitySpec extends SparkSpec {
   import spark.implicits._
@@ -107,39 +108,44 @@ class QualitySpec extends SparkSpec {
   }
 
   test("verifyParquet: missing directory fails with missing:") {
-    val r = Quality.verifyParquet(spark, "/no/such/parquet_dir")
+    val r = Quality.verifyParquet(spark, "/no/such/parquet_dir",
+      new StructType().add("id", IntegerType))
     assert(!r.status && r.rows == 0 && r.lagMinutes.isEmpty)
     assert(r.error.exists(_.startsWith("missing:")))
   }
 
   test("verifyParquet: rows + nonnull + newest part-file mtime freshness") {
     val d = tmpDir("vrp").resolve("out")
-    Seq[(Int, Option[String])]((1, Some("a")), (2, Some("b")), (3, None))
-      .toDF("id", "v").coalesce(2).write.parquet(d.toString)
+    val df = Seq[(Int, Option[String])]((1, Some("a")), (2, Some("b")), (3, None))
+      .toDF("id", "v")
+    df.coalesce(2).write.parquet(d.toString)
+    val schema = df.schema
     stampAll(d)
-    val ok = Quality.verifyParquet(spark, d.toString, minRows = 3,
+    val ok = Quality.verifyParquet(spark, d.toString, schema, minRows = 3,
       nonnullCols = Seq("id"), maxLagMinutes = 60, clock = thirtyMinLater)
     assert(ok.status && ok.rows == 3 && ok.nonnullOk && ok.freshOk)
     assert(ok.lagMinutes.contains(30.0) && ok.error.isEmpty)
-    val tooFew = Quality.verifyParquet(spark, d.toString, minRows = 4,
+    val tooFew = Quality.verifyParquet(spark, d.toString, schema, minRows = 4,
       clock = thirtyMinLater)
     assert(!tooFew.status && tooFew.freshOk)
-    val nulls = Quality.verifyParquet(spark, d.toString,
+    val nulls = Quality.verifyParquet(spark, d.toString, schema,
       nonnullCols = Seq("v"), clock = thirtyMinLater)
     assert(!nulls.status && !nulls.nonnullOk)
-    val stale = Quality.verifyParquet(spark, d.toString, maxLagMinutes = 10,
-      clock = thirtyMinLater)
+    val stale = Quality.verifyParquet(spark, d.toString, schema,
+      maxLagMinutes = 10, clock = thirtyMinLater)
     assert(!stale.status && !stale.freshOk && stale.lagMinutes.contains(30.0))
   }
 
   test("verifyParquet: timestamp-column freshness") {
     val d = tmpDir("vrpt").resolve("out")
-    Seq((1, "2024-01-01T23:45:00"), (2, "2024-01-01T10:00:00"))
-      .toDF("id", "updated").write.parquet(d.toString)
-    val r = Quality.verifyParquet(spark, d.toString,
+    val df = Seq((1, "2024-01-01T23:45:00"), (2, "2024-01-01T10:00:00"))
+      .toDF("id", "updated")
+    df.write.parquet(d.toString)
+    val schema = df.schema
+    val r = Quality.verifyParquet(spark, d.toString, schema,
       timestampCol = Some("updated"), maxLagMinutes = 30, clock = frozen)
     assert(r.status && r.lagMinutes.contains(15.0))
-    val stale = Quality.verifyParquet(spark, d.toString,
+    val stale = Quality.verifyParquet(spark, d.toString, schema,
       timestampCol = Some("updated"), maxLagMinutes = 10, clock = frozen)
     assert(!stale.status && !stale.freshOk)
   }
