@@ -3,9 +3,6 @@ package graft.functions
 import java.nio.charset.StandardCharsets.US_ASCII
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -241,42 +238,15 @@ object AdpcmCodec {
   }
 }
 
-/** Text → IMA-ADPCM WAV payload ([[AdpcmCodec.encodeFromText]]);
-  * codegen'd. */
-case class EncodeAdpcmFromText(child: Expression, sampleRate: Int, n: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "encode_adpcm_from_text"
-  override protected def nullSafeEval(input: Any): Any =
-    AdpcmCodec.encodeFromText(input.asInstanceOf[UTF8String], sampleRate, n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.AdpcmCodec.encodeFromText($c, $sampleRate, $n)")
-  override protected def withNewChildInternal(c: Expression): EncodeAdpcmFromText =
-    copy(child = c)
-}
-
-/** IMA-ADPCM WAV payload → decoded PCM samples as array<int>. */
-case class AdpcmDecodeSamples(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "decode_adpcm_samples"
-  override protected def nullSafeEval(input: Any): Any =
-    AdpcmCodec.decodeSamplesArray(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.AdpcmCodec.decodeSamplesArray($c)")
-  override protected def withNewChildInternal(c: Expression): AdpcmDecodeSamples =
-    copy(child = c)
-}
-
 /** Column-API face for the IMA-ADPCM codec. */
 object AdpcmExprs {
+  /** Text → IMA-ADPCM WAV payload ([[AdpcmCodec.encodeFromText]]). */
   def encodeAdpcmFromText(text: Column, sampleRate: Int, n: Int): Column =
-    ColumnBridge.column(
-      EncodeAdpcmFromText(ColumnBridge.expression(text), sampleRate, n))
+    Native.call("encode_adpcm_from_text", AdpcmCodec, "encodeFromText",
+      BinaryType, Seq(sampleRate, n))(text)
 
+  /** IMA-ADPCM WAV payload → decoded PCM samples as array<int>. */
   def decodeSamples(payload: Column): Column =
-    ColumnBridge.column(AdpcmDecodeSamples(ColumnBridge.expression(payload)))
+    Native.call("decode_adpcm_samples", AdpcmCodec, "decodeSamplesArray",
+      ArrayType(IntegerType, containsNull = false))(payload)
 }

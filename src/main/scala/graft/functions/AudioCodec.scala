@@ -4,9 +4,6 @@ import java.nio.charset.StandardCharsets.US_ASCII
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -280,98 +277,31 @@ object AudioCodec {
   }
 }
 
-/** WAV payload → decoded PCM samples as array<int> (the audio mirror of
-  * [[ImageCodec.decodePixels]] — for window/patch extraction downstream
-  * of the real header parse). */
-case class AudioDecodeSamples(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "decode_audio_samples"
-  override protected def nullSafeEval(input: Any): Any =
-    AudioCodec.decodeSamplesArray(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.AudioCodec.decodeSamplesArray($c)")
-  override protected def withNewChildInternal(c: Expression): AudioDecodeSamples =
-    copy(child = c)
-}
-
-/** Text → WAV payload ([[AudioCodec.encodeFromText]]); codegen'd. */
-case class EncodeWavFromText(child: Expression, sampleRate: Int, n: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "encode_wav_from_text"
-  override protected def nullSafeEval(input: Any): Any =
-    AudioCodec.encodeFromText(input.asInstanceOf[UTF8String], sampleRate, n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.AudioCodec.encodeFromText($c, $sampleRate, $n)")
-  override protected def withNewChildInternal(c: Expression): EncodeWavFromText =
-    copy(child = c)
-}
-
-/** Text → µ-law WAV payload ([[AudioCodec.encodeFromTextMulaw]]);
-  * codegen'd. */
-case class EncodeMulawFromText(child: Expression, sampleRate: Int, n: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "encode_mulaw_from_text"
-  override protected def nullSafeEval(input: Any): Any =
-    AudioCodec.encodeFromTextMulaw(input.asInstanceOf[UTF8String], sampleRate, n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.AudioCodec.encodeFromTextMulaw($c, $sampleRate, $n)")
-  override protected def withNewChildInternal(c: Expression): EncodeMulawFromText =
-    copy(child = c)
-}
-
-/** WAV payload → integer sample-statistics struct ([[AudioCodec.statsRow]]). */
-case class AudioStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = AudioCodec.statsSchema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "audio_stats"
-  override protected def nullSafeEval(input: Any): Any =
-    AudioCodec.statsRow(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.AudioCodec.statsRow($c)")
-  override protected def withNewChildInternal(c: Expression): AudioStats =
-    copy(child = c)
-}
-
-/** WAV payload → per-frame Σs² energies (array<long>) for short-time
-  * composition ([[AudioCodec.frameEnergies]]). */
-case class AudioFrameEnergies(child: Expression, frameLen: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "audio_frame_energies"
-  override protected def nullSafeEval(input: Any): Any =
-    AudioCodec.frameEnergies(input.asInstanceOf[Array[Byte]], frameLen)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.AudioCodec.frameEnergies($c, $frameLen)")
-  override protected def withNewChildInternal(c: Expression): AudioFrameEnergies =
-    copy(child = c)
-}
-
 object AudioExprs {
+  /** Text → WAV payload ([[AudioCodec.encodeFromText]]). */
   def encodeWavFromText(text: Column, sampleRate: Int, n: Int): Column =
-    ColumnBridge.column(
-      EncodeWavFromText(ColumnBridge.expression(text), sampleRate, n))
+    Native.call("encode_wav_from_text", AudioCodec, "encodeFromText",
+      BinaryType, Seq(sampleRate, n))(text)
 
+  /** Text → µ-law WAV payload ([[AudioCodec.encodeFromTextMulaw]]). */
   def encodeMulawFromText(text: Column, sampleRate: Int, n: Int): Column =
-    ColumnBridge.column(
-      EncodeMulawFromText(ColumnBridge.expression(text), sampleRate, n))
+    Native.call("encode_mulaw_from_text", AudioCodec, "encodeFromTextMulaw",
+      BinaryType, Seq(sampleRate, n))(text)
 
+  /** WAV payload → integer sample-statistics struct ([[AudioCodec.statsRow]]). */
   def audioStats(payload: Column): Column =
-    ColumnBridge.column(AudioStats(ColumnBridge.expression(payload)))
+    Native.call("audio_stats", AudioCodec, "statsRow", AudioCodec.statsSchema)(payload)
 
+  /** WAV payload → per-frame Σs² energies (array<long>) for short-time
+    * composition ([[AudioCodec.frameEnergies]]). */
   def frameEnergies(payload: Column, frameLen: Int): Column =
-    ColumnBridge.column(
-      AudioFrameEnergies(ColumnBridge.expression(payload), frameLen))
+    Native.call("audio_frame_energies", AudioCodec, "frameEnergies",
+      ArrayType(LongType, containsNull = false), Seq(frameLen))(payload)
 
+  /** WAV payload → decoded PCM samples as array<int> (the audio mirror of
+    * [[ImageCodec.decodePixels]] — for window/patch extraction downstream
+    * of the real header parse). */
   def decodeSamples(payload: Column): Column =
-    ColumnBridge.column(AudioDecodeSamples(ColumnBridge.expression(payload)))
+    Native.call("decode_audio_samples", AudioCodec, "decodeSamplesArray",
+      ArrayType(IntegerType, containsNull = false))(payload)
 }

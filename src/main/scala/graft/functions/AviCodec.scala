@@ -3,9 +3,6 @@ package graft.functions
 import java.nio.charset.StandardCharsets.US_ASCII
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -245,43 +242,16 @@ object AviCodec {
   }
 }
 
-/** Text → AVI/MJPEG payload ([[AviCodec.encodeFromText]]); codegen'd. */
-case class EncodeAviMjpegFixture(child: Expression, frames: Int,
-    blocksW: Int, blocksH: Int, quality: Int) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "encode_avi_mjpeg_fixture"
-  override protected def nullSafeEval(input: Any): Any =
-    AviCodec.encodeFromText(input.asInstanceOf[UTF8String], frames,
-      blocksW, blocksH, quality)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.AviCodec.encodeFromText($c, $frames, $blocksW, $blocksH, $quality)")
-  override protected def withNewChildInternal(c: Expression): EncodeAviMjpegFixture =
-    copy(child = c)
-}
-
-/** AVI/MJPEG payload → per-frame decoded luma sums as array<long>. */
-case class AviFrameLumaSums(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "avi_frame_luma_sums"
-  override protected def nullSafeEval(input: Any): Any =
-    AviCodec.frameLumaSumsArray(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.AviCodec.frameLumaSumsArray($c)")
-  override protected def withNewChildInternal(c: Expression): AviFrameLumaSums =
-    copy(child = c)
-}
-
 /** Column-API face for the AVI/MJPEG codec. */
 object AviExprs {
+  /** Text → AVI/MJPEG payload ([[AviCodec.encodeFromText]]). */
   def encodeAviMjpeg(text: Column, frames: Int, blocksW: Int, blocksH: Int,
       quality: Int): Column =
-    ColumnBridge.column(EncodeAviMjpegFixture(ColumnBridge.expression(text),
-      frames, blocksW, blocksH, quality))
+    Native.call("encode_avi_mjpeg_fixture", AviCodec, "encodeFromText",
+      BinaryType, Seq(frames, blocksW, blocksH, quality))(text)
 
+  /** AVI/MJPEG payload → per-frame decoded luma sums as array<long>. */
   def frameLumaSums(payload: Column): Column =
-    ColumnBridge.column(AviFrameLumaSums(ColumnBridge.expression(payload)))
+    Native.call("avi_frame_luma_sums", AviCodec, "frameLumaSumsArray",
+      ArrayType(LongType, containsNull = false))(payload)
 }

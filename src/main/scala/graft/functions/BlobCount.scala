@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** 4-connected component (blob) count of a thresholded 8×8 raster — the
   * vision primitive behind object counting, run as one 64-bit BFS per
@@ -16,24 +13,6 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * adjacency relation, then counts distinct min-labels — a completely
   * different algorithm whose agreement the hash gate certifies.
   */
-case class BlobCountExpr(child: Expression, threshold: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "blob_count"
-
-  override protected def nullSafeEval(input: Any): Any =
-    BlobCountExpr.count(input.asInstanceOf[ArrayData], threshold)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.BlobCountExpr.count($c, $threshold)")
-
-  override protected def withNewChildInternal(newChild: Expression): BlobCountExpr =
-    copy(child = newChild)
-}
-
 object BlobCountExpr {
   private val NotLeftCol = 0xFEFEFEFEFEFEFEFEL  // bit i with i%8 != 0
   private val NotRightCol = 0x7F7F7F7F7F7F7F7FL // bit i with i%8 != 7
@@ -68,6 +47,5 @@ object BlobCountExpr {
 
   /** Column form: pixels is the decoded int raster. */
   def blobCount(pixels: Column, threshold: Int): Column =
-    ColumnBridge.column(
-      BlobCountExpr(ColumnBridge.expression(pixels), threshold))
+    Native.call("blob_count", BlobCountExpr, "count", LongType, Seq(threshold))(pixels)
 }

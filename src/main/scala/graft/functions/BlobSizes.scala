@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** 4-connected blob SIZE distribution of a thresholded 8×8 raster —
   * [[BlobCountExpr]]'s labeling sibling: the same single-Long mask
@@ -15,24 +12,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * The oracle replays labeling as the recursive reachability closure
   * grouped to min-labels, then sizes per label.
   */
-case class BlobSizesExpr(child: Expression, threshold: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "blob_sizes"
-
-  override protected def nullSafeEval(input: Any): Any =
-    BlobSizesExpr.sizes(input.asInstanceOf[ArrayData], threshold)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.BlobSizesExpr.sizes($c, $threshold)")
-
-  override protected def withNewChildInternal(newChild: Expression): BlobSizesExpr =
-    copy(child = newChild)
-}
-
 object BlobSizesExpr {
   private val NotLeftCol = 0xFEFEFEFEFEFEFEFEL
   private val NotRightCol = 0x7F7F7F7F7F7F7F7FL
@@ -66,6 +45,6 @@ object BlobSizesExpr {
 
   /** Column form: pixels is the decoded int raster. */
   def blobSizes(pixels: Column, threshold: Int): Column =
-    ColumnBridge.column(
-      BlobSizesExpr(ColumnBridge.expression(pixels), threshold))
+    Native.call("blob_sizes", BlobSizesExpr, "sizes",
+      ArrayType(LongType, containsNull = false), Seq(threshold))(pixels)
 }

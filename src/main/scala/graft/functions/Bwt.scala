@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Burrows–Wheeler transform (Burrows & Wheeler 1994) of a bounded
@@ -18,22 +15,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * collation agree exactly there, so the oracle can replay the same
   * rotation sort with `list_sort`.
   */
-case class BwtExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "bwt"
-
-  override protected def nullSafeEval(input: Any): Any =
-    BwtExpr.bwt(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.BwtExpr.bwt($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): BwtExpr =
-    copy(child = newChild)
-}
-
 object BwtExpr {
 
   /** Static forwarder target for generated Java code. */
@@ -51,5 +32,5 @@ object BwtExpr {
 
   /** Column form. */
   def bwt(s: Column): Column =
-    ColumnBridge.column(BwtExpr(ColumnBridge.expression(s)))
+    Native.call("bwt", BwtExpr, "bwt", StringType)(s)
 }

@@ -83,8 +83,16 @@ object Dialect {
       s"$what must be a boolean literal, got $other")
   }
 
-  /** Native-expression builders, shared by the per-session registration
-    * ([[registerAll]]) and the config-driven [[GraftExtensions]] path. */
+  import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+
+  /** A one-column SQL function over its column face. */
+  private def unary(f: Column => Column): Seq[Expression] => Expression =
+    es => expression(f(column(es.head)))
+
+  /** Native-function builders, shared by the per-session registration
+    * ([[registerAll]]) and the config-driven [[GraftExtensions]] path.
+    * Each builds its node through the same column face the DataFrame API
+    * calls, after checking its literal parameters. */
   private[functions] val nativeBuilders
       : Seq[(String, Seq[Expression] => Expression)] = Seq(
     // the pattern is translated once, here, not per row
@@ -95,68 +103,67 @@ object Dialect {
           Seq(es.head, Literal(strptimeToJava(litStr(es(1), "try_strptime fmt")))))
       }),
     "token_shingles" ->
-      ((es: Seq[Expression]) =>
-        TokenShingles(es.head, litInt(es(1), "token_shingles n"))),
+      ((es: Seq[Expression]) => expression(NativeExprs.tokenShingles(
+        column(es.head), litInt(es(1), "token_shingles n")))),
     "minhash_sig" ->
-      ((es: Seq[Expression]) =>
-        MinHashSig(es.head, litInt(es(1), "minhash_sig k"))),
-    "simhash64" -> ((es: Seq[Expression]) => SimHash64(es.head)),
-    "dot_product" -> ((es: Seq[Expression]) => DotProductF(es.head, es(1))),
-    "cosine_sim" -> ((es: Seq[Expression]) => CosineSimF(es.head, es(1))),
+      ((es: Seq[Expression]) => expression(NativeExprs.minhashSig(
+        column(es.head), litInt(es(1), "minhash_sig k")))),
+    "simhash64" -> unary(NativeExprs.simhash64),
+    "dot_product" ->
+      ((es: Seq[Expression]) => expression(NativeExprs.dotProduct(
+        column(es.head), column(es(1))))),
+    "cosine_sim" ->
+      ((es: Seq[Expression]) => expression(NativeExprs.cosineSim(
+        column(es.head), column(es(1))))),
     "rolling_min_hash" ->
-      ((es: Seq[Expression]) =>
-        RollingMinHash(es.head, litInt(es(1), "rolling_min_hash k"))),
+      ((es: Seq[Expression]) => expression(RollingMinHash.rollingMinHash(
+        column(es.head), litInt(es(1), "rolling_min_hash k")))),
     "minhash_sig_portable" ->
-      ((es: Seq[Expression]) =>
-        MinHashSigPortable(es.head, litInt(es(1), "minhash_sig_portable k"))),
+      ((es: Seq[Expression]) => expression(NativeExprs.minhashSigPortable(
+        column(es.head), litInt(es(1), "minhash_sig_portable k")))),
     "cdc_cuts" ->
-      ((es: Seq[Expression]) =>
-        CdcCuts(es.head, litInt(es(1), "cdc_cuts w"),
-          litInt(es(2), "cdc_cuts maskBits"))),
+      ((es: Seq[Expression]) => expression(CdcCuts.cdcCuts(column(es.head),
+        litInt(es(1), "cdc_cuts w"), litInt(es(2), "cdc_cuts maskBits")))),
     // media codec surface — the full multimodal pipeline callable from
     // plan SQL: encode fixtures, decode stats/rasters, hash bands
     "encode_image_from_text" ->
-      ((es: Seq[Expression]) =>
-        EncodeImageFromText(es.head,
-          litStr(es(1), "encode_image_from_text format"),
-          litInt(es(2), "encode_image_from_text width"),
-          litInt(es(3), "encode_image_from_text height"))),
-    "image_stats" -> ((es: Seq[Expression]) => ImageStats(es.head)),
-    "try_image_stats" -> ((es: Seq[Expression]) => TryImageStats(es.head)),
-    "image_downsample_stats" ->
-      ((es: Seq[Expression]) => ImageDownsampleStats(es.head)),
-    "decode_pixels" -> ((es: Seq[Expression]) => DecodePixels(es.head)),
-    "ahash_bands" -> ((es: Seq[Expression]) => AHashBands(es.head)),
+      ((es: Seq[Expression]) => expression(ImageExprs.encodeImageFromText(
+        column(es.head),
+        litStr(es(1), "encode_image_from_text format"),
+        litInt(es(2), "encode_image_from_text width"),
+        litInt(es(3), "encode_image_from_text height")))),
+    "image_stats" -> unary(ImageExprs.imageStats),
+    "try_image_stats" -> unary(ImageExprs.tryImageStats),
+    "image_downsample_stats" -> unary(ImageExprs.imageDownsampleStats),
+    "decode_pixels" -> unary(ImageExprs.decodePixels),
+    "ahash_bands" -> unary(ImageExprs.aHashBands),
     "encode_wav_from_text" ->
-      ((es: Seq[Expression]) =>
-        EncodeWavFromText(es.head,
-          litInt(es(1), "encode_wav_from_text sampleRate"),
-          litInt(es(2), "encode_wav_from_text n"))),
-    "audio_stats" -> ((es: Seq[Expression]) => AudioStats(es.head)),
+      ((es: Seq[Expression]) => expression(AudioExprs.encodeWavFromText(
+        column(es.head),
+        litInt(es(1), "encode_wav_from_text sampleRate"),
+        litInt(es(2), "encode_wav_from_text n")))),
+    "audio_stats" -> unary(AudioExprs.audioStats),
     "audio_frame_energies" ->
-      ((es: Seq[Expression]) =>
-        AudioFrameEnergies(es.head, litInt(es(1),
-          "audio_frame_energies frameLen"))),
-    "decode_audio_samples" ->
-      ((es: Seq[Expression]) => AudioDecodeSamples(es.head)),
+      ((es: Seq[Expression]) => expression(AudioExprs.frameEnergies(
+        column(es.head), litInt(es(1), "audio_frame_energies frameLen")))),
+    "decode_audio_samples" -> unary(AudioExprs.decodeSamples),
     "encode_y4m_from_text" ->
-      ((es: Seq[Expression]) =>
-        EncodeY4mFromText(es.head,
-          litInt(es(1), "encode_y4m_from_text width"),
-          litInt(es(2), "encode_y4m_from_text height"),
-          litInt(es(3), "encode_y4m_from_text nFrames"),
-          litBool(es(4), "encode_y4m_from_text omitC"))),
-    "video_stats" -> ((es: Seq[Expression]) => VideoStats(es.head)),
-    "y4m_frame_ysums" ->
-      ((es: Seq[Expression]) => Y4mFrameYSums(es.head)),
-    "y4m_frame_ydeltas" ->
-      ((es: Seq[Expression]) => Y4mFrameYDeltas(es.head)))
+      ((es: Seq[Expression]) => expression(VideoExprs.encodeY4mFromText(
+        column(es.head),
+        litInt(es(1), "encode_y4m_from_text width"),
+        litInt(es(2), "encode_y4m_from_text height"),
+        litInt(es(3), "encode_y4m_from_text nFrames"),
+        litBool(es(4), "encode_y4m_from_text omitC")))),
+    "video_stats" -> unary(VideoExprs.videoStats),
+    "y4m_frame_ysums" -> unary(VideoExprs.frameYSums),
+    "y4m_frame_ydeltas" -> unary(VideoExprs.frameYDeltas))
 
   /** Register SQL-callable dialect + native functions on the session so
     * plan-authored SQL (`transform.sql` steps) can use them directly:
-    * `try_strptime` (DuckDB compat) plus the engine's native expressions
+    * `try_strptime` (DuckDB compat) plus the engine's native functions
     * (`token_shingles`, `minhash_sig`, `simhash64`, `dot_product`,
-    * `cosine_sim`, `rolling_min_hash`, the media codecs). */
+    * `cosine_sim`, `rolling_min_hash`, the media codecs), each built by
+    * its column face, so SQL and the DataFrame API plan the same node. */
   def registerAll(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     nativeBuilders.foreach { case (name, builder) =>

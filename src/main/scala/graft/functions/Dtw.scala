@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Dynamic-time-warping alignment cost between two integer series
   * (Sakoe & Chiba 1978; absolute-difference local cost, unit steps
@@ -24,24 +21,6 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * prev[j])`) through the prefix-min identity
   * `dp[j] = C_j + min_k≤j (m_k − C_{k−1})` over cost prefix sums C.
   */
-case class DtwExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "dtw_cost"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    DtwExpr.cost(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.DtwExpr.cost($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): DtwExpr = copy(left = l, right = r)
-}
-
 object DtwExpr {
 
   /** Static forwarder target for generated Java code. */
@@ -76,6 +55,5 @@ object DtwExpr {
 
   /** Column form: DTW cost between two `array<long>` series. */
   def dtw(a: Column, b: Column): Column =
-    ColumnBridge.column(DtwExpr(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Native.call("dtw_cost", DtwExpr, "cost", LongType)(a, b)
 }

@@ -4,9 +4,6 @@ import java.nio.charset.StandardCharsets.US_ASCII
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -190,43 +187,15 @@ object ExifCodec {
     StructField("n_segments", IntegerType, nullable = false)))
 }
 
-/** (text, doc_id) → gray fixture JPEG with a planted APP1 Exif block. */
-case class EncodeJpegWithExif(left: Expression, right: Expression,
-    blocksW: Int, blocksH: Int, quality: Int) extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "encode_jpeg_with_exif"
-  override protected def nullSafeEval(text: Any, id: Any): Any =
-    ExifCodec.encodeFromText(text.asInstanceOf[UTF8String],
-      id.asInstanceOf[Long], blocksW, blocksH, quality)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, i) =>
-      s"graft.functions.ExifCodec.encodeFromText($t, $i, $blocksW, $blocksH, " +
-        s"$quality)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression)
-      : EncodeJpegWithExif = copy(left = l, right = r)
-}
-
-/** JPEG payload → EXIF metadata struct (marker walk to SOS, IFD parse). */
-case class ExifExtract(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ExifCodec.infoSchema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "exif_extract"
-  override protected def nullSafeEval(input: Any): Any =
-    ExifCodec.extractRow(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExifCodec.extractRow($c)")
-  override protected def withNewChildInternal(c: Expression): ExifExtract =
-    copy(child = c)
-}
-
 /** Column-API face for the EXIF plane. */
 object ExifExprs {
+  /** (text, doc_id) → gray fixture JPEG with a planted APP1 Exif block. */
   def encodeJpegWithExif(text: Column, id: Column, blocksW: Int, blocksH: Int,
       quality: Int): Column =
-    ColumnBridge.column(EncodeJpegWithExif(ColumnBridge.expression(text),
-      ColumnBridge.expression(id), blocksW, blocksH, quality))
+    Native.call("encode_jpeg_with_exif", ExifCodec, "encodeFromText",
+      BinaryType, Seq(blocksW, blocksH, quality))(text, id)
 
+  /** JPEG payload → EXIF metadata struct (marker walk to SOS, IFD parse). */
   def extract(payload: Column): Column =
-    ColumnBridge.column(ExifExtract(ColumnBridge.expression(payload)))
+    Native.call("exif_extract", ExifCodec, "extractRow", ExifCodec.infoSchema)(payload)
 }

@@ -4,10 +4,7 @@ import java.nio.charset.StandardCharsets.US_ASCII
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -521,59 +518,21 @@ object FlacCodec {
     StructField("s_max", IntegerType, nullable = false)))
 }
 
-/** Text → FLAC payload over the ramp+wobble fixture; codegen'd. */
-case class EncodeFlacFromText(child: Expression, n: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "encode_flac_from_text"
-  override protected def nullSafeEval(input: Any): Any =
-    FlacCodec.encodeFromText(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.FlacCodec.encodeFromText($c, $n)")
-  override protected def withNewChildInternal(c: Expression): EncodeFlacFromText =
-    copy(child = c)
-}
-
-/** FLAC payload → decoded PCM samples as array<int>. */
-case class FlacDecodeSamples(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "decode_flac_samples"
-  override protected def nullSafeEval(input: Any): Any =
-    FlacCodec.decodeSamplesArray(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.FlacCodec.decodeSamplesArray($c)")
-  override protected def withNewChildInternal(c: Expression): FlacDecodeSamples =
-    copy(child = c)
-}
-
-/** FLAC payload → per-frame decode metadata (type/order/param/bits +
-  * sample aggregates). */
-case class FlacFrameStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(FlacCodec.frameStatsSchema, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "flac_frame_stats"
-  override protected def nullSafeEval(input: Any): Any =
-    FlacCodec.frameStatsArray(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.FlacCodec.frameStatsArray($c)")
-  override protected def withNewChildInternal(c: Expression): FlacFrameStats =
-    copy(child = c)
-}
-
 /** Column-API face for the FLAC codec. */
 object FlacExprs {
+  /** Text → FLAC payload over the ramp+wobble fixture. */
   def encodeFlacFromText(text: Column, n: Int): Column =
-    ColumnBridge.column(EncodeFlacFromText(ColumnBridge.expression(text), n))
+    Native.call("encode_flac_from_text", FlacCodec, "encodeFromText",
+      BinaryType, Seq(n))(text)
 
+  /** FLAC payload → decoded PCM samples as array<int>. */
   def decodeSamples(payload: Column): Column =
-    ColumnBridge.column(FlacDecodeSamples(ColumnBridge.expression(payload)))
+    Native.call("decode_flac_samples", FlacCodec, "decodeSamplesArray",
+      ArrayType(IntegerType, containsNull = false))(payload)
 
+  /** FLAC payload → per-frame decode metadata (type/order/param/bits +
+    * sample aggregates). */
   def frameStats(payload: Column): Column =
-    ColumnBridge.column(FlacFrameStats(ColumnBridge.expression(payload)))
+    Native.call("flac_frame_stats", FlacCodec, "frameStatsArray",
+      ArrayType(FlacCodec.frameStatsSchema, containsNull = false))(payload)
 }

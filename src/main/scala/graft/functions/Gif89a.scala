@@ -2,11 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Animated GIF89a — the animation plane on top of [[GifCodec]]'s LZW
   * (which that file owns in both directions): web corpora are full of
@@ -162,36 +158,12 @@ object Gif89a {
   }
 }
 
-/** doc_id → deterministic animated GIF89a. */
-case class AnimGifFromId(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "animgif_from_id"
-  override protected def nullSafeEval(input: Any): Any =
-    Gif89a.encode(input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Gif89a.encode($c)")
-  override protected def withNewChildInternal(c: Expression): AnimGifFromId =
-    copy(child = c)
-}
-
-/** animated GIF bytes → frame/timeline census. */
-case class AnimGifCensus(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = Gif89a.schema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "animgif_census"
-  override protected def nullSafeEval(input: Any): Any =
-    Gif89a.census(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Gif89a.census($c)")
-  override protected def withNewChildInternal(c: Expression): AnimGifCensus =
-    copy(child = c)
-}
-
 /** Column-API face. */
 object Gif89aExprs {
+  /** doc_id → deterministic animated GIF89a. */
   def animGifFromId(docId: Column): Column =
-    ColumnBridge.column(AnimGifFromId(ColumnBridge.expression(docId)))
+    Native.call("animgif_from_id", Gif89a, "encode", BinaryType)(docId)
+  /** animated GIF bytes → frame/timeline census. */
   def animGifCensus(payload: Column): Column =
-    ColumnBridge.column(AnimGifCensus(ColumnBridge.expression(payload)))
+    Native.call("animgif_census", Gif89a, "census", Gif89a.schema)(payload)
 }

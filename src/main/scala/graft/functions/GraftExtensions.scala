@@ -15,7 +15,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * `token_shingles`, `minhash_sig`, `simhash64`, `dot_product`,
   * `cosine_sim`, `rolling_min_hash`, the media codecs) into every session
   * built on the cluster, so plan SQL and ad-hoc queries can call them with
-  * no `registerAll` invocation.
+  * no `registerAll` invocation. The builders are [[Dialect]]'s, so a SQL
+  * call builds the same node as its column face: a [[NativeCall]], or one
+  * of the few hand-written classes.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

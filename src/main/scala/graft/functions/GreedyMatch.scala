@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Greedy maximal matching over a weight-ranked edge list — the
   * ½-approximation to maximum-weight matching (Avis 1983) used to
@@ -21,24 +18,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * in the tie-broken rank order. Output: `array<long>` of 0/1 flags,
   * one per edge, 1 = kept in the matching.
   */
-case class GreedyMatchExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "greedy_match"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    GreedyMatchExpr.flags(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.GreedyMatchExpr.flags($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): GreedyMatchExpr = copy(left = l, right = r)
-}
-
 object GreedyMatchExpr {
 
   /** Static forwarder target for generated Java code. */
@@ -62,6 +41,6 @@ object GreedyMatchExpr {
 
   /** Column form over rank-ordered endpoint arrays. */
   def greedyMatch(us: Column, vs: Column): Column =
-    ColumnBridge.column(GreedyMatchExpr(
-      ColumnBridge.expression(us), ColumnBridge.expression(vs)))
+    Native.call("greedy_match", GreedyMatchExpr, "flags",
+      ArrayType(LongType, containsNull = false))(us, vs)
 }

@@ -2,11 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** H.264/AVC Annex-B bitstream plumbing (ITU-T H.264 / ISO 14496-10,
   * public spec) — the metadata plane of video ingest, the exact
@@ -257,36 +253,12 @@ object H264Nal {
   }
 }
 
-/** doc_id → deterministic Annex-B stream. */
-case class H264FromId(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "h264_from_id"
-  override protected def nullSafeEval(input: Any): Any =
-    H264Nal.encode(input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.H264Nal.encode($c)")
-  override protected def withNewChildInternal(c: Expression): H264FromId =
-    copy(child = c)
-}
-
-/** Annex-B stream → NAL census struct. */
-case class H264Census(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = H264Nal.schema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "h264_census"
-  override protected def nullSafeEval(input: Any): Any =
-    H264Nal.census(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.H264Nal.census($c)")
-  override protected def withNewChildInternal(c: Expression): H264Census =
-    copy(child = c)
-}
-
 /** Column-API face. */
 object H264Exprs {
+  /** doc_id → deterministic Annex-B stream. */
   def h264FromId(docId: Column): Column =
-    ColumnBridge.column(H264FromId(ColumnBridge.expression(docId)))
+    Native.call("h264_from_id", H264Nal, "encode", BinaryType)(docId)
+  /** Annex-B stream → NAL census struct. */
   def h264Census(stream: Column): Column =
-    ColumnBridge.column(H264Census(ColumnBridge.expression(stream)))
+    Native.call("h264_census", H264Nal, "census", H264Nal.schema)(stream)
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -196,6 +193,12 @@ object HtmlText {
     (title.toString, blocks.mkString("\n"), nLinks, blocks.length)
   }
 
+  val schema: StructType = StructType(Seq(
+    StructField("title", StringType, nullable = false),
+    StructField("body", StringType, nullable = false),
+    StructField("n_links", IntegerType, nullable = false),
+    StructField("n_blocks", IntegerType, nullable = false)))
+
   /** Codegen entry: extract → InternalRow(title, body, n_links, n_blocks). */
   def extractRow(html: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
     val (title, body, links, blocks) = extract(html.toString)
@@ -205,43 +208,12 @@ object HtmlText {
   }
 }
 
-/** (text, doc_id) → deterministic HTML page. */
-case class HtmlFromText(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "html_from_text"
-  override protected def nullSafeEval(t: Any, id: Any): Any =
-    HtmlText.encode(t.asInstanceOf[UTF8String], id.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (t, id) => s"graft.functions.HtmlText.encode($t, $id)")
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): HtmlFromText = copy(left = l, right = r)
-}
-
-/** html → struct(title, body, n_links, n_blocks). */
-case class HtmlExtract(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("title", StringType, nullable = false),
-    StructField("body", StringType, nullable = false),
-    StructField("n_links", IntegerType, nullable = false),
-    StructField("n_blocks", IntegerType, nullable = false)))
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "html_extract"
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlText.extractRow(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlText.extractRow($c)")
-  override protected def withNewChildInternal(c: Expression): HtmlExtract =
-    copy(child = c)
-}
-
 /** Column-API face. */
 object HtmlExprs {
+  /** (text, doc_id) → deterministic HTML page. */
   def htmlFromText(text: Column, docId: Column): Column =
-    ColumnBridge.column(HtmlFromText(
-      ColumnBridge.expression(text), ColumnBridge.expression(docId)))
+    Native.call("html_from_text", HtmlText, "encode", StringType)(text, docId)
+  /** html → struct(title, body, n_links, n_blocks). */
   def htmlExtract(html: Column): Column =
-    ColumnBridge.column(HtmlExtract(ColumnBridge.expression(html)))
+    Native.call("html_extract", HtmlText, "extractRow", HtmlText.schema)(html)
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Total cost of an optimal (Huffman) prefix code over one key's symbol
   * frequencies — `sum_i c_i * len_i`, equivalently the sum of all
@@ -25,22 +22,6 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * same sum — which is what makes the value replayable against a
   * recursive-CTE merge in the SQL oracle regardless of tie order.
   */
-case class HuffmanCostExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "huffman_cost"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HuffmanCostExpr.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HuffmanCostExpr.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): HuffmanCostExpr =
-    copy(child = newChild)
-}
-
 object HuffmanCostExpr {
 
   /** Static forwarder target for generated Java code. `arr` must be
@@ -76,5 +57,5 @@ object HuffmanCostExpr {
 
   /** Column form: total Huffman bits for an ascending `array<long>`. */
   def huffmanCost(sortedCounts: Column): Column =
-    ColumnBridge.column(HuffmanCostExpr(ColumnBridge.expression(sortedCounts)))
+    Native.call("huffman_cost", HuffmanCostExpr, "compute", LongType)(sortedCounts)
 }

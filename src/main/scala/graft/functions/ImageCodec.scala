@@ -4,10 +4,7 @@ import java.nio.charset.StandardCharsets.US_ASCII
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -31,9 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * order produces wrong pixels, caught by golden-byte specs and the
   * row/channel-sensitive oracle gates (m1/m3/m5/m6).
   *
-  * All entry points are static so the codegen'd expressions below
-  * ([[EncodeImageFromText]], [[ImageStats]]) can call them from generated
-  * Java — the static-forwarder pattern used throughout [[NativeHash]].
+  * All entry points are static so the [[NativeCall]] faces below
+  * ([[ImageExprs]]) call them from generated Java through their static
+  * forwarders.
   *
   * Reference scope: the reference pipeline has no media path at all
   * (/root/reference/tools.py is CSV/JSON/SQL only); this is part of the
@@ -367,121 +364,46 @@ object ImageCodec {
   }
 }
 
-/** Text → encoded image payload ([[ImageCodec.encodeFromText]]);
-  * codegen'd via static forwarder. The format/dims are expression
-  * parameters (fixture geometry), not runtime columns. */
-case class EncodeImageFromText(child: Expression, format: String,
-    imgWidth: Int, imgHeight: Int) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "encode_image_from_text"
-  override protected def nullSafeEval(input: Any): Any =
-    ImageCodec.encodeFromText(input.asInstanceOf[UTF8String], format, imgWidth, imgHeight)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"""graft.functions.ImageCodec.encodeFromText($c, "$format", $imgWidth, $imgHeight)""")
-  override protected def withNewChildInternal(c: Expression): EncodeImageFromText =
-    copy(child = c)
-}
-
-/** Binary image payload → integer pixel-statistics struct
-  * ([[ImageCodec.statsRow]]): one decode + one tight loop per row, inside
-  * whole-stage codegen. */
-case class ImageStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ImageCodec.statsSchema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "image_stats"
-  override protected def nullSafeEval(input: Any): Any =
-    ImageCodec.statsRow(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ImageCodec.statsRow($c)")
-  override protected def withNewChildInternal(c: Expression): ImageStats =
-    copy(child = c)
-}
-
-/** Binary image payload → full pixel array (channel-interleaved,
-  * top-down ints) for sample-level column math — luminance, thresholds,
-  * any per-pixel derivation via higher-order array functions. */
-case class DecodePixels(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "decode_pixels"
-  override protected def nullSafeEval(input: Any): Any =
-    ImageCodec.decodePixels(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ImageCodec.decodePixels($c)")
-  override protected def withNewChildInternal(c: Expression): DecodePixels =
-    copy(child = c)
-}
-
-/** Binary image payload → decode → 2× average-pool → integer stats of
-  * the POOLED raster ([[ImageCodec.downsampleStatsRow]]): the real
-  * resize kernel fused with its summary, one tight loop per row. */
-case class ImageDownsampleStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ImageCodec.statsSchema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "image_downsample_stats"
-  override protected def nullSafeEval(input: Any): Any =
-    ImageCodec.downsampleStatsRow(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ImageCodec.downsampleStatsRow($c)")
-  override protected def withNewChildInternal(c: Expression): ImageDownsampleStats =
-    copy(child = c)
-}
-
-/** [[ImageStats]] with poison-pill tolerance: corrupt payloads yield
-  * NULL (counted/dropped downstream) instead of failing the job —
-  * [[ImageCodec.tryStatsRow]]. Needs an explicit null flag in codegen,
-  * hence `nullSafeCodeGen` instead of `defineCodeGen`. */
-case class TryImageStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ImageCodec.statsSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "try_image_stats"
-  override protected def nullSafeEval(input: Any): Any =
-    ImageCodec.tryStatsRow(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ImageCodec.tryStatsRow($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(c: Expression): TryImageStats =
-    copy(child = c)
-}
-
-/** Binary image payload → aHash as 16-bit LSH bands (array<int>),
-  * [[ImageCodec.aHashBands]]. */
-case class AHashBands(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "ahash_bands"
-  override protected def nullSafeEval(input: Any): Any =
-    ImageCodec.aHashBands(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ImageCodec.aHashBands($c)")
-  override protected def withNewChildInternal(c: Expression): AHashBands =
-    copy(child = c)
-}
-
 /** Column-API face for the image expressions. */
 object ImageExprs {
+  /** Text → encoded image payload ([[ImageCodec.encodeFromText]]). The
+    * format/dims are call parameters (fixture geometry), not runtime
+    * columns. */
   def encodeImageFromText(text: Column, format: String, width: Int,
       height: Int): Column =
-    ColumnBridge.column(
-      EncodeImageFromText(ColumnBridge.expression(text), format, width, height))
+    Native.call("encode_image_from_text", ImageCodec, "encodeFromText",
+      BinaryType, Seq(format, width, height))(text)
 
+  /** Binary image payload → integer pixel-statistics struct
+    * ([[ImageCodec.statsRow]]): one decode + one tight loop per row, inside
+    * whole-stage codegen. */
   def imageStats(payload: Column): Column =
-    ColumnBridge.column(ImageStats(ColumnBridge.expression(payload)))
+    Native.call("image_stats", ImageCodec, "statsRow", ImageCodec.statsSchema)(payload)
 
+  /** Binary image payload → full pixel array (channel-interleaved,
+    * top-down ints) for sample-level column math — luminance, thresholds,
+    * any per-pixel derivation via higher-order array functions. */
   def decodePixels(payload: Column): Column =
-    ColumnBridge.column(DecodePixels(ColumnBridge.expression(payload)))
+    Native.call("decode_pixels", ImageCodec, "decodePixels",
+      ArrayType(IntegerType, containsNull = false))(payload)
 
+  /** Binary image payload → decode → 2× average-pool → integer stats of
+    * the POOLED raster ([[ImageCodec.downsampleStatsRow]]): the real
+    * resize kernel fused with its summary, one tight loop per row. */
   def imageDownsampleStats(payload: Column): Column =
-    ColumnBridge.column(ImageDownsampleStats(ColumnBridge.expression(payload)))
+    Native.call("image_downsample_stats", ImageCodec, "downsampleStatsRow",
+      ImageCodec.statsSchema)(payload)
 
+  /** [[imageStats]] with poison-pill tolerance: corrupt payloads yield
+    * NULL (counted/dropped downstream) instead of failing the job —
+    * [[ImageCodec.tryStatsRow]], whose null result the call passes on. */
   def tryImageStats(payload: Column): Column =
-    ColumnBridge.column(TryImageStats(ColumnBridge.expression(payload)))
+    Native.call("try_image_stats", ImageCodec, "tryStatsRow",
+      ImageCodec.statsSchema, returnNullable = true)(payload)
 
+  /** Binary image payload → aHash as 16-bit LSH bands (array<int>),
+    * [[ImageCodec.aHashBands]]. */
   def aHashBands(payload: Column): Column =
-    ColumnBridge.column(AHashBands(ColumnBridge.expression(payload)))
+    Native.call("ahash_bands", ImageCodec, "aHashBands",
+      ArrayType(IntegerType, containsNull = false))(payload)
 }

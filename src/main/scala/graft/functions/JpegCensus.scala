@@ -2,9 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** JPEG marker-walk census — the ingest-census plane for the one JFIF
@@ -209,37 +206,13 @@ object JpegCensus {
   }
 }
 
-/** doc_id → deterministic progressive JFIF bytes. */
-case class JpegProgressiveFixture(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "jpeg_progressive_fixture"
-  override protected def nullSafeEval(id: Any): Any =
-    JpegCensus.buildProgressive(id.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.JpegCensus.buildProgressive($c)")
-  override protected def withNewChildInternal(c: Expression): JpegProgressiveFixture =
-    copy(child = c)
-}
-
-/** jpeg bytes → census struct (baseline AND progressive streams). */
-case class JpegMarkerCensus(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = JpegCensus.schema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "jpeg_marker_census"
-  override protected def nullSafeEval(b: Any): Any =
-    JpegCensus.census(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.JpegCensus.census($c)")
-  override protected def withNewChildInternal(c: Expression): JpegMarkerCensus =
-    copy(child = c)
-}
-
 /** Column-API face. */
 object JpegCensusExprs {
+  /** doc_id → deterministic progressive JFIF bytes. */
   def progressiveFixture(docId: Column): Column =
-    ColumnBridge.column(JpegProgressiveFixture(ColumnBridge.expression(docId)))
+    Native.call("jpeg_progressive_fixture", JpegCensus, "buildProgressive",
+      BinaryType)(docId)
+  /** jpeg bytes → census struct (baseline AND progressive streams). */
   def census(payload: Column): Column =
-    ColumnBridge.column(JpegMarkerCensus(ColumnBridge.expression(payload)))
+    Native.call("jpeg_marker_census", JpegCensus, "census", JpegCensus.schema)(payload)
 }

@@ -1505,7 +1505,7 @@ object JpegCodec {
     out
   }
 
-  // static forwarders for the codegen'd expressions
+  // the [[JpegExprs]] call targets
   def encodeGrayBlocksJpeg(text: org.apache.spark.unsafe.types.UTF8String,
       blocksW: Int, blocksH: Int, quality: Int): Array[Byte] =
     encodeJpeg(blocksW * 8, blocksH * 8, 1,
@@ -1532,61 +1532,28 @@ object JpegCodec {
       subsample420 = true, progressive = true)
 }
 
-/** Text → block-constant JFIF payload (gray if `color` is false, 4:2:0
-  * YCbCr if true; SOF2 multi-scan stream if `progressive`); codegen'd
-  * via static forwarders. */
-case class EncodeJpegFixture(child: org.apache.spark.sql.catalyst.expressions.Expression,
-    blocksW: Int, blocksH: Int, quality: Int, color: Boolean,
-    progressive: Boolean = false)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-  import org.apache.spark.sql.types.{BinaryType, DataType}
-  import org.apache.spark.unsafe.types.UTF8String
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "encode_jpeg_fixture"
-  private def encodeName =
-    (if (color) "encodeColorTilesJpeg" else "encodeGrayBlocksJpeg") +
-      (if (progressive) "Progressive" else "")
-  override protected def nullSafeEval(input: Any): Any = {
-    val t = input.asInstanceOf[UTF8String]
-    (color, progressive) match {
-      case (false, false) =>
-        JpegCodec.encodeGrayBlocksJpeg(t, blocksW, blocksH, quality)
-      case (true, false) =>
-        JpegCodec.encodeColorTilesJpeg(t, blocksW, blocksH, quality)
-      case (false, true) =>
-        JpegCodec.encodeGrayBlocksJpegProgressive(t, blocksW, blocksH, quality)
-      case (true, true) =>
-        JpegCodec.encodeColorTilesJpegProgressive(t, blocksW, blocksH, quality)
-    }
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.JpegCodec.$encodeName($c, $blocksW, $blocksH, $quality)")
-  override protected def withNewChildInternal(
-      c: org.apache.spark.sql.catalyst.expressions.Expression): EncodeJpegFixture =
-    copy(child = c)
-}
-
-/** Column-API face for the JPEG fixture encoders. */
+/** Column-API face for the JPEG fixture encoders: text → block-constant
+  * JFIF payload (gray, or 4:2:0 YCbCr colour tiles; a SOF2 multi-scan
+  * stream for the progressive forms). */
 object JpegExprs {
   import org.apache.spark.sql.Column
-  import org.apache.spark.sql.graft.ColumnBridge
+  import org.apache.spark.sql.types.BinaryType
+
+  private def fixture(method: String, text: Column, w: Int, h: Int,
+      quality: Int): Column =
+    Native.call("encode_jpeg_fixture", JpegCodec, method, BinaryType,
+      Seq(w, h, quality))(text)
+
   def encodeJpegGrayBlocks(text: Column, blocksW: Int, blocksH: Int,
       quality: Int): Column =
-    ColumnBridge.column(EncodeJpegFixture(ColumnBridge.expression(text),
-      blocksW, blocksH, quality, color = false))
+    fixture("encodeGrayBlocksJpeg", text, blocksW, blocksH, quality)
   def encodeJpegColorTiles(text: Column, tilesW: Int, tilesH: Int,
       quality: Int): Column =
-    ColumnBridge.column(EncodeJpegFixture(ColumnBridge.expression(text),
-      tilesW, tilesH, quality, color = true))
+    fixture("encodeColorTilesJpeg", text, tilesW, tilesH, quality)
   def encodeJpegGrayBlocksProgressive(text: Column, blocksW: Int,
       blocksH: Int, quality: Int): Column =
-    ColumnBridge.column(EncodeJpegFixture(ColumnBridge.expression(text),
-      blocksW, blocksH, quality, color = false, progressive = true))
+    fixture("encodeGrayBlocksJpegProgressive", text, blocksW, blocksH, quality)
   def encodeJpegColorTilesProgressive(text: Column, tilesW: Int,
       tilesH: Int, quality: Int): Column =
-    ColumnBridge.column(EncodeJpegFixture(ColumnBridge.expression(text),
-      tilesW, tilesH, quality, color = true, progressive = true))
+    fixture("encodeColorTilesJpegProgressive", text, tilesW, tilesH, quality)
 }

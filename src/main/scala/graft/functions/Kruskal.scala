@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Kruskal spanning-forest selection (Kruskal 1956) over a
   * rank-ordered edge list — union-find with path halving inside one
@@ -20,25 +17,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Inputs: endpoint arrays in rank order. Output: `array<long>`
   * 0/1 flags, 1 = edge in the spanning forest.
   */
-case class KruskalFlagsExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "kruskal_flags"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    KruskalFlagsExpr.flags(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.KruskalFlagsExpr.flags($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): KruskalFlagsExpr = copy(left = l, right = r)
-}
-
 object KruskalFlagsExpr {
 
   /** Static forwarder target for generated Java code. */
@@ -74,6 +52,6 @@ object KruskalFlagsExpr {
 
   /** Column form over rank-ordered endpoint arrays. */
   def kruskalFlags(us: Column, vs: Column): Column =
-    ColumnBridge.column(KruskalFlagsExpr(
-      ColumnBridge.expression(us), ColumnBridge.expression(vs)))
+    Native.call("kruskal_flags", KruskalFlagsExpr, "flags",
+      ArrayType(LongType, containsNull = false))(us, vs)
 }

@@ -1,5 +1,9 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+
 /** Pure-JVM LZ4 block + frame codec and xxHash32 — the shard codec the
   * Hadoop/ML-data world actually ships (`.jsonl.lz4`, parquet LZ4,
   * Kafka lz4 batches). No JDK support exists (unlike gzip, handled by
@@ -278,4 +282,39 @@ object Lz4Codec {
     }
     raw
   }
+
+  /** string → LZ4 frame: the [[Lz4SnappyExprs.lz4Utf8]] call. */
+  def lz4Utf8(s: UTF8String): Array[Byte] = compressFrame(s.getBytes)
+  /** LZ4 frame → string: the [[Lz4SnappyExprs.unlz4Utf8]] call. */
+  def unlz4Utf8(b: Array[Byte]): UTF8String =
+    UTF8String.fromBytes(decompressFrame(b))
+  /** Little-endian content-size field of an LZ4 frame header (bytes
+    * 6..13 with our FLG), for header-vs-content integrity columns. */
+  def lz4ContentSize(b: Array[Byte]): Long = {
+    var v = 0L
+    var k = 0
+    while (k < 8) { v |= (b(6 + k).toLong & 0xFF) << (8 * k); k += 1 }
+    v
+  }
+}
+
+/** Column faces of the LZ4-frame and Snappy-block codecs: one JVM call
+  * per row inside whole-stage codegen, so shard assembly and parse stay
+  * in the codegen stage. */
+object Lz4SnappyExprs {
+  /** string → LZ4 frame (64 KB blocks, xxh32 content checksum). */
+  def lz4Utf8(text: Column): Column =
+    Native.call("lz4_utf8", Lz4Codec, "lz4Utf8", BinaryType)(text)
+  /** LZ4 frame → string (loud failure on bad magic/checksums/size). */
+  def unlz4Utf8(payload: Column): Column =
+    Native.call("unlz4_utf8", Lz4Codec, "unlz4Utf8", StringType)(payload)
+  /** LZ4 frame → declared content size (header field, 0..2^63). */
+  def lz4ContentSize(payload: Column): Column =
+    Native.call("lz4_content_size", Lz4Codec, "lz4ContentSize", LongType)(payload)
+  /** string → raw Snappy block. */
+  def snappyUtf8(text: Column): Column =
+    Native.call("snappy_utf8", SnappyCodec, "snappyUtf8", BinaryType)(text)
+  /** raw Snappy block → string (loud failure on malformed streams). */
+  def unsnappyUtf8(payload: Column): Column =
+    Native.call("unsnappy_utf8", SnappyCodec, "unsnappyUtf8", StringType)(payload)
 }

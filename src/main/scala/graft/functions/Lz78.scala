@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** LZ78 incremental parse (Ziv & Lempel 1978): the number of phrases
@@ -17,23 +14,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * replays the parse with a recursive CTE carrying the dictionary as
   * a growing string list.
   */
-case class Lz78Expr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "lz78_phrases"
-
-  override protected def nullSafeEval(input: Any): Any =
-    Lz78Expr.phrases(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Lz78Expr.phrases($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): Lz78Expr =
-    copy(child = newChild)
-}
-
 object Lz78Expr {
 
   /** Static forwarder target for generated Java code: phrase count of
@@ -61,7 +41,10 @@ object Lz78Expr {
     count
   }
 
+  /** [[phrases]] over a string column's value: the [[NativeCall]] target. */
+  def phrases(s: UTF8String): Long = phrases(s.toString)
+
   /** Column form. */
   def lz78Phrases(s: Column): Column =
-    ColumnBridge.column(Lz78Expr(ColumnBridge.expression(s)))
+    Native.call("lz78_phrases", Lz78Expr, "phrases", LongType)(s)
 }

@@ -2,9 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -225,39 +222,12 @@ object MarkdownText {
   }
 }
 
-/** (text, doc_id) → deterministic markdown document. */
-case class MarkdownFromText(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "markdown_from_text"
-  override protected def nullSafeEval(t: Any, id: Any): Any =
-    MarkdownText.encode(t.asInstanceOf[UTF8String], id.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (t, id) => s"graft.functions.MarkdownText.encode($t, $id)")
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): MarkdownFromText = copy(left = l, right = r)
-}
-
-/** markdown → struct(body, n_headings, n_fences, n_links, n_blocks). */
-case class MarkdownExtract(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MarkdownText.schema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "markdown_extract"
-  override protected def nullSafeEval(input: Any): Any =
-    MarkdownText.extractRow(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MarkdownText.extractRow($c)")
-  override protected def withNewChildInternal(c: Expression): MarkdownExtract =
-    copy(child = c)
-}
-
 /** Column-API face. */
 object MarkdownExprs {
+  /** (text, doc_id) → deterministic markdown document. */
   def markdownFromText(text: Column, docId: Column): Column =
-    ColumnBridge.column(MarkdownFromText(
-      ColumnBridge.expression(text), ColumnBridge.expression(docId)))
+    Native.call("markdown_from_text", MarkdownText, "encode", StringType)(text, docId)
+  /** markdown → struct(body, n_headings, n_fences, n_links, n_blocks). */
   def markdownExtract(md: Column): Column =
-    ColumnBridge.column(MarkdownExtract(ColumnBridge.expression(md)))
+    Native.call("markdown_extract", MarkdownText, "extractRow", MarkdownText.schema)(md)
 }

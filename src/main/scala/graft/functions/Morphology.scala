@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Binary mathematical morphology (Serra 1982) on a thresholded 8×8
   * raster with the 4-connected cross structuring element — erosion,
@@ -17,24 +14,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * The oracle replays the definitions pixel-by-pixel over an unnested
   * position grid.
   */
-case class MorphExpr(child: Expression, threshold: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "morphology"
-
-  override protected def nullSafeEval(input: Any): Any =
-    MorphExpr.masks(input.asInstanceOf[ArrayData], threshold)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MorphExpr.masks($c, $threshold)")
-
-  override protected def withNewChildInternal(newChild: Expression): MorphExpr =
-    copy(child = newChild)
-}
-
 object MorphExpr {
   private val NotLeftCol = 0xFEFEFEFEFEFEFEFEL
   private val NotRightCol = 0x7F7F7F7F7F7F7F7FL
@@ -62,6 +41,6 @@ object MorphExpr {
 
   /** Column form: `[on, eroded, dilated, opened]` over the raster. */
   def morphology(pixels: Column, threshold: Int): Column =
-    ColumnBridge.column(
-      MorphExpr(ColumnBridge.expression(pixels), threshold))
+    Native.call("morphology", MorphExpr, "masks",
+      ArrayType(LongType, containsNull = false), Seq(threshold))(pixels)
 }

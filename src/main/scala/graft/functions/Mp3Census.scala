@@ -4,9 +4,6 @@ import java.nio.charset.StandardCharsets.US_ASCII
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -166,37 +163,13 @@ object Mp3Census {
     StructField("duration_ms", LongType, nullable = false)))
 }
 
-/** doc_id → VBR MP3 payload with planted ID3v2.3 tags; codegen'd. */
-case class EncodeMp3FromId(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "encode_mp3_from_id"
-  override protected def nullSafeEval(input: Any): Any =
-    Mp3Census.encodeFromId(input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Mp3Census.encodeFromId($c)")
-  override protected def withNewChildInternal(c: Expression): EncodeMp3FromId =
-    copy(child = c)
-}
-
-/** MP3 payload → container census struct (tags, frames, duration). */
-case class Mp3CensusExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = Mp3Census.infoSchema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "mp3_census"
-  override protected def nullSafeEval(input: Any): Any =
-    Mp3Census.censusRow(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Mp3Census.censusRow($c)")
-  override protected def withNewChildInternal(c: Expression): Mp3CensusExpr =
-    copy(child = c)
-}
-
 /** Column-API face for the MP3 container census. */
 object Mp3Exprs {
+  /** doc_id → VBR MP3 payload with planted ID3v2.3 tags. */
   def encodeMp3FromId(id: Column): Column =
-    ColumnBridge.column(EncodeMp3FromId(ColumnBridge.expression(id)))
+    Native.call("encode_mp3_from_id", Mp3Census, "encodeFromId", BinaryType)(id)
 
+  /** MP3 payload → container census struct (tags, frames, duration). */
   def census(payload: Column): Column =
-    ColumnBridge.column(Mp3CensusExpr(ColumnBridge.expression(payload)))
+    Native.call("mp3_census", Mp3Census, "censusRow", Mp3Census.infoSchema)(payload)
 }

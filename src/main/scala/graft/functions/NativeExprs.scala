@@ -8,16 +8,15 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the hash/vector hot paths.
+/** Per-row kernels for the hash/vector hot paths.
   *
   * The composable forms (higher-order `transform`/`aggregate` lambdas, or
   * 32–64 parallel aggregate columns) are interpreted per element and
-  * generate very large plans; each of these expressions instead performs
-  * the whole per-row computation in one tight JVM loop and participates in
-  * whole-stage codegen via `doGenCode` (static-forwarder calls — the same
-  * pattern Spark's own expressions use). Measured effect: the dedup/ANN
-  * query family dropped from ~32 s to single-digit seconds at sf0.1
-  * (see Bench history).
+  * generate very large plans; each kernel instead performs the whole
+  * per-row computation in one tight JVM loop, called from whole-stage
+  * codegen through [[NativeCall]] ([[NativeExprs]] holds the column
+  * faces). Measured effect: the dedup/ANN query family dropped from ~32 s
+  * to single-digit seconds at sf0.1 (see Bench history).
   */
 object NativeHash {
   private val GOLDEN = 0x9e3779b97f4a7c15L
@@ -342,69 +341,6 @@ object NativeVec {
   }
 }
 
-case class TokenShingles(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "token_shingles"
-  override protected def nullSafeEval(input: Any): Any =
-    NativeHash.tokenShingles(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NativeHash.tokenShingles($c, $n)")
-  override protected def withNewChildInternal(c: Expression): TokenShingles = copy(child = c)
-}
-
-case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "minhash_sig"
-  override protected def nullSafeEval(input: Any): Any =
-    NativeHash.minhashSig(input.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NativeHash.minhashSig($c, $k)")
-  override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
-}
-
-case class MinHashSigPortable(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "minhash_sig_portable"
-  override protected def nullSafeEval(input: Any): Any =
-    NativeHash.minhashSigPortable(input.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NativeHash.minhashSigPortable($c, $k)")
-  override protected def withNewChildInternal(c: Expression): MinHashSigPortable = copy(child = c)
-}
-
-/** (a·b) mod 2^61-1 as a codegen'd binary expression — the 128-bit-split
-  * modular multiply ([[RollingMinHash.mulmod]]) lifted to column level, so
-  * integer hash chains can square/remix *within* whole-stage codegen
-  * (plain `a * b` overflows Long for 61-bit operands; an oracle replays
-  * the same product with 128-bit integers). */
-case class MulModP(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "mulmod_p"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    RollingMinHash.mulmod(a.asInstanceOf[Long], b.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.RollingMinHash.mulmod($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): MulModP = copy(left = l, right = r)
-}
-
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "simhash64"
-  override protected def nullSafeEval(input: Any): Any =
-    NativeHash.simhash64(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NativeHash.simhash64($c)")
-  override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
-}
-
 sealed trait VecBinary extends BinaryExpression {
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
@@ -416,54 +352,6 @@ sealed trait VecBinary extends BinaryExpression {
   }
   protected def aFloat: Boolean = f(left)
   protected def bFloat: Boolean = f(right)
-}
-
-/** Exact integer squared-L2 over quantized `array<bigint>` vectors —
-  * the k-means / PQ hot path as one tight codegen'd loop per row
-  * (zip_with + aggregate would walk the arrays through interpreted
-  * higher-order lambdas). */
-case class L2SqLong(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "l2sq_long"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    NativeVec.l2sqLong(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.NativeVec.l2sqLong($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): L2SqLong =
-    copy(left = l, right = r)
-}
-
-case class BlockMotionBest(first: Expression, second: Expression,
-    third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "block_motion_best"
-  override protected def nullSafeEval(f0: Any, f1: Any, blk: Any): Any =
-    NativeVec.blockMotionBest(f0.asInstanceOf[ArrayData],
-      f1.asInstanceOf[ArrayData], blk.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) =>
-      s"graft.functions.NativeVec.blockMotionBest($a, $b, $c)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): BlockMotionBest = copy(first = f, second = s, third = t)
-}
-
-case class SortedCountLE(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sorted_count_le"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    NativeVec.sortedCountLE(a.asInstanceOf[ArrayData], b.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.NativeVec.sortedCountLE($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedCountLE =
-    copy(left = l, right = r)
 }
 
 case class DotProductF(left: Expression, right: Expression) extends VecBinary {
@@ -557,6 +445,8 @@ case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
 
 /** Column-level entry points. */
 object NativeExprs {
+  private val longs = ArrayType(LongType, containsNull = false)
+
   def hyperplaneSigs(vec: Column, planes: Array[Array[Double]],
       bitsPerTable: Int): Column =
     ColumnBridge.column(
@@ -565,27 +455,35 @@ object NativeExprs {
     ColumnBridge.column(
       NearestCentroid(ColumnBridge.expression(vec), centroids))
   def tokenShingles(c: Column, n: Int): Column =
-    ColumnBridge.column(TokenShingles(ColumnBridge.expression(c), n))
+    Native.call("token_shingles", NativeHash, "tokenShingles",
+      ArrayType(StringType, containsNull = false), Seq(n))(c)
   def minhashSig(shingles: Column, k: Int): Column =
-    ColumnBridge.column(MinHashSig(ColumnBridge.expression(shingles), k))
+    Native.call("minhash_sig", NativeHash, "minhashSig", longs, Seq(k))(shingles)
   def minhashSigPortable(shingles: Column, k: Int): Column =
-    ColumnBridge.column(MinHashSigPortable(ColumnBridge.expression(shingles), k))
+    Native.call("minhash_sig_portable", NativeHash, "minhashSigPortable", longs,
+      Seq(k))(shingles)
+  /** (a·b) mod 2^61-1 — the 128-bit-split modular multiply
+    * ([[RollingMinHash.mulmod]]) lifted to column level, so integer hash
+    * chains can square/remix within whole-stage codegen (plain `a * b`
+    * overflows Long for 61-bit operands; an oracle replays the same
+    * product with 128-bit integers). */
   def mulmodP(a: Column, b: Column): Column =
-    ColumnBridge.column(MulModP(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Native.call("mulmod_p", RollingMinHash, "mulmod", LongType)(a, b)
   def simhash64(tokens: Column): Column =
-    ColumnBridge.column(SimHash64(ColumnBridge.expression(tokens)))
+    Native.call("simhash64", NativeHash, "simhash64", LongType)(tokens)
   def dotProduct(a: Column, b: Column): Column =
     ColumnBridge.column(DotProductF(ColumnBridge.expression(a), ColumnBridge.expression(b)))
   def cosineSim(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSimF(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  /** Exact integer squared-L2 over quantized `array<bigint>` vectors — the
+    * k-means / PQ hot path as one tight loop per row (zip_with + aggregate
+    * would walk the arrays through interpreted higher-order lambdas). */
   def l2sqLong(a: Column, b: Column): Column =
-    ColumnBridge.column(L2SqLong(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Native.call("l2sq_long", NativeVec, "l2sqLong", LongType)(a, b)
   def sortedCountLE(arr: Column, x: Column): Column =
-    ColumnBridge.column(SortedCountLE(
-      ColumnBridge.expression(arr), ColumnBridge.expression(x)))
+    Native.call("sorted_count_le", NativeVec, "sortedCountLE", LongType)(arr, x)
   def blockMotionBest(f0: Column, f1: Column, blk: Column): Column =
-    ColumnBridge.column(BlockMotionBest(ColumnBridge.expression(f0),
-      ColumnBridge.expression(f1), ColumnBridge.expression(blk)))
+    Native.call("block_motion_best", NativeVec, "blockMotionBest", longs)(f0, f1, blk)
   def hyperplaneSigsLong(vec: Column, planes: Array[Array[Long]],
       bitsPerTable: Int): Column =
     ColumnBridge.column(
@@ -657,19 +555,4 @@ object CharGramStats {
     }
     org.apache.spark.sql.catalyst.InternalRow(seen.size(), min, max)
   }
-}
-
-/** text → struct(n_grams, min_gram, max_gram) for char n-grams. */
-case class CharGramStatsExpr(child: Expression, n: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = CharGramStats.schema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "char_gram_stats"
-  override protected def nullSafeEval(input: Any): Any =
-    CharGramStats.stats(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.CharGramStats.stats($c, $n)")
-  override protected def withNewChildInternal(c: Expression): CharGramStatsExpr =
-    copy(child = c)
 }

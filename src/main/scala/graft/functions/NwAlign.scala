@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Needleman–Wunsch global alignment score (match +2, mismatch −1,
@@ -17,31 +14,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * the within-row sequential dependency with the prefix-max identity
   * `new[j] = max_k≤j (cand[k] + 2k) − 2j`.
   */
-case class NwAlignExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "nw_align"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    NwAlignExpr.score(a.asInstanceOf[UTF8String].toString,
-      b.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.NwAlignExpr.score($a.toString(), $b.toString())")
-
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): NwAlignExpr = copy(left = l, right = r)
-}
-
 object NwAlignExpr {
   final val Match = 2L
   final val Mismatch = -1L
   final val Gap = -2L
 
-  /** Static forwarder target for generated Java code. */
   def score(a: String, b: String): Long = {
     val n = a.length
     val m = b.length
@@ -67,8 +44,10 @@ object NwAlignExpr {
     prev(m)
   }
 
+  /** [[score]] over string column values: the [[NativeCall]] target. */
+  def score(a: UTF8String, b: UTF8String): Long = score(a.toString, b.toString)
+
   /** Column form. */
   def nwAlign(a: Column, b: Column): Column =
-    ColumnBridge.column(NwAlignExpr(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Native.call("nw_align", NwAlignExpr, "score", LongType)(a, b)
 }

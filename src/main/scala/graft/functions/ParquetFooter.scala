@@ -2,9 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -276,25 +274,10 @@ object ParquetFooter {
   }
 }
 
-/** full parquet file bytes → array<struct> footer census rows. */
-case class ParquetFooterCensus(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(ParquetFooter.rowSchema, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "parquet_footer_census"
-  override protected def nullSafeEval(input: Any): Any =
-    ParquetFooter.censusRows(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ParquetFooter.censusRows($c)")
-  override protected def withNewChildInternal(c: Expression)
-      : ParquetFooterCensus = copy(child = c)
-}
-
 /** Column-API face. */
 object ParquetFooterExprs {
+  /** full parquet file bytes → array<struct> footer census rows. */
   def footerCensus(fileBytes: Column): Column =
-    ColumnBridge.column(ParquetFooterCensus(ColumnBridge.expression(fileBytes)))
+    Native.call("parquet_footer_census", ParquetFooter, "censusRows",
+      ArrayType(ParquetFooter.rowSchema, containsNull = false))(fileBytes)
 }

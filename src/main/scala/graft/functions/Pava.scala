@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Weighted isotonic regression over one key's binned observations —
   * the Pool-Adjacent-Violators Algorithm (PAVA; Barlow, Bartholomew,
@@ -29,22 +26,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * `fit_i = max_{j<=i} min_{k>=i} mean(j..k)` — a genuinely different
   * algorithm whose agreement is the correctness gate.
   */
-case class PavaFitExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "pava_fit"
-
-  override protected def nullSafeEval(input: Any): Any =
-    PavaFitExpr.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PavaFitExpr.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PavaFitExpr =
-    copy(child = newChild)
-}
-
 object PavaFitExpr {
 
   /** Static forwarder target for generated Java code. Struct fields are
@@ -92,5 +73,6 @@ object PavaFitExpr {
   /** Column form: isotonic fit for a bin-sorted `array<struct<bin, w,
     * wy>>`, returned aligned with the input order. */
   def pavaFit(sortedBins: Column): Column =
-    ColumnBridge.column(PavaFitExpr(ColumnBridge.expression(sortedBins)))
+    Native.call("pava_fit", PavaFitExpr, "compute",
+      ArrayType(DoubleType, containsNull = false))(sortedBins)
 }

@@ -217,7 +217,7 @@ object PngCodec {
     null
   }
 
-  /** Static forwarders for the codegen'd expressions below. */
+  /** The [[PngExprs]] call targets. */
   def encodeGrayWithMeta(text: org.apache.spark.unsafe.types.UTF8String,
       lang: org.apache.spark.unsafe.types.UTF8String,
       source: org.apache.spark.unsafe.types.UTF8String,
@@ -344,62 +344,19 @@ object PngCodec {
   }
 }
 
-/** Text + (lang, source) metadata → PNG-gray payload with tEXt chunks
-  * ([[PngCodec.encodeGrayWithMeta]]); codegen'd via static forwarder. */
-case class EncodePngWithMeta(first: org.apache.spark.sql.catalyst.expressions.Expression,
-    second: org.apache.spark.sql.catalyst.expressions.Expression,
-    third: org.apache.spark.sql.catalyst.expressions.Expression,
-    imgWidth: Int, imgHeight: Int)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  import org.apache.spark.sql.catalyst.expressions.Expression
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-  import org.apache.spark.sql.types.{BinaryType, DataType}
-  import org.apache.spark.unsafe.types.UTF8String
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "encode_png_with_meta"
-  override protected def nullSafeEval(t: Any, l: Any, s: Any): Any =
-    PngCodec.encodeGrayWithMeta(t.asInstanceOf[UTF8String],
-      l.asInstanceOf[UTF8String], s.asInstanceOf[UTF8String],
-      imgWidth, imgHeight)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, l, s) =>
-      s"graft.functions.PngCodec.encodeGrayWithMeta($t, $l, $s, $imgWidth, $imgHeight)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): EncodePngWithMeta = copy(first = f, second = s, third = t)
-}
-
-/** PNG payload → value of the tEXt chunk with keyword `key` (null when
-  * absent); [[PngCodec.textValueUtf8]], CRC-checked. */
-case class PngTextValue(child: org.apache.spark.sql.catalyst.expressions.Expression,
-    key: String)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.catalyst.expressions.Expression
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-  import org.apache.spark.sql.types.{DataType, StringType}
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "png_text_value"
-  override protected def nullSafeEval(input: Any): Any =
-    PngCodec.textValueUtf8(input.asInstanceOf[Array[Byte]], key)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PngCodec.textValueUtf8($c, "$key");
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(c: org.apache.spark.sql.catalyst.expressions.Expression): PngTextValue =
-    copy(child = c)
-}
-
 /** Column-API face for the PNG metadata expressions. */
 object PngExprs {
   import org.apache.spark.sql.Column
-  import org.apache.spark.sql.graft.ColumnBridge
+  import org.apache.spark.sql.types.{BinaryType, StringType}
+  /** Text + (lang, source) metadata → PNG-gray payload with tEXt chunks
+    * ([[PngCodec.encodeGrayWithMeta]]). */
   def encodePngGrayWithMeta(text: Column, lang: Column, source: Column,
       width: Int, height: Int): Column =
-    ColumnBridge.column(EncodePngWithMeta(ColumnBridge.expression(text),
-      ColumnBridge.expression(lang), ColumnBridge.expression(source),
-      width, height))
+    Native.call("encode_png_with_meta", PngCodec, "encodeGrayWithMeta",
+      BinaryType, Seq(width, height))(text, lang, source)
+  /** PNG payload → value of the tEXt chunk with keyword `key` (null when
+    * absent); [[PngCodec.textValueUtf8]], CRC-checked. */
   def pngTextValue(payload: Column, key: String): Column =
-    ColumnBridge.column(PngTextValue(ColumnBridge.expression(payload), key))
+    Native.call("png_text_value", PngCodec, "textValueUtf8",
+      StringType, Seq(key), returnNullable = true)(payload)
 }

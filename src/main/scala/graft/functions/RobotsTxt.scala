@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.types.BooleanType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** robots.txt parsing and matching per RFC 9309 (the Robots Exclusion
@@ -122,27 +119,17 @@ object RobotsTxt {
     }
     verdict
   }
-}
 
-/** (robots_txt, path) → allowed for product token "graftbot". */
-case class RobotsAllowed(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "robots_allowed"
-  override protected def nullSafeEval(txt: Any, path: Any): Any =
-    RobotsTxt.isAllowed(txt.asInstanceOf[UTF8String].toString, "graftbot",
-      path.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, p) =>
-      s"""graft.functions.RobotsTxt.isAllowed($t.toString(), "graftbot", $p.toString())""")
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): RobotsAllowed = copy(left = l, right = r)
+  /** [[isAllowed]] for product token "graftbot" over string column
+    * values: the [[NativeCall]] target. */
+  def graftbotAllowed(robotsTxt: UTF8String, path: UTF8String): Boolean =
+    isAllowed(robotsTxt.toString, "graftbot", path.toString)
 }
 
 /** Column-API face. */
 object RobotsExprs {
+  /** (robots_txt, path) → allowed for product token "graftbot". */
   def robotsAllowed(robotsTxt: Column, path: Column): Column =
-    ColumnBridge.column(RobotsAllowed(
-      ColumnBridge.expression(robotsTxt), ColumnBridge.expression(path)))
+    Native.call("robots_allowed", RobotsTxt, "graftbotAllowed", BooleanType)(
+      robotsTxt, path)
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Document fingerprint via Karp-Rabin rolling hash: the minimum of all
@@ -15,29 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * k-codepoint run with the minimal hash collide, making this a cheap
   * pre-cluster key for dedup.
   *
-  * Implemented as a native Catalyst `Expression` with `doGenCode` so it
-  * participates in whole-stage codegen (no UDF serialization, no row
-  * boxing) — the preferred extension point when built-ins can't express
-  * the computation (SURVEY.md §7.3 preference order).
+  * Runs as a [[NativeCall]] inside whole-stage codegen (no UDF
+  * serialization, no row boxing) — the preferred extension point when
+  * built-ins can't express the computation (SURVEY.md §7.3 preference
+  * order).
   */
-case class RollingMinHash(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rolling_min_hash"
-
-  override protected def nullSafeEval(input: Any): Any =
-    RollingMinHash.compute(input.asInstanceOf[UTF8String].toString, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.RollingMinHash.compute($c.toString(), $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): RollingMinHash =
-    copy(child = newChild)
-}
-
 object RollingMinHash {
   // polynomial base/modulus: Mersenne prime 2^61-1 keeps products in range
   // via the standard fold (hi/lo split not needed at base < 2^31).
@@ -45,7 +24,6 @@ object RollingMinHash {
   /** Mersenne-prime modulus 2^61-1, shared by every portable hash here. */
   val M: Long = (1L << 61) - 1
 
-  /** Static forwarder target for generated Java code. */
   def compute(s: String, k: Int): Long = {
     val cps = s.codePoints().toArray
     val n = cps.length
@@ -83,9 +61,12 @@ object RollingMinHash {
     r
   }
 
+  /** [[compute]] over a string column's value: the [[NativeCall]] target. */
+  def compute(s: UTF8String, k: Int): Long = compute(s.toString, k)
+
   /** Column form. */
   def rollingMinHash(c: Column, k: Int = 8): Column =
-    ColumnBridge.column(RollingMinHash(ColumnBridge.expression(c), k))
+    Native.call("rolling_min_hash", RollingMinHash, "compute", LongType, Seq(k))(c)
 }
 
 /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03): the
@@ -98,30 +79,10 @@ object RollingMinHash {
   * as [[RollingMinHash]] (codepoints, polynomial mod 2^61-1), so a SQL
   * oracle recomputes the exact fingerprint set with a windowed MIN.
   * Returns the fingerprints sorted ascending. */
-case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "winnow_fingerprints"
-
-  override protected def nullSafeEval(input: Any): Any =
-    WinnowFingerprints.compute(input.asInstanceOf[UTF8String].toString, k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.WinnowFingerprints.compute($c.toString(), $k, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowFingerprints =
-    copy(child = newChild)
-}
-
 object WinnowFingerprints {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
 
-  /** Static forwarder target for generated Java code. One pass for the
-    * k-gram hashes, one monotonic-deque pass for the window minima. */
+  /** One pass for the k-gram hashes, one monotonic-deque pass for the window minima. */
   def compute(s: String, k: Int, w: Int): GenericArrayData = {
     val B = 1000003L
     val M = RollingMinHash.M
@@ -172,9 +133,14 @@ object WinnowFingerprints {
     new GenericArrayData(out.toArray.map(_.asInstanceOf[Any]))
   }
 
+  /** [[compute]] over a string column's value: the [[NativeCall]] target. */
+  def compute(s: UTF8String, k: Int, w: Int): GenericArrayData =
+    compute(s.toString, k, w)
+
   /** Column form. */
   def winnow(c: Column, k: Int = 8, w: Int = 16): Column =
-    ColumnBridge.column(WinnowFingerprints(ColumnBridge.expression(c), k, w))
+    Native.call("winnow_fingerprints", WinnowFingerprints, "compute",
+      ArrayType(LongType, containsNull = false), Seq(k, w))(c)
 }
 
 /** Content-defined chunk cut points: the 1-based end positions (in
@@ -187,30 +153,9 @@ object WinnowFingerprints {
   * [[RollingMinHash]] (codepoints, mod 2^61-1), so a SQL oracle
   * recomputes the exact cut list. Expected chunk length ≈ 2^maskBits
   * + w. */
-case class CdcCuts(child: Expression, w: Int, maskBits: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "cdc_cuts"
-
-  override protected def nullSafeEval(input: Any): Any =
-    CdcCuts.compute(input.asInstanceOf[UTF8String].toString, w, maskBits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.CdcCuts.compute($c.toString(), $w, $maskBits)")
-
-  override protected def withNewChildInternal(newChild: Expression): CdcCuts =
-    copy(child = newChild)
-}
-
 object CdcCuts {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
 
-  /** Static forwarder target for generated Java code. */
   def compute(s: String, w: Int, maskBits: Int): GenericArrayData = {
     val B = 1000003L
     val M = RollingMinHash.M
@@ -243,7 +188,12 @@ object CdcCuts {
     new GenericArrayData(cuts.toArray)
   }
 
+  /** [[compute]] over a string column's value: the [[NativeCall]] target. */
+  def compute(s: UTF8String, w: Int, maskBits: Int): GenericArrayData =
+    compute(s.toString, w, maskBits)
+
   /** Column form. */
   def cdcCuts(c: Column, w: Int = 16, maskBits: Int = 6): Column =
-    ColumnBridge.column(CdcCuts(ColumnBridge.expression(c), w, maskBits))
+    Native.call("cdc_cuts", CdcCuts, "compute",
+      ArrayType(IntegerType, containsNull = false), Seq(w, maskBits))(c)
 }

@@ -4,10 +4,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
+import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Gzip shard codec — the compressed-shard plumbing for JSONL
@@ -17,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * trailer — a corrupt shard fails the gunzip loudly rather than
   * yielding truncated text.
   *
-  * Both directions run as codegen'd unary expressions so shard
+  * Both directions are [[NativeCall]]s ([[ShardExprs]]), so shard
   * assembly/parse stays inside whole-stage codegen. Compression is
   * byte-deterministic for a fixed JDK, but — same policy as the PNG
   * codec — compressed LENGTHS are never projected into gated results;
@@ -51,37 +48,13 @@ object ShardCodec {
   }
 }
 
-/** string → gzip-compressed binary. */
-case class GzipUtf8(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "gzip_utf8"
-  override protected def nullSafeEval(input: Any): Any =
-    ShardCodec.gzipUtf8(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ShardCodec.gzipUtf8($c)")
-  override protected def withNewChildInternal(c: Expression): GzipUtf8 =
-    copy(child = c)
-}
-
-/** gzip binary → string (loud failure on corrupt members). */
-case class GunzipUtf8(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "gunzip_utf8"
-  override protected def nullSafeEval(input: Any): Any =
-    ShardCodec.gunzipUtf8(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ShardCodec.gunzipUtf8($c)")
-  override protected def withNewChildInternal(c: Expression): GunzipUtf8 =
-    copy(child = c)
-}
-
-/** Column-API face for the shard expressions. */
+/** Column-API face for the shard codec. */
 object ShardExprs {
+  /** string → gzip-compressed binary. */
   def gzipUtf8(text: Column): Column =
-    ColumnBridge.column(GzipUtf8(ColumnBridge.expression(text)))
+    Native.call("gzip_utf8", ShardCodec, "gzipUtf8", BinaryType)(text)
 
+  /** gzip binary → string (loud failure on corrupt members). */
   def gunzipUtf8(payload: Column): Column =
-    ColumnBridge.column(GunzipUtf8(ColumnBridge.expression(payload)))
+    Native.call("gunzip_utf8", ShardCodec, "gunzipUtf8", StringType)(payload)
 }

@@ -2,9 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -168,37 +165,13 @@ object Sitemap {
   }
 }
 
-/** doc_id → deterministic sitemap XML (text input is unused — the
-  * rules are pure doc_id — but kept for the fixture-shape symmetry). */
-case class SitemapFromId(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sitemap_from_id"
-  override protected def nullSafeEval(input: Any): Any =
-    Sitemap.encode(input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Sitemap.encode($c)")
-  override protected def withNewChildInternal(c: Expression): SitemapFromId =
-    copy(child = c)
-}
-
-/** sitemap XML → census struct. */
-case class SitemapCensus(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = Sitemap.schema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sitemap_census"
-  override protected def nullSafeEval(input: Any): Any =
-    Sitemap.parseRow(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Sitemap.parseRow($c)")
-  override protected def withNewChildInternal(c: Expression): SitemapCensus =
-    copy(child = c)
-}
-
 /** Column-API face. */
 object SitemapExprs {
+  /** doc_id → deterministic sitemap XML (text input is unused — the
+    * rules are pure doc_id — but kept for the fixture-shape symmetry). */
   def sitemapFromId(docId: Column): Column =
-    ColumnBridge.column(SitemapFromId(ColumnBridge.expression(docId)))
+    Native.call("sitemap_from_id", Sitemap, "encode", StringType)(docId)
+  /** sitemap XML → census struct. */
   def sitemapCensus(xml: Column): Column =
-    ColumnBridge.column(SitemapCensus(ColumnBridge.expression(xml)))
+    Native.call("sitemap_census", Sitemap, "parseRow", Sitemap.schema)(xml)
 }

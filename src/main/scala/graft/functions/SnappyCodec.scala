@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.unsafe.types.UTF8String
+
 /** Pure-JVM Snappy (raw block format) codec — the other half of the
   * Hadoop-ecosystem shard-codec pair next to [[Lz4Codec]]: parquet and
   * sequence files default to Snappy in most distributions, so a
@@ -171,4 +173,9 @@ object SnappyCodec {
     var k = 0
     while (k < len) { out(o + k) = out(o - off + k); k += 1 }
   }
+
+  /** string → raw Snappy block: the [[Lz4SnappyExprs.snappyUtf8]] call. */
+  def snappyUtf8(s: UTF8String): Array[Byte] = compress(s.getBytes)
+  /** raw Snappy block → string: the [[Lz4SnappyExprs.unsnappyUtf8]] call. */
+  def unsnappyUtf8(b: Array[Byte]): UTF8String = UTF8String.fromBytes(decompress(b))
 }

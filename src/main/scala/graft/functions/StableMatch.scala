@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Gale–Shapley deferred acceptance (Gale & Shapley 1962) over dense
   * 0..n−1 ids — the stable-assignment primitive (suppliers to demand
@@ -21,25 +18,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * (n² longs); `rankS` — acceptor-major rank of each proposer
   * (n² longs). Output: matched acceptor id per proposer (n longs).
   */
-case class StableMatchExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "stable_match"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    StableMatchExpr.matchAll(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.StableMatchExpr.matchAll($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): StableMatchExpr = copy(left = l, right = r)
-}
-
 object StableMatchExpr {
 
   /** Static forwarder target for generated Java code. */
@@ -68,6 +46,6 @@ object StableMatchExpr {
 
   /** Column form over flattened n×n preference/rank matrices. */
   def stableMatch(prefC: Column, rankS: Column): Column =
-    ColumnBridge.column(StableMatchExpr(
-      ColumnBridge.expression(prefC), ColumnBridge.expression(rankS)))
+    Native.call("stable_match", StableMatchExpr, "matchAll",
+      ArrayType(LongType, containsNull = false))(prefC, rankS)
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distinct-substring count via a suffix automaton (Blumer et al.
@@ -16,27 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * completely different computation whose agreement the hash gate
   * certifies, and the reason the input is a bounded prefix.
   */
-case class DistinctSubstringsExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "distinct_substrings"
-
-  override protected def nullSafeEval(input: Any): Any =
-    DistinctSubstringsExpr.count(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.DistinctSubstringsExpr.count($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : DistinctSubstringsExpr = copy(child = newChild)
-}
-
 object DistinctSubstringsExpr {
 
-  /** Static forwarder target for generated Java code: suffix-automaton
-    * construction, O(n·alphabet). */
+  /** Suffix-automaton construction, O(n·alphabet). */
   def count(p: String): Long = {
     val maxn = 2 * p.length + 5
     val link = new Array[Int](maxn)
@@ -77,7 +56,10 @@ object DistinctSubstringsExpr {
     total
   }
 
+  /** [[count]] over a string column's value: the [[NativeCall]] target. */
+  def count(p: UTF8String): Long = count(p.toString)
+
   /** Column form. */
   def distinctSubstrings(s: Column): Column =
-    ColumnBridge.column(DistinctSubstringsExpr(ColumnBridge.expression(s)))
+    Native.call("distinct_substrings", DistinctSubstringsExpr, "count", LongType)(s)
 }

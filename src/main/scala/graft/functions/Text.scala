@@ -37,9 +37,8 @@ object Text {
     * [[CharGramStats]] for why the composable charShingles form must
     * not feed multiple consuming aggregates. */
   def charGramStats(c: Column, n: Int): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      CharGramStatsExpr(
-        org.apache.spark.sql.graft.ColumnBridge.expression(c), n))
+    Native.call("char_gram_stats", CharGramStats, "stats", CharGramStats.schema,
+      Seq(n))(c)
 
   def charShingles(c: Column, n: Int): Column = {
     val s = lower(normalizeWs(c))

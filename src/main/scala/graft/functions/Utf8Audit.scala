@@ -2,9 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -124,39 +121,12 @@ object Utf8Audit {
   }
 }
 
-/** (text, doc_id) → byte payload with the planted corruption tail. */
-case class Utf8Payload(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "utf8_payload"
-  override protected def nullSafeEval(t: Any, id: Any): Any =
-    Utf8Audit.payload(t.asInstanceOf[UTF8String], id.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (t, id) => s"graft.functions.Utf8Audit.payload($t, $id)")
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): Utf8Payload = copy(left = l, right = r)
-}
-
-/** bytes → UTF-8 audit struct. */
-case class Utf8AuditExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = Utf8Audit.schema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "utf8_audit"
-  override protected def nullSafeEval(input: Any): Any =
-    Utf8Audit.audit(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Utf8Audit.audit($c)")
-  override protected def withNewChildInternal(c: Expression): Utf8AuditExpr =
-    copy(child = c)
-}
-
 /** Column-API face. */
 object Utf8Exprs {
+  /** (text, doc_id) → byte payload with the planted corruption tail. */
   def utf8Payload(text: Column, docId: Column): Column =
-    ColumnBridge.column(Utf8Payload(
-      ColumnBridge.expression(text), ColumnBridge.expression(docId)))
+    Native.call("utf8_payload", Utf8Audit, "payload", BinaryType)(text, docId)
+  /** bytes → UTF-8 audit struct. */
   def utf8Audit(payload: Column): Column =
-    ColumnBridge.column(Utf8AuditExpr(ColumnBridge.expression(payload)))
+    Native.call("utf8_audit", Utf8Audit, "audit", Utf8Audit.schema)(payload)
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** V-optimal histogram error curve over one key's ordered frequency
   * series — for each bucket budget `b = 1..maxB`, the minimum total
@@ -28,23 +25,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * per budget is unique (it is an optimum), making the curve
   * tie-safe even though the optimal boundaries may not be.
   */
-case class VOptCurveExpr(child: Expression, maxB: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "voptimal_curve"
-
-  override protected def nullSafeEval(input: Any): Any =
-    VOptCurveExpr.compute(input.asInstanceOf[ArrayData], maxB)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VOptCurveExpr.compute($c, $maxB)")
-
-  override protected def withNewChildInternal(newChild: Expression): VOptCurveExpr =
-    copy(child = newChild)
-}
-
 object VOptCurveExpr {
 
   /** Static forwarder target for generated Java code. */
@@ -101,6 +81,6 @@ object VOptCurveExpr {
   /** Column form: SSE curve for b = 1..maxB over a bucket-ordered
     * `array<long>` frequency series. */
   def voptCurve(orderedCounts: Column, maxB: Int): Column =
-    ColumnBridge.column(
-      VOptCurveExpr(ColumnBridge.expression(orderedCounts), maxB))
+    Native.call("voptimal_curve", VOptCurveExpr, "compute",
+      ArrayType(DoubleType, containsNull = false), Seq(maxB))(orderedCounts)
 }

@@ -4,10 +4,7 @@ import java.nio.charset.StandardCharsets.US_ASCII
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -201,76 +198,27 @@ object VideoCodec {
   }
 }
 
-/** Text → Y4M payload ([[VideoCodec.encodeFromText]]); codegen'd. */
-case class EncodeY4mFromText(child: Expression, imgWidth: Int,
-    imgHeight: Int, nFrames: Int, omitC: Boolean) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "encode_y4m_from_text"
-  override protected def nullSafeEval(input: Any): Any =
-    VideoCodec.encodeFromText(input.asInstanceOf[UTF8String], imgWidth,
-      imgHeight, nFrames, omitC)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VideoCodec.encodeFromText($c, $imgWidth, $imgHeight, $nFrames, $omitC)")
-  override protected def withNewChildInternal(c: Expression): EncodeY4mFromText =
-    copy(child = c)
-}
-
-/** Y4M payload → integer header/plane statistics ([[VideoCodec.statsRow]]). */
-case class VideoStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = VideoCodec.statsSchema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "video_stats"
-  override protected def nullSafeEval(input: Any): Any =
-    VideoCodec.statsRow(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VideoCodec.statsRow($c)")
-  override protected def withNewChildInternal(c: Expression): VideoStats =
-    copy(child = c)
-}
-
-/** Y4M payload → per-frame luma sums (array<long>) for frame-level
-  * composition ([[VideoCodec.frameYSums]]). */
-case class Y4mFrameYSums(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "y4m_frame_y_sums"
-  override protected def nullSafeEval(input: Any): Any =
-    VideoCodec.frameYSums(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VideoCodec.frameYSums($c)")
-  override protected def withNewChildInternal(c: Expression): Y4mFrameYSums =
-    copy(child = c)
-}
-
-/** Y4M payload → per-consecutive-frame luma abs-difference sums
-  * (array<long>, length n_frames − 1) — the scene-cut / temporal-
-  * redundancy signal ([[VideoCodec.frameYDeltas]]). */
-case class Y4mFrameYDeltas(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "y4m_frame_y_deltas"
-  override protected def nullSafeEval(input: Any): Any =
-    VideoCodec.frameYDeltas(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VideoCodec.frameYDeltas($c)")
-  override protected def withNewChildInternal(c: Expression): Y4mFrameYDeltas =
-    copy(child = c)
-}
-
 object VideoExprs {
+  /** Text → Y4M payload ([[VideoCodec.encodeFromText]]). */
   def encodeY4mFromText(text: Column, width: Int, height: Int,
       nFrames: Int, omitC: Boolean): Column =
-    ColumnBridge.column(EncodeY4mFromText(ColumnBridge.expression(text),
-      width, height, nFrames, omitC))
+    Native.call("encode_y4m_from_text", VideoCodec, "encodeFromText",
+      BinaryType, Seq(width, height, nFrames, omitC))(text)
 
+  /** Y4M payload → integer header/plane statistics ([[VideoCodec.statsRow]]). */
   def videoStats(payload: Column): Column =
-    ColumnBridge.column(VideoStats(ColumnBridge.expression(payload)))
+    Native.call("video_stats", VideoCodec, "statsRow", VideoCodec.statsSchema)(payload)
 
+  /** Y4M payload → per-frame luma sums (array<long>) for frame-level
+    * composition ([[VideoCodec.frameYSums]]). */
   def frameYSums(payload: Column): Column =
-    ColumnBridge.column(Y4mFrameYSums(ColumnBridge.expression(payload)))
+    Native.call("y4m_frame_y_sums", VideoCodec, "frameYSums",
+      ArrayType(LongType, containsNull = false))(payload)
 
+  /** Y4M payload → per-consecutive-frame luma abs-difference sums
+    * (array<long>, length n_frames − 1) — the scene-cut / temporal-
+    * redundancy signal ([[VideoCodec.frameYDeltas]]). */
   def frameYDeltas(payload: Column): Column =
-    ColumnBridge.column(Y4mFrameYDeltas(ColumnBridge.expression(payload)))
+    Native.call("y4m_frame_y_deltas", VideoCodec, "frameYDeltas",
+      ArrayType(LongType, containsNull = false))(payload)
 }

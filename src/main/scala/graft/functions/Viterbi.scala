@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Viterbi decoding (Viterbi 1967; Rabiner 1989 tutorial form) of a
@@ -26,22 +23,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Input: `array<long>` of 0/1 observations. Output: the decoded
   * state path as a '0'/'1' string of the same length.
   */
-case class ViterbiExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "viterbi_decode"
-
-  override protected def nullSafeEval(input: Any): Any =
-    ViterbiExpr.decode(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ViterbiExpr.decode($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ViterbiExpr =
-    copy(child = newChild)
-}
-
 object ViterbiExpr {
   final val Stay = 1L
   final val Switch = 3L
@@ -81,5 +62,5 @@ object ViterbiExpr {
 
   /** Column form: decoded state path over an `array<long>` of 0/1. */
   def viterbi(obs: Column): Column =
-    ColumnBridge.column(ViterbiExpr(ColumnBridge.expression(obs)))
+    Native.call("viterbi_decode", ViterbiExpr, "decode", StringType)(obs)
 }

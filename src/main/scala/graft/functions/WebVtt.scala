@@ -2,9 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -139,38 +136,12 @@ object WebVtt {
   }
 }
 
-/** (text, doc_id) → deterministic WebVTT track. */
-case class VttFromText(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "vtt_from_text"
-  override protected def nullSafeEval(t: Any, id: Any): Any =
-    WebVtt.encode(t.asInstanceOf[UTF8String], id.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, id) => s"graft.functions.WebVtt.encode($t, $id)")
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): VttFromText = copy(left = l, right = r)
-}
-
-/** vtt text → cue census struct. */
-case class VttCensus(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = WebVtt.schema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "vtt_census"
-  override protected def nullSafeEval(input: Any): Any =
-    WebVtt.parseRow(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WebVtt.parseRow($c)")
-  override protected def withNewChildInternal(c: Expression): VttCensus =
-    copy(child = c)
-}
-
 /** Column-API face. */
 object VttExprs {
+  /** (text, doc_id) → deterministic WebVTT track. */
   def vttFromText(text: Column, docId: Column): Column =
-    ColumnBridge.column(VttFromText(
-      ColumnBridge.expression(text), ColumnBridge.expression(docId)))
+    Native.call("vtt_from_text", WebVtt, "encode", StringType)(text, docId)
+  /** vtt text → cue census struct. */
   def vttCensus(vtt: Column): Column =
-    ColumnBridge.column(VttCensus(ColumnBridge.expression(vtt)))
+    Native.call("vtt_census", WebVtt, "parseRow", WebVtt.schema)(vtt)
 }

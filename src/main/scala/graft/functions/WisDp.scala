@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Weighted interval scheduling DP over one key's interval list — the
   * classic O(n log n) recurrence `dp[i] = max(dp[i−1], w_i + dp[p(i)])`
@@ -22,22 +19,6 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * Returns the maximum total weight of any non-overlapping subset
   * (touching intervals — `e_j ≤ s_i` — are compatible).
   */
-case class WisDpExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "wis_dp"
-
-  override protected def nullSafeEval(input: Any): Any =
-    WisDpExpr.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WisDpExpr.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): WisDpExpr =
-    copy(child = newChild)
-}
-
 object WisDpExpr {
 
   /** Static forwarder target for generated Java code. Struct fields are
@@ -76,5 +57,5 @@ object WisDpExpr {
 
   /** Column form. */
   def wisDp(sortedIntervals: Column): Column =
-    ColumnBridge.column(WisDpExpr(ColumnBridge.expression(sortedIntervals)))
+    Native.call("wis_dp", WisDpExpr, "compute", LongType)(sortedIntervals)
 }

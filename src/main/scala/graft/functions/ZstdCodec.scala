@@ -1,5 +1,9 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+
 /** Pure-JVM Zstandard frame codec (RFC 8878) for RAW and RLE blocks,
   * plus xxHash64 — the third shard codec next to [[ShardCodec]] (gzip)
   * and [[Lz4Codec]]/[[SnappyCodec]]: zstd is the modern corpus default
@@ -215,4 +219,24 @@ object ZstdCodec {
       "zstd: unexpected descriptor")
     le32(frame, 5).toLong & 0xFFFFFFFFL
   }
+
+  /** string → zstd frame: the [[ZstdExprs.zstdUtf8]] call. */
+  def zstdUtf8(s: UTF8String): Array[Byte] = compressFrame(s.getBytes)
+  /** zstd frame → string: the [[ZstdExprs.unzstdUtf8]] call. */
+  def unzstdUtf8(b: Array[Byte]): UTF8String =
+    UTF8String.fromBytes(decompressFrame(b))
+}
+
+/** Column faces of [[ZstdCodec]]: one JVM call per row inside
+  * whole-stage codegen. */
+object ZstdExprs {
+  /** string → zstd frame (RAW/RLE blocks, xxh64 checksum). */
+  def zstdUtf8(text: Column): Column =
+    Native.call("zstd_utf8", ZstdCodec, "zstdUtf8", BinaryType)(text)
+  /** zstd frame → string (loud failure on bad magic/FCS/checksum). */
+  def unzstdUtf8(payload: Column): Column =
+    Native.call("unzstd_utf8", ZstdCodec, "unzstdUtf8", StringType)(payload)
+  /** zstd frame → declared frame content size (header field). */
+  def zstdContentSize(payload: Column): Column =
+    Native.call("zstd_content_size", ZstdCodec, "contentSize", LongType)(payload)
 }

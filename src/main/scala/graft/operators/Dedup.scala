@@ -333,7 +333,7 @@ object Dedup {
   /** MinHash signatures: per document, `numHashes` independent min-hashes
     * over its shingle multiset (min is duplicate-insensitive, so no
     * distinct pass is needed). Computed by the native
-    * [[graft.functions.MinHashSig]] expression in one per-row loop — no
+    * `minhash_sig` ([[graft.functions.NativeExprs.minhashSig]]) in one per-row loop — no
     * explode, no shuffle, no 32-column aggregate. */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 32): DataFrame =
@@ -392,7 +392,7 @@ object Dedup {
 
   /** 64-bit SimHash per document: each token hash votes ±1 on every bit
     * position, weighted by term frequency; the sign vector packs into one
-    * long. Native [[graft.functions.SimHash64]] expression — one per-row
+    * long. Native `simhash64` ([[graft.functions.NativeExprs.simhash64]]) — one per-row
     * loop, no explode/aggregate (the 64-column aggregate formulation spent
     * seconds in codegen alone). */
   def simhashSignatures(df: DataFrame, idCol: String, textCol: String): DataFrame =

@@ -166,7 +166,7 @@ object Multimodal {
     * decode stage downstream does real parsing work. Metadata carries the
     * true encoded size (`n_bytes` = payload length, header included).
     * Stands in for `spark.read.format("binaryFile")` at scale; encoding is
-    * a codegen'd expression ([[graft.functions.EncodeImageFromText]]). */
+    * a codegen'd call ([[graft.functions.ImageExprs.encodeImageFromText]]). */
   def attachImagePayload(df: DataFrame, textCol: String, width: Int = 8,
       height: Int = 8, format: String = "ppm"): DataFrame = {
     val payload =

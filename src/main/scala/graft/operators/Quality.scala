@@ -106,11 +106,13 @@ object Quality {
     verifyFile(path, "missing or empty",
       absent = p => !Files.exists(p) || Files.size(p) == 0,
       // read back the way CsvSink wrote it: the writer quotes a value
-      // holding a newline, so a record may span lines, and it escapes
-      // embedded quotes with its default `\`
+      // holding a newline, so a record may span lines, it escapes
+      // embedded quotes with its default `\`, and it encodes nulls its
+      // own way, not as the extract's `NA`
       read = graft.sources.Sources.loadCsv(spark, path,
         maxBytes = Long.MaxValue, delimiter = delimiter, encoding = encoding,
-        options = Map("multiLine" -> "true", "header" -> header.toString),
+        options = graft.sinks.CsvSink.ReadBack ++
+          Map("multiLine" -> "true", "header" -> header.toString),
         schema = schema),
       mtimeMillis = Files.getLastModifiedTime(_).toMillis,
       minRows, nonnullCols, timestampCol, maxLagMinutes, clock)

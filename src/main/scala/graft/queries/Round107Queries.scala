@@ -26,7 +26,7 @@ import graft.Tables
   *    the embeddings table — density-based outlier scoring on the
   *    exact kNN graph. Distances live on d5's round(x·10⁶) integer
   *    lattice, so the O(N²) hot path is one codegen'd 64-bit loop
-  *    (L2SqLong) and kNN selection, k-distances and reachability
+  *    (l2sq_long) and kNN selection, k-distances and reachability
   *    sums are exact integers on any engine; only the final ratio
   *    average is float (round(·,12) → DECIMAL sum over 5 terms);
   *    top 20 outliers by (rounded LOF desc, vec_id).
@@ -119,7 +119,7 @@ object Round107Queries extends QueryModule {
   def s24_lof_outliers(s: SparkSession, dir: String): DataFrame = {
     // d5's integer lattice: quantize to round(x·10⁶) longs once, so every
     // pairwise squared distance is exact 64-bit arithmetic inside one
-    // codegen'd loop (L2SqLong) — no decimal folds on the O(N²) hot path
+    // codegen'd loop (l2sq_long) — no decimal folds on the O(N²) hot path
     val v = graft.Tables.spread(Tables.load(s, dir, "embeddings")
       .select(col("vec_id").as("id"),
         transform(col("embedding"),

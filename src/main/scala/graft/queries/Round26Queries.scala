@@ -13,7 +13,7 @@ import graft.operators.CountMin
   *
   *  - m5: per-document pixel statistics through an actual P6 PPM
   *    round-trip — each document's text becomes a real 8×8 PPM payload
-  *    (ASCII header + binary raster), and [[graft.functions.ImageStats]]
+  *    (ASCII header + binary raster), and `image_stats`
   *    (a codegen'd expression) parses the format back and folds the
   *    DECODED pixels into integer stats. The oracle replays the raster's
   *    closed form, so a header-skip / raster-size bug shifts every value

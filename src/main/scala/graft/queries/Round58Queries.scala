@@ -10,7 +10,7 @@ import graft.Tables
   *  - m16: ViT-style patch pooling — the preprocessing a vision
   *    transformer runs before embedding: the decoded 8×8 grayscale
   *    raster (the m5/d23 PGM round-trip, real header+raster parse via
-  *    the codegen'd DecodePixels) splits into sixteen 2×2 patches, each
+  *    the codegen'd decode_pixels) splits into sixteen 2×2 patches, each
   *    reduced to its integer sum and floor-mean. Expression-only per
   *    row (decode + 4 element_at per patch), zero shuffle — at 100 TB
   *    patchification rides the scan like every other m-query. The

@@ -17,7 +17,7 @@ import graft.Tables
   *  - m17: overlapping audio windows — the ASR ingestion chunking
   *    (Whisper-style fixed windows with overlap) over REAL decoded PCM:
   *    the WAV payload round-trips through the header parse
-  *    (AudioDecodeSamples, the audio mirror of m16's DecodePixels), and
+  *    (decode_audio_samples, the audio mirror of m16's decode_pixels), and
   *    each 16-sample window on a 12-sample hop reduces to its exact
   *    Σs² energy. Expression-only per row, t34's audio twin; the oracle
   *    replays the PCM closed form (sample i = (cp·257 mod 2¹⁶) − 2¹⁵).

@@ -27,7 +27,7 @@ import SketchSql.textByte
   *  - m23: PNG-gray → decode → 2× average-pool → stats, composing the
   *    compressed codec (CRC, DEFLATE, unfiltering) with the pooling
   *    kernel in ONE codegen'd expression chain
-  *    (`ImageDownsampleStats(EncodeImageFromText(png_gray))`) — m7's
+  *    (`image_downsample_stats(encode_image_from_text(png_gray))`) — m7's
   *    shape with the stub-free compressed container underneath. The
   *    oracle replays the pooled floor-means from the codepoint closed
   *    form; gray means sum_all IS the only channel mass.

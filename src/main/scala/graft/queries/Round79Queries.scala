@@ -22,7 +22,7 @@ import graft.functions.{ImageExprs, PngExprs}
   *    travels INSIDE its PNG payload as spec-compliant ancillary tEXt
   *    chunks (keyword, NUL, Latin-1 value, CRC-framed), written between
   *    IHDR and IDAT and read back by a CRC-checking chunk walk
-  *    ([[graft.functions.PngTextValue]]). A missing keyword yields
+  *    ([[graft.functions.PngExprs.pngTextValue]]). A missing keyword yields
   *    NULL, pixel stats are unchanged by the extra chunks (the decoder
   *    must skip ancillary chunks to find them), and a corrupt chunk
   *    fails loudly — the "typed metadata travels with the blob"

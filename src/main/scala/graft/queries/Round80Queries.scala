@@ -27,7 +27,7 @@ import graft.functions.ImageExprs
   *    dof=24, α=0.01 critical value. The everyday "is this drift or
   *    noise" gate for categorical monitors.
   *  - m25: tiled raster statistics — the decoded 8×8 RGB raster split
-  *    into four 4×4 quadrant tiles (posexplode over DecodePixels;
+  *    into four 4×4 quadrant tiles (posexplode over decode_pixels;
   *    tile = (y div 4)·2 + x div 4), per-tile integer sum/min/max.
   *    Tiling is the patch-processing layout ViT-style pipelines use;
   *    here it is one explode + one aggregate, oracle-replayed from the

@@ -24,7 +24,7 @@ import graft.functions.{JaroWinklerSim, NativeExprs}
   *    ±1 estimators from a degree-3 polynomial hash over GF(2^61−1)
   *    (4-wise independent, so E[s²]=F2; a linear hash demonstrably
   *    collapses to ~1% of F2 from correlated signs). Exact integer
-  *    arithmetic end-to-end: Spark chains the codegen'd `MulModP`,
+  *    arithmetic end-to-end: Spark chains the codegen'd `mulmod_p`,
   *    DuckDB replays with HUGEINT products — estimator sums are
   *    BIGINT-exact, no float drift. Exact F2 rides along for the error
   *    profile; at sf0.01 the mean-of-16 lands within ~6 % of 1.86 M.

@@ -60,6 +60,18 @@ private[sinks] object Staged {
 /** Load stage (SURVEY.md §2A #9-10). */
 object CsvSink {
 
+  /** How the writers encode a null: an empty unquoted field. An empty
+    * string is written quoted, `""`, so the file keeps the two apart. */
+  val NullValue = ""
+
+  /** Reader options that count a written file the way it was written: an
+    * unquoted empty field is null, so a string `NA` is data (the extract's
+    * `NA` sentinel would read it as null). Spark's reader would also read
+    * a quoted empty string as the null value, so it reads as a non-null
+    * placeholder instead: for counting, not for values. */
+  val ReadBack: Map[String, String] =
+    Map("nullValue" -> NullValue, "emptyValue" -> "\u0000")
+
   /** Single CSV file at an exact path (the reference sink contract —
     * ops.py:28-32 writes one file with `df.to_csv`). Implemented as a
     * coalesce(1) directory write + part-file move. The coalesce makes the
@@ -84,6 +96,7 @@ object CsvSink {
     Staged(path, "csv") { data =>
       df.coalesce(1).write
         .option("header", includeHeader.toString)
+        .option("nullValue", NullValue)
         .options(options)
         .csv(data.toString)
       val parts = Files.list(data)
@@ -106,7 +119,7 @@ object CsvSink {
       includeHeader: Boolean = true,
       partitionBy: Seq[String] = Nil): Staged =
     Staged.directory(df, dir, "csv", partitionBy,
-      Map("header" -> includeHeader.toString))
+      Map("header" -> includeHeader.toString, "nullValue" -> NullValue))
 }
 
 /** Parquet directory sink — an engine extension beyond the reference's

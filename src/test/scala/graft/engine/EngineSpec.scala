@@ -475,4 +475,80 @@ class EngineSpec extends SparkSpec {
       assert(body.get("text").asText == msg)
     } finally server.stop(0)
   }
+
+  // Fault injection: each run fails closed with one on_fail alert and
+  // leaves no file and no staging directory at its exact target.
+
+  private def assertNothingAt(out: java.nio.file.Path): Unit = {
+    assert(!Files.exists(out), s"$out exists")
+    val parent = out.getParent
+    if (Files.isDirectory(parent)) assert(stagingLeftovers(parent).isEmpty)
+  }
+
+  test("a missing source file fails the run") {
+    val dir = tmpDir("nosource")
+    val out = dir.resolve("out.csv")
+    val alerter = new RecordingAlerter
+    val res = new Engine(spark, alerter).run(
+      regionPlan(dir.resolve("absent.csv"), out.toString, "to: csv"))
+    assert(res.status == "failed" &&
+      res.error.exists(_.contains("FileNotFoundException")), res.toJson)
+    assert(alerter.sent.size == 1 && alerter.sent.head._2.startsWith("Pipeline failed"))
+    assertNothingAt(out)
+  }
+
+  test("a source larger than limits.max_input_bytes fails the run") {
+    val dir = tmpDir("oversize")
+    val in = regionInput(dir)
+    val out = dir.resolve("out.csv")
+    val alerter = new RecordingAlerter
+    val res = new Engine(spark, alerter).run(
+      s"limits: {max_input_bytes: ${Files.size(in) - 1}}\n" +
+        regionPlan(in, out.toString, "to: csv"))
+    assert(res.status == "failed" &&
+      res.error.exists(_.contains("input too large")), res.toJson)
+    assert(alerter.sent.size == 1 && alerter.sent.head._2.startsWith("Pipeline failed"))
+    assertNothingAt(out)
+  }
+
+  fileLoads.foreach { case (what, load) =>
+    test(s"a file_path whose parent is a regular file fails the run ($what)") {
+      val dir = tmpDir("parentfile")
+      val in = regionInput(dir)
+      val blocker = dir.resolve("blocker")
+      Files.writeString(blocker, "not a directory")
+      val out = blocker.resolve("out")
+      val alerter = new RecordingAlerter
+      val res = new Engine(spark, alerter).run(regionPlan(in, out.toString, load))
+      assert(res.status == "failed" && res.error.isDefined, res.toJson)
+      assert(alerter.sent.size == 1 && alerter.sent.head._2.startsWith("Pipeline failed"))
+      assert(Files.readString(blocker) == "not a directory")
+      assert(!Files.exists(out) && stagingLeftovers(dir).isEmpty)
+    }
+  }
+
+  test("a webhook answering HTTP 500 leaves the failed result standing") {
+    import com.sun.net.httpserver.HttpServer
+    val hits = new java.util.concurrent.atomic.AtomicInteger
+    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/hook", ex => {
+      ex.getRequestBody.readAllBytes()
+      hits.incrementAndGet()
+      ex.sendResponseHeaders(500, -1); ex.close()
+    })
+    server.start()
+    try {
+      val dir = tmpDir("hook500")
+      val out = dir.resolve("out.csv")
+      val url = s"http://127.0.0.1:${server.getAddress.getPort}/hook"
+      val plan = regionPlan(dir.resolve("absent.csv"), out.toString, "to: csv")
+        .replace("alerts: {on_fail: slack://#data-alerts}",
+          s"""alerts: {on_fail: slack://#data-alerts, webhook_url: "$url"}""")
+      val res = new Engine(spark, new RecordingAlerter).run(plan)
+      assert(res.status == "failed" &&
+        res.error.exists(_.contains("FileNotFoundException")), res.toJson)
+      assert(hits.get == 1)
+      assertNothingAt(out)
+    } finally server.stop(0)
+  }
 }

@@ -3,6 +3,7 @@ package graft.engine
 import java.nio.file.Files
 import graft.SparkSpec
 import graft.operators.Quality
+import graft.sinks.CsvSink
 import graft.sources.Sources
 
 /** A file load's verify reads the output back with the schema the sink
@@ -35,13 +36,13 @@ class VerifyRoundTripSpec extends SparkSpec {
     "parquet partition_by" -> "to: parquet, partition_by: [flag]")
 
   private def plan(in: String, out: String, load: String,
-      checkCols: String, verifyCols: String): String =
+      checkCols: String, verifyCols: String, sql: String = Sql): String =
     s"""source:
        |  kind: csv
        |  csv: {path: $in}
        |transform:
        |  sql: |
-       |${Sql.linesIterator.map("    " + _).mkString("\n")}
+       |${sql.linesIterator.map("    " + _).mkString("\n")}
        |checks: {min_rows: $Rows, nonnull_cols: [$checkCols]}
        |load: {$load, file_path: $out}
        |verify: {min_rows: $Rows, nonnull_cols: [$verifyCols], ts_col: ts,
@@ -120,5 +121,55 @@ class VerifyRoundTripSpec extends SparkSpec {
     def values(df: org.apache.spark.sql.DataFrame) =
       df.collect().toSeq.map(_.toSeq.map(String.valueOf)).sortBy(_.head)
     assert(values(back) == values(spark.sql(Sql)))
+  }
+
+  // The extract reads `NA` as null (the fixture's sentinel), but a string
+  // `NA` the transform writes is data: verify reads the file back with the
+  // sink's own null encoding, and an empty string stays non-null too.
+  private val NaSql =
+    """SELECT id, id % 2 = 0 AS flag,
+      |       timestamp_seconds(1700000000 + id * 3600) AS ts,
+      |       CASE id WHEN 1 THEN 'NA' WHEN 2 THEN '' ELSE concat('c', id) END AS code,
+      |       IF(id % 2 = 0, NULL, 'NA') AS sparse
+      |FROM input_df""".stripMargin
+
+  loads.filter(_._1.startsWith("csv")).foreach { case (what, load) =>
+    test(s"a string NA is data when verify reads the output back ($what)") {
+      val (dir, in) = input()
+      val out = dir.resolve("out").toString
+      val alerts = new Alerts
+      val res = new Engine(spark, alerts).run(
+        plan(in, out, load, "code", "code", NaSql))
+      assert(res.status == "ok", res.toJson)
+      assert(res.dq.get.nullCounts("code") == 0, res.toJson)
+      assert(res.verify.get.rows == res.dq.get.rows && res.dq.get.rows == Rows,
+        res.toJson)
+      assert(res.verify.get.nonnullOk && alerts.sent.isEmpty, res.toJson)
+
+      // verify finds the nulls the gate counts in a column mixing NA and null
+      val gate = new Engine(spark, new Alerts).run(
+        plan(in, dir.resolve("rejected").toString, load, "sparse", "code", NaSql))
+      assert(gate.status == "failed" &&
+        gate.dq.get.nullCounts("sparse") == Rows / 2, gate.toJson)
+      val ver = new Engine(spark, new Alerts).run(
+        plan(in, dir.resolve("nulls").toString, load, "code", "sparse", NaSql))
+      assert(ver.status == "failed" && !ver.verify.get.nonnullOk, ver.toJson)
+      assert(ver.verify.get.rows == ver.dq.get.rows, ver.toJson)
+    }
+  }
+
+  test("the csv read-back counts the nulls the gate counts") {
+    val (dir, in) = input()
+    val out = dir.resolve("out.csv").toString
+    val res = new Engine(spark, new Alerts).run(
+      plan(in, out, "to: csv", "code", "code", NaSql))
+    assert(res.status == "ok", res.toJson)
+    val written = spark.sql(NaSql).schema // input_df is the run's view
+    val back = Sources.loadCsv(spark, out, maxBytes = Long.MaxValue,
+      options = CsvSink.ReadBack ++ Map("multiLine" -> "true"),
+      schema = Some(written))
+    val cols = Seq("code", "sparse")
+    assert(Quality.dqCheck(back, nonnullCols = cols).nullCounts ==
+      Quality.dqCheck(spark.sql(NaSql), nonnullCols = cols).nullCounts)
   }
 }
